@@ -17,15 +17,21 @@ protocol those formats use, from parquet + JSON primitives only:
   O_EXCL create — two concurrent committers race on the version
   number and exactly one wins (optimistic concurrency, the loser
   retries on fresh state).
+- The manifest also records each commit's data schema (partition
+  columns excluded), once per commit directory ("stage") that still
+  has live files, so reads plan without a Spark job: Spark never
+  samples a footer to infer the schema (Delta keeps its schema in the
+  log for the same reason).
 - Old data files are never mutated or deleted by a commit, so a
   reader that resolved version N keeps a consistent snapshot while
   version N+1 lands (snapshot isolation for concurrent reads);
   `vacuum` reclaims files unreferenced by the newest manifest.
 - `merge` is an upsert by key: only data files whose partition value
-  appears in the update batch are rewritten (anti-join out the
-  updated keys, union the new rows); untouched partitions carry their
-  files forward by reference.  Replaying the same batch converges to
-  the same state, so foreachBatch retries are safe.
+  appears in the update batch, or that hold an updated key, are
+  rewritten (anti-join out the updated keys, union the new rows);
+  untouched partitions carry their files forward by reference.
+  Replaying the same batch converges to the same state, so
+  foreachBatch retries are safe.
 
 At 100 TB the manifest lists file paths + partition values only
 (KBs per thousand files) and the MERGE cost is proportional to the
@@ -40,9 +46,12 @@ import os
 import re
 import time
 import uuid
+from urllib.parse import unquote, urlparse
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _MANIFEST_DIR = "_manifests"
 
@@ -76,17 +85,37 @@ def current_version(table_dir: str) -> int:
     return max(versions, default=-1)
 
 
-def _load_manifest(table_dir: str, version: int) -> list[dict]:
+def _read_manifest(table_dir: str, version: int) -> dict:
     with open(_manifest_path(table_dir, version)) as fh:
-        return json.load(fh)["files"]
+        manifest = json.load(fh)
+    # a manifest written before schemas were recorded has none
+    manifest.setdefault("schemas", {})
+    return manifest
+
+
+def _load_manifest(table_dir: str, version: int) -> list[dict]:
+    return _read_manifest(table_dir, version)["files"]
+
+
+def _stage_of(entry: dict) -> str:
+    return entry["path"].split(os.sep, 1)[0]
 
 
 def _write_files(
     df: DataFrame, table_dir: str, partition_cols: list[str]
 ) -> list[dict]:
     """Write df as immutable parquet files, one directory per commit,
-    and return manifest entries [{path, partition: {col: value}}]."""
+    and return manifest entries [{path, partition: {col: value}}].
+
+    Each entry also carries the commit's data schema (partition columns
+    excluded) under "schema"; `_commit` moves it into the manifest's
+    per-stage "schemas" map, so committed file entries stay {path,
+    partition}.  Partition columns stay out so that reads infer their
+    types from the paths exactly as without a recorded schema."""
     stage = os.path.join(table_dir, f"stage-{uuid.uuid4().hex}")
+    schema = StructType(
+        [f for f in df.schema.fields if f.name not in partition_cols]
+    ).jsonValue()
     if partition_cols:
         df.write.mode("overwrite").partitionBy(*partition_cols).parquet(stage)
     else:
@@ -109,7 +138,7 @@ def _write_files(
                             "coalesce before writing)"
                         )
                     part[k] = _unescape_partition_value(v)
-            entries.append({"path": rel, "partition": part})
+            entries.append({"path": rel, "partition": part, "schema": schema})
     return entries
 
 
@@ -128,18 +157,41 @@ def _commit(
     commitInfo/table-properties analog — e.g. the semantic gate's
     centroid-file pointer).  When None, the PREVIOUS version's meta
     carries forward, so ordinary upserts never drop table properties
-    set by an earlier commit; pass a dict (possibly {}) to replace."""
+    set by an earlier commit; pass a dict (possibly {}) to replace.
+
+    The manifest keeps one data schema per stage `files` references:
+    new entries bring theirs (see `_write_files`), carried ones keep
+    the previous version's, and a stage's schema goes with its last
+    file.  A stage written before schemas were recorded has none."""
     os.makedirs(os.path.join(table_dir, _MANIFEST_DIR), exist_ok=True)
-    if meta is None and version > 0:
+    prev: dict = {}
+    if version > 0:
         try:
-            with open(_manifest_path(table_dir, version - 1)) as fh:
-                meta = json.load(fh).get("meta", {})
+            prev = _read_manifest(table_dir, version - 1)
         except FileNotFoundError:
-            meta = {}
+            pass
+    if meta is None:
+        meta = prev.get("meta", {})
+    known = prev.get("schemas", {})
+    schemas: dict[str, dict] = {}
+    committed: list[dict] = []
+    for e in files:
+        stage = _stage_of(e)
+        if "schema" in e:
+            schemas[stage] = e["schema"]
+        elif stage in known:
+            schemas[stage] = known[stage]
+        committed.append({"path": e["path"], "partition": e["partition"]})
     try:
         with open(_manifest_path(table_dir, version), "x") as fh:
             json.dump(
-                {"version": version, "files": files, "meta": meta or {}}, fh
+                {
+                    "version": version,
+                    "files": committed,
+                    "schemas": schemas,
+                    "meta": meta,
+                },
+                fh,
             )
         return version
     except FileExistsError:
@@ -158,8 +210,7 @@ def manifest_meta(table_dir: str, version: int | None = None) -> dict:
         version = current_version(table_dir)
     if version < 0:
         return {}
-    with open(_manifest_path(table_dir, version)) as fh:
-        return json.load(fh).get("meta", {})
+    return _read_manifest(table_dir, version).get("meta", {})
 
 
 class ConflictError(RuntimeError):
@@ -168,25 +219,32 @@ class ConflictError(RuntimeError):
 
 
 def _read_files(
-    spark: SparkSession, table_dir: str, entries: list[dict]
+    spark: SparkSession,
+    table_dir: str,
+    entries: list[dict],
+    schemas: dict[str, dict],
 ) -> DataFrame:
     """Read manifest entries.  Files from different commits live under
     different stage roots, so partition discovery runs per-stage (each
     stage is internally consistent) and the scans union — a commit's
     worth of files is one scan, so the union width is bounded by the
-    number of versions still contributing files, not file count."""
+    number of versions still contributing files, not file count.
+
+    Each stage is read with the data schema its manifest recorded
+    (`schemas`), so planning launches no schema-inference job; only a
+    stage written before schemas were recorded falls back to inference.
+    Partition column types are inferred from the paths either way."""
     by_stage: dict[str, list[str]] = {}
     for e in entries:
-        stage = e["path"].split(os.sep, 1)[0]
-        by_stage.setdefault(stage, []).append(
+        by_stage.setdefault(_stage_of(e), []).append(
             os.path.join(table_dir, e["path"])
         )
-    parts = [
-        spark.read.option(
-            "basePath", os.path.join(table_dir, stage)
-        ).parquet(*paths)
-        for stage, paths in sorted(by_stage.items())
-    ]
+    parts = []
+    for stage, paths in sorted(by_stage.items()):
+        reader = spark.read.option("basePath", os.path.join(table_dir, stage))
+        if stage in schemas:
+            reader = reader.schema(StructType.fromJson(schemas[stage]))
+        parts.append(reader.parquet(*paths))
     out = parts[0]
     for p in parts[1:]:
         # allowMissingColumns: commits may evolve the schema (Delta
@@ -194,6 +252,40 @@ def _read_files(
         # NULL for columns they predate
         out = out.unionByName(p, allowMissingColumns=True)
     return out
+
+
+def _files_holding_keys(
+    spark: SparkSession,
+    table_dir: str,
+    entries: list[dict],
+    schemas: dict[str, dict],
+    keys: DataFrame,
+    key_cols: list[str],
+) -> list[dict]:
+    """The entries whose files hold at least one row of `keys`: a
+    column-pruned key-probe scan (key columns only — the touched-file
+    scan Delta MERGE runs).  Matching by input_file_name, not partition
+    value, sidesteps Hive partition-type inference (a string partition
+    "01" reads back as int 1 and would never match its manifest
+    string).  The match is on the path relative to the table directory:
+    one write task gives its file the same name in every partition it
+    writes, so a basename would match them all."""
+    probe = (
+        _read_files(spark, table_dir, entries, schemas)
+        .select(*key_cols, F.input_file_name().alias("__file"))
+        .join(F.broadcast(keys), key_cols, "left_semi")
+        .select("__file")
+        .distinct()
+        .collect()
+    )
+    # input_file_name is a URI: undo its %-encoding to get the path on
+    # disk, whose Hive escapes the manifest paths keep as written
+    root = os.path.abspath(table_dir)
+    matched = {
+        os.path.relpath(unquote(urlparse(r["__file"]).path), root)
+        for r in probe
+    }
+    return [e for e in entries if e["path"] in matched]
 
 
 def read_table(
@@ -218,7 +310,8 @@ def read_table(
         version = current_version(table_dir)
     if version < 0:
         raise FileNotFoundError(f"no committed version under {table_dir}")
-    entries = _load_manifest(table_dir, version)
+    manifest = _read_manifest(table_dir, version)
+    entries = manifest["files"]
     if partitions:
         allowed = {
             k: {str(x) for x in (v if isinstance(v, (list, tuple, set)) else [v])}
@@ -236,7 +329,7 @@ def read_table(
             )
     if not entries:
         raise ValueError(f"empty manifest v{version} under {table_dir}")
-    return _read_files(spark, table_dir, entries)
+    return _read_files(spark, table_dir, entries, manifest["schemas"])
 
 
 def overwrite_table(
@@ -306,7 +399,9 @@ def merge_table(
             return _commit(table_dir, files, expected_base + 1)
         return overwrite_table(updates, table_dir, partition_cols=partition_cols)
 
-    entries = _load_manifest(table_dir, base)
+    manifest = _read_manifest(table_dir, base)
+    entries, schemas = manifest["files"], manifest["schemas"]
+    keys = updates.select(*key_cols).distinct()
     if partition_cols:
         touched = {
             tuple(str(r[c]) for c in partition_cols)
@@ -319,45 +414,19 @@ def merge_table(
         ]
         carried = [e for e in entries if e not in hit]
         if carried and not partition_from_key:
-            # global key matching: probe the carried files for updated
-            # keys (column-pruned scan: key columns only — the same
-            # touched-file scan Delta MERGE runs) and pull exactly the
-            # FILES holding one into the rewrite set.  Matching by
-            # input_file_name, not partition value, sidesteps Hive
-            # partition-type inference (a string partition "01" reads
-            # back as int 1 and would never match its manifest string).
-            probe = (
-                _read_files(spark, table_dir, carried)
-                .select(*key_cols, F.input_file_name().alias("__file"))
-                .join(
-                    F.broadcast(updates.select(*key_cols).distinct()),
-                    key_cols,
-                    "left_semi",
-                )
-                .select("__file")
-                .distinct()
-                .collect()
+            # global key matching: pull exactly the carried FILES
+            # holding an updated key into the rewrite set
+            extra_hit = _files_holding_keys(
+                spark, table_dir, carried, schemas, keys, key_cols
             )
-            # match by part-file BASENAME: Spark part files embed the
-            # write-job UUID, so basenames are unique table-wide and
-            # immune to the URI/Hive escaping layers a full-path
-            # comparison would have to invert
-            matched = {os.path.basename(r["__file"]) for r in probe}
-            if matched:
-                extra_hit = [
-                    e
-                    for e in carried
-                    if os.path.basename(e["path"]) in matched
-                ]
-                hit += extra_hit
-                carried = [e for e in carried if e not in extra_hit]
+            hit += extra_hit
+            carried = [e for e in carried if e not in extra_hit]
     else:
         hit, carried = entries, []
 
     merged = updates
     if hit:
-        old = _read_files(spark, table_dir, hit)
-        keys = updates.select(*key_cols).distinct()
+        old = _read_files(spark, table_dir, hit, schemas)
         kept = old.join(F.broadcast(keys), key_cols, "left_anti")
         # allowMissingColumns = schema evolution (Delta mergeSchema):
         # an update batch may add columns; surviving old rows read NULL
@@ -377,14 +446,14 @@ def delete_from_table(
 ) -> int:
     """DELETE by key (the GDPR-expunge primitive, Delta DELETE
     semantics): rewrite exactly the data files holding a matching key
-    with those rows anti-joined out; every other file carries into the
-    new manifest by reference.  The touched-file set comes from the
-    same basename key-probe MERGE uses, so cost tracks the files
-    containing deleted keys, not the table.  Old versions still
-    contain the rows — run `vacuum` after the retention window to
-    physically reclaim them (the same two-step contract as Delta
-    DELETE + VACUUM).  Returns the new version (the current one if no
-    key matched)."""
+    with those rows anti-joined out, in the table's column order; every
+    other file carries into the new manifest by reference.  The
+    touched-file set comes from the key-probe MERGE uses, matched on
+    each file's path in the table, so cost tracks the files containing
+    deleted keys, not the table.  Old versions still contain the rows —
+    run `vacuum` after the retention window to physically reclaim them
+    (the same two-step contract as Delta DELETE + VACUUM).  Returns the
+    new version (the current one if no key matched)."""
     base = current_version(table_dir)
     if expected_base is not None and base != expected_base:
         raise ConflictError(
@@ -393,30 +462,27 @@ def delete_from_table(
         )
     if base < 0:
         raise FileNotFoundError(f"no committed version under {table_dir}")
-    entries = _load_manifest(table_dir, base)
+    manifest = _read_manifest(table_dir, base)
+    entries, schemas = manifest["files"], manifest["schemas"]
     keyset = keys.select(*key_cols).distinct()
-    probe = (
-        _read_files(spark, table_dir, entries)
-        .select(*key_cols, F.input_file_name().alias("__file"))
-        .join(F.broadcast(keyset), key_cols, "left_semi")
-        .select("__file")
-        .distinct()
-        .collect()
-    )
-    matched = {os.path.basename(r["__file"]) for r in probe}
-    if not matched:
+    hit = _files_holding_keys(spark, table_dir, entries, schemas, keyset, key_cols)
+    if not hit:
         return base
-    hit = [e for e in entries if os.path.basename(e["path"]) in matched]
     carried = [e for e in entries if e not in hit]
-    kept = _read_files(spark, table_dir, hit).join(
-        F.broadcast(keyset), key_cols, "left_anti"
+    old = _read_files(spark, table_dir, hit, schemas)
+    # the anti-join puts the key columns first: restore the table's order
+    kept = old.join(F.broadcast(keyset), key_cols, "left_anti").select(
+        *old.columns
     )
-    partition_cols = sorted(hit[0]["partition"]) if hit[0]["partition"] else []
-    new_files = (
-        _write_files(kept, table_dir, partition_cols)
-        if not kept.isEmpty()
-        else []
-    )
+    partition_cols = sorted(hit[0]["partition"])
+    # the write is the emptiness test: a partitioned write of no rows
+    # makes no file, an unpartitioned one a single empty file, which a
+    # footer read on the driver keeps out of the manifest
+    new_files = [
+        e
+        for e in _write_files(kept, table_dir, partition_cols)
+        if pq.read_metadata(os.path.join(table_dir, e["path"])).num_rows
+    ]
     return _commit(table_dir, carried + new_files, base + 1)
 
 
@@ -442,7 +508,8 @@ def compact_table(
     base = current_version(table_dir)
     if base < 0:
         raise FileNotFoundError(f"no committed version under {table_dir}")
-    entries = _load_manifest(table_dir, base)
+    manifest = _read_manifest(table_dir, base)
+    entries, schemas = manifest["files"], manifest["schemas"]
     if partition_cols is None:
         partition_cols = sorted(entries[0]["partition"]) if entries else []
 
@@ -459,7 +526,7 @@ def compact_table(
     if not fragmented:
         return base  # nothing to do; current version stands
     carried = [e for e in entries if e not in fragmented]
-    packed = _read_files(spark, table_dir, fragmented)
+    packed = _read_files(spark, table_dir, fragmented, schemas)
     if partition_cols:
         # one output file per partition value: route all rows of a
         # partition to one task before the partitioned write

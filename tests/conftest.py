@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -21,3 +22,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """`count_jobs(fn)` calls `fn()` and returns the Spark jobs it
+    launched, counted under a job group of its own.  Deltas of all job
+    ids go negative once the status tracker evicts old jobs; a group's
+    recent jobs are not evicted."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -17,6 +17,7 @@ from metrics_service_spark.sources.eventlog import eventlog_view
 from metrics_service_spark.sources.merge_table import (
     ConflictError,
     current_version,
+    delete_from_table,
     merge_table,
     overwrite_table,
     read_table,
@@ -491,7 +492,7 @@ def test_merge_moved_key_numeric_string_partition(spark, tmp_path):
     """The global key probe must survive Hive partition-type
     inference: a string partition value '01' reads back from the path
     as int 1, so any value-based match would miss — the probe matches
-    part-file basenames instead.  A key moving out of such a partition
+    part-file paths instead.  A key moving out of such a partition
     still gets its stale row rewritten."""
     tdir = str(tmp_path / "t")
     df = spark.createDataFrame(
@@ -579,3 +580,178 @@ def test_manifest_meta_set_inherit_replace(spark, tmp_path):
     v2 = overwrite_table(df, tdir, partition_cols=["p"], meta={"gen": "g1"})
     assert manifest_meta(tdir, v2) == {"gen": "g1"}
     assert manifest_meta(tdir, v0) == {"gen": "g0"}  # old version keeps its own
+
+
+def _manifest(tdir, version=None):
+    version = current_version(tdir) if version is None else version
+    with open(os.path.join(tdir, "_manifests", f"v{version}.json")) as fh:
+        return json.load(fh)
+
+
+def test_path_match_when_one_task_writes_many_partitions(spark, tmp_path):
+    """One write task gives its file the same name in every partition it
+    writes, and "a b/c" is Hive-escaped on disk and %-encoded again in
+    input_file_name: MERGE's probe and DELETE must still rewrite only
+    the one file holding the key."""
+    tdir = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(1, "a b/c", "a"), (2, "a b/c", "a"), (3, "x", "a"), (4, "y", "a")],
+        "k long, region string, v string",
+    ).coalesce(1)
+    overwrite_table(df, tdir, partition_cols=["region"])
+    v0 = {e["partition"]["region"]: e["path"] for e in _manifest(tdir)["files"]}
+    assert len({os.path.basename(p) for p in v0.values()}) == 1
+
+    # key 1 moves out of "a b/c": the probe must pick that file alone
+    upd = spark.createDataFrame([(1, "x", "b")], "k long, region string, v string")
+    merge_table(spark, tdir, upd, key_cols=["k"], partition_cols=["region"])
+    v1 = {e["path"] for e in _manifest(tdir)["files"]}
+    assert v0["y"] in v1
+    assert v0["a b/c"] not in v1 and v0["x"] not in v1
+
+    # key 2 lives in "a b/c" alone: only that partition's file is rewritten
+    before = {e["path"] for e in _manifest(tdir)["files"]}
+    delete_from_table(
+        spark, tdir, spark.createDataFrame([(2,)], "k long"), key_cols=["k"]
+    )
+    after = {e["path"] for e in _manifest(tdir)["files"]}
+    gone = before - after
+    assert len(gone) == 1 and "a b%2Fc" in next(iter(gone))
+    got = sorted(tuple(r) for r in read_table(spark, tdir).collect())
+    assert got == [(1, "b", "x"), (3, "a", "x"), (4, "a", "y")]
+
+
+@pytest.mark.parametrize("partition_cols", [["p"], []])
+def test_delete_keeps_column_order(spark, tmp_path, partition_cols):
+    """The anti-join of DELETE puts the key columns first; the rewrite
+    must keep the table's column order, or the read order would depend
+    on which commit directory sorts first."""
+    tdir = str(tmp_path / "t")
+    df = spark.range(12).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 4).alias("u"),
+        (F.col("id") % 2).cast("int").alias("p"),
+    )
+    overwrite_table(df, tdir, partition_cols=partition_cols)
+    for u in (0, 1, 2):
+        delete_from_table(
+            spark, tdir, spark.createDataFrame([(u,)], "u long"), key_cols=["u"]
+        )
+        assert read_table(spark, tdir).columns == ["k", "u", "p"]
+        data_cols = ["k", "u"] if partition_cols else ["k", "u", "p"]
+        for schema in _manifest(tdir)["schemas"].values():
+            assert [f["name"] for f in schema["fields"]] == data_cols
+    assert sorted(r["k"] for r in read_table(spark, tdir).collect()) == [3, 7, 11]
+
+
+def test_delete_entire_unpartitioned_table(spark, tmp_path):
+    """An unpartitioned write of no rows leaves one empty part file; it
+    must not enter the manifest."""
+    tdir = str(tmp_path / "t")
+    overwrite_table(_state(spark, 4, "a"), tdir)
+    all_keys = spark.createDataFrame([(k,) for k in range(4)], "k long")
+    assert delete_from_table(spark, tdir, all_keys, key_cols=["k"]) == 1
+    assert _manifest(tdir)["files"] == [] and _manifest(tdir)["schemas"] == {}
+    with pytest.raises(ValueError, match="empty manifest"):
+        read_table(spark, tdir)
+
+
+def test_manifest_records_one_schema_per_live_stage(spark, tmp_path):
+    """Each commit records its data schema (partition columns excluded)
+    once; a stage's schema stays while the version references its files
+    and goes with its last file."""
+    tdir = str(tmp_path / "t")
+    overwrite_table(_state(spark, 6, "a"), tdir, partition_cols=["part"])
+    merge_table(
+        spark, tdir, _state(spark, 6, "b").filter(F.col("part") == 0),
+        key_cols=["k"], partition_cols=["part"],
+    )
+    m = _manifest(tdir)
+    stages = {e["path"].split(os.sep, 1)[0] for e in m["files"]}
+    assert set(m["schemas"]) == stages and len(stages) == 2
+    assert all(set(e) == {"path", "partition"} for e in m["files"])
+    for schema in m["schemas"].values():
+        assert [f["name"] for f in schema["fields"]] == ["k", "v"]
+    # rewriting every partition drops the first commit's stage and schema
+    merge_table(
+        spark, tdir, _state(spark, 6, "c"), key_cols=["k"], partition_cols=["part"]
+    )
+    m = _manifest(tdir)
+    assert len(m["schemas"]) == 1
+    assert set(m["schemas"]) == {e["path"].split(os.sep, 1)[0] for e in m["files"]}
+
+
+def test_read_without_recorded_schema_falls_back_to_inference(
+    spark, tmp_path, count_jobs
+):
+    """A manifest written before schemas were recorded still reads: its
+    stages infer their schema (a Spark job), and the result has the same
+    schema and rows as a read of the recorded schema — partition types
+    are inferred from the paths either way ("01" reads back as int)."""
+    tdir = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(1, "01", 1.5, ["a"]), (2, "02", None, [])],
+        "k long, grp string, x double, tags array<string>",
+    ).withColumn("ts", F.timestamp_seconds(F.col("k")))
+    overwrite_table(df, tdir, partition_cols=["grp"])
+    recorded = read_table(spark, tdir)
+
+    path = os.path.join(tdir, "_manifests", "v0.json")
+    legacy = _manifest(tdir)
+    del legacy["schemas"]
+    with open(path, "w") as fh:
+        json.dump(legacy, fh)
+    assert count_jobs(lambda: read_table(spark, tdir)) > 0
+    inferred = read_table(spark, tdir)
+    assert inferred.schema == recorded.schema
+    assert dict(inferred.dtypes)["grp"] == "int"
+    assert sorted(inferred.collect()) == sorted(recorded.collect())
+
+    # a commit on top records its own stage only; the mixed table reads
+    upd = spark.createDataFrame([(3, "01", 2.5, ["c"])], df.drop("ts").schema)
+    merge_table(
+        spark, tdir, upd.withColumn("ts", F.timestamp_seconds(F.col("k"))),
+        key_cols=["k"], partition_cols=["grp"],
+    )
+    assert len(_manifest(tdir)["schemas"]) == 1
+    assert sorted(r["k"] for r in read_table(spark, tdir).collect()) == [1, 2, 3]
+
+
+def _commits(spark, tdir, n):
+    """A table of `n` live commits, each inserting keys of its own
+    partition."""
+    for i in range(n):
+        batch = spark.createDataFrame(
+            [(10 * i + j, i, "a") for j in range(3)], "k long, part int, v string"
+        )
+        merge_table(spark, tdir, batch, key_cols=["k"], partition_cols=["part"])
+
+
+def test_manifest_layer_job_budget(spark, tmp_path, count_jobs):
+    """Reads plan from the manifest: no Spark job on a table of several
+    commits (and at most 32 files, below Spark's parallel-listing
+    threshold).  MERGE and DELETE cost the same number of jobs at 2 and
+    at 5 live commits, so cost does not grow with the commit count."""
+    _commits(spark, str(tmp_path / "r"), 3)
+    assert count_jobs(lambda: read_table(spark, str(tmp_path / "r"))) == 0
+
+    def merge_jobs(n):
+        tdir = str(tmp_path / f"m{n}")
+        _commits(spark, tdir, n)
+        upd = spark.createDataFrame(
+            [(0, 0, "b"), (99, 0, "b")], "k long, part int, v string"
+        )
+        return count_jobs(
+            lambda: merge_table(
+                spark, tdir, upd, key_cols=["k"], partition_cols=["part"]
+            )
+        )
+
+    def delete_jobs(n):
+        tdir = str(tmp_path / f"d{n}")
+        _commits(spark, tdir, n)
+        keys = spark.createDataFrame([(1,)], "k long")
+        return count_jobs(lambda: delete_from_table(spark, tdir, keys, key_cols=["k"]))
+
+    assert merge_jobs(2) == merge_jobs(5)
+    assert delete_jobs(2) == delete_jobs(5)

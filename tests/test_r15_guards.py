@@ -65,7 +65,7 @@ def test_bpe_apply_plan_is_vocab_join_plus_agg(spark):
     assert plan2.count("Exchange") == plan5.count("Exchange")
 
 
-def test_bpe_local_finish_job_count_independent_of_merges(spark):
+def test_bpe_local_finish_job_count_independent_of_merges(spark, count_jobs):
     """The driver-local finish runs the ONE corpus-sized aggregation
     and collects the vocab — total Spark jobs must be the same at 2
     and at 6 merges (vs _train's per-merge argmax + checkpoint jobs)."""
@@ -75,12 +75,9 @@ def test_bpe_local_finish_job_count_independent_of_merges(spark):
         [("ab ab ab abc",), ("banana bandana cabbage",), ("ba abab dada",)],
         "text string",
     )
-    tracker = spark.sparkContext.statusTracker()
 
     def jobs_for(n: int) -> int:
-        before = len(tracker.getJobIdsForGroup(None))
-        bpe_train_local_finish(docs, "text", n_merges=n)
-        return len(tracker.getJobIdsForGroup(None)) - before
+        return count_jobs(lambda: bpe_train_local_finish(docs, "text", n_merges=n))
 
     assert jobs_for(2) == jobs_for(6)
 

@@ -27,7 +27,7 @@ def _lang_docs(spark):
     )
 
 
-def test_grouped_local_finish_job_count_independent_of_budgets(spark):
+def test_grouped_local_finish_job_count_independent_of_budgets(spark, count_jobs):
     """The grouped local finish runs ONE bounded collect regardless of
     how many merges the budgets ask for — Spark job count at budget
     sums 3 and 12 must be equal (the doc_bpe_train_local contract,
@@ -37,12 +37,11 @@ def test_grouped_local_finish_job_count_independent_of_budgets(spark):
     )
 
     docs = _lang_docs(spark)
-    tracker = spark.sparkContext.statusTracker()
 
     def jobs(budgets) -> int:
-        before = len(tracker.getJobIdsForGroup(None))
-        bpe_train_grouped_local_finish(docs, "text", budgets=budgets)
-        return len(tracker.getJobIdsForGroup(None)) - before
+        return count_jobs(
+            lambda: bpe_train_grouped_local_finish(docs, "text", budgets=budgets)
+        )
 
     small = jobs({"en": 2, "fr": 1})
     large = jobs({"en": 8, "fr": 4})
