@@ -793,9 +793,10 @@ def q_metrics_request_catalog_summary(
 
 
 # Per-seed family blocks: pid7 -> 0, pid23 -> 2, sid4 -> 4; every
-# seed additionally maps to itself (family_map's catalogPIDs[i]=[i]
-# initialization), which matters only on the citation side (no event
-# pid equals a bare seed string, but the substring theta-join sees it).
+# seed additionally maps to itself (the catalogPIDs[i]=[i]
+# initialization in catalog_summary_frame), which matters only on the
+# citation side (no event pid equals a bare seed string, but the
+# citation substring match sees it).
 ORACLE_CATALOG_SUMMARY_REQUEST = f"""
 WITH {_REQUEST_CTES},
 sseeds (seed, blk) AS (VALUES ('pid7', 0), ('pid23', 2), ('sid4', 4)),

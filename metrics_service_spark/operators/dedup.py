@@ -493,7 +493,7 @@ def minhash_signatures_md5(
     id_col: str,
     text_col: str,
     *,
-    n: int = 3,
+    n: int | None = None,
     num_hashes: int = 16,
     shingles: DataFrame | None = None,
     carry: tuple[str, ...] = (),
@@ -521,8 +521,9 @@ def minhash_signatures_md5(
     (__id, __sh [, carry...]) — callers that ALSO need the shingle
     arrays (exact-Jaccard verify) derive the frame once, lazily
     localCheckpoint it, and pass it here so the corpus is tokenized a
-    single time (r17, guide §2.4).  ``df``/``id_col``/``text_col``/``n``
-    are ignored when it is given.  ``carry`` names extra columns of
+    single time (r17, guide §2.4).  ``df``/``id_col``/``text_col`` are
+    ignored when it is given, and ``n`` must then be left unset (it
+    defaults to 3 on the inline path).  ``carry`` names extra columns of
     ``shingles`` to thread through the aggregation (each must be
     functionally dependent on __id, e.g. a side tag over id-disjoint
     inputs — the groups are then identical to grouping by __id alone).
@@ -531,13 +532,13 @@ def minhash_signatures_md5(
     bit-identical either way.
     """
     if shingles is None:
-        shingles = shingle_frame(df, id_col, text_col, n=n)
+        shingles = shingle_frame(df, id_col, text_col, n=3 if n is None else n)
         carry = ()
-    elif n != 3:
+    elif n is not None:
         # ADVICE r17: df/id_col/text_col/n are ignored on the
-        # pre-tokenized path — a caller passing a non-default n with
-        # `shingles` almost certainly tokenized with a DIFFERENT n and
-        # would get bit-different signatures silently; fail loud
+        # pre-tokenized path — a caller passing any n with `shingles`
+        # may have tokenized with a DIFFERENT n and would get
+        # bit-different signatures silently; fail loud
         raise ValueError(
             "minhash_signatures_md5: `n` is ignored when `shingles` is "
             "given (the frame is already tokenized) — drop the n "

@@ -7,10 +7,13 @@ COUNTER-filtered composite aggregation in ES, merges Postgres citation
 counts, and pivots into parallel arrays with a zero-filled month spine
 (metricsreader.py:1569-1816).
 
-Here the whole lifecycle is ONE lazy DataFrame program:
-  identifier expansion (broadcast semi-join) -> COUNTER filter ->
-  groupBy(date_trunc, dims) with exact distinct -> full-outer merge with
-  the citations aggregate -> date-spine zero-fill.
+Here the identifier family is resolved on the driver with one collect
+into a pid list, which the rest of the lifecycle uses as ONE lazy
+DataFrame program:
+  driver-resolved IN-list (the reference's `terms {pid.key: [...]}`
+  filter) -> COUNTER filter -> groupBy(date_trunc, dims) with exact
+  distinct -> full-outer merge with the citations aggregate ->
+  date-spine zero-fill.
 Process boundaries (HTTP->Solr->ES->Postgres) become Spark stages.
 
 Known deviations from the reference, implemented intentionally
@@ -28,7 +31,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 EXCLUDED_TAGS = (
@@ -57,6 +60,13 @@ def _parse_request_date(s: str) -> datetime:
     return datetime.strptime(s, "%m/%d/%Y")  # metricsreader.py:278-298
 
 
+def _cites_pid(pid: Column, target_id: Column) -> Column:
+    """gatherCitations' match: the lowercased target_id is a substring
+    of the lowercased pid, Dryad '?'-suffix stripped from the pid
+    (metricsreader.py:423-468)."""
+    return F.instr(F.lower(F.substring_index(pid, "?", 1)), F.lower(target_id)) > 0
+
+
 def run_metrics_request(
     spark: SparkSession,
     request: dict,
@@ -78,53 +88,54 @@ class MetricsRequestPlanner:
         self.approx = approx
 
     # -- identifier expansion (process boundary #1 in the reference) ------
-    def family_pids(self, filter_type: str, values: list[str]) -> DataFrame:
-        """Expand the request's target ids into the full PID set, one
-        column `pid` (reference: getResolvePIDs / identifiers-2 lookups,
-        pid_resolution.py:285-416, metricsreader.py:1259-1343)."""
+    def family_map(self, filter_type: str, values: list[str]) -> dict[str, list[str]]:
+        """Expand each requested id into its family: seed -> the sorted,
+        de-duplicated, NULL-free pids of every identifier row the seed
+        matches (reference: getResolvePIDs keyed by the requested pid,
+        pid_resolution.py:285-416; catalogPIDs dict in
+        metricsreader.py:480-508; identifiers-2 lookups,
+        metricsreader.py:1259-1343).  Resolved with ONE driver collect of
+        the matched identifier rows — the reference likewise resolves the
+        family in the client and ships it to ES as a `terms` list."""
         ids = self.t.identifiers
-        vals = [F.lit(v) for v in values]
+        vals = F.array(*[F.lit(v) for v in values])
         if filter_type in ("dataset", "catalog", "package"):
             matched = ids.filter(
                 F.col("PID").isin(values)
                 | F.col("SID").isin(values)
-                | F.arrays_overlap("datasetIdentifierFamily", F.array(*vals))
+                | F.arrays_overlap("datasetIdentifierFamily", vals)
             )
+
+            def hit(row, v):
+                return v in (row.PID, row.SID) or v in (row.datasetIdentifierFamily or ())
+
         elif filter_type in ("user", "group"):
             # user/group queries require public datasets
             # (metricsreader.py:1305-1323)
-            matched = ids.filter(
-                F.arrays_overlap("userID", F.array(*vals)) & F.col("isPublic")
-            )
-        else:
-            raise ValueError(f"family_pids does not apply to {filter_type!r}")
-        return (
-            matched.select(F.explode("datasetIdentifierFamily").alias("pid"))
-            .union(matched.select(F.col("PID").alias("pid")))
-            .distinct()
-        )
+            matched = ids.filter(F.arrays_overlap("userID", vals) & F.col("isPublic"))
 
-    def family_map(self, filter_type: str, values: list[str]) -> DataFrame:
-        """Per-seed family expansion: (seed, pid) rows keeping WHICH
-        requested id each family member belongs to — the per-dataset
-        analog of family_pids (reference: getResolvePIDs keyed by the
-        requested pid, pid_resolution.py:285-416; catalogPIDs dict in
-        metricsreader.py:480-508).  Every seed maps at least to itself
-        (the reference initializes catalogPIDs[i] = [i])."""
-        ids = self.t.identifiers
-        seeds = self.spark.createDataFrame([(v,) for v in values], "seed string")
-        matched = ids.join(
-            F.broadcast(seeds),
-            (F.col("PID") == F.col("seed"))
-            | (F.col("SID") == F.col("seed"))
-            | F.array_contains("datasetIdentifierFamily", F.col("seed")),
-        )
-        members = matched.select(
-            "seed", F.explode("datasetIdentifierFamily").alias("pid")
-        ).union(matched.select("seed", F.col("PID").alias("pid")))
-        return members.union(
-            seeds.select("seed", F.col("seed").alias("pid"))
-        ).distinct()
+            def hit(row, v):
+                return v in (row.userID or ())
+
+        else:
+            raise ValueError(f"family_map does not apply to {filter_type!r}")
+        rows = matched.select("PID", "SID", "userID", "datasetIdentifierFamily").collect()
+        fams = {}
+        for v in values:
+            members = set()
+            for r in rows:
+                if hit(r, v):
+                    members.add(r.PID)
+                    members.update(r.datasetIdentifierFamily or ())
+            members.discard(None)
+            fams[v] = sorted(members)
+        return fams
+
+    def family_pids(self, filter_type: str, values: list[str]) -> list[str]:
+        """The request's whole target family: the sorted union of
+        `family_map`'s per-seed families."""
+        fams = self.family_map(filter_type, values).values()
+        return sorted(set().union(*fams))
 
     # -- event-side filtering --------------------------------------------
     def counter_filtered_events(self) -> DataFrame:
@@ -144,10 +155,11 @@ class MetricsRequestPlanner:
             )
         )
 
-    def scoped_events(self, request: dict) -> tuple[DataFrame, DataFrame | None, dict]:
+    def scoped_events(self, request: dict) -> tuple[DataFrame, list[str] | None, dict]:
         """Apply the filterBy clauses: target scope (dataset/repository/
         user/group/portal), plus the date-range filter.  Returns
-        (events, family_or_None, meta)."""
+        (events, family_or_None, meta); the family is the driver-resolved
+        pid list of the last identifier scope."""
         filters = request.get("filterBy", [])
         ev = self.counter_filtered_events()
         family = None
@@ -193,14 +205,8 @@ class MetricsRequestPlanner:
                 ev = ev.filter(F.lit(False))
             elif ftype in ("dataset", "catalog", "package", "user", "group"):
                 meta["filterType"] = ftype
-                # r18 (guide §2.4, the catalog_summary pattern): the
-                # family feeds TWO broadcast builds — the event semi-
-                # join here and citations_for_family's normalized-pid
-                # side — so derive it once behind a lazy checkpoint
-                family = self.family_pids(ftype, values).localCheckpoint(
-                    eager=False
-                )
-                ev = ev.join(F.broadcast(family), "pid", "left_semi")
+                family = self.family_pids(ftype, values)
+                ev = ev.filter(F.col("pid").isin(family))
             elif ftype == "repository":
                 meta["filterType"] = ftype
                 ev = ev.filter(F.col("nodeId").isin(values))
@@ -214,22 +220,18 @@ class MetricsRequestPlanner:
         return ev, family, meta
 
     # -- citations (process boundary #3 in the reference) -----------------
-    def citations_for_family(self, family: DataFrame | None) -> DataFrame:
+    def citations_for_family(self, family: list[str] | None) -> DataFrame:
         """gatherCitations (metricsreader.py:423-468): target_id matched
         as lowercase substring of a family pid, Dryad '?'-suffix
-        stripped from the pid before comparison.  Kept as a broadcast
-        theta-join for fidelity; each citation counted once
-        (reference breaks after first matching pid)."""
+        stripped from the pid before comparison.  The family is a
+        literal array, so the match is a per-row `exists` with no join;
+        each citation counted once (reference breaks after first
+        matching pid)."""
         cites = self.t.citations
         if family is None:
             return cites
-        pids = family.select(
-            F.lower(F.substring_index(F.col("pid"), "?", 1)).alias("__pid_norm")
-        ).distinct()
-        matched = cites.join(
-            F.broadcast(pids),
-            F.instr(F.col("__pid_norm"), F.lower(F.col("target_id"))) > 0,
-            "inner",
+        matched = cites.filter(
+            F.exists(F.lit(family), lambda p: _cites_pid(p, F.col("target_id")))
         )
         return matched.dropDuplicates(["target_id", "source_id"])
 
@@ -284,10 +286,17 @@ class MetricsRequestPlanner:
 
         out_cols = ["bucket"] + (["country"] if by_country else [])
         fills = ["downloads", "views", "unique_downloads", "unique_views", "citations"]
-        return merged.select(
-            *out_cols,
-            *[F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c) for c in fills],
-        ).orderBy(*out_cols)
+        # the reply is bounded by the request (spine buckets x countries)
+        # and every input here is already aggregated per bucket, so one
+        # partition sorts it: no range-partition sampling job or shuffle
+        return (
+            merged.select(
+                *out_cols,
+                *[F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c) for c in fills],
+            )
+            .coalesce(1)
+            .sortWithinPartitions(*out_cols)
+        )
 
     def _spine(self, meta: dict, agg_type: str) -> DataFrame | None:
         """Bucket spine over the requested range.  The reference builds
@@ -330,8 +339,7 @@ class MetricsRequestPlanner:
         is IGNORED — the reference hardcodes 01/01/2012..today for this
         branch (metricsreader.py:616-618); datasets follow request
         order (catalogPIDs dict insertion order); citations are
-        gathered per family like gatherCitations.  One broadcast join +
-        one groupBy — per-seed families never leave the cluster."""
+        gathered per family like gatherCitations."""
         first = request.get("filterBy", [{}])[0]
         values = list(first.get("values", []))
         rows = {
@@ -358,20 +366,36 @@ class MetricsRequestPlanner:
         `catalog_summary_response` (getSummaryMetricsPerCatalog,
         metricsreader.py:470-640): per-seed family expansion, family
         UNIQUE event counts (the ES unique_doc_count cardinality), and
-        per-family citation gathering, all cluster-side; one row per
-        requested id regardless of activity."""
+        per-family citation gathering; one row per requested id
+        regardless of activity.  The families are resolved on the
+        driver (`family_map`) and tag events and citations with their
+        seeds through one literal array of (seed, pid) pairs."""
         first = request.get("filterBy", [{}])[0]
         values = list(first.get("values", []))
-        # r17 (guide §2.4): the family map feeds TWO broadcast builds
-        # (the event-count join and the citation substring join's
-        # normalized-pid side) — lazily localCheckpoint it so the
-        # identifiers match + explode + distinct run once, not twice
-        fam = self.family_map(
-            first.get("filterType", "catalog"), values
-        ).localCheckpoint(eager=False)
-        ev = self.counter_filtered_events()
+        fams = self.family_map(first.get("filterType", "catalog"), values)
+        # every seed also maps to itself (the reference initializes
+        # catalogPIDs[i] = [i])
+        seed_pids = [
+            (seed, pid)
+            for seed, members in fams.items()
+            for pid in sorted({*members, seed})
+        ]
+        pairs = F.array(
+            *[F.struct(F.lit(s).alias("seed"), F.lit(p).alias("pid")) for s, p in seed_pids]
+        ).cast("array<struct<seed:string,pid:string>>")
+
+        def seeds_where(match) -> Column:
+            return F.explode(
+                F.transform(F.filter(pairs, match), lambda m: m["seed"])
+            ).alias("seed")
+
+        ev = self.counter_filtered_events().filter(
+            F.col("pid").isin(sorted({p for _, p in seed_pids}))
+        )
         counts = (
-            ev.join(F.broadcast(fam), "pid")
+            ev.select(
+                seeds_where(lambda m: m["pid"] == F.col("pid")), "formatType", "eventId"
+            )
             .groupBy("seed")
             .agg(
                 F.countDistinct(
@@ -382,14 +406,11 @@ class MetricsRequestPlanner:
                 ).alias("__vw"),
             )
         )
-        pids = fam.select(
-            "seed",
-            F.lower(F.substring_index(F.col("pid"), "?", 1)).alias("__pid_norm"),
-        ).distinct()
         cites = (
-            self.t.citations.join(
-                F.broadcast(pids),
-                F.instr(F.col("__pid_norm"), F.lower(F.col("target_id"))) > 0,
+            self.t.citations.select(
+                seeds_where(lambda m: _cites_pid(m["pid"], F.col("target_id"))),
+                "target_id",
+                "source_id",
             )
             .dropDuplicates(["seed", "target_id", "source_id"])
             .groupBy("seed")

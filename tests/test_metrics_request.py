@@ -86,6 +86,58 @@ def test_user_path_public_only(planner):
     assert all(r[1] == 0 and r[2] == 0 for r in df_bob.collect())
 
 
+ZERO_SPINE = [("2018-01", 0, 0, 0, 0, 0), ("2018-02", 0, 0, 0, 0, 0)]
+
+
+def test_unknown_pid_yields_zero_spine(planner):
+    # an id no identifier row matches resolves to an EMPTY family: the
+    # event IN-list and the citation literal array are both empty, and
+    # the reply is the zero-filled spine with no citations
+    assert planner.family_pids("dataset", ["doi:10.5063/UNKNOWN"]) == []
+    df = planner.plan(request("dataset", ["doi:10.5063/UNKNOWN"]))
+    assert _rows(df) == ZERO_SPINE
+
+
+def test_user_with_only_private_datasets_yields_zero_spine(planner):
+    # bob's only dataset (B1) is private, so his family is empty
+    assert planner.family_pids("user", ["uid=bob"]) == []
+    assert _rows(planner.plan(request("user", ["uid=bob"]))) == ZERO_SPINE
+
+
+def test_family_map_splits_families_by_seed(planner):
+    # each seed keeps its own sorted family (a SID matches its series'
+    # rows); the request's family is their union
+    from metrics_service_spark.testing.fixtures import A1, A2, AMAP, B1
+
+    fams = planner.family_map("dataset", ["urn:sid:A", B1, "doi:10.5063/UNKNOWN"])
+    assert fams == {
+        "urn:sid:A": sorted([A1, A2, AMAP]),
+        B1: [B1],
+        "doi:10.5063/UNKNOWN": [],
+    }
+    assert planner.family_pids("dataset", ["urn:sid:A", B1]) == sorted([A1, A2, AMAP, B1])
+
+
+def test_request_job_budget(planner, count_jobs):
+    """A dataset-scoped month-range request runs 8 Spark jobs: the one
+    driver collect of the identifier family, two event shuffles, two
+    citation shuffles, the spine's distinct, the merged aggregates'
+    shuffle onto the spine's bucket key, and the result.  No broadcast
+    theta-join of the family and no range-partitioned final sort."""
+    req = request("dataset", ["doi:10.5063/A1"])
+    out = {}
+
+    def run():
+        out["df"] = planner.plan(req)
+        out["rows"] = out["df"].collect()
+
+    assert count_jobs(run) == 8
+    assert [r[0] for r in out["rows"]] == ["2017-12", "2018-01", "2018-02"]
+    executed = out["df"]._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in executed
+    assert "rangepartitioning" not in executed
+
+
 def test_day_aggregation(planner):
     df = planner.plan(
         request("dataset", ["doi:10.5063/A1"], start="01/02/2018", end="01/06/2018", group_by=["day"])

@@ -72,8 +72,8 @@ def test_pagerank_true_dangling_node_conserving_vs_plain(spark):
 
 
 def test_minhash_md5_rejects_n_with_pretokenized_shingles(spark):
-    # ADVICE r17: n is ignored on the pre-tokenized path — passing a
-    # non-default n with `shingles` must fail loud, not silently
+    # ADVICE r17: n is ignored on the pre-tokenized path — passing an
+    # explicit n with `shingles` must fail loud, not silently
     # produce signatures tokenized at a different n
     from metrics_service_spark.operators.dedup import (
         minhash_signatures_md5,
@@ -84,5 +84,12 @@ def test_minhash_md5_rejects_n_with_pretokenized_shingles(spark):
         [(1, "a b c d"), (2, "b c d e")], "doc_id long, text string"
     )
     sh = shingle_frame(df, "doc_id", "text", n=3)
-    with pytest.raises(ValueError, match="ignored when `shingles`"):
-        minhash_signatures_md5(df, "doc_id", "text", n=4, shingles=sh)
+    # even n=3, the inline path's default, is rejected when passed
+    # explicitly: the frame may have been tokenized at another n
+    for n in (3, 4):
+        with pytest.raises(ValueError, match="ignored when `shingles`"):
+            minhash_signatures_md5(df, "doc_id", "text", n=n, shingles=sh)
+    # without `shingles`, n still defaults to 3
+    default = minhash_signatures_md5(df, "doc_id", "text", num_hashes=4)
+    shared = minhash_signatures_md5(df, "doc_id", "text", num_hashes=4, shingles=sh)
+    assert sorted(map(tuple, default.collect())) == sorted(map(tuple, shared.collect()))

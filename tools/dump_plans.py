@@ -96,9 +96,9 @@ COMMENTARY = {
     "mm_scene_cuts": "ONE Arrow pass through the media seam emits frame-signature rows; the cut test is a per-media lag window over FRAME rows (frame mass ~ media count x sample rate, never pixel mass)",
     "ev_session_quantiles": "the audited sessionizer output collapses to a (day, seconds) histogram; per-day quantile windows run over distinct durations — the ev_sessionize shuffle is the only corpus-mass exchange",
     "doc_linkage_incremental": "batch-vs-corpus block equi-join (never a corpus self-join); the corpus-cell max_cell broadcast prune fires BEFORE the join; per-candidate codegen levenshtein",
-    "metrics_request_landing": "the dispatcher end-to-end: identifier family broadcast semi-join, COUNTER filter pushed to the scan, monthly agg, citations theta-join (broadcast nested loop over the constant dim), full-outer merge — process boundaries in the reference, stages here",
+    "metrics_request_landing": "the dispatcher end-to-end: identifier family resolved by one driver collect into a pid IN-list (the reference's `terms` filter) pushed to the scan with the COUNTER filter, monthly agg, citations matched by a per-row `exists` over the family literal (no join), full-outer merge, single-partition final sort (no range-partition exchange) — process boundaries in the reference, stages here",
     "metrics_request_daily_country": "adds the date-range scope (strict-gt/lte pushed through the adapter aliases to PushedFilters — plan-gated), day x country agg, end-exclusive spine crossJoin(broadcast countries), bucket-only citations join",
-    "metrics_request_user": "the user dispatch path: family from userID membership AND isPublic (broadcast seed join over the constant identifiers dim), then the landing shape — the scope that must EXCLUDE private datasets",
+    "metrics_request_user": "the user dispatch path: family from userID membership AND isPublic (one driver collect of the matched identifier rows), then the landing shape — the scope that must EXCLUDE private datasets",
     "metrics_request_repository": "repository scope is a pure scan predicate on the adapter's nodeId (no identifier family — the citations side is the UNSCOPED relation, mirroring gatherCitations without a target set); YEAR buckets with the 4-char citation key",
     "doc_bpe_train": "the returned frame is the k-row merge table built from the per-round argmax collects, so the dumped plan is a local scan BY DESIGN; the training work runs as per-round jobs over the checkpointed vocab — word-freq groupBy is the only corpus shuffle, the greedy merge scan is a pure projection (no per-round exchange) and pair counts map-side combine, all pinned by tests/test_r14_guards.py",
     "doc_bpe_apply": "re-tokenization is a JOIN against the vocabulary's final segmentation — explode + vocab join + per-doc agg; out-of-vocab tokens take the coalesce fallback, never a per-occurrence merge scan",
@@ -109,11 +109,11 @@ COMMENTARY = {
     "doc_bpe_train_local": "the returned frame is the k-row merge table (local scan BY DESIGN, like doc_bpe_train); the training work is ONE corpus-sized word-frequency shuffle + a bounded vocab collect — the merge loop runs driver-local (incremental pair counts + lazy heap), so total Spark jobs are O(1) regardless of n_merges",
     "doc_bpe_apply_stored": "ZERO training jobs: the stored merge table replays as chained pure-projection scans over the distinct-word vocab (no exchange per merge — gated), then one vocab-sized unit join + one per-doc agg; corpus tokens are touched exactly once",
     "metrics_request_portal": "portal scope is an arrays_overlap predicate on the adapter's portalIdentifier (no identifier family -> unscoped citations, like repository); month spine + full-outer merge — the dispatcher's audited J6/A12 tail",
-    "metrics_request_group": "group-subject membership + isPublic drive the family (broadcast seed join over the constant identifiers dim, the user-path shape); family semi-join + month spine + scoped citations theta-join",
-    "metrics_request_package": "two-seed PID/SID/family expansion unioned and distinct'd before the broadcast semi-join — the SID match arm end-to-end; no date filter so no spine, buckets full-outer the citation months",
+    "metrics_request_group": "group-subject membership + isPublic drive the family (one driver collect, the user-path shape); family IN-list + month spine + citations matched against the family literal",
+    "metrics_request_package": "two-seed PID/SID/family expansion resolved on the driver into one sorted IN-list — the SID match arm end-to-end; no date filter so no spine, buckets full-outer the citation months",
     "emb_knn_pagerank_conserving": "the plain twin's audited shape (per round one src-keyed join + one dst-keyed map-side-combined agg) plus ONE per-round anti-join aggregate that collapses dangling mass to a single broadcast row — no collect, no convergence tail",
     "doc_bpe_fertility": "bpe_apply_stored's zero-training-jobs skeleton with the group columns riding the token stream: one vocab replay, one token join, ONE language-keyed aggregation — output is |langs| rows, integer basis-point fertility",
-    "metrics_request_catalog_summary": "per-seed family map checkpointed once for its two broadcast consumers (event-count join + normalized-pid citation theta-join) + ONE seed-keyed unique-count aggregation — one zero-filled row per requested id, per-seed families never leave the cluster",
+    "metrics_request_catalog_summary": "per-seed families resolved by one driver collect into a literal (seed, pid) array that tags events (after a pid IN-list) and citations with their seeds — no join, no broadcast — + ONE seed-keyed unique-count aggregation; one zero-filled row per requested id",
     "doc_bpe_apply_m48": "doc_bpe_apply_stored's zero-training-jobs skeleton at 48 merges: the replay chain crosses its localCheckpoint(every=32) boundary, so the plan roots at a checkpointed VOCAB-sized RDD scan (never the corpus) with the post-checkpoint merge projections above it; corpus tokens still touched exactly once by the unit join + per-doc agg",
     "doc_vocab_budget": "the fertility report's consumer: the corpus-mass work is bpe_apply_stats' audited one-pass shape collapsing to |langs| rows; the Hamilton apportionment is two SinglePartition windows + integer projections over that tiny frame — exact budget sum at zero corpus cost",
     "search_stream_batch_twin": "the streaming ingest's transform graph on a batch frame: pure per-row codegen (regexp + kv + md5 + hour format); only the batch seam's raw-rows _spread exchange, no key-based shuffle — identical per-micro-batch transform under readStream",
