@@ -255,13 +255,15 @@ def q_pid_family_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # seeded BFS, not component contraction: chains are diameter <= 9,
     # so BFS pays ceil(9/hop) cheap frontier joins while star
-    # contraction pays fewer rounds of far more shuffles (measured 3x
-    # slower at sf0.1 — see expand_family_components for when the
-    # trade flips).  hop=3 composes the chain edges (deg <= 2, so the
-    # <=3-hop set stays linear) into 3 driver-loop rounds; max_iters=9
-    # is exact (10-node chains by construction), so there is no
-    # empty-frontier probe round either.  Measured at sf0.1: hop=1
-    # ~5.0s, hop=2 ~3.3s, hop=3 ~2.8s warm.
+    # contraction pays fewer rounds of far more shuffles (on the same
+    # chains, order_components ran 32 jobs / 103 stages and 4.7-5.2 s
+    # warm on the star kernel against 14 / 32 and 1.8-1.9 s on label
+    # propagation at sf0.01; SCALE.md has when the trade flips).
+    # hop=3 composes the chain edges (deg <= 2, so the <=3-hop set
+    # stays linear) into 3 driver-loop rounds; max_iters=9 is exact
+    # (10-node chains by construction), so there is no empty-frontier
+    # probe round either.  Measured at sf0.1: hop=1 ~5.0s, hop=2
+    # ~3.3s, hop=3 ~2.8s warm.
     return expand_family(
         seeds, edges, seed_col="pid", max_iters=9, undirected=True, hop=3,
         early_stop=False,
@@ -315,9 +317,12 @@ def q_order_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chain graph (deg <= 2): hop=3 composes the neighborhood once
     # into ceil(9/3)=3 label-propagation rounds; max_iters=9 is exact
     # (10-node chains by construction: diameter <= 9), so there are no
-    # early-stop count jobs either.  Measured at sf0.1: hop=2 ~2.8s,
-    # hop=3 ~2.3s warm on the propagation loop.
-    return connected_components(edges, max_iters=9, hop=3, early_stop=False)
+    # convergence-count jobs either.  Measured at sf0.1: hop=2 ~2.8s,
+    # hop=3 ~2.3s warm on the propagation loop.  Label propagation,
+    # not the star kernel: the diameter bound is structural, and on
+    # star this entry ran 32 jobs / 103 stages against 14 / 32 here
+    # (identical rows at sf0.01 and sf0.1).
+    return connected_components(edges, max_iters=9, hop=3)
 
 
 # the chains are paths within one customer, so each component's min id

@@ -4418,8 +4418,7 @@ def q_doc_linkage_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduplicate=False,
     ).select("id_a", "id_b")
     cc = connected_components_star(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        require_converged=True,
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
     return (
         docs.select("doc_id")
@@ -6214,31 +6213,32 @@ QUERIES["emb_knn_pagerank"] = QuerySpec(
 
 
 def q_emb_knn_pagerank_conserving(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mass-conserving PageRank twin (pagerank_int_conserving,
+    """Mass-conserving PageRank (pagerank_int(conserve_mass=True),
     operators/closure.py): dangling mass redistributed uniformly each
     round.  The k-NN graph has no dangling nodes by construction
     (every node in a shared cell emits edges), so the entry drops all
     edges whose source id ≡ 0 (mod 5) — those nodes keep receiving
     mass but emit none, i.e. REAL dangling mass flows through the
-    per-round anti-join aggregate; the oracle applies the same edge
-    filter and replays every round."""
-    from metrics_service_spark.operators.closure import (
-        pagerank_int_conserving,
-    )
+    per-round dangling sum (a filter on the carried out-degree,
+    broadcast as one row); the oracle applies the same edge filter and
+    replays every round."""
+    from metrics_service_spark.operators.closure import pagerank_int
     from metrics_service_spark.operators.similarity import knn_graph_int
 
     emb = load_table(spark, sf_dir, "embeddings")
     g = knn_graph_int(emb, n_cells=_derived_cells(sf_dir), k=KNN_K).filter(
         F.col("src_id") % 5 != 0
     )
-    return pagerank_int_conserving(g, iters=PR_ITERS, scale=PR_SCALE).select(
+    return pagerank_int(
+        g, iters=PR_ITERS, scale=PR_SCALE, conserve_mass=True
+    ).select(
         F.col("node").alias("vec_id"), "pr_q"
     )
 
 
 def _oracle_knn_pagerank_conserving() -> str:
     # NB: each round references p{i-1} TWICE (dangling aggregate +
-    # contributions) — unlike the plain twin's single-reference chain,
+    # contributions) — unlike the plain entry's single-reference chain,
     # DuckDB would inline-re-evaluate the whole prefix exponentially
     # (measured: >400 s vs 3.7 s at sf0.001), so the round states are
     # pinned AS MATERIALIZED

@@ -352,8 +352,7 @@ def q_mm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id_a", "id_b"
     )
     cc = connected_components_star(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        require_converged=True,
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
     return (
         media.select("media_id")

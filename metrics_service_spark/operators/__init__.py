@@ -7,7 +7,6 @@ from metrics_service_spark.operators.closure import (  # noqa: F401
     connected_components,
     connected_components_star,
     expand_family,
-    expand_family_components,
     resolve_chains,
 )
 from metrics_service_spark.operators.counter import (  # noqa: F401

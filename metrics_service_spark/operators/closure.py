@@ -21,10 +21,17 @@ Scale notes:
   r7 lever that actually moved the needle was FEWER materialization
   barriers where rounds are single-reference (connected_components
   checkpoints every CHECKPOINT_EVERY rounds) and fewer separate
-  actions (no per-round probes when max_iters is structural).
+  actions (no per-round probes when max_iters is a structural bound).
 - Iterations are capped (the reference caps chain depth at 20); beyond
-  that, GraphFrames connectedComponents (large-star/small-star, ~log n
-  rounds) is the right tool for full family resolution of 10^8 edges.
+  that, large-star/small-star contraction (~log n rounds,
+  `connected_components_star`) is the tool for full family resolution
+  of 10^8 edges.
+
+One function per algorithm, one loop per function: pointer jumping
+(`resolve_chains`), seeded BFS (`expand_family`), label propagation
+under a caller-proven diameter bound (`connected_components`),
+star contraction (`connected_components_star`) and fixed-round integer
+PageRank (`pagerank_int`).
 """
 
 from __future__ import annotations
@@ -35,6 +42,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 CHECKPOINT_EVERY = 5
+
+
+def _compose_hops(edges: DataFrame, a: str, b: str, hop: int) -> DataFrame:
+    """The <=hop-hop edge set of `edges` (columns `a` -> `b`): the
+    union of the path-length-1..hop relations, self-loops dropped (a
+    u->...->u path adds nothing to a BFS or min-label step and would
+    double the composed set on undirected graphs), checkpointed because
+    every loop round re-reads it."""
+    acc, exact = edges, edges
+    for _ in range(hop - 1):
+        exact = (
+            exact.alias("x")
+            .join(edges.alias("y"), F.col(f"x.{b}") == F.col(f"y.{a}"))
+            .select(F.col(f"x.{a}").alias(a), F.col(f"y.{b}").alias(b))
+        )
+        acc = acc.unionByName(exact)
+    return acc.filter(F.col(a) != F.col(b)).distinct().localCheckpoint(eager=False)
 
 
 def resolve_chains(
@@ -160,22 +184,7 @@ def expand_family(
         F.col(src).alias(src), F.col(dst).alias(dst)
     ).localCheckpoint(eager=False)
     if hop > 1:
-        # <=hop-hop edge set: union of path-length-1..hop relations,
-        # self-loops dropped (a u->...->u path adds nothing to BFS and
-        # would double the composed set on undirected graphs)
-        acc, exact = edges, edges
-        for _ in range(hop - 1):
-            exact = (
-                exact.alias("a")
-                .join(edges.alias("b"), F.col(f"a.{dst}") == F.col(f"b.{src}"))
-                .select(F.col(f"a.{src}").alias(src), F.col(f"b.{dst}").alias(dst))
-            )
-            acc = acc.unionByName(exact)
-        edges = (
-            acc.filter(F.col(src) != F.col(dst))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+        edges = _compose_hops(edges, src, dst, hop)
         max_iters = -(-max_iters // hop)
     frontier = seeds.select(
         F.col(seed_col).alias("seed"), F.col(seed_col).alias("member")
@@ -233,83 +242,29 @@ def expand_family(
     return out
 
 
-def expand_family_components(
-    seeds: DataFrame,
-    edges: DataFrame,
-    *,
-    seed_col: str = "pid",
-    src: str = "src",
-    dst: str = "dst",
-    max_iters: int = 20,
-) -> DataFrame:
-    """Bulk undirected family closure (J1) via connected components:
-    star-contract the WHOLE edge set once (O(log n) rounds regardless
-    of chain length), then each seed picks up its component's member
-    list with two equi-joins.  Identical output to
-    `expand_family(undirected=True)` — (seed, member) pairs including
-    (seed, seed), singletons for seeds absent from the graph.
-
-    When to use which (measured at sf0.1 on the order-chain graph,
-    diameter 9): seeded BFS (expand_family) won 4.2s vs 14s — star
-    contraction converges in fewer ROUNDS but each round is ~4x the
-    shuffles (two star halves x groupBy+join+double-distinct), and on
-    shallow graphs round count never amortizes that.  This path wins
-    when diameter >> log n (long version chains, web-graph-like
-    families) or when seeds cover most components anyway — then BFS
-    pays diameter rounds AND re-walks shared components per seed,
-    while contraction pays once.  Request-time resolution of a few
-    pids (pid_resolution.py:285-416) always keeps the seeded BFS.
-    """
-    comp = connected_components_star(
-        edges, src=src, dst=dst, max_iters=max_iters
-    ).localCheckpoint(eager=False)
-    s = seeds.select(F.col(seed_col).alias("seed")).distinct()
-    seed_comp = (
-        s.join(comp, s.seed == comp.node, "left")
-        .select("seed", "component")
-    )
-    members = (
-        seed_comp.filter(F.col("component").isNotNull())
-        .join(
-            comp.select("component", F.col("node").alias("member")),
-            "component",
-        )
-        .select("seed", "member")
-    )
-    singletons = seed_comp.filter(F.col("component").isNull()).select(
-        "seed", F.col("seed").alias("member")
-    )
-    return members.unionByName(singletons)
-
-
 def connected_components(
     edges: DataFrame,
     *,
     src: str = "src",
     dst: str = "dst",
-    max_iters: int = 25,
+    max_iters: int,
     hop: int = 1,
-    early_stop: bool = True,
-    require_converged: bool = False,
 ) -> DataFrame:
     """Connected components by min-label propagation: every node
     repeatedly adopts the smallest component id among itself and its
-    neighbors, to fixpoint.  Returns (node, component) with component =
-    min node id in the component.
+    neighbors.  Returns (node, component) with component = min node id
+    in the component.
 
-    `require_converged=True` raises if the early-stop loop exhausts
-    `max_iters` while labels are still changing — without it an
-    under-budgeted `max_iters` on a long-chain component silently
-    returns split (unconverged) labels.  Callers whose downstream
-    contract is exact-closure equality (e.g. an exact recursive
-    oracle) must set it; it only applies to the `early_stop=True`
-    path, since probe-free callers supply a structural round bound by
-    construction.
-
-    `early_stop=False` drops the per-round changed-count job AND the
-    old-label plumbing that feeds it — for callers whose `max_iters`
-    is an exact structural bound (hop * max_rounds >= graph diameter
-    by construction), every round's count is pure driver latency.
+    Contract: `max_iters` is a bound on every component's diameter
+    that the CALLER CAN PROVE from how the graph is built (e.g. chains
+    of at most 10 nodes have diameter <= 9).  The loop runs exactly
+    ceil(max_iters / hop) rounds with no convergence probe, so an
+    under-budgeted `max_iters` would return split labels.  A caller
+    without such a bound uses `connected_components_star`, whose
+    O(log n) rounds are diameter-independent and whose non-convergence
+    raises.  The trade, measured on order_components (chains of
+    diameter <= 9, identical rows): label propagation ran 14 jobs / 32
+    stages, the star kernel 32 jobs / 103 stages, at sf0.01 and sf0.1.
 
     `hop=h` composes the symmetrized edge relation with itself once up
     front (<=h-hop neighborhoods), so a label travels h steps per
@@ -319,22 +274,13 @@ def connected_components(
     bounded-degree graphs (version chains) only — keep hop=1 on
     hub-heavy graphs.
 
-    This is the seedless scale path for FULL-corpus identifier-family
-    resolution (10^8 edges) where per-seed BFS (expand_family) would be
-    quadratic.  Rounds ~ graph diameter; the large-star/small-star
-    variant (log n rounds) is the upgrade when diameters are large —
-    for identifier families (version chains + resource maps) diameters
-    are tens at most.
-
-    Each round: one shuffle join (labels x edges) + one min-aggregate;
-    state is checkpointed per round (O(1) lineage); termination checks
-    piggyback on the aggregate's count.
+    Each round: one shuffle join (labels x edges) + one min-aggregate.
     """
     # checkpoint the INPUT edges before symmetrizing: the union below
     # references `edges` twice, so an un-materialized input (window
-    # derivation, near-dup pair generation) would be computed twice —
-    # one leaf read each instead.  The symmetrized frame keeps its own
-    # checkpoint too: nodes and every propagation round re-read it.
+    # derivation) would be computed twice — one leaf read each
+    # instead.  The symmetrized frame keeps its own checkpoint too:
+    # nodes and every propagation round re-read it.
     edges = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).localCheckpoint(eager=False)
@@ -351,105 +297,57 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
     if hop > 1:
-        acc, exact = sym, sym
-        for _ in range(hop - 1):
-            exact = (
-                exact.alias("x")
-                .join(sym.alias("y"), F.col("x.b") == F.col("y.a"))
-                .select(F.col("x.a").alias("a"), F.col("y.b").alias("b"))
-            )
-            acc = acc.unionByName(exact)
-        # keep `nodes` from the 1-hop set (composition drops no node);
-        # self-loops add nothing to a min-label step
-        sym = (
-            acc.filter(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+        # `nodes` comes from the 1-hop set (composition drops no node)
+        sym = _compose_hops(sym, "a", "b", hop)
         max_iters = -(-max_iters // hop)
     labels = nodes.select("node", F.col("node").alias("component"))
-    if not early_stop:
-        # probe-free loop: self-loop edges make each node its own
-        # neighbor, so a round is ONE join + ONE min-agg and — key for
-        # the all-lazy checkpoint chain — each round's RDD is
-        # referenced exactly ONCE by the next (the former
-        # join+unionByName shape referenced it twice, which under a
-        # single deferred action serializes on the cache's per-block
-        # locks; measured +20% wall at sf0.1)
-        prop = sym.unionByName(
-            nodes.select(F.col("node").alias("a"), F.col("node").alias("b"))
-        ).localCheckpoint(eager=False)
-        for i in range(max_iters):
-            labels = (
-                prop.join(labels, prop.b == labels.node)
-                .groupBy("a")
-                .agg(F.min("component").alias("component"))
-                .select(F.col("a").alias("node"), "component")
-            )
-            # single-reference rounds chain lazily, so the plan grows
-            # LINEARLY with rounds and only needs truncation every few
-            # of them — each localCheckpoint call runs a synchronous
-            # driver-side planning pass (~0.4 s here), and per-round
-            # checkpoints made PLANNING the dominant cost of the whole
-            # operator (measured 3.4 s build vs 0.12 s execution)
-            if (i + 1) % CHECKPOINT_EVERY == 0:
-                labels = labels.localCheckpoint(eager=False)
-        return labels
-    converged = False
-    for _ in range(max_iters):
-        # one join + ONE shuffle per round: neighbor labels and each
-        # node's own label ride the same union into a single min-agg
-        # (the own-label row doubles as the old value for convergence
-        # detection) — vs the naive join + agg + second join shape
-        neighbor = sym.join(labels, sym.b == labels.node).select(
-            F.col("a").alias("node"),
-            F.col("component"),
-            F.lit(None).cast(labels.schema["component"].dataType).alias("__own"),
+    # self-loop edges make each node its own neighbor, so a round is
+    # ONE join + ONE min-agg and — key for the all-lazy checkpoint
+    # chain — each round's RDD is referenced exactly ONCE by the next
+    # (a join+unionByName shape references it twice, which under a
+    # single deferred action serializes on the cache's per-block
+    # locks; measured +20% wall at sf0.1)
+    prop = sym.unionByName(
+        nodes.select(F.col("node").alias("a"), F.col("node").alias("b"))
+    ).localCheckpoint(eager=False)
+    for i in range(max_iters):
+        labels = (
+            prop.join(labels, prop.b == labels.node)
+            .groupBy("a")
+            .agg(F.min("component").alias("component"))
+            .select(F.col("a").alias("node"), "component")
         )
-        updated = (
-            neighbor.unionByName(
-                labels.select(
-                    "node", "component", F.col("component").alias("__own")
-                )
-            )
-            .groupBy("node")
-            .agg(
-                F.min("component").alias("component"),
-                F.max("__own").alias("__old"),
-            )
-            .withColumn("__changed", F.col("component") < F.col("__old"))
-            .localCheckpoint(eager=False)
-        )
-        changed = updated.filter(F.col("__changed")).count()
-        labels = updated.select("node", "component")
-        if changed == 0:
-            converged = True
-            break
-    if require_converged and not converged:
-        raise RuntimeError(
-            f"connected_components: labels still changing after "
-            f"{max_iters} rounds (hop={hop}); a component's propagation "
-            "distance exceeds the round budget — raise max_iters or use "
-            "connected_components_star for diameter-independent rounds"
-        )
+        # single-reference rounds chain lazily, so the plan grows
+        # LINEARLY with rounds and only needs truncation every few
+        # of them — each localCheckpoint call runs a synchronous
+        # driver-side planning pass (~0.4 s here), and per-round
+        # checkpoints made PLANNING the dominant cost of the whole
+        # operator (measured 3.4 s build vs 0.12 s execution)
+        if (i + 1) % CHECKPOINT_EVERY == 0:
+            labels = labels.localCheckpoint(eager=False)
     return labels
 
 
-def _symmetric(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    # checkpoint before the union: it references `e` twice, and the
-    # caller's edge derivation may be expensive (see connected_components)
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .localCheckpoint(eager=False)
-    )
-    # r17 (guide §2.4): same canonical-dedup-then-mirror shape as
-    # star() — one |E| distinct instead of a 2|E| one, identical set
+def _canonize(e: DataFrame) -> DataFrame:
+    # dedup ONCE on the canonical (min, max) form and mirror without a
+    # second distinct — the symmetric closure of unique canonical pairs
+    # is already duplicate-free (u != v)
     canon = e.select(
         F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
     ).distinct()
     return canon.union(
         canon.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    )
+
+
+def _symmetric(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    # checkpoint before canonizing: the mirror union references the
+    # frame twice, and the caller's edge derivation may be expensive
+    # (see connected_components)
+    return _canonize(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .localCheckpoint(eager=False)
     )
 
 
@@ -459,7 +357,6 @@ def connected_components_star(
     src: str = "src",
     dst: str = "dst",
     max_iters: int = 20,
-    require_converged: bool = True,
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
@@ -473,13 +370,11 @@ def connected_components_star(
     join; convergence is detected by an order-insensitive edge-set
     fingerprint (sum of pair hashes), one tiny aggregate per round.
 
-    Like ``connected_components``, iterative operators here fail LOUD:
-    with ``require_converged`` (default) a fingerprint that is still
-    moving after ``max_iters`` rounds raises instead of emitting a
-    possibly-split labeling — at sf0.01 an oracle would catch the
-    silent form, at 100 TB nothing would.  O(log n) rounds means 20
-    covers ~10^6-node components, so the raise is a guard, not a
-    practical ceiling.
+    Fails LOUD: a fingerprint that is still moving after ``max_iters``
+    rounds raises instead of emitting a possibly-split labeling — at
+    sf0.01 an oracle would catch the silent form, at 100 TB nothing
+    would.  O(log n) rounds means 20 covers ~10^6-node components, so
+    the raise is a guard, not a practical ceiling.
 
     Returns (node, component), component = min node id.
     """
@@ -494,7 +389,7 @@ def connected_components_star(
         # re-attached partition rows (v, m) and the center rows (u, m))
         # are emitted from that single pass via an array explode.
         # Output is RAW directed rows (duplicates retained — the center
-        # row is emitted once per edge): the per-round `canonize` below
+        # row is emitted once per edge): the per-round `_canonize`
         # collapses them once per ROUND instead of once per half-star.
         from pyspark.sql import Window
 
@@ -530,17 +425,6 @@ def connected_components_star(
             )
             .select(F.col("__s.x").alias("u"), F.col("__s.y").alias("v"))
             .filter(F.col("u") != F.col("v"))
-        )
-
-    def canonize(out: DataFrame) -> DataFrame:
-        # dedup ONCE on the canonical (min, max) form and mirror
-        # without a second distinct — the symmetric closure of unique
-        # canonical pairs is already duplicate-free (u != v)
-        canon = out.select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        ).distinct()
-        return canon.union(
-            canon.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
 
     def round_stats(e: DataFrame) -> tuple[tuple, bool]:
@@ -585,8 +469,7 @@ def connected_components_star(
         ).first()
         return (row["h"], row["n"]), row["viol"] == 0
 
-    prev, star_forest = round_stats(e)
-    converged = star_forest
+    prev, converged = round_stats(e)
     for _ in range(max_iters):
         if converged:
             break
@@ -595,7 +478,7 @@ def connected_components_star(
         # duplicate-retaining mirror union instead.  A star pass is a
         # per-row transform over a window min, so its output SET
         # depends only on its input SET (duplicates neither move a min
-        # nor add distinct emissions); the round's final canonize
+        # nor add distinct emissions); the round's final _canonize
         # therefore yields the identical edge set, fingerprint
         # sequence, round count and labeling as the
         # distinct-per-half-star form, with 3 full-edge-set exchanges
@@ -605,22 +488,19 @@ def connected_components_star(
         big_sym = big.union(
             big.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
-        e = canonize(star_raw(big_sym, large=False)).localCheckpoint(
+        e = _canonize(star_raw(big_sym, large=False)).localCheckpoint(
             eager=False
         )
         cur, star_forest = round_stats(e)
-        if star_forest or cur == prev:
-            converged = True
-            break
+        converged = star_forest or cur == prev
         prev = cur
-    if require_converged and not converged:
+    if not converged:
         raise RuntimeError(
             f"connected_components_star: edge-set fingerprint still "
             f"moving after {max_iters} rounds; the star contraction has "
             "not reached a fixpoint — raise max_iters (rounds are "
             "O(log n), so this indicates astronomically large components "
-            "or a data problem), or pass require_converged=False to "
-            "accept a possibly-split labeling"
+            "or a data problem)"
         )
     # converged: every node is adjacent to its component minimum
     comp = (
@@ -643,6 +523,7 @@ def pagerank_int(
     damping_num: int = 17,
     damping_den: int = 20,
     scale: int = 10**12,
+    conserve_mass: bool = False,
 ) -> DataFrame:
     """Fixed-round power-iteration PageRank in EXACT integer
     fixed-point — link-analysis importance over a directed graph (the
@@ -656,10 +537,20 @@ def pagerank_int(
     with floor division on non-negative longs throughout — sums of
     longs are order-independent, so the result is bit-identical across
     engines and an unrolled SQL oracle replays all ``iters`` rounds.
-    Dangling mass is NOT redistributed (a node without out-edges
-    simply leaks its mass), keeping every term local and exact; ranks
-    are therefore comparable within a run, which is all a quality
-    prior needs.
+    By default dangling mass is NOT redistributed (a node without
+    out-edges simply leaks its mass), keeping every term local and
+    exact; ranks are therefore comparable within a run, which is all a
+    quality prior needs.
+
+    ``conserve_mass=True`` is the classic mass-conserving form, for
+    consumers who compare ranks ACROSS runs/graphs, where leaked mass
+    would make totals incomparable.  Per round, the dangling mass D =
+    sum of p over nodes with no out-edges is folded back uniformly:
+        p' = ((den-num)*scale) div (den*N)
+           + (num * (sum_in(p_u div outdeg_u) + D div N)) div den
+    D is a FILTER over the carried out-degree (__deg IS NULL marks a
+    node with no out-edges) + a one-row sum that enters the plan as a
+    broadcast.  With the flag off the plan has no such cross join.
 
     Scale shape (r18, guide §2.4 — one partitioning carries every
     per-round operation): the edge frame is hash-partitioned by src
@@ -716,110 +607,20 @@ def pagerank_int(
             .groupBy("node")
             .agg(F.sum("__c").alias("__s"))
         )
-        ranks = (
-            nd.join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    F.expr(f"CAST({base_num} AS BIGINT) div ({damping_den} * __n)")
-                    + F.expr(
-                        f"({damping_num} * coalesce(__s, CAST(0 AS BIGINT))) "
-                        f"div {damping_den}"
-                    )
-                ).alias("p"),
-                "__deg",
-            )
-        )
-    return ranks.select("node", F.col("p").alias("pr_q"))
-
-
-def pagerank_int_conserving(
-    edges: DataFrame,
-    *,
-    src_col: str = "src_id",
-    dst_col: str = "dst_id",
-    iters: int = 3,
-    damping_num: int = 17,
-    damping_den: int = 20,
-    scale: int = 10**12,
-) -> DataFrame:
-    """`pagerank_int` with dangling-mass REDISTRIBUTION — the
-    mass-conserving form (classic PageRank) for quality-prior
-    consumers who compare ranks ACROSS runs/graphs, where the plain
-    twin's leaked mass would make totals incomparable (VERDICT r14
-    optional item).
-
-    Per round, the dangling mass D = sum of p over nodes with no
-    out-edges is folded back uniformly:
-        p' = ((den-num)*scale) div (den*N)
-           + (num * (sum_in(p_u div outdeg_u) + D div N)) div den
-    — still floor division on non-negative longs throughout, sums
-    order-independent, so the unrolled SQL oracle replays every round
-    bit-for-bit.
-
-    Scale shape (r18): identical to the plain twin (src-partitioned
-    checkpointed edge frame, out-degree carried on the rank rows, one
-    full exchange per round), and the dangling aggregate is now a
-    FILTER over the carried out-degree (__deg IS NULL marks a node
-    with no out-edges) + a one-row sum that enters the plan as a
-    broadcast — the per-round anti-join against the out-degree frame
-    is gone.  The dangling node set is identical by construction:
-    ranks' node set == nodes, and __deg is NULL exactly for the nodes
-    the old left_anti dropped.  Kept as a separate function so the
-    audited `pagerank_int` plan is byte-untouched."""
-    e = (
-        edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        )
-        .repartition(F.col("src"))
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    total = nodes.agg(F.count(F.lit(1)).alias("__n"))
-    outdeg = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("__deg")
-    )
-    nd = (
-        nodes.join(outdeg, "node", "left")
-        .crossJoin(F.broadcast(total))
-        .repartition(F.col("node"))
-        .localCheckpoint(eager=False)
-    )
-    base_num = (damping_den - damping_num) * scale
-    ranks = nd.select(
-        "node",
-        F.expr(f"CAST({scale} AS BIGINT) div __n").alias("p"),
-        "__deg",
-    )
-    for _ in range(iters):
-        dangling = (
-            ranks.filter(F.col("__deg").isNull())
-            .agg(
+        attach, inflow = nd, "coalesce(__s, CAST(0 AS BIGINT))"
+        if conserve_mass:
+            dangling = ranks.filter(F.col("__deg").isNull()).agg(
                 F.coalesce(F.sum("p"), F.lit(0).cast("long")).alias("__d")
             )
-        )
-        contrib = (
-            e.join(ranks.select("node", "p", "__deg"), e.src == F.col("node"))
-            .select(F.col("dst").alias("node"), F.expr("p div __deg").alias("__c"))
-            .groupBy("node")
-            .agg(F.sum("__c").alias("__s"))
-        )
+            attach = nd.crossJoin(F.broadcast(dangling))
+            inflow = f"({inflow} + (__d div __n))"
         ranks = (
-            nd.crossJoin(F.broadcast(dangling))
-            .join(contrib, "node", "left")
+            attach.join(contrib, "node", "left")
             .select(
                 "node",
                 (
                     F.expr(f"CAST({base_num} AS BIGINT) div ({damping_den} * __n)")
-                    + F.expr(
-                        f"({damping_num} * (coalesce(__s, CAST(0 AS BIGINT))"
-                        f" + (__d div __n))) div {damping_den}"
-                    )
+                    + F.expr(f"({damping_num} * {inflow}) div {damping_den}")
                 ).alias("p"),
                 "__deg",
             )

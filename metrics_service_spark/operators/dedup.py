@@ -1397,7 +1397,7 @@ def tiered_dedup(
 
     Every stage is an existing audited operator (exact_dedup,
     ngram_jaccard_pairs with the lossless length-bucket blocking +
-    max_cell linearity guard, connected_components) and every keeper
+    max_cell linearity guard, connected_components_star) and every keeper
     rule is a deterministic min — the full pipeline replays in SQL.
     """
     from pyspark.sql import Window
@@ -1434,16 +1434,15 @@ def tiered_dedup(
         threshold=threshold,
         max_cell=max_cell,
     ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    # require_converged: the keep-list contract is exact-closure
-    # equality (the oracle computes the full recursive closure) — an
-    # exhausted round budget on a long-chain component must raise, not
-    # silently return split labels (ADVICE r11).  r17: alternating-star
-    # CC (O(log n) rounds in component size) replaces min-label
-    # propagation (O(diameter) rounds) — identical (node, min-id)
-    # labeling, same loud non-convergence raise, and chain-shaped
-    # near-dup families at scale can no longer exhaust a
-    # diameter-bounded round budget (the same upgrade
-    # doc_linkage_clusters and mm_dedup_clusters made this round).
+    # the keep-list contract is exact-closure equality (the oracle
+    # computes the full recursive closure) — an exhausted round budget
+    # on a long-chain component must raise, not silently return split
+    # labels (ADVICE r11), and the star kernel always raises.  r17:
+    # alternating-star CC (O(log n) rounds in component size) replaces
+    # min-label propagation (O(diameter) rounds) — identical
+    # (node, min-id) labeling, and chain-shaped near-dup families at
+    # scale can no longer exhaust a diameter-bounded round budget (the
+    # same upgrade doc_linkage_clusters and mm_dedup_clusters made).
     cc = connected_components_star(pairs, max_iters=max_iters)
     near = (
         keepers.select(id_col)

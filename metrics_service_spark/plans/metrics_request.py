@@ -22,8 +22,8 @@ Known deviations from the reference, implemented intentionally
   -> intended semantics (a real nodeId equality filter).
 - `formatDataPerUser` stale month_index bug (metricsreader.py:1060-1068)
   -> correct outer merge for citation-only months.
-- "unique" counts use exact countDistinct (the ES `cardinality` HLL
-  approximation is available via approx=True).
+- "unique" counts use exact countDistinct, not the ES `cardinality`
+  HLL approximation.
 """
 
 from __future__ import annotations
@@ -71,21 +71,18 @@ def run_metrics_request(
     spark: SparkSession,
     request: dict,
     tables: MetricsTables,
-    *,
-    approx: bool = False,
 ) -> DataFrame:
     """The engine's public query API (SURVEY.md S9): MetricsRequest JSON
     in, result DataFrame out.  The REST layer stays external and calls
     this; `MetricsRequestPlanner.response` renders the reference's
     parallel-array JSON shape."""
-    return MetricsRequestPlanner(spark, tables, approx=approx).plan(request)
+    return MetricsRequestPlanner(spark, tables).plan(request)
 
 
 class MetricsRequestPlanner:
-    def __init__(self, spark: SparkSession, tables: MetricsTables, *, approx: bool = False):
+    def __init__(self, spark: SparkSession, tables: MetricsTables):
         self.spark = spark
         self.t = tables
-        self.approx = approx
 
     # -- identifier expansion (process boundary #1 in the reference) ------
     def family_map(self, filter_type: str, values: list[str]) -> dict[str, list[str]]:
@@ -251,16 +248,13 @@ class MetricsRequestPlanner:
         bucket = F.date_format("dateLogged", fmt).alias("bucket")
         dims = [bucket] + ([F.col("geoip.country_code2").alias("country")] if by_country else [])
 
-        uniq = (
-            F.approx_count_distinct if self.approx else F.countDistinct
-        )
         is_data = F.col("formatType") == "DATA"
         is_meta = F.col("formatType") == "METADATA"
         agg = ev.groupBy(*dims).agg(
             F.count(F.when(is_data, 1)).alias("downloads"),
             F.count(F.when(is_meta, 1)).alias("views"),
-            uniq(F.when(is_data, F.col("eventId"))).alias("unique_downloads"),
-            uniq(F.when(is_meta, F.col("eventId"))).alias("unique_views"),
+            F.countDistinct(F.when(is_data, F.col("eventId"))).alias("unique_downloads"),
+            F.countDistinct(F.when(is_meta, F.col("eventId"))).alias("unique_views"),
         )
 
         cites = self.citations_for_family(family)

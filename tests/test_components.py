@@ -1,6 +1,7 @@
-"""Connected-components algorithm tests: large-star/small-star equals
-min-label propagation on random graphs, converges in few rounds on long
-chains, and matches hand-computed components."""
+"""Connected-components algorithm tests: large-star/small-star and
+min-label propagation (with a structural round bound) both equal
+union-find on random graphs, the star form converges in few rounds on
+long chains, and order_components keeps its job budget."""
 
 from __future__ import annotations
 
@@ -45,8 +46,11 @@ def test_star_matches_unionfind_random(spark, seed):
         r.node: r.component for r in connected_components_star(df).collect()
     }
     assert got == want
+    # label propagation runs a caller-proven diameter bound: the node
+    # count bounds every component's diameter
     got_prop = {
-        r.node: r.component for r in connected_components(df, max_iters=90).collect()
+        r.node: r.component
+        for r in connected_components(df, max_iters=len(want), hop=3).collect()
     }
     assert got_prop == want
 
@@ -65,55 +69,13 @@ def test_star_long_chain_few_rounds(spark):
 
 
 def test_star_raises_when_round_budget_exhausted(spark):
-    # require_converged (default True) must fail LOUD when the edge-set
-    # fingerprint is still moving at max_iters — mirrors the min-label
-    # variant's guard; a path needs >1 star round, so max_iters=1 on a
-    # long chain cannot reach the fixpoint
+    # the star form must fail LOUD when the edge-set fingerprint is
+    # still moving at max_iters; a path needs >1 star round, so
+    # max_iters=1 on a long chain cannot reach the fixpoint
     edges = [(i, i + 1) for i in range(64)]
     df = spark.createDataFrame(edges, "src long, dst long")
     with pytest.raises(RuntimeError, match="still\\s+moving"):
         connected_components_star(df, max_iters=1).collect()
-    # opting out returns a (possibly split) labeling instead of raising
-    got = connected_components_star(
-        df, max_iters=1, require_converged=False
-    ).collect()
-    assert len(got) == 65
-
-
-def test_expand_family_components_equals_seeded_bfs(spark):
-    """The bulk component-join closure must produce exactly the BFS
-    (seed, member) pairs, including (seed, seed) singletons for seeds
-    absent from the edge set."""
-    from pyspark.sql import functions as F
-
-    from metrics_service_spark.operators.closure import (
-        expand_family,
-        expand_family_components,
-    )
-
-    rng = random.Random(7)
-    edges = [
-        (rng.randrange(120), rng.randrange(120)) for _ in range(150)
-    ]
-    edf = spark.createDataFrame(edges, "src long, dst long")
-    # seeds: some in the graph, 999 guaranteed absent (singleton)
-    seeds = spark.createDataFrame(
-        [(i,) for i in range(0, 120, 7)] + [(999,)], "pid long"
-    )
-    # expand_family expects the caller to have symmetrized the edges
-    # (as q_pid_family_closure does); expand_family_components
-    # symmetrizes internally
-    sym = edf.union(
-        edf.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    bfs = expand_family(
-        seeds, sym, seed_col="pid", max_iters=30, undirected=True
-    )
-    comp = expand_family_components(seeds, edf, seed_col="pid")
-    got_b = sorted((r["seed"], r["member"]) for r in bfs.collect())
-    got_c = sorted((r["seed"], r["member"]) for r in comp.collect())
-    assert got_b == got_c
-    assert (999, 999) in got_c
 
 
 @pytest.mark.slow
@@ -148,16 +110,12 @@ def test_expand_family_hop2_equals_hop1(spark):
 
 
 def test_early_stop_off_equals_on_random_graph(spark):
-    """early_stop=False (no per-round probe/count jobs) is a pure
-    latency optimization: identical output to the default on a random
-    graph, for both the BFS closure and label propagation, provided
-    max_iters bounds the diameter."""
+    """early_stop=False (no per-round probe jobs) is a pure latency
+    optimization of the BFS closure: identical output to the default
+    on a random graph, provided max_iters bounds the diameter."""
     from pyspark.sql import functions as F
 
-    from metrics_service_spark.operators.closure import (
-        connected_components,
-        expand_family,
-    )
+    from metrics_service_spark.operators.closure import expand_family
 
     rng = random.Random(29)
     edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(70)]
@@ -173,27 +131,16 @@ def test_early_stop_off_equals_on_random_graph(spark):
     )
     assert sorted(map(tuple, bfs_on.collect())) == sorted(map(tuple, bfs_off.collect()))
 
-    cc_on = connected_components(edf, max_iters=20)
-    cc_off = connected_components(edf, max_iters=20, early_stop=False)
-    assert sorted(map(tuple, cc_on.collect())) == sorted(map(tuple, cc_off.collect()))
 
+def test_order_components_job_budget(spark, sf_dir, count_jobs):
+    """order_components (label propagation: hop=3 composition, 3
+    probe-free rounds) launches a fixed number of Spark jobs, build
+    plus collect.  Pinned so a probe, an extra checkpoint or a switch
+    to the star kernel (32 jobs at sf0.01) cannot land unnoticed."""
+    from metrics_service_spark.catalog import all_queries
 
-def test_require_converged_raises_on_exhausted_budget(spark):
-    # a 40-node path has propagation distance ~40; 3 min-label rounds
-    # cannot converge, and the exact-closure contract must raise
-    # instead of silently returning split labels (ADVICE r11)
-    edges = [(i, i + 1) for i in range(40)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    with pytest.raises(Exception, match="still changing"):
-        connected_components(df, max_iters=3, require_converged=True)
-    # and with an adequate budget the same flag is a no-op
-    got = {
-        r.node: r.component
-        for r in connected_components(
-            df, max_iters=60, require_converged=True
-        ).collect()
-    }
-    assert set(got.values()) == {0}
+    q = all_queries()["order_components"].fn
+    assert count_jobs(lambda: q(spark, sf_dir).collect()) == 14
 
 
 def test_pagerank_int_hand_checked(spark):

@@ -7,6 +7,7 @@ from __future__ import annotations
 import io
 import contextlib
 
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -82,35 +83,27 @@ def test_auc_cumulative_window_is_bucket_partitioned(spark):
     assert plan.count("Exchange SinglePartition") <= 2
 
 
-def test_pagerank_no_driver_collect_in_plan_build(spark):
+@pytest.mark.parametrize("conserve_mass", [False, True])
+def test_pagerank_no_driver_collect_in_plan_build(spark, count_jobs, conserve_mass):
     """pagerank_int holds no driver-side state: the only build-time
     jobs are the lazy-checkpoint materializations (edges, node set and
     — r18 — the degree/N re-attach frame: the under-AQE toRdd jobs),
     NEVER a data-sized collect.  Pinned as ROUND-INDEPENDENCE: the
     checkpoints are built once, so tripling `iters` must add ZERO
     build-time jobs (a per-round collect/probe would scale with
-    iters); N enters as a broadcast aggregate, unlike the Lloyd-loop's
-    driver-held centroids."""
+    iters); N — and with conserve_mass the dangling mass — enters as a
+    broadcast one-row aggregate, unlike the Lloyd-loop's driver-held
+    centroids.  Node 3 has no out-edges, so the dangling term is live."""
     from metrics_service_spark.operators.closure import pagerank_int
 
-    tracker = spark.sparkContext.statusTracker()
     edges = spark.createDataFrame(
-        [(1, 2), (2, 1)], "src_id long, dst_id long"
+        [(1, 2), (2, 1), (2, 3)], "src_id long, dst_id long"
     )
 
-    def new_jobs_past(mark):
-        return sum(1 for j in tracker.getJobIdsForGroup(None) if j > mark)
+    def build(iters):  # build only, no action
+        return pagerank_int(edges, iters=iters, conserve_mass=conserve_mass)
 
-    def mark():
-        ids = tracker.getJobIdsForGroup(None)
-        return max(ids) if ids else -1
-
-    m0 = mark()
-    ranks = pagerank_int(edges, iters=1)  # build only, no action
-    n1 = new_jobs_past(m0)
-    m1 = mark()
-    ranks = pagerank_int(edges, iters=3)
-    n3 = new_jobs_past(m1)
-    assert n3 == n1
+    n1 = count_jobs(lambda: build(1))
+    assert count_jobs(lambda: build(3)) == n1
     # and the built plan never collects: no CollectLimit/toLocal nodes
-    assert "CollectLimit" not in _executed(ranks)
+    assert "CollectLimit" not in _executed(build(3))

@@ -23,7 +23,7 @@ def _executed(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_bpe_apply_launches_no_training_jobs(spark):
+def test_bpe_apply_launches_no_training_jobs(spark, count_jobs):
     """Applying a stored merge list is plan construction ONLY: zero
     Spark jobs (no per-round argmax collect, no checkpoint below the
     checkpoint_every boundary) — the contract that makes apply-many
@@ -33,11 +33,9 @@ def test_bpe_apply_launches_no_training_jobs(spark):
     docs = spark.createDataFrame(
         [(1, "ab ab abc"), (2, "banana")], "doc_id int, text string"
     )
-    tracker = spark.sparkContext.statusTracker()
-    before = tracker.getJobIdsForGroup(None)
-    out = bpe_apply(docs, merges=[("a", "b"), ("ab", "c")])
-    after = tracker.getJobIdsForGroup(None)
-    assert len(after) == len(before)
+    merges = [("a", "b"), ("ab", "c")]
+    assert count_jobs(lambda: bpe_apply(docs, merges=merges)) == 0
+    out = bpe_apply(docs, merges=merges)
     # and the built plan is join+agg over the replayed vocab: no pair
     # counting, no argmax anywhere
     plan = _executed(out)
@@ -95,35 +93,3 @@ def test_bpe_apply_pushes_column_pruning_to_scan(spark, sf_dir):
     for line in plan.splitlines():
         if "ReadSchema" in line:
             assert "lang" not in line and "source" not in line, line
-
-
-def test_pagerank_conserving_no_driver_collect_in_plan_build(spark):
-    """Like the plain twin (test_r14_guards): the only build-time jobs
-    are the lazy-checkpoint materializations, which are built ONCE —
-    tripling `iters` must add zero build-time jobs (a per-round
-    collect/probe would scale with iters); the dangling mass enters as
-    a broadcast one-row aggregate, never a collected scalar."""
-    from metrics_service_spark.operators.closure import (
-        pagerank_int_conserving,
-    )
-
-    tracker = spark.sparkContext.statusTracker()
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 1), (2, 3)], "src_id long, dst_id long"
-    )
-
-    def new_jobs_past(mark):
-        return sum(1 for j in tracker.getJobIdsForGroup(None) if j > mark)
-
-    def mark():
-        ids = tracker.getJobIdsForGroup(None)
-        return max(ids) if ids else -1
-
-    m0 = mark()
-    ranks = pagerank_int_conserving(edges, iters=1)
-    n1 = new_jobs_past(m0)
-    m1 = mark()
-    ranks = pagerank_int_conserving(edges, iters=3)
-    n3 = new_jobs_past(m1)
-    assert n3 == n1
-    assert "CollectLimit" not in _executed(ranks)

@@ -118,10 +118,7 @@ def _py_pagerank_conserving(edges, iters=3, scale=10**12):
 def test_pagerank_conserving_matches_python_reference(spark, seed):
     import random as _random
 
-    from metrics_service_spark.operators.closure import (
-        pagerank_int,
-        pagerank_int_conserving,
-    )
+    from metrics_service_spark.operators.closure import pagerank_int
 
     rng = _random.Random(seed)
     n = 30
@@ -130,11 +127,11 @@ def test_pagerank_conserving_matches_python_reference(spark, seed):
     df = spark.createDataFrame(edges, "src_id long, dst_id long")
     got = {
         r["node"]: r["pr_q"]
-        for r in pagerank_int_conserving(df, iters=3).collect()
+        for r in pagerank_int(df, iters=3, conserve_mass=True).collect()
     }
     want = _py_pagerank_conserving(edges)
     assert got == want
-    # the twin's whole point: with dangling nodes present, the
+    # the flag's whole point: with dangling nodes present, the
     # conserving form retains at least as much mass as the leaking
     # form, and never exceeds the exact budget
     plain = {r["node"]: r["pr_q"] for r in pagerank_int(df, iters=3).collect()}

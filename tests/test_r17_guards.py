@@ -20,7 +20,7 @@ def _lang_docs(spark):
     )
 
 
-def test_budget_retrain_local_job_count_independent_of_budget(spark):
+def test_budget_retrain_local_job_count_independent_of_budget(spark, count_jobs):
     """With trainer='local_finish' the WHOLE loop (current train ->
     fertility -> apportionment -> grouped retrain) must launch the
     same number of Spark jobs at total_budget 3 and 9 — the retrain
@@ -29,23 +29,18 @@ def test_budget_retrain_local_job_count_independent_of_budget(spark):
     from metrics_service_spark.operators.bpe import bpe_budget_retrain
 
     docs = _lang_docs(spark)
-    tracker = spark.sparkContext.statusTracker()
 
     def jobs(total_budget: int) -> int:
-        # count NEW job ids, not a len() delta: the status tracker
-        # retains a bounded window (spark.ui.retainedJobs), so late in
-        # a long shared session old ids are evicted and a len() delta
-        # can go negative (seen at ~16k stages in the full-suite run)
-        before = max(tracker.getJobIdsForGroup(None), default=-1)
-        bpe_budget_retrain(
-            docs,
-            "text",
-            n_merges_current=2,
-            total_budget=total_budget,
-            min_per_group=1,
-            trainer="local_finish",
+        return count_jobs(
+            lambda: bpe_budget_retrain(
+                docs,
+                "text",
+                n_merges_current=2,
+                total_budget=total_budget,
+                min_per_group=1,
+                trainer="local_finish",
+            )
         )
-        return sum(1 for i in tracker.getJobIdsForGroup(None) if i > before)
 
     assert jobs(3) == jobs(9)
 

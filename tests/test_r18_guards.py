@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from metrics_service_spark.operators.closure import (
     connected_components_star,
     pagerank_int,
-    pagerank_int_conserving,
 )
 
 
@@ -37,8 +36,8 @@ def test_star_cc_detection_is_not_premature_on_paths(spark):
 
 
 def test_pagerank_true_dangling_node_conserving_vs_plain(spark):
-    # node 9 has NO out-edges (true dangling): the plain twin leaks
-    # its mass, the conserving twin redistributes D div N each round —
+    # node 9 has NO out-edges (true dangling): the plain form leaks
+    # its mass, the conserving form redistributes D div N each round —
     # the r18 degree-carried round shape must preserve both contracts
     edges = spark.createDataFrame(
         [(1, 2), (2, 1), (1, 9), (2, 9)], "src_id long, dst_id long"
@@ -46,10 +45,10 @@ def test_pagerank_true_dangling_node_conserving_vs_plain(spark):
     plain = {r["node"]: r["pr_q"] for r in pagerank_int(edges, iters=3).collect()}
     cons = {
         r["node"]: r["pr_q"]
-        for r in pagerank_int_conserving(edges, iters=3).collect()
+        for r in pagerank_int(edges, iters=3, conserve_mass=True).collect()
     }
     assert set(plain) == set(cons) == {1, 2, 9}
-    # conserving mass total stays closer to scale than the leaking twin
+    # conserving mass total stays closer to scale than the leaking form
     assert sum(cons.values()) > sum(plain.values())
     # replay round 1 by hand for the conserving form:
     # p0 = scale div 3; D = p0(9); contribs: 1 gets p0(2) div 2 + D-share,
@@ -64,7 +63,7 @@ def test_pagerank_true_dangling_node_conserving_vs_plain(spark):
     # assert the 1-round output directly instead
     one = {
         r["node"]: r["pr_q"]
-        for r in pagerank_int_conserving(edges, iters=1).collect()
+        for r in pagerank_int(edges, iters=1, conserve_mass=True).collect()
     }
     assert one[9] == p1_node9
     assert one[1] == base + (17 * (p0 // 2 + d_share)) // 20

@@ -111,7 +111,7 @@ COMMENTARY = {
     "metrics_request_portal": "portal scope is an arrays_overlap predicate on the adapter's portalIdentifier (no identifier family -> unscoped citations, like repository); month spine + full-outer merge — the dispatcher's audited J6/A12 tail",
     "metrics_request_group": "group-subject membership + isPublic drive the family (one driver collect, the user-path shape); family IN-list + month spine + citations matched against the family literal",
     "metrics_request_package": "two-seed PID/SID/family expansion resolved on the driver into one sorted IN-list — the SID match arm end-to-end; no date filter so no spine, buckets full-outer the citation months",
-    "emb_knn_pagerank_conserving": "the plain twin's audited shape (per round one src-keyed join + one dst-keyed map-side-combined agg) plus ONE per-round anti-join aggregate that collapses dangling mass to a single broadcast row — no collect, no convergence tail",
+    "emb_knn_pagerank_conserving": "emb_knn_pagerank's audited shape (per round one src-keyed join + one dst-keyed map-side-combined agg) plus ONE per-round dangling sum — a filter on the carried out-degree (__deg IS NULL) collapsed to a single broadcast row, no anti-join; no collect, no convergence tail",
     "doc_bpe_fertility": "bpe_apply_stored's zero-training-jobs skeleton with the group columns riding the token stream: one vocab replay, one token join, ONE language-keyed aggregation — output is |langs| rows, integer basis-point fertility",
     "metrics_request_catalog_summary": "per-seed families resolved by one driver collect into a literal (seed, pid) array that tags events (after a pid IN-list) and citations with their seeds — no join, no broadcast — + ONE seed-keyed unique-count aggregation; one zero-filled row per requested id",
     "doc_bpe_apply_m48": "doc_bpe_apply_stored's zero-training-jobs skeleton at 48 merges: the replay chain crosses its localCheckpoint(every=32) boundary, so the plan roots at a checkpointed VOCAB-sized RDD scan (never the corpus) with the post-checkpoint merge projections above it; corpus tokens still touched exactly once by the unit join + per-doc agg",
