@@ -1,12 +1,16 @@
 """Training-data pipeline queries: dedup, similarity search, text
 analysis over the `documents` / `embeddings` tables.
 
-Oracle-compared where SQL-expressible; MinHash-LSH / SimHash / ANN are
-exposed without oracles (rows-only driver check) because their hash
-pipelines (xxhash64 seeds, hyperplane signatures) have no DuckDB
-equivalent — their correctness is instead property-tested in
-tests/test_dedup.py (candidates verified by exact Jaccard, ANN recall
-vs brute force).
+Every entry is oracle-compared except five xxhash64/float heads:
+MinHash-LSH (`doc_minhash_dedup`), the SimHash signature and its
+near-dup pairs (`doc_simhash`, `doc_simhash_neardup`), production
+SemDeDup (`emb_semdedup`) and bigram perplexity (`doc_lm_perplexity`).
+Their hash or float pipelines have no DuckDB equivalent, so each names
+an oracle-checked `exact_twin` (md5 / integer arithmetic) that runs the
+same algorithm; MinHash and SimHash candidate quality is also
+property-tested in tests/test_similarity.py.  The ANN heads
+(`emb_ann_ivf`, `emb_ann_lsh`) run their integer kernels directly and
+carry those kernels' oracles.
 """
 
 from __future__ import annotations
@@ -29,10 +33,8 @@ from metrics_service_spark.operators.dedup import (
     simhash_near_duplicates,
 )
 from metrics_service_spark.operators.similarity import (
-    ann_topk,
     brute_force_topk,
     cosine_near_duplicates,
-    ivf_topk,
     kmeans_step,
 )
 from metrics_service_spark.operators.text import (
@@ -1447,16 +1449,10 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, dot_q FROM (
 """
 
 
-def q_emb_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERY_VECS)
-    return ann_topk(emb, queries, k=TOPK)
-
-
 def q_emb_ann_lsh_int(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-replicable multi-table LSH top-k: integer signatures +
-    integer-dot ranking (ann_topk_int) — the float-plane ann_topk stays
-    the production variant (recall property-tested)."""
+    """Multi-table LSH top-k: integer signatures + integer-dot ranking
+    (ann_topk_int) — index and search replayed bit-for-bit by DuckDB.
+    Also the `emb_ann_lsh` entry."""
     from metrics_service_spark.operators.similarity import ann_topk_int
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1505,17 +1501,10 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, dot_q FROM (
 """
 
 
-def q_emb_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < N_QUERY_VECS)
-    return ivf_topk(emb, queries, k=TOPK, n_cells=16, nprobe=4)
-
-
 def q_emb_ann_ivf_int(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-replicable IVF: md5 seed order + integer-dot assignment,
-    probing and ranking (ivf_topk_int) — the full index build AND
-    search replayed bit-for-bit by DuckDB.  The float-cosine ivf_topk
-    stays as the production variant (recall property-tested)."""
+    """IVF top-k: md5 seed order + integer-dot assignment, probing and
+    ranking (ivf_topk_int) — the full index build AND search replayed
+    bit-for-bit by DuckDB.  Also the `emb_ann_ivf` entry."""
     from metrics_service_spark.operators.similarity import ivf_topk_int
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -5030,11 +5019,10 @@ QUERIES: dict[str, QuerySpec] = {
         ("llm",),
     ),
     "emb_ann_ivf": QuerySpec(
-        q_emb_ann_ivf,
-        None,
+        q_emb_ann_ivf_int,
+        ORACLE_ANN_IVF_INT,
         "IVF cell-probed approximate top-k",
         ("llm",),
-        exact_twin="emb_ann_ivf_int",
     ),
     "emb_ann_ivf_int": QuerySpec(
         q_emb_ann_ivf_int,
@@ -5130,8 +5118,10 @@ QUERIES: dict[str, QuerySpec] = {
         ("llm",),
     ),
     "emb_ann_lsh": QuerySpec(
-        q_emb_ann_lsh, None, "LSH-bucketed approximate k-NN", ("llm",),
-        exact_twin="emb_ann_lsh_int",
+        q_emb_ann_lsh_int,
+        _oracle_ann_lsh_int(),
+        "LSH-bucketed approximate k-NN",
+        ("llm",),
     ),
     "emb_ann_lsh_int": QuerySpec(
         q_emb_ann_lsh_int,

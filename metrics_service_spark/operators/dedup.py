@@ -1393,7 +1393,8 @@ def tiered_dedup(
     (id, status in {kept, exact_dup, near_dup}, canonical_id).  Tiering
     matters at scale: exact dedup is one cheap hash-groupBy that
     typically removes the bulk of duplicate mass, so the quadratic-ish
-    near-dup tier only ever sees the survivors.
+    near-dup tier only ever sees the survivors.  NULL-text documents
+    get no verdict (no output row).
 
     Every stage is an existing audited operator (exact_dedup,
     ngram_jaccard_pairs with the lossless length-bucket blocking +
@@ -1414,9 +1415,11 @@ def tiered_dedup(
     # SAME content-hash partitioning computes each row's exact canon
     # in the one exchange the grouping needs anyway (no join back),
     # and one lazy checkpoint feeds every consumer: 1 corpus scan.
-    # min-over-window == exact_dedup's min-over-groupBy, so the
-    # keeper set and verdicts are bit-identical.
-    tagged = df.withColumn(
+    # A window groups NULL keys together, but the oracle's
+    # `JOIN k1 USING (h)` never matches a NULL hash, so NULL-text rows
+    # are dropped first.  Over the rest, min-over-window ==
+    # exact_dedup's min-over-groupBy: bit-identical keepers and verdicts.
+    tagged = df.filter(F.col(text_col).isNotNull()).withColumn(
         "__exact_canon",
         F.min(F.col(id_col)).over(
             Window.partitionBy(F.md5(F.col(text_col)))

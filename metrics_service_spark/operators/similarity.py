@@ -1,21 +1,24 @@
 """Similarity search over embedding columns (array<float>).
 
 Beyond the reference surface (BASELINE.json north star): brute-force
-top-k as the exact baseline, and an LSH-bucketed (random hyperplane)
-approximate variant as the scale path.
+top-k as the exact baseline, and approximate top-k through an IVF
+index (`ivf_topk_int`) or multi-table random-hyperplane LSH
+(`ann_topk_int`) as the scale paths.
 
-Determinism note: oracle-compared variants rank by an INTEGER dot
-product over quantized vectors (round(x * 10^4)) so Spark and DuckDB
-produce bit-identical orderings — float accumulation order differences
-can flip near-ties, integers cannot.  The float cosine is still exposed
-for real use (`cosine`).
+Determinism note: oracle-compared kernels assign cells, buckets and
+ranks by INTEGER dot products over quantized vectors (round(x * 10^4)),
+so Spark and DuckDB produce bit-identical orderings — float
+accumulation order differences can flip near-ties, integers cannot.
+Each ANN algorithm has one kernel, the one its DuckDB oracle checks;
+the only float kernel left is production SemDeDup (`semantic_dedup`,
+twin `semantic_dedup_int`).
 
 Scale design: the query set is broadcast, the corpus is scanned once —
 a 100 TB corpus streams through executors, each holding only the query
 batch. Top-k uses a window per query id; with AQE the skew is bounded
 because every query id has exactly |corpus| candidate rows pre-filter.
-For billion-row corpora the LSH variant prunes the candidate set with
-an equi-join on bucket signature before ranking.
+For billion-row corpora the IVF and LSH kernels prune the candidate
+set with an equi-join on cell or bucket signature before ranking.
 """
 
 from __future__ import annotations
@@ -45,30 +48,6 @@ def dot_long(a: Column, b: Column) -> Column:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Float cosine similarity (for real use; not oracle-compared)."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    na = F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    nb = F.sqrt(
-        F.aggregate(
-            F.transform(b, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    return dot / (na * nb)
 
 
 def brute_force_topk(
@@ -105,12 +84,11 @@ def brute_force_topk(
 
 def int_planes(planes: int, dim: int, *, table: int = 0) -> list[list[int]]:
     """Deterministic INTEGER hyperplane weights in [-10^6, 10^6],
-    SHA-256-derived — reproducible with no RNG, and (unlike the float
-    planes of `_hyperplane`) bit-exactly replayable by a SQL oracle:
-    the plane dot over quantized vectors is pure int64 arithmetic, so
-    Spark and DuckDB agree on every sign bit.  `table` selects an
-    independent family (same `table*1000 + p` indexing as
-    `lsh_bucket`)."""
+    SHA-256-derived — reproducible with no RNG, and bit-exactly
+    replayable by a SQL oracle: the plane dot over quantized vectors
+    is pure int64 arithmetic, so Spark and DuckDB agree on every sign
+    bit.  `table` selects an independent family (plane index
+    `table*1000 + p`)."""
     return [
         [
             int.from_bytes(
@@ -126,6 +104,18 @@ def int_planes(planes: int, dim: int, *, table: int = 0) -> list[list[int]]:
         ]
         for p in range(planes)
     ]
+
+
+def _exact_dim(vec: Column, dim: int, who: str) -> Column:
+    """`vec` itself, guarded per row: a NULL vector or one whose size is
+    not `dim` raises (`assert_true`) when the row is evaluated.  The
+    check is one size comparison fused into the projection that reads
+    the vector anyway — every row is checked and no probe job runs."""
+    guard = F.assert_true(
+        vec.isNotNull() & (F.size(vec) == dim),
+        F.lit(f"{who}: exact-dim contract violated (vector size != {dim} or NULL)"),
+    )
+    return F.when(guard.isNull(), vec)
 
 
 def lsh_bucket_int(qvec: Column, *, planes: int, dim: int, table: int = 0) -> Column:
@@ -156,7 +146,6 @@ def lsh_buckets_int_batch(
     planes: int,
     tables: int,
     dim: int,
-    validate: bool = True,
 ) -> DataFrame:
     """All (id, table, bucket) signature rows in one codegen pass.
 
@@ -173,22 +162,9 @@ def lsh_buckets_int_batch(
     with no NULL elements.  Off-contract the two paths diverge (the
     fold's NULL dot yields an all-zero bucket; the posexplode path
     yields partial dots, and empty vectors vanish from the output), so
-    the contract is enforced here with a cheap limit-1 probe — pass
-    validate=False only when the input is already schema-guaranteed."""
+    `_exact_dim` raises on a NULL vector or a size other than `dim`, on
+    every row, inside the posexplode that reads the vector."""
     spark = df.sparkSession
-    if validate:
-        bad = (
-            df.filter(
-                F.col(qvec_col).isNull() | (F.size(F.col(qvec_col)) != dim)
-            )
-            .limit(1)
-            .count()
-        )
-        if bad:
-            raise ValueError(
-                f"lsh_buckets_int_batch: input rows violate the exact-dim "
-                f"contract (size({qvec_col}) != {dim} or NULL vector)"
-            )
     wrows = [
         (t, p, pos, w, 1 << p)
         for t in range(tables)
@@ -196,7 +172,8 @@ def lsh_buckets_int_batch(
         for pos, w in enumerate(ws)
     ]
     wdf = spark.createDataFrame(wrows, "t int, p int, pos int, w long, bitval long")
-    ex = df.select(F.col(id_col), F.posexplode(F.col(qvec_col)).alias("pos", "qv"))
+    vec = _exact_dim(F.col(qvec_col), dim, "lsh_buckets_int_batch")
+    ex = df.select(F.col(id_col), F.posexplode(vec).alias("pos", "qv"))
     dots = (
         ex.join(F.broadcast(wdf), "pos")
         .groupBy(id_col, "t", "p", "bitval")
@@ -253,26 +230,20 @@ def cosine_near_duplicates(
     t2 = Fraction(threshold).limit_denominator(100) ** 2
     p, q = t2.numerator, t2.denominator
 
+    # exact-dim contract enforced INLINE on every row during the pass
+    # that quantizes anyway (the all-pairs path has no signature batch
+    # to check it)
     qvec = F.transform(
-        F.col(vec_col), lambda x: F.round(x.cast("double") * quant, 0).cast("long")
+        _exact_dim(F.col(vec_col), dim, "cosine_near_duplicates"),
+        lambda x: F.round(x.cast("double") * quant, 0).cast("long"),
     )
     norm2 = F.aggregate(
         F.transform(qvec, lambda v: v * v),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    # exact-dim contract enforced INLINE on every row during the pass
-    # that quantizes anyway (assert_true is codegen, costs a size
-    # check) instead of `lsh_buckets_int_batch`'s limit-1 probe job —
-    # stronger (all rows, not a sample) and one fewer Spark job
-    guard = F.assert_true(
-        F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) == dim),
-        F.lit(f"cosine_near_duplicates: vector size != {dim} or NULL"),
-    )
     side = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.when(guard.isNull(), qvec).alias("__v"),
-        norm2.alias("__n2"),
+        F.col(id_col).alias("id"), qvec.alias("__v"), norm2.alias("__n2")
     )
     if prefilter_planes is not None:
         # the quantized side feeds the signature batch AND both
@@ -298,9 +269,6 @@ def cosine_near_duplicates(
             planes=prefilter_planes,
             tables=prefilter_tables,
             dim=dim,
-            # the side projection's inline assert_true already enforces
-            # the exact-dim contract on EVERY row
-            validate=False,
         ).localCheckpoint(eager=False)
         # degenerate-bucket guard (a constant/duplicated embedding at
         # corpus scale would make one bucket quadratic): drop buckets
@@ -474,110 +442,6 @@ def cosine_near_duplicates_np(
     ).mapInPandas(_pairs, schema="id_a long, id_b long, dot_q long")
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-) -> tuple[DataFrame, DataFrame]:
-    """IVF index build: deterministic seed selection (the `n_cells`
-    corpus vectors with the smallest xxhash64(id) — reproducible, no
-    RNG) as cell centroids, then every vector assigned to its nearest
-    centroid by float cosine.  Returns (centroids, assigned) where
-    `assigned` carries a `cell` column.
-
-    Scale: centroids are tiny and broadcast; assignment is one scan of
-    the corpus (map-side nearest-of-16), and the index is just the
-    corpus re-partitioned/sorted by `cell` — partition pruning at query
-    time reads only the probed cells."""
-    # Seed selection is a global top-N: orderBy().limit() compiles to
-    # TakeOrderedAndProject (per-partition top-N + driver merge — no
-    # single-partition window shuffle); the n_cells winning rows are
-    # tiny, so materializing them to build the centroid dim is the
-    # legitimate driver-side collect.
-    seeds = (
-        embeddings.select(
-            F.col(id_col).alias("cell_seed"),
-            F.col(vec_col).alias("cvec"),
-            F.xxhash64(F.col(id_col)).alias("__h"),
-        )
-        .orderBy("__h", "cell_seed")
-        .limit(n_cells)
-        .collect()
-    )
-    spark = embeddings.sparkSession
-    centroids = spark.createDataFrame(
-        [(i, [float(x) for x in r.cvec]) for i, r in enumerate(seeds)],
-        "cell int, cvec array<float>",
-    )
-    cand = embeddings.select(
-        F.col(id_col), F.col(vec_col)
-    ).join(F.broadcast(centroids), how="cross")
-    sim = cosine(F.col(vec_col), F.col("cvec"))
-    wbest = Window.partitionBy(id_col).orderBy(F.desc("__sim"), F.asc("cell"))
-    assigned = (
-        cand.select(id_col, vec_col, "cell", sim.alias("__sim"))
-        .withColumn("__rk", F.row_number().over(wbest))
-        .filter(F.col("__rk") == 1)
-        .select(id_col, vec_col, "cell")
-    )
-    return centroids, assigned
-
-
-def ivf_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_cells: int = 16,
-    nprobe: int = 4,
-) -> DataFrame:
-    """IVF approximate top-k: each query probes its `nprobe` nearest
-    cells and ranks exactly (quantized dot) within them.  Candidate set
-    is an equi-join on `cell` — no cross product against the corpus.
-
-    Recall is tuned by (n_cells, nprobe); nprobe=n_cells degenerates to
-    exact brute force."""
-    centroids, assigned = ivf_assign(
-        embeddings, id_col=id_col, vec_col=vec_col, n_cells=n_cells
-    )
-    qsim = cosine(F.col(vec_col), F.col("cvec"))
-    wprobe = Window.partitionBy("query_id").orderBy(F.desc("__sim"), F.asc("cell"))
-    probes = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col))
-        .join(F.broadcast(centroids), how="cross")
-        .select("query_id", vec_col, "cell", qsim.alias("__sim"))
-        .withColumn("__rk", F.row_number().over(wprobe))
-        .filter(F.col("__rk") <= nprobe)
-        .select("query_id", F.col(vec_col).alias("__qraw"), "cell")
-    )
-    corpus = assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        quantize(F.col(vec_col)).alias("__cv"),
-        "cell",
-    )
-    scored = corpus.join(F.broadcast(probes), "cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot_q").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.select(
-            "query_id",
-            "neighbor_id",
-            dot_long(quantize(F.col("__qraw")), F.col("__cv")).alias("dot_q"),
-        )
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dot_q")
-    )
-
-
 def kmeans_step(
     embeddings: DataFrame,
     *,
@@ -653,98 +517,6 @@ def kmeans_step(
     )
 
 
-def _hyperplane(plane: int, dim: int) -> list[float]:
-    """Deterministic pseudo-random unit-free hyperplane weights derived
-    from SHA-256 — reproducible across runs/machines with no RNG state."""
-    out = []
-    for d in range(dim):
-        h = hashlib.sha256(f"msspark-lsh:{plane}:{d}".encode()).digest()
-        v = int.from_bytes(h[:8], "big", signed=False)
-        out.append((v % 2_000_001) / 1_000_000.0 - 1.0)
-    return out
-
-
-def lsh_bucket(vec: Column, *, planes: int = 8, dim: int = 64, table: int = 0) -> Column:
-    """Random-hyperplane signature: bit p = (vec . w_p) >= 0; `table`
-    selects an independent plane family for multi-table LSH."""
-    sig = F.lit(0).cast("long")
-    for p in range(planes):
-        w = F.array(*[F.lit(x) for x in _hyperplane(table * 1000 + p, dim)])
-        dot = F.aggregate(
-            F.zip_with(vec, w, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bit = F.when(dot >= 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        sig = sig + F.shiftleft(bit, p)
-    return sig
-
-
-def ann_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    planes: int = 4,
-    tables: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """Approximate top-k: candidates share the query's LSH bucket in ANY
-    of `tables` independent hash tables (standard multi-table LSH —
-    recall is tuned by (planes, tables): fewer planes = bigger buckets,
-    more tables = more chances to collide).  Each table is an equi-join
-    on (table, signature) — a hash join, no cross product — then exact
-    quantized-dot ranking within the union of candidates."""
-    bucket_cols = [
-        lsh_bucket(F.col(vec_col), planes=planes, dim=dim, table=t).alias(f"__b{t}")
-        for t in range(tables)
-    ]
-    corpus = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        quantize(F.col(vec_col)).alias("__cv"),
-        *bucket_cols,
-    )
-    qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        quantize(F.col(vec_col)).alias("__qv"),
-        *bucket_cols,
-    )
-    melt = lambda df, idc, vec: df.select(  # noqa: E731
-        idc,
-        vec,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(t).alias("t"), F.col(f"__b{t}").alias("b"))
-                    for t in range(tables)
-                ]
-            )
-        ).alias("__tb"),
-    ).select(idc, vec, F.col("__tb.t").alias("__t"), F.col("__tb.b").alias("__b"))
-    scored = (
-        melt(corpus, "neighbor_id", "__cv")
-        .join(F.broadcast(melt(qs, "query_id", "__qv")), ["__t", "__b"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "__qv", "__cv")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot_q").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.select(
-            "query_id",
-            "neighbor_id",
-            dot_long(F.col("__qv"), F.col("__cv")).alias("dot_q"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "dot_q")
-    )
-
-
 def ivf_topk_int(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -755,13 +527,18 @@ def ivf_topk_int(
     n_cells: int = 16,
     nprobe: int = 4,
 ) -> DataFrame:
-    """Oracle-replicable IVF twin of `ivf_topk`: every step is exact
-    integer arithmetic over quantized vectors — md5-ordered seed
-    selection (as in `kmeans_step`), argmax-integer-dot cell
-    assignment, integer-dot probe selection, integer-dot ranking — so
-    a DuckDB oracle replays the whole index + search bit-for-bit.
-    Same plan shape as `ivf_topk`: broadcast centroids, one corpus
-    scan to assign, candidates from an equi-join on cell."""
+    """IVF approximate top-k: each query probes its `nprobe` nearest
+    cells and ranks exactly within them.  Every step is exact integer
+    arithmetic over quantized vectors — md5-ordered seed selection (as
+    in `kmeans_step`), argmax-integer-dot cell assignment, integer-dot
+    probe selection, integer-dot ranking — so a DuckDB oracle replays
+    the whole index + search bit-for-bit.
+
+    Scale: the n_cells seed centroids are one bounded driver collect
+    and are broadcast; assignment is one corpus scan, and candidates
+    come from an equi-join on cell — no cross product against the
+    corpus.  Recall is tuned by (n_cells, nprobe); nprobe=n_cells
+    degenerates to exact brute force."""
     spark = embeddings.sparkSession
     seeds = (
         embeddings.select(
@@ -848,11 +625,15 @@ def ann_topk_int(
     tables: int = 4,
     dim: int = 64,
 ) -> DataFrame:
-    """Oracle-replicable multi-table LSH top-k twin of `ann_topk`:
-    integer-exact signatures (`lsh_buckets_int_batch`) and integer-dot
-    ranking, so index AND search replay bit-for-bit in DuckDB.  Same
-    plan shape: candidates from an equi-join on (table, bucket) in ANY
-    table, exact quantized ranking on the deduped candidate set."""
+    """Approximate top-k by multi-table LSH: candidates share the
+    query's bucket in ANY of `tables` independent hash tables (recall
+    is tuned by (planes, tables): fewer planes = bigger buckets, more
+    tables = more chances to collide).  Signatures are integer-exact
+    (`lsh_buckets_int_batch`, which enforces its exact-dim contract on
+    every row) and ranking is the integer dot over the deduped
+    candidate set, so index AND search replay bit-for-bit in DuckDB.
+    Each table is an equi-join on (table, bucket) — a hash join, no
+    cross product."""
     corpus = embeddings.select(
         F.col(id_col).alias("neighbor_id"), quantize(F.col(vec_col)).alias("__cv")
     )
@@ -1155,7 +936,7 @@ def semantic_dedup_int(
        with (cell, kept).
 
     Scale: the collected seed set is fixed-size (n_cells rows — the
-    same bounded driver collect as `ivf_assign`) and is inlined into
+    same bounded driver collect as `ivf_topk_int`) and is inlined into
     the assignment expression, so assignment is a PURE PROJECTION on
     one corpus scan: an array of n_cells integer dots, argmax via
     array_position(dots, array_max(dots)) whose first-match rule IS
@@ -1473,8 +1254,8 @@ def semantic_dedup(
     `emb_semdedup_int`).
 
     Assignment is the same pure-projection argmax as the int variant
-    (`ivf_assign`'s cross-join + per-vector window costs ~2x at
-    sf0.1): each collected seed centroid is PRE-DIVIDED by its norm
+    (a cross-join + per-vector window argmax costs ~2x at sf0.1):
+    each collected seed centroid is PRE-DIVIDED by its norm
     driver-side, so argmax over the inlined scaled-dot array equals
     argmax over cosine (the query norm |v| is a common positive
     factor across cells and cannot change the argmax).
@@ -1509,7 +1290,7 @@ def semantic_dedup(
         scaled.append([x / norm for x in cv])
     # the checkpointed assignment also carries the UNIT-NORMALIZED
     # vector (__nv, one HOF pass per ROW): the within-cell pair test
-    # then needs a single dot per PAIR instead of cosine()'s
+    # then needs a single dot per PAIR instead of a full cosine's
     # dot + |a| + |b| (three interpreted HOF aggregates) — at the r6
     # profile the pair filter was the dominant interpreted cost
     norm = F.aggregate(

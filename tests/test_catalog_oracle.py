@@ -31,6 +31,8 @@ SMOKE_SAMPLE = [
     "doc_bpe_encode_digest",
     "doc_repetition_multi",
     "emb_centroids",
+    "emb_ann_ivf",
+    "emb_ann_lsh",
     "mm_dedup_clusters",
     "metrics_request_user",
 ]

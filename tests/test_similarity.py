@@ -1,6 +1,8 @@
-"""Property tests for the approximate similarity/dedup operators whose
-hash pipelines have no DuckDB oracle: ANN (LSH + IVF) recall vs exact
-brute force, near-dup prefilter soundness, MinHash candidate quality."""
+"""Property tests for the approximate similarity/dedup operators, on
+top of the catalog's bitwise DuckDB checks: ANN (LSH + IVF) recall vs
+exact brute force, near-dup prefilter soundness, MinHash and SimHash
+candidate quality (their xxhash64 heads have no DuckDB oracle), and
+the exact-dim guard of the LSH signatures."""
 
 from __future__ import annotations
 
@@ -15,10 +17,10 @@ from metrics_service_spark.operators.dedup import (
     ngram_jaccard_pairs,
 )
 from metrics_service_spark.operators.similarity import (
-    ann_topk,
+    ann_topk_int,
     brute_force_topk,
     cosine_near_duplicates,
-    ivf_topk,
+    ivf_topk_int,
 )
 
 DIM = 64
@@ -60,7 +62,7 @@ def _recall(approx_rows, exact_rows):
 def test_ivf_recall_vs_bruteforce(clustered_embeddings):
     queries = clustered_embeddings.filter(F.col("vec_id") % PER_CLUSTER == 0)
     exact = brute_force_topk(clustered_embeddings, queries, k=5).collect()
-    approx = ivf_topk(
+    approx = ivf_topk_int(
         clustered_embeddings, queries, k=5, n_cells=12, nprobe=4
     ).collect()
     assert _recall(approx, exact) >= 0.6
@@ -69,7 +71,7 @@ def test_ivf_recall_vs_bruteforce(clustered_embeddings):
 def test_ivf_nprobe_all_cells_is_exact(clustered_embeddings):
     queries = clustered_embeddings.filter(F.col("vec_id") < 3)
     exact = brute_force_topk(clustered_embeddings, queries, k=5).collect()
-    full = ivf_topk(
+    full = ivf_topk_int(
         clustered_embeddings, queries, k=5, n_cells=8, nprobe=8
     ).collect()
     assert _recall(full, exact) == 1.0
@@ -78,7 +80,7 @@ def test_ivf_nprobe_all_cells_is_exact(clustered_embeddings):
 def test_lsh_ann_recall(clustered_embeddings):
     queries = clustered_embeddings.filter(F.col("vec_id") % PER_CLUSTER == 0)
     exact = brute_force_topk(clustered_embeddings, queries, k=5).collect()
-    approx = ann_topk(
+    approx = ann_topk_int(
         clustered_embeddings, queries, k=5, planes=4, tables=4, dim=DIM
     ).collect()
     assert _recall(approx, exact) >= 0.5
@@ -172,15 +174,21 @@ def test_simhash_neardup_finds_near_identical(spark):
 
 
 def test_lsh_batch_rejects_off_dim_vectors(spark):
-    """The exact-dim contract is enforced: a short/NULL vector raises
-    instead of silently diverging from lsh_bucket_int."""
+    """The exact-dim contract is enforced on every row: a short/NULL
+    vector raises when the signatures run, instead of silently
+    diverging from lsh_bucket_int."""
+    from pyspark.errors import SparkRuntimeException
+
     from metrics_service_spark.operators.similarity import lsh_buckets_int_batch
 
     df = spark.createDataFrame(
-        [(1, [1, 2, 3, 4]), (2, [1, 2])], "id long, v array<long>"
+        [(1, [1, 2, 3, 4]), (2, [1, 2]), (3, None)], "id long, v array<long>"
     )
-    with pytest.raises(ValueError, match="exact-dim"):
-        lsh_buckets_int_batch(df, "id", "v", planes=2, tables=1, dim=4).collect()
+    for bad in ("id = 2", "id = 3"):
+        with pytest.raises(SparkRuntimeException, match="exact-dim"):
+            lsh_buckets_int_batch(
+                df.filter(f"id = 1 OR {bad}"), "id", "v", planes=2, tables=1, dim=4
+            ).collect()
     ok = lsh_buckets_int_batch(
         df.filter("id = 1"), "id", "v", planes=2, tables=1, dim=4
     )
