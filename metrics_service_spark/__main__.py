@@ -103,7 +103,8 @@ def cmd_table(
 ) -> int:
     """Operate on a manifest-committed table (sources/merge_table):
     `read` prints a snapshot (newest or --version N — time travel),
-    `versions` lists committed versions, `compact` bin-packs
+    `versions` lists committed versions with their file count and live
+    row total (from the manifest, no Spark job), `compact` bin-packs
     fragmented partitions, `vacuum` reclaims unreferenced files,
     `delete --key-col k --keys a,b` removes rows by key (GDPR expunge;
     old versions keep the rows until vacuum)."""
@@ -120,8 +121,13 @@ def cmd_table(
             path = os.path.join(table_dir, "_manifests", f"v{v}.json")
             if os.path.exists(path):
                 with open(path) as fh:
-                    n = len(json.load(fh)["files"])
-                print(json.dumps({"version": v, "files": n}))
+                    files = json.load(fh)["files"]
+                # live rows from the recorded per-file counts; null when
+                # an entry predates them (no Spark job either way)
+                rows = None
+                if all("rows" in e for e in files):
+                    rows = sum(e["rows"] for e in files)
+                print(json.dumps({"version": v, "files": len(files), "rows": rows}))
         return 0
     if action == "read":
         df = mt.read_table(_spark(), table_dir, version=version)

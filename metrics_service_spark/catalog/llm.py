@@ -1958,7 +1958,7 @@ NEARDUP_TABLES = 4
 def q_emb_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, banded-LSH-prefiltered — the
     100 TB default: integer-exact hyperplane signatures
-    (`lsh_bucket_int`, 4 planes x 4 independent tables) turn the
+    (`lsh_buckets_int_batch`, 4 planes x 4 independent tables) turn the
     all-pairs non-equi join into an equi-join on (table, bucket), so
     the plan is an ordinary distributed hash join (no driver collect,
     no cross product; asserted in tests/test_plan_quality.py).  Recall

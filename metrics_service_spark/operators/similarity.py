@@ -118,26 +118,6 @@ def _exact_dim(vec: Column, dim: int, who: str) -> Column:
     return F.when(guard.isNull(), vec)
 
 
-def lsh_bucket_int(qvec: Column, *, planes: int, dim: int, table: int = 0) -> Column:
-    """Integer-exact random-hyperplane signature over an ALREADY
-    QUANTIZED vector (array<long>): bit p = (qvec . w_p >= 0) with the
-    int64 weights of `int_planes`.  Max |term| is quant * 10^6 and the
-    64-term sum stays far below 2^63, so the sign is exact on any
-    engine — this is what lets an LSH-prefiltered near-dup query keep a
-    bit-identical DuckDB oracle."""
-    sig = F.lit(0).cast("long")
-    for p, weights in enumerate(int_planes(planes, dim, table=table)):
-        w = F.array(*[F.lit(x).cast("long") for x in weights])
-        dot = F.aggregate(
-            F.zip_with(qvec, w, lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        bit = F.when(dot >= 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        sig = sig + F.shiftleft(bit, p)
-    return sig
-
-
 def lsh_buckets_int_batch(
     df: DataFrame,
     id_col: str,
@@ -147,23 +127,28 @@ def lsh_buckets_int_batch(
     tables: int,
     dim: int,
 ) -> DataFrame:
-    """All (id, table, bucket) signature rows in one codegen pass.
+    """All (id, table, bucket) signature rows in one codegen pass:
+    integer-exact random-hyperplane signatures over ALREADY QUANTIZED
+    vectors (array<long>), bit p of table t = (qvec . w_p >= 0) with the
+    int64 weights of `int_planes(planes, dim, table=t)`.  Max |term| is
+    quant * 10^6 and the sum stays far below 2^63, so the sign is exact
+    on any engine — this is what lets an LSH-prefiltered near-dup query
+    keep a bit-identical DuckDB oracle.
 
-    `lsh_bucket_int` evaluates planes x tables higher-order folds per
-    row — correct but interpreted (CodegenFallback), the known slow
-    path for tight loops.  This batch variant stays in whole-stage
-    codegen end to end: posexplode the quantized vector once, join the
-    broadcast (table, plane, pos, weight, bitval) dim, then two hash
-    aggregations (plane dots -> sign bits -> bucket).  Bit values are
-    carried in the dim table because shiftleft needs a literal shift.
-    Identical buckets to `lsh_bucket_int` (property-tested).
+    A per-row fold (planes x tables higher-order functions) would be
+    interpreted (CodegenFallback), the known slow path for tight loops.
+    This stays in whole-stage codegen end to end: posexplode the
+    quantized vector once, join the broadcast (table, plane, pos,
+    weight, bitval) dim, then two hash aggregations (plane dots -> sign
+    bits -> bucket).  Bit values are carried in the dim table because
+    shiftleft needs a literal shift.  The buckets equal a pure-Python
+    fold of `int_planes` (seeded property test in test_similarity.py).
 
     EXACT-DIM CONTRACT: every vector must have size(qvec_col) == dim
-    with no NULL elements.  Off-contract the two paths diverge (the
-    fold's NULL dot yields an all-zero bucket; the posexplode path
-    yields partial dots, and empty vectors vanish from the output), so
-    `_exact_dim` raises on a NULL vector or a size other than `dim`, on
-    every row, inside the posexplode that reads the vector."""
+    with no NULL elements.  Off-contract the posexplode yields partial
+    dots, and empty vectors vanish from the output, so `_exact_dim`
+    raises on a NULL vector or a size other than `dim`, on every row,
+    inside the posexplode that reads the vector."""
     spark = df.sparkSession
     wrows = [
         (t, p, pos, w, 1 << p)
@@ -220,11 +205,11 @@ def cosine_near_duplicates(
     non-equi join into an equi-join on (table, bucket) that distributes
     like any hash join.  Recall is tuned by (planes, tables): fewer
     planes = bigger buckets, more tables = more collision chances.
-    Signatures are `lsh_bucket_int` over the quantized vector, so the
-    blocked result is still fully deterministic and a DuckDB oracle can
-    replay bucketing AND threshold bit-for-bit.  At 100 TB you'd also
-    band the corpus by norm-prefix; documented, not needed at test
-    scale."""
+    Signatures are `lsh_buckets_int_batch` over the quantized vector,
+    so the blocked result is still fully deterministic and a DuckDB
+    oracle can replay bucketing AND threshold bit-for-bit.  At 100 TB
+    you'd also band the corpus by norm-prefix; documented, not needed
+    at test scale."""
     from fractions import Fraction
 
     t2 = Fraction(threshold).limit_denominator(100) ** 2
@@ -257,7 +242,7 @@ def cosine_near_duplicates(
         # `tables`x, but each table join is a plain hash join on
         # (table, bucket) — the shape that survives a 1000-executor
         # shuffle, unlike a non-equi self-join.  Signatures come from
-        # the codegen batch variant (identical to lsh_bucket_int).
+        # the codegen batch kernel (lsh_buckets_int_batch).
         # the signature frame feeds the bucket-count guard AND both
         # candidate self-join sides — without a checkpoint the whole
         # posexplode+agg signature pipeline appears FOUR times in the

@@ -10,8 +10,10 @@ has neither package, so this module implements the same commit
 protocol those formats use, from parquet + JSON primitives only:
 
 - Data files are immutable `part-*.parquet`, each pinned to one value
-  of the partition columns; the partition values are recorded in the
-  manifest (file-skipping metadata, like Delta's add-file stats).
+  of the partition columns.  The manifest records each file's partition
+  values, its row count and the min/max of its integral columns, read
+  from the footer at commit (file-skipping metadata, like Delta's
+  add-file stats).
 - A table VERSION is a JSON manifest (`_manifests/v{N}.json`) listing
   its data files.  Commits write the next-version manifest with
   O_EXCL create — two concurrent committers race on the version
@@ -28,15 +30,21 @@ protocol those formats use, from parquet + JSON primitives only:
   `vacuum` reclaims files unreferenced by the newest manifest.
 - `merge` is an upsert by key: only data files whose partition value
   appears in the update batch, or that hold an updated key, are
-  rewritten (anti-join out the updated keys, union the new rows);
+  rewritten (filter out the updated keys, union the new rows);
   untouched partitions carry their files forward by reference.
   Replaying the same batch converges to the same state, so
   foreachBatch retries are safe.
+- MERGE and DELETE collect the batch's distinct keys to the driver
+  once and use them twice: recorded key ranges skip files before the
+  key probe, and a literal IN list filters the probe and the rewrite.
+  The key set of one batch must fit on the driver (a broadcast join of
+  it would need the same).
 
-At 100 TB the manifest lists file paths + partition values only
-(KBs per thousand files) and the MERGE cost is proportional to the
-touched partitions, not the table — the same contract as Delta MERGE
-with dynamic file pruning.
+At 100 TB the manifest lists file paths, partition values and a few
+integers of stats per file (KBs per thousand files) and the MERGE
+cost is proportional to the touched partitions and the files whose key
+ranges admit an updated key, not the table — the same contract as
+Delta MERGE with data skipping and dynamic file pruning.
 """
 
 from __future__ import annotations
@@ -46,12 +54,24 @@ import os
 import re
 import time
 import uuid
+from bisect import bisect_left
 from urllib.parse import unquote, urlparse
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    BinaryType,
+    ByteType,
+    DataType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 _MANIFEST_DIR = "_manifests"
 
@@ -101,21 +121,58 @@ def _stage_of(entry: dict) -> str:
     return entry["path"].split(os.sep, 1)[0]
 
 
+#: The integral types, which record min/max stats, with their SQL
+#: literal suffixes.
+_INTEGRAL = {ByteType: "Y", ShortType: "S", IntegerType: "", LongType: "L"}
+
+
+def _footer_stats(path: str, integral: set[str]) -> dict:
+    """The recorded stats of one data file, from its parquet footer:
+    `rows`, and `min`/`max` of each integral column whose every row
+    group carries both (a column missing from either map may hold any
+    value)."""
+    md = pq.read_metadata(path)
+    lo: dict[str, int] = {}
+    hi: dict[str, int] = {}
+    unknown: set[str] = set()
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        for c in range(rg.num_columns):
+            col = rg.column(c)
+            name = col.path_in_schema
+            if name not in integral:
+                continue
+            st = col.statistics
+            if st is None or not st.has_min_max:
+                unknown.add(name)
+                continue
+            lo[name] = min(lo.get(name, st.min), st.min)
+            hi[name] = max(hi.get(name, st.max), st.max)
+    return {
+        "rows": md.num_rows,
+        "min": {k: v for k, v in lo.items() if k not in unknown},
+        "max": {k: v for k, v in hi.items() if k not in unknown},
+    }
+
+
 def _write_files(
     df: DataFrame, table_dir: str, partition_cols: list[str]
 ) -> list[dict]:
     """Write df as immutable parquet files, one directory per commit,
-    and return manifest entries [{path, partition: {col: value}}].
+    and return manifest entries [{path, partition: {col: value}, rows,
+    min, max}].  `rows`, `min` and `max` come from each file's footer,
+    read on the driver: `min`/`max` cover the integral (int8-int64)
+    columns only, the ones MERGE and DELETE skip files by.
 
     Each entry also carries the commit's data schema (partition columns
     excluded) under "schema"; `_commit` moves it into the manifest's
-    per-stage "schemas" map, so committed file entries stay {path,
-    partition}.  Partition columns stay out so that reads infer their
-    types from the paths exactly as without a recorded schema."""
+    per-stage "schemas" map.  Partition columns stay out so that reads
+    infer their types from the paths exactly as without a recorded
+    schema."""
     stage = os.path.join(table_dir, f"stage-{uuid.uuid4().hex}")
-    schema = StructType(
-        [f for f in df.schema.fields if f.name not in partition_cols]
-    ).jsonValue()
+    data = StructType([f for f in df.schema.fields if f.name not in partition_cols])
+    schema = data.jsonValue()
+    integral = {f.name for f in data.fields if type(f.dataType) in _INTEGRAL}
     if partition_cols:
         df.write.mode("overwrite").partitionBy(*partition_cols).parquet(stage)
     else:
@@ -138,7 +195,10 @@ def _write_files(
                             "coalesce before writing)"
                         )
                     part[k] = _unescape_partition_value(v)
-            entries.append({"path": rel, "partition": part, "schema": schema})
+            entries.append(
+                {"path": rel, "partition": part, **_footer_stats(path, integral),
+                 "schema": schema}
+            )
     return entries
 
 
@@ -159,7 +219,9 @@ def _commit(
     carries forward, so ordinary upserts never drop table properties
     set by an earlier commit; pass a dict (possibly {}) to replace.
 
-    The manifest keeps one data schema per stage `files` references:
+    Entries keep their recorded stats (`rows`, `min`, `max`), carried
+    or new.  The manifest keeps one data schema per stage `files`
+    references:
     new entries bring theirs (see `_write_files`), carried ones keep
     the previous version's, and a stage's schema goes with its last
     file.  A stage written before schemas were recorded has none."""
@@ -181,7 +243,7 @@ def _commit(
             schemas[stage] = e["schema"]
         elif stage in known:
             schemas[stage] = known[stage]
-        committed.append({"path": e["path"], "partition": e["partition"]})
+        committed.append({k: v for k, v in e.items() if k != "schema"})
     try:
         with open(_manifest_path(table_dir, version), "x") as fh:
             json.dump(
@@ -254,26 +316,118 @@ def _read_files(
     return out
 
 
+def _distinct_keys(rows: list, key_cols: list[str]) -> set[tuple]:
+    """The distinct key tuples of collected `rows`, less those with a
+    NULL component: an equi-join never matches them."""
+    keys = {tuple(r[c] for c in key_cols) for r in rows}
+    return {k for k in keys if None not in k}
+
+
+def _sql_quote(s: str) -> str:
+    """`s` as a Spark SQL string literal, with the backslash escapes the
+    default parser reads."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_literal(v, dtype: DataType) -> str:
+    """`v`, collected from a column of `dtype`, as a Spark SQL literal
+    of that type."""
+    if type(dtype) in _INTEGRAL:
+        return f"{v}{_INTEGRAL[type(dtype)]}"
+    if isinstance(dtype, StringType):
+        return _sql_quote(v)
+    if isinstance(dtype, BinaryType):
+        return f"X'{bytes(v).hex()}'"
+    if isinstance(dtype, TimestampType):
+        # collected as a naive local datetime: back to the same instant
+        return f"timestamp_micros({dtype.toInternal(v)})"
+    return f"CAST({_sql_quote(str(v))} AS {dtype.simpleString()})"
+
+
+def _member(fields: list[StructField], keys: set[tuple]) -> Column:
+    """Whether a row's key, the columns `fields`, is one of `keys`, as a
+    literal IN list (a multi-column key compares as a struct).  Never
+    true for a row whose key holds a NULL, exactly as an equi-join.
+    The list is one parsed SQL string: `isin`/`F.lit` would make one
+    JVM call per literal (about 0.4 ms each)."""
+    if not keys:
+        return F.lit(False)
+    names = ["`" + f.name.replace("`", "``") + "`" for f in fields]
+    if len(fields) == 1:
+        value = names[0]
+        lits = [_sql_literal(k[0], fields[0].dataType) for k in keys]
+    else:
+        def struct(vals: list[str]) -> str:
+            return "named_struct(" + ", ".join(
+                f"{_sql_quote(f.name)}, {v}" for f, v in zip(fields, vals)
+            ) + ")"
+
+        value = struct(names)
+        lits = [
+            struct([_sql_literal(v, f.dataType) for f, v in zip(fields, k)])
+            for k in keys
+        ]
+    return F.expr(f"{value} IN ({', '.join(lits)})")
+
+
+def _unmatched(member: Column) -> Column:
+    """The rewrite's keep filter: true unless `member` is, so a row
+    whose key holds a NULL stays, as in a left anti join."""
+    return F.coalesce(~member, F.lit(True))
+
+
+def _may_hold_keys(
+    entries: list[dict], key_cols: list[str], keys: set[tuple]
+) -> list[dict]:
+    """The entries whose recorded min/max admit some of `keys`: per
+    integer-valued key column, a bisect over its sorted values for one
+    inside the entry's range.  A column without recorded stats
+    (non-integral, or a manifest written before stats were recorded)
+    admits any key; no keys admit no entry."""
+    if not keys:
+        return []
+    values = {}
+    for i, c in enumerate(key_cols):
+        vals = {k[i] for k in keys}
+        if all(type(v) is int for v in vals):
+            values[c] = sorted(vals)
+
+    def admits(e: dict) -> bool:
+        lo, hi = e.get("min", {}), e.get("max", {})
+        for c, vals in values.items():
+            if c in lo:
+                j = bisect_left(vals, lo[c])
+                if j == len(vals) or vals[j] > hi[c]:
+                    return False
+        return True
+
+    return [e for e in entries if admits(e)]
+
+
 def _files_holding_keys(
     spark: SparkSession,
     table_dir: str,
     entries: list[dict],
     schemas: dict[str, dict],
-    keys: DataFrame,
     key_cols: list[str],
+    member: Column,
 ) -> list[dict]:
-    """The entries whose files hold at least one row of `keys`: a
+    """The entries whose files hold a row `member` matches: a
     column-pruned key-probe scan (key columns only — the touched-file
-    scan Delta MERGE runs).  Matching by input_file_name, not partition
-    value, sidesteps Hive partition-type inference (a string partition
-    "01" reads back as int 1 and would never match its manifest
-    string).  The match is on the path relative to the table directory:
-    one write task gives its file the same name in every partition it
-    writes, so a basename would match them all."""
+    scan Delta MERGE runs) of `entries`, which the callers first narrow
+    with `_may_hold_keys`; with no entry left no job runs.  Matching by
+    input_file_name, not partition value, sidesteps Hive
+    partition-type inference (a string partition "01" reads back as
+    int 1 and would never match its manifest string).  The match is on
+    the path relative to the table directory: one write task gives its
+    file the same name in every partition it writes, so a basename
+    would match them all."""
+    if not entries:
+        return []
     probe = (
         _read_files(spark, table_dir, entries, schemas)
         .select(*key_cols, F.input_file_name().alias("__file"))
-        .join(F.broadcast(keys), key_cols, "left_semi")
+        .filter(member)
         .select("__file")
         .distinct()
         .collect()
@@ -372,11 +526,18 @@ def merge_table(
     carried forward as a duplicate.  The partitions rewritten are the
     union of (a) partitions present in `updates` and (b) partitions
     currently holding any updated key — (b) is found with a
-    column-pruned key-probe of the remaining files (key + partition
-    columns only).  Pass `partition_from_key=True` when every
-    partition value is a deterministic function of the key (an updated
-    key can then only live in its update-batch partition) to skip the
-    probe — the common state-table layout.  Idempotent under replay.
+    column-pruned key-probe of the remaining files whose recorded key
+    ranges admit an updated key (no job when none does).  Pass
+    `partition_from_key=True` when every partition value is a
+    deterministic function of the key (an updated key can then only
+    live in its update-batch partition) to skip the probe — the common
+    state-table layout.  Idempotent under replay.  A batch row whose
+    key holds a NULL is inserted and replaces nothing.
+
+    Driver bound: one collect brings the batch's partition and key
+    columns (one row per batch row) to the driver, which keeps their
+    distinct values; the batch's keys must fit there (a broadcast of
+    its key set would need the same).
 
     `expected_base` pins the snapshot the caller computed `updates`
     against: if another writer committed in between (current version
@@ -401,12 +562,12 @@ def merge_table(
 
     manifest = _read_manifest(table_dir, base)
     entries, schemas = manifest["files"], manifest["schemas"]
-    keys = updates.select(*key_cols).distinct()
+    # one collect gives both the touched partitions and the key set
+    rows = updates.select(*dict.fromkeys(partition_cols + key_cols)).collect()
+    keys = _distinct_keys(rows, key_cols)
+    member = _member([updates.schema[c] for c in key_cols], keys)
     if partition_cols:
-        touched = {
-            tuple(str(r[c]) for c in partition_cols)
-            for r in updates.select(*partition_cols).distinct().collect()
-        }
+        touched = {tuple(str(r[c]) for c in partition_cols) for r in rows}
         hit = [
             e
             for e in entries
@@ -417,7 +578,8 @@ def merge_table(
             # global key matching: pull exactly the carried FILES
             # holding an updated key into the rewrite set
             extra_hit = _files_holding_keys(
-                spark, table_dir, carried, schemas, keys, key_cols
+                spark, table_dir, _may_hold_keys(carried, key_cols, keys),
+                schemas, key_cols, member,
             )
             hit += extra_hit
             carried = [e for e in carried if e not in extra_hit]
@@ -426,8 +588,7 @@ def merge_table(
 
     merged = updates
     if hit:
-        old = _read_files(spark, table_dir, hit, schemas)
-        kept = old.join(F.broadcast(keys), key_cols, "left_anti")
+        kept = _read_files(spark, table_dir, hit, schemas).filter(_unmatched(member))
         # allowMissingColumns = schema evolution (Delta mergeSchema):
         # an update batch may add columns; surviving old rows read NULL
         # for them
@@ -446,11 +607,12 @@ def delete_from_table(
 ) -> int:
     """DELETE by key (the GDPR-expunge primitive, Delta DELETE
     semantics): rewrite exactly the data files holding a matching key
-    with those rows anti-joined out, in the table's column order; every
-    other file carries into the new manifest by reference.  The
-    touched-file set comes from the key-probe MERGE uses, matched on
-    each file's path in the table, so cost tracks the files containing
-    deleted keys, not the table.  Old versions still contain the rows —
+    with those rows filtered out; every other file carries into the new
+    manifest by reference.  The touched-file set comes from the
+    key-probe MERGE uses, matched on each file's path in the table, so
+    cost tracks the files containing deleted keys, not the table.  The
+    distinct `keys` are collected to the driver once and must fit
+    there, as MERGE's do.  Old versions still contain the rows —
     run `vacuum` after the retention window to physically reclaim them
     (the same two-step contract as Delta DELETE + VACUUM).  Returns the
     new version (the current one if no key matched)."""
@@ -464,25 +626,21 @@ def delete_from_table(
         raise FileNotFoundError(f"no committed version under {table_dir}")
     manifest = _read_manifest(table_dir, base)
     entries, schemas = manifest["files"], manifest["schemas"]
-    keyset = keys.select(*key_cols).distinct()
-    hit = _files_holding_keys(spark, table_dir, entries, schemas, keyset, key_cols)
+    keyset = _distinct_keys(keys.select(*key_cols).collect(), key_cols)
+    member = _member([keys.schema[c] for c in key_cols], keyset)
+    hit = _files_holding_keys(
+        spark, table_dir, _may_hold_keys(entries, key_cols, keyset),
+        schemas, key_cols, member,
+    )
     if not hit:
         return base
     carried = [e for e in entries if e not in hit]
-    old = _read_files(spark, table_dir, hit, schemas)
-    # the anti-join puts the key columns first: restore the table's order
-    kept = old.join(F.broadcast(keyset), key_cols, "left_anti").select(
-        *old.columns
-    )
+    kept = _read_files(spark, table_dir, hit, schemas).filter(_unmatched(member))
     partition_cols = sorted(hit[0]["partition"])
     # the write is the emptiness test: a partitioned write of no rows
-    # makes no file, an unpartitioned one a single empty file, which a
-    # footer read on the driver keeps out of the manifest
-    new_files = [
-        e
-        for e in _write_files(kept, table_dir, partition_cols)
-        if pq.read_metadata(os.path.join(table_dir, e["path"])).num_rows
-    ]
+    # makes no file, an unpartitioned one a single empty file, which
+    # its recorded row count keeps out of the manifest
+    new_files = [e for e in _write_files(kept, table_dir, partition_cols) if e["rows"]]
     return _commit(table_dir, carried + new_files, base + 1)
 
 

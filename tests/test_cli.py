@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 
 from metrics_service_spark.__main__ import main
 from metrics_service_spark.testing.fixtures import make_tables
@@ -67,6 +68,35 @@ def test_sql_subcommand(capsys):
     assert rc == 0
     lines = [json.loads(ln) for ln in capsys.readouterr().out.strip().splitlines()]
     assert {r["metrics_name"] for r in lines} == {"total_views", "total_downloads"}
+
+
+def test_table_versions_prints_recorded_rows(spark, tmp_path, capsys, count_jobs):
+    """`table versions` prints each version's live row total from the
+    recorded per-file counts without a Spark job, and null for a version
+    whose entries carry none."""
+    from pyspark.sql import functions as F
+
+    from metrics_service_spark.sources.merge_table import delete_from_table, overwrite_table
+
+    tdir = str(tmp_path / "t")
+    df = spark.range(6).select(
+        F.col("id").alias("k"), (F.col("id") % 2).cast("int").alias("part")
+    ).coalesce(1)
+    overwrite_table(df, tdir, partition_cols=["part"])
+    delete_from_table(spark, tdir, spark.createDataFrame([(0,), (3,)], "k long"), key_cols=["k"])
+    v0 = os.path.join(tdir, "_manifests", "v0.json")
+    with open(v0) as fh:
+        m = json.load(fh)
+    m["files"] = [{"path": e["path"], "partition": e["partition"]} for e in m["files"]]
+    with open(v0, "w") as fh:
+        json.dump(m, fh)
+
+    assert count_jobs(lambda: main(["table", "versions", tdir])) == 0
+    vers = [json.loads(ln) for ln in capsys.readouterr().out.strip().splitlines()]
+    assert vers == [
+        {"version": 0, "files": 2, "rows": None},
+        {"version": 1, "files": 2, "rows": 4},
+    ]
 
 
 def test_table_subcommand_roundtrip(spark, tmp_path, capsys):

@@ -21,6 +21,7 @@ from metrics_service_spark.sources.merge_table import (
     merge_table,
     overwrite_table,
     read_table,
+    _member,
     vacuum,
 )
 from metrics_service_spark.sources.tables import load_table
@@ -582,6 +583,127 @@ def test_manifest_meta_set_inherit_replace(spark, tmp_path):
     assert manifest_meta(tdir, v0) == {"gen": "g0"}  # old version keeps its own
 
 
+def _null_key_rows(spark, tdir):
+    return sorted(((r["k"], r["part"], r["v"]) for r in read_table(spark, tdir).collect()),
+                  key=str)
+
+
+def _null_key_table(spark, tdir):
+    df = spark.createDataFrame(
+        [(None, 0, "a"), (1, 0, "a"), (2, 1, "a"), (4, 1, "a")],
+        "k long, part int, v string",
+    )
+    overwrite_table(df, tdir, partition_cols=["part"])
+
+
+def test_null_table_key_survives_merge_and_delete(spark, tmp_path):
+    """A table row whose key is NULL matches no key: MERGE and DELETE
+    keep it, whatever the batch holds (an equi-join never matches
+    NULL)."""
+    tdir = str(tmp_path / "t")
+    _null_key_table(spark, tdir)
+    upd = spark.createDataFrame([(1, 0, "b"), (2, 0, "b")], "k long, part int, v string")
+    merge_table(spark, tdir, upd, key_cols=["k"], partition_cols=["part"])
+    want = [(None, 0, "a"), (1, 0, "b"), (2, 0, "b"), (4, 1, "a")]
+    assert _null_key_rows(spark, tdir) == sorted(want, key=str)
+
+    keys = spark.createDataFrame([(2,), (None,)], "k long")
+    delete_from_table(spark, tdir, keys, key_cols=["k"])
+    want = [(None, 0, "a"), (1, 0, "b"), (4, 1, "a")]
+    assert _null_key_rows(spark, tdir) == sorted(want, key=str)
+
+
+def test_null_batch_key_inserts_and_replaces_nothing(spark, tmp_path):
+    """A batch row whose key is NULL is inserted and replaces no row,
+    not even the table's own NULL-key row."""
+    tdir = str(tmp_path / "t")
+    _null_key_table(spark, tdir)
+    upd = spark.createDataFrame([(None, 0, "n"), (None, 1, "n")], "k long, part int, v string")
+    merge_table(spark, tdir, upd, key_cols=["k"], partition_cols=["part"])
+    want = [(None, 0, "a"), (None, 0, "n"), (None, 1, "n"),
+            (1, 0, "a"), (2, 1, "a"), (4, 1, "a")]
+    assert _null_key_rows(spark, tdir) == sorted(want, key=str)
+
+
+def test_two_column_key_merge_and_delete(spark, tmp_path):
+    """A (year, month) key matches on the pair: rows sharing only the
+    year or only the month with a batch key stay, and so does a row
+    whose month is NULL, even against a key whose month is NULL."""
+    tdir = str(tmp_path / "t")
+    schema = "year int, month int, part int, v string"
+    df = spark.createDataFrame(
+        [(2023, 1, 0, "a"), (2023, 2, 1, "a"), (2024, 1, 0, "a"),
+         (2024, 2, 1, "a"), (2024, 3, 0, "a"), (2024, None, 1, "a")],
+        schema,
+    )
+    overwrite_table(df, tdir, partition_cols=["part"])
+
+    def rows():
+        return sorted(
+            tuple(r[c] for c in ("year", "month", "part", "v"))
+            for r in read_table(spark, tdir).where("month IS NOT NULL").collect()
+        )
+
+    def null_month_rows():
+        return read_table(spark, tdir).where("month IS NULL").count()
+
+    # (2023, 2) moves to part 0 (found by the carried-file probe),
+    # (2024, 1) is replaced in place, (2025, 1) is new
+    upd = spark.createDataFrame(
+        [(2023, 2, 0, "b"), (2024, 1, 0, "b"), (2025, 1, 0, "b")], schema
+    )
+    merge_table(spark, tdir, upd, key_cols=["year", "month"], partition_cols=["part"])
+    assert null_month_rows() == 1
+    assert rows() == [
+        (2023, 1, 0, "a"), (2023, 2, 0, "b"), (2024, 1, 0, "b"),
+        (2024, 2, 1, "a"), (2024, 3, 0, "a"), (2025, 1, 0, "b"),
+    ]
+
+    keys = spark.createDataFrame(
+        [(2024, 2), (2023, 3), (2024, None)], "year int, month int"
+    )
+    delete_from_table(spark, tdir, keys, key_cols=["year", "month"])
+    assert null_month_rows() == 1
+    assert rows() == [
+        (2023, 1, 0, "a"), (2023, 2, 0, "b"), (2024, 1, 0, "b"),
+        (2024, 3, 0, "a"), (2025, 1, 0, "b"),
+    ]
+
+
+def test_membership_literals_for_every_key_type(spark):
+    """The membership filter's SQL literals equal the collected key
+    values for each column type a key may have: quotes and backslashes
+    in strings, dates, both timestamp kinds, decimals, bytes, floats,
+    booleans.  A struct key of narrower literals matches wider
+    columns, as when a batch's key types are narrower than the
+    table's."""
+    import datetime as dt
+    from decimal import Decimal
+
+    df = spark.createDataFrame(
+        [
+            (1, 2, 3, 4, "a'b\\c", dt.date(2020, 1, 2),
+             dt.datetime(2020, 1, 2, 3, 4, 5, 6), dt.datetime(2020, 1, 2, 3, 4),
+             Decimal("1.50"), b"\x00'\xff", 0.1, True),
+            (5, 6, 7, 8, "a'b", dt.date(1999, 12, 31),
+             dt.datetime(1970, 1, 1), dt.datetime(1970, 1, 1),
+             Decimal("-2.25"), b"", -1e300, False),
+        ],
+        "b byte, h short, i int, l long, s string, d date, t timestamp, "
+        "n timestamp_ntz, m decimal(6,2), x binary, f double, z boolean",
+    )
+    first = df.collect()[0]
+    for c in df.columns:
+        member = _member([df.schema[c]], {(first[c],)})
+        assert df.filter(member).collect() == [first], c
+    pair = _member([df.schema["i"], df.schema["s"]], {(3, "a'b\\c"), (7, "b")})
+    assert df.filter(pair).collect() == [first]
+    wide = df.selectExpr("CAST(h AS long) AS h", "CAST(i AS long) AS i")
+    narrow = _member([df.schema["h"], df.schema["i"]], {(2, 3), (6, 3)})
+    assert wide.filter(narrow).count() == 1
+    assert df.filter(_member([df.schema["i"]], set())).count() == 0
+
+
 def _manifest(tdir, version=None):
     version = current_version(tdir) if version is None else version
     with open(os.path.join(tdir, "_manifests", f"v{version}.json")) as fh:
@@ -623,9 +745,8 @@ def test_path_match_when_one_task_writes_many_partitions(spark, tmp_path):
 
 @pytest.mark.parametrize("partition_cols", [["p"], []])
 def test_delete_keeps_column_order(spark, tmp_path, partition_cols):
-    """The anti-join of DELETE puts the key columns first; the rewrite
-    must keep the table's column order, or the read order would depend
-    on which commit directory sorts first."""
+    """DELETE's rewrite must keep the table's column order, or the read
+    order would depend on which commit directory sorts first."""
     tdir = str(tmp_path / "t")
     df = spark.range(12).select(
         F.col("id").alias("k"),
@@ -669,7 +790,11 @@ def test_manifest_records_one_schema_per_live_stage(spark, tmp_path):
     m = _manifest(tdir)
     stages = {e["path"].split(os.sep, 1)[0] for e in m["files"]}
     assert set(m["schemas"]) == stages and len(stages) == 2
-    assert all(set(e) == {"path", "partition"} for e in m["files"])
+    assert all(set(e) == {"path", "partition", "rows", "min", "max"} for e in m["files"])
+    # stats cover the integral data column only; partition columns and
+    # strings record none
+    assert all(set(e["min"]) == set(e["max"]) == {"k"} for e in m["files"])
+    assert sum(e["rows"] for e in m["files"]) == 6
     for schema in m["schemas"].values():
         assert [f["name"] for f in schema["fields"]] == ["k", "v"]
     # rewriting every partition drops the first commit's stage and schema
@@ -731,19 +856,23 @@ def test_manifest_layer_job_budget(spark, tmp_path, count_jobs):
     """Reads plan from the manifest: no Spark job on a table of several
     commits (and at most 32 files, below Spark's parallel-listing
     threshold).  MERGE and DELETE cost the same number of jobs at 2 and
-    at 5 live commits, so cost does not grow with the commit count."""
+    at 5 live commits, with and without a key probe, so cost does not
+    grow with the commit count.  A merge whose keys fall outside every
+    carried file's recorded key range launches no probe job: it costs
+    what a merge that skips the probe by contract costs, and less than
+    one whose key needs it."""
     _commits(spark, str(tmp_path / "r"), 3)
     assert count_jobs(lambda: read_table(spark, str(tmp_path / "r"))) == 0
 
-    def merge_jobs(n):
-        tdir = str(tmp_path / f"m{n}")
+    def merge_jobs(n, keys=(0, 99), **kw):
+        tdir = str(tmp_path / f"m{n}-{'-'.join(map(str, keys))}-{len(kw)}")
         _commits(spark, tdir, n)
         upd = spark.createDataFrame(
-            [(0, 0, "b"), (99, 0, "b")], "k long, part int, v string"
+            [(k, 0, "b") for k in keys], "k long, part int, v string"
         )
         return count_jobs(
             lambda: merge_table(
-                spark, tdir, upd, key_cols=["k"], partition_cols=["part"]
+                spark, tdir, upd, key_cols=["k"], partition_cols=["part"], **kw
             )
         )
 
@@ -753,5 +882,52 @@ def test_manifest_layer_job_budget(spark, tmp_path, count_jobs):
         keys = spark.createDataFrame([(1,)], "k long")
         return count_jobs(lambda: delete_from_table(spark, tdir, keys, key_cols=["k"]))
 
-    assert merge_jobs(2) == merge_jobs(5)
+    # keys 0 and 99 lie outside the carried ranges [10i, 10i + 2]
+    pruned = merge_jobs(5)
+    assert pruned == merge_jobs(2)
+    assert pruned == merge_jobs(5, partition_from_key=True)
+    # key 11 (21) lies in part 1's (part 2's) range only: those merges
+    # probe one carried file each, at the same cost at 2 and 5 commits
+    probed = merge_jobs(5, keys=(0, 21))
+    assert probed > pruned
+    assert probed == merge_jobs(2, keys=(0, 11))
     assert delete_jobs(2) == delete_jobs(5)
+
+
+def _strip_stats(tdir):
+    """Rewrite every manifest without the recorded `rows`/`min`/`max`,
+    as code that did not record them wrote it."""
+    mdir = os.path.join(tdir, "_manifests")
+    for name in os.listdir(mdir):
+        path = os.path.join(mdir, name)
+        with open(path) as fh:
+            m = json.load(fh)
+        m["files"] = [{"path": e["path"], "partition": e["partition"]} for e in m["files"]]
+        with open(path, "w") as fh:
+            json.dump(m, fh)
+
+
+def test_merge_and_delete_without_recorded_stats(spark, tmp_path):
+    """Entries without stats may hold any key: MERGE (with a key moving
+    partitions) and DELETE leave the same rows on a manifest stripped of
+    its stats as on one that has them."""
+    got = []
+    for strip in (False, True):
+        tdir = str(tmp_path / f"t{strip}")
+        _commits(spark, tdir, 4)
+        if strip:
+            _strip_stats(tdir)
+        # key 21 moves from part 2 to part 0; key 5 is new
+        upd = spark.createDataFrame(
+            [(21, 0, "moved"), (5, 0, "b"), (0, 0, "b")], "k long, part int, v string"
+        )
+        merge_table(spark, tdir, upd, key_cols=["k"], partition_cols=["part"])
+        after_merge = _rows(read_table(spark, tdir))
+        # 22 and 30 sit on a file's recorded max and min
+        keys = spark.createDataFrame([(11,), (22,), (30,), (77,)], "k long")
+        delete_from_table(spark, tdir, keys, key_cols=["k"])
+        got.append((after_merge, _rows(read_table(spark, tdir))))
+    assert got[0] == got[1]
+    after_merge, after_delete = got[0]
+    assert [(p, v) for k, p, v in after_merge if k == 21] == [(0, "moved")]
+    assert {k for k, _, _ in after_merge} - {k for k, _, _ in after_delete} == {11, 22, 30}

@@ -173,10 +173,42 @@ def test_simhash_neardup_finds_near_identical(spark):
     assert identical[0].hamming == 0
 
 
+def test_lsh_batch_buckets_equal_python_fold(spark):
+    """`lsh_buckets_int_batch` gives every (id, table) the bucket of a
+    plain fold over `int_planes`: bit p set iff the int64 dot with plane
+    p is >= 0.  Seeded vectors, zero dots included."""
+    from metrics_service_spark.operators.similarity import (
+        int_planes,
+        lsh_buckets_int_batch,
+    )
+
+    rng = random.Random(7)
+    dim, planes, tables = 16, 5, 3
+    vecs = [[rng.randint(-1000, 1000) for _ in range(dim)] for _ in range(40)]
+    vecs += [[0] * dim, [1] + [0] * (dim - 1)]
+    df = spark.createDataFrame(list(enumerate(vecs)), "id long, v array<long>")
+    got = {
+        (r["id"], r["__t"]): r["__b"]
+        for r in lsh_buckets_int_batch(
+            df, "id", "v", planes=planes, tables=tables, dim=dim
+        ).collect()
+    }
+    want = {
+        (i, t): sum(
+            1 << p
+            for p, w in enumerate(int_planes(planes, dim, table=t))
+            if sum(a * b for a, b in zip(v, w)) >= 0
+        )
+        for i, v in enumerate(vecs)
+        for t in range(tables)
+    }
+    assert got == want
+
+
 def test_lsh_batch_rejects_off_dim_vectors(spark):
     """The exact-dim contract is enforced on every row: a short/NULL
     vector raises when the signatures run, instead of silently
-    diverging from lsh_bucket_int."""
+    yielding partial dots."""
     from pyspark.errors import SparkRuntimeException
 
     from metrics_service_spark.operators.similarity import lsh_buckets_int_batch
