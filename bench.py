@@ -177,9 +177,9 @@ HEADLINE = [
     "doc_priority_sample",
     # round-15: the production BPE paths (train-once driver-local
     # finish; apply from the STORED merge table with zero training
-    # jobs — the form a user runs at scale, now priced next to the
-    # fused doc_bpe_apply above) and the portal/group/package
-    # dispatcher routes
+    # jobs — the form a user runs at scale; doc_bpe_train /
+    # doc_bpe_apply above now run these same kernels) and the
+    # portal/group/package dispatcher routes
     "doc_bpe_train_local",
     "doc_bpe_apply_stored",
     "metrics_request_portal",
@@ -201,8 +201,7 @@ HEADLINE = [
     "doc_bpe_apply_m48",
     "doc_vocab_budget",
     # round-16: per-language training under per-language budgets —
-    # the distributed program (grouped argmax windows, O(rounds) jobs)
-    # and its O(1)-jobs driver-local production twin
+    # two names for the one O(1)-jobs driver-local grouped trainer
     "doc_bpe_train_grouped",
     "doc_bpe_train_grouped_local",
     # round-16 capstone: fertility -> budget apportionment ->
@@ -214,9 +213,10 @@ HEADLINE = [
     # round-16: per-language tokenization from the grouped table
     "doc_bpe_apply_grouped",
     # round-17: the grouped apply at checkpoint-crossing depth (40
-    # ranks for one language), the retrain loop's O(1)-jobs
-    # local-finish arm, the streaming paragraph-index fold's batch
-    # twin, and the tokenizer vocabulary export
+    # ranks for one language), a second name for the retrain loop
+    # (same kernel as doc_bpe_budget_retrain), the streaming
+    # paragraph-index fold's batch twin, and the tokenizer vocabulary
+    # export
     "doc_bpe_apply_grouped_m40",
     "doc_bpe_budget_retrain_local",
     "paragraph_index_batch_twin",

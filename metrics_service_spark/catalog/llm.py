@@ -5420,32 +5420,6 @@ QUERIES: dict[str, QuerySpec] = {
 BPE_MERGES = 6
 
 
-def q_doc_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE merge training (operators/bpe.py): one
-    corpus-sized word-frequency shuffle, then vocab-bounded rounds —
-    pair-count partial agg + TakeOrdered(1) argmax + codegen greedy
-    merge scan.  Output: the learned merge table."""
-    from metrics_service_spark.operators.bpe import bpe_train
-
-    return bpe_train(
-        load_table(spark, sf_dir, "documents"), "text", n_merges=BPE_MERGES
-    )
-
-
-def q_doc_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-then-apply: per-document whitespace token count vs BPE
-    unit count under the learned merges; application is a vocab-sized
-    join, never per-occurrence re-scanning."""
-    from metrics_service_spark.operators.bpe import bpe_apply_counts
-
-    return bpe_apply_counts(
-        load_table(spark, sf_dir, "documents"),
-        "doc_id",
-        "text",
-        n_merges=BPE_MERGES,
-    )
-
-
 def _bpe_oracles() -> tuple[str, str]:
     from metrics_service_spark.operators.bpe import (
         sql_bpe_apply_counts,
@@ -5457,30 +5431,13 @@ def _bpe_oracles() -> tuple[str, str]:
 
 _ORACLE_BPE_TRAIN, _ORACLE_BPE_APPLY = _bpe_oracles()
 
-QUERIES["doc_bpe_train"] = QuerySpec(
-    q_doc_bpe_train,
-    _ORACLE_BPE_TRAIN,
-    "BPE tokenizer training: 6 merge rounds over the word-frequency "
-    "vocab, exact-integer argmax with (count, left, right) tie-break",
-    ("llm",),
-)
-QUERIES["doc_bpe_apply"] = QuerySpec(
-    q_doc_bpe_apply,
-    _ORACLE_BPE_APPLY,
-    "apply the learned BPE merges: per-doc whitespace vs BPE unit "
-    "counts via a vocabulary join",
-    ("llm",),
-)
-
 
 def q_doc_bpe_train_local(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-local-finish training (VERDICT r14 #1): ONE corpus-sized
-    word-frequency shuffle, then the language-bounded vocab is
-    collected under a loud row guard and the merge loop runs on the
-    driver with incremental pair counts — O(1) Spark jobs regardless
-    of n_merges, vs `_train`'s O(n_merges) sequential rounds.  Same
-    oracle as doc_bpe_train: green proves the two trainers and the
-    relational replay all agree bit-for-bit."""
+    """BPE training (operators/bpe.py bpe_train_local_finish): ONE
+    corpus-sized word-frequency shuffle, then the language-bounded
+    vocab is collected under a loud row guard and the merge loop runs
+    on the driver with incremental pair counts — O(1) Spark jobs
+    regardless of n_merges.  Output: the learned merge table."""
     from metrics_service_spark.operators.bpe import bpe_train_local_finish
 
     return bpe_train_local_finish(
@@ -5492,9 +5449,9 @@ def q_doc_bpe_apply_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production train-once/apply-many path: train via the
     driver-local finish, then apply the STORED merge table with
     bpe_apply — the apply plan contains zero training jobs (no pair
-    counting, no argmax; plan-gated in test_r15_guards.py).  Same
-    oracle as the fused doc_bpe_apply: green proves the stored-table
-    replay reproduces training's segmentation bit-for-bit."""
+    counting, no argmax; plan-gated in test_r15_guards.py).  Green
+    proves the stored-table replay reproduces training's segmentation
+    bit-for-bit."""
     from metrics_service_spark.operators.bpe import (
         bpe_apply,
         bpe_train_local_finish,
@@ -5513,6 +5470,22 @@ def q_doc_bpe_apply_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# doc_bpe_train / doc_bpe_apply keep their names, oracles and bench
+# slots; they run the same kernels as their _local / _stored twins.
+QUERIES["doc_bpe_train"] = QuerySpec(
+    q_doc_bpe_train_local,
+    _ORACLE_BPE_TRAIN,
+    "BPE tokenizer training: 6 merge rounds over the word-frequency "
+    "vocab, exact-integer argmax with (count, left, right) tie-break",
+    ("llm",),
+)
+QUERIES["doc_bpe_apply"] = QuerySpec(
+    q_doc_bpe_apply_stored,
+    _ORACLE_BPE_APPLY,
+    "apply the learned BPE merges: per-doc whitespace vs BPE unit "
+    "counts via a vocabulary join",
+    ("llm",),
+)
 QUERIES["doc_bpe_train_local"] = QuerySpec(
     q_doc_bpe_train_local,
     _ORACLE_BPE_TRAIN,
@@ -5675,29 +5648,11 @@ QUERIES["doc_vocab_budget"] = QuerySpec(
 BPE_GROUP_BUDGETS = {"de": 4, "en": 8, "es": 3, "fr": 5, "zh": 2}
 
 
-def q_doc_bpe_train_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One BPE merge table PER LANGUAGE in a single distributed
-    program (operators/bpe.py bpe_train_grouped): per round, pair
-    counting is one grouped vocab aggregation, the per-language argmax
-    is a row_number window, the |langs| winning rows come back as a
-    bounded collect, and all languages merge together via one
-    broadcast join + column-valued greedy scan.  Languages drop out as
-    their budgets are spent."""
-    from metrics_service_spark.operators.bpe import bpe_train_grouped
-
-    return bpe_train_grouped(
-        load_table(spark, sf_dir, "documents"),
-        "text",
-        budgets=BPE_GROUP_BUDGETS,
-    )
-
-
 def q_doc_bpe_train_grouped_local(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production twin: ONE corpus shuffle (the grouped word-frequency
-    agg), bounded vocab collect, per-language heap trainer on the
-    driver — O(1) Spark jobs at any budget.  Same oracle as the
-    distributed grouped trainer: green proves the two agree
-    bit-for-bit per language."""
+    """One BPE merge table PER LANGUAGE (operators/bpe.py
+    bpe_train_grouped_local_finish): ONE corpus shuffle (the grouped
+    word-frequency agg), bounded vocab collect, per-language heap
+    trainer on the driver — O(1) Spark jobs at any budget."""
     from metrics_service_spark.operators.bpe import (
         bpe_train_grouped_local_finish,
     )
@@ -5718,11 +5673,10 @@ def _oracle_bpe_grouped() -> str:
 _ORACLE_BPE_GROUPED = _oracle_bpe_grouped()
 
 QUERIES["doc_bpe_train_grouped"] = QuerySpec(
-    q_doc_bpe_train_grouped,
+    q_doc_bpe_train_grouped_local,
     _ORACLE_BPE_GROUPED,
-    "per-language BPE training under per-language merge budgets, one "
-    "distributed program: grouped pair counts + windowed argmax + "
-    "broadcast merge apply",
+    "per-language BPE training under per-language merge budgets: one "
+    "grouped word-frequency shuffle + per-language heap trainer",
     ("llm",),
 )
 QUERIES["doc_bpe_train_grouped_local"] = QuerySpec(
@@ -5738,8 +5692,8 @@ def q_doc_bpe_apply_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize every document with ITS language's stored merge table
     — the apply side of grouped training (a multilingual pipeline
     segments each document with its own tokenizer).  Zero training
-    jobs in the apply plan: the grouped table replays as rank-level
-    broadcast joins + column-valued greedy scans over the distinct
+    jobs in the apply plan: each language's stored merges replay as a
+    literal codegen flat-string chain over its slice of the distinct
     (lang, word) vocabulary, then one (lang, word)-keyed unit join +
     per-doc aggregate; the corpus is touched once."""
     from metrics_service_spark.operators.bpe import (
@@ -5788,9 +5742,10 @@ def q_doc_bpe_budget_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The whole tokenizer loop in one entry (closes the r15 'report
     with no consumer' chain end to end): current tokenizer ->
     per-language fertility -> Hamilton budget apportionment ->
-    per-language grouped retrain under the DATA-DEPENDENT budgets.
-    The oracle nests the same stats/apportionment as a budget CTE and
-    gates each unrolled grouped round on it."""
+    per-language grouped retrain under the DATA-DEPENDENT budgets,
+    O(1) Spark jobs at any total_budget.  The oracle nests the same
+    stats/apportionment as a budget CTE and gates each unrolled
+    grouped round on it."""
     from metrics_service_spark.operators.bpe import bpe_budget_retrain
 
     return bpe_budget_retrain(
@@ -5821,35 +5776,8 @@ QUERIES["doc_bpe_budget_retrain"] = QuerySpec(
     "apportionment -> per-language grouped retrain, one entry",
     ("llm",),
 )
-
-
-def q_doc_bpe_budget_retrain_local(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The tokenizer loop with its PRODUCTION trainer (VERDICT r16 #3):
-    identical pipeline to doc_bpe_budget_retrain, but the per-language
-    retrain runs via bpe_train_grouped_local_finish — one corpus
-    shuffle + bounded vocab collect + driver heap trainer — so the
-    whole fertility -> budget -> retrain loop is O(1) Spark jobs at
-    ANY total_budget (at a 32k-merge production budget the sequential
-    distributed rounds would hit the ~9 h job-launch floor priced by
-    tools/probe_bpe_vocab.py).  Same oracle as the distributed arm:
-    the two trainers are bit-identical per language, so a green row
-    here proves the O(1)-jobs loop end to end."""
-    from metrics_service_spark.operators.bpe import bpe_budget_retrain
-
-    return bpe_budget_retrain(
-        load_table(spark, sf_dir, "documents"),
-        "text",
-        n_merges_current=BPE_MERGES,
-        total_budget=RETRAIN_BUDGET_TOTAL,
-        min_per_group=RETRAIN_BUDGET_MIN,
-        trainer="local_finish",
-    )
-
-
 QUERIES["doc_bpe_budget_retrain_local"] = QuerySpec(
-    q_doc_bpe_budget_retrain_local,
+    q_doc_bpe_budget_retrain,
     _ORACLE_BPE_BUDGET_RETRAIN,
     "the full tokenizer loop with the O(1)-jobs local-finish trainer: "
     "fertility eval -> apportionment -> per-language retrain, "

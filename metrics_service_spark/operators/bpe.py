@@ -1,25 +1,31 @@
-"""Distributed BPE tokenizer TRAINING (Sennrich et al. 2016) and
-vocabulary application.
+"""BPE tokenizer TRAINING (Sennrich et al. 2016) and vocabulary
+application.
 
 The catalog has tokenization-by-fixed-rule (`bpe_token_count`,
-operators/text.py:56) but until now no tokenizer INDUCTION — the
+operators/text.py:56); this module adds tokenizer INDUCTION — the
 train-side operator every large-corpus pipeline runs before counting
-tokens.  This module implements classic byte-pair-encoding merge
-training as a Spark program shaped for 100 TB:
+tokens — and the apply / evaluate / encode / export steps over a
+stored merge table.
 
-- ONE corpus-sized shuffle up front (the word-frequency groupBy);
-  every merge round thereafter works on the VOCABULARY table (unique
-  filtered words), which is bounded by the language, not the corpus —
-  the classic reason BPE training scales (Sennrich's reference
+Training is one Spark shuffle plus a driver-local finish:
+
+- ONE corpus-sized shuffle (the word-frequency groupBy) collapses the
+  corpus to the VOCABULARY table of unique filtered words, which is
+  bounded by the language, not the corpus (Sennrich's reference
   implementation does exactly this collapse, on one machine).
-- Per round: pair counting is a narrow transform+explode with map-side
-  partial aggregation (pair space is vocab-bounded), the argmax is a
-  TakeOrdered(1) — a one-row driver collect, like the Lloyd-loop
-  centroid collect in operators/similarity.py:kmeans_train — and the
-  merge itself is a pure-projection greedy left-to-right scan
-  (F.aggregate, whole-stage codegen, no shuffle).
-- Lineage is cut with a lazy localCheckpoint per round so round k
-  doesn't re-run rounds 0..k-1's scans.
+- The vocabulary crosses to the driver under a loud row guard
+  (`MAX_VOCAB_ROWS`, enforced on the transfer itself), and the merge
+  loop runs there: incremental pair counts plus a lazy-invalidation
+  heap, so only words containing the merged pair are re-scanned per
+  round.  Total Spark jobs are O(1) at any merge count; a per-round
+  Spark loop would pay one job launch per merge.
+- The grouped (per-language) trainer is the same finish per group
+  over one grouped word-frequency shuffle.
+
+Applying a stored table is pure Spark: the merges replay over the
+distinct-word vocabulary as chained codegen projections
+(`replay_merges`) and the per-word units join back to the token
+stream.
 
 Determinism: counts are exact integers; the argmax tie-breaks
 (pair_count DESC, left, right); the greedy scan merges non-overlapping
@@ -71,38 +77,25 @@ def word_frequencies(
 
 def merge_pair_scan(syms: Column, left: str, right: str) -> Column:
     """Greedy left-to-right non-overlapping merge of (left, right) in a
-    symbol array — one codegen F.aggregate scan, no shuffle.  The
-    nullable `prev` slot holds the one-symbol lookbehind; a merge
-    consumes it so the freshly-merged token cannot chain within the
-    same round (classic BPE round semantics)."""
-    return merge_pair_scan_col(syms, F.lit(left), F.lit(right))
-
-
-def merge_pair_scan_col(syms: Column, left: Column, right: Column) -> Column:
-    """`merge_pair_scan` with COLUMN-valued (left, right) — the form
-    the grouped trainer needs, where each row's merge pair comes from
-    a broadcast-joined per-group argmax row instead of a literal.  A
-    NULL pair (a group with no merge this round) passes the symbol
-    array through untouched."""
-    merged = F.concat(left, right)
+    symbol array — one F.aggregate scan, no shuffle.  The nullable
+    `prev` slot holds the one-symbol lookbehind; a merge consumes it so
+    the freshly-merged token cannot chain within the same round
+    (classic BPE round semantics).  `replay_merges` runs this fold for
+    symbols the flat-string form cannot carry."""
     zero = F.struct(
         F.array().cast("array<string>").alias("out"),
         F.lit(None).cast("string").alias("prev"),
     )
 
     def step(acc: Column, s: Column) -> Column:
-        take = (
-            acc.prev.isNotNull()
-            & (acc.prev == left)
-            & (s == right)
-        )
+        take = acc.prev.isNotNull() & (acc.prev == left) & (s == right)
         flushed = F.when(
             acc.prev.isNotNull(), F.concat(acc.out, F.array(acc.prev))
         ).otherwise(acc.out)
         return F.when(
             take,
             F.struct(
-                F.concat(acc.out, F.array(merged)).alias("out"),
+                F.concat(acc.out, F.array(F.lit(left + right))).alias("out"),
                 F.lit(None).cast("string").alias("prev"),
             ),
         ).otherwise(F.struct(flushed.alias("out"), s.alias("prev")))
@@ -112,9 +105,7 @@ def merge_pair_scan_col(syms: Column, left: Column, right: Column) -> Column:
             acc.prev.isNotNull(), F.concat(acc.out, F.array(acc.prev))
         ).otherwise(acc.out)
 
-    return F.when(left.isNull() | right.isNull(), syms).otherwise(
-        F.aggregate(syms, zero, step, fin)
-    )
+    return F.aggregate(syms, zero, step, fin)
 
 
 #: symbols safe for the flat-string merge scan: regex-literal (no
@@ -145,90 +136,6 @@ def _flat_merge_replace(s: Column, left: str, right: str) -> Column:
     Only valid for `_SAFE_SYM_RE` symbols (guaranteed space-free and
     regex-literal); callers gate on that and fall back to the fold."""
     return F.regexp_replace(s, f" {left} {right}(?= )", f" {left}{right}")
-
-
-def _merge_scan_fast(syms: Column, left: str, right: str) -> Column:
-    """`merge_pair_scan` semantics for literal (left, right): the
-    flat-string regexp form when the pair is scan-safe (measured 11x
-    cheaper than the interpreted F.aggregate fold on the sf0.001
-    vocab at 48 merges: 7.2 -> 0.6 s), the general fold otherwise."""
-    if _SAFE_SYM_RE.match(left) and _SAFE_SYM_RE.match(right):
-        return _flat_to_syms(_flat_merge_replace(_syms_to_flat(syms), left, right))
-    return merge_pair_scan(syms, left, right)
-
-
-def _pair_counts(vocab: DataFrame) -> DataFrame:
-    pair_arr = F.transform(
-        F.sequence(F.lit(1), F.size("syms") - 1),
-        lambda i: F.struct(
-            F.element_at("syms", i).alias("l"),
-            F.element_at("syms", i + F.lit(1)).alias("r"),
-        ),
-    )
-    return (
-        vocab.filter(F.size("syms") >= 2)
-        .select("freq", F.explode(pair_arr).alias("p"))
-        .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-        .agg(F.sum("freq").alias("pair_count"))
-    )
-
-
-def _train(
-    docs: DataFrame,
-    text_col: str,
-    *,
-    n_merges: int,
-    max_word_len: int = MAX_WORD_LEN,
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (merge_table, vocab_with_final_syms).  Raises if the
-    corpus runs out of mergeable pairs before n_merges — an
-    under-sized corpus should fail loudly, not return a short table
-    that silently disagrees with the fixed-round oracle."""
-    spark = docs.sparkSession
-    vocab = (
-        word_frequencies(docs, text_col, max_word_len=max_word_len)
-        .select("w", "freq", F.split("w", "").alias("syms"))
-        .localCheckpoint(eager=False)
-    )
-    merges: list[tuple[int, str, str, int]] = []
-    for rank in range(n_merges):
-        best = (
-            _pair_counts(vocab)
-            .orderBy(F.desc("pair_count"), "l", "r")
-            .first()
-        )
-        if best is None:
-            raise ValueError(
-                f"bpe_train: no mergeable pairs left after {rank} merges "
-                f"(requested {n_merges}); corpus too small for this vocab"
-            )
-        merges.append((rank, best["l"], best["r"], best["pair_count"]))
-        vocab = vocab.select(
-            "w",
-            "freq",
-            _merge_scan_fast(F.col("syms"), best["l"], best["r"]).alias(
-                "syms"
-            ),
-        ).localCheckpoint(eager=False)
-    table = spark.createDataFrame(
-        merges, "rank int, left_sym string, right_sym string, pair_count bigint"
-    )
-    return table, vocab
-
-
-def bpe_train(
-    docs: DataFrame,
-    text_col: str = "text",
-    *,
-    n_merges: int = 6,
-    max_word_len: int = MAX_WORD_LEN,
-) -> DataFrame:
-    """The learned merge table: (rank, left_sym, right_sym,
-    pair_count), one row per merge in training order."""
-    table, _ = _train(
-        docs, text_col, n_merges=n_merges, max_word_len=max_word_len
-    )
-    return table
 
 
 # --- driver-local training finish (production merge counts) ----------------
@@ -266,29 +173,28 @@ def bpe_train_local_finish(
     max_vocab_rows: int = MAX_VOCAB_ROWS,
     word_freqs: DataFrame | None = None,
 ) -> DataFrame:
-    """Training with the corpus axis on Spark and the merge loop on the
-    driver — the production-merge-count shape (VERDICT r14 #1).
+    """The learned merge table (rank, left_sym, right_sym, pair_count),
+    one row per merge in training order: the corpus axis runs on Spark
+    and the merge loop on the driver.
 
-    `_train` is correct but its round loop is O(n_merges) SEQUENTIAL
-    Spark jobs (argmax collect + checkpoint per merge); at production
-    merge counts (32k-100k) the job-launch floor dominates long before
-    data does.  The scale observation (same one Sennrich's reference
-    trainer rests on): after the ONE corpus-sized aggregation —
-    `word_frequencies`, the only stage that ever touches the corpus —
-    the vocabulary of unique filtered words is bounded by the LANGUAGE
-    (~10^6 rows), not the corpus.  So: run that one Spark shuffle,
-    collect the vocab under a loud row guard, and finish training
-    driver-local with incremental pair counts + a lazy-invalidation
-    heap (only words containing the merged pair are re-scanned per
-    round, the classic trainer's data structure) — total Spark jobs
-    O(1) regardless of n_merges.
+    The scale observation (the one Sennrich's reference trainer rests
+    on): after the ONE corpus-sized aggregation — `word_frequencies`,
+    the only stage that ever touches the corpus — the vocabulary of
+    unique filtered words is bounded by the LANGUAGE (~10^6 rows), not
+    the corpus.  So: run that one Spark shuffle, collect the vocab
+    under a loud row guard, and finish training driver-local with
+    incremental pair counts + a lazy-invalidation heap (only words
+    containing the merged pair are re-scanned per round, the classic
+    trainer's data structure) — total Spark jobs O(1) regardless of
+    n_merges, where a per-round Spark loop pays one job launch per
+    merge (hours at 32k-100k production merge counts).
 
-    Bit-identical to `bpe_train` at any geometry: same word filter,
-    same (pair_count DESC, left, right) argmax tie-break (lowercase
-    ascii symbols, so Python tuple order == Spark UTF8 order), same
-    greedy non-overlapping scan, same loud ValueError on pair
-    exhaustion.  The relational replay `sql_bpe_merge_table` oracles
-    both paths."""
+    The argmax tie-break is (pair_count DESC, left, right) over
+    lowercase ASCII symbols, so Python tuple order == the oracle's
+    byte order; the scan is greedy and non-overlapping; a corpus that
+    runs out of mergeable pairs before n_merges raises loudly rather
+    than return a short table.  `sql_bpe_merge_table` replays the run
+    bit-for-bit."""
     # Bound the TRANSFER, not just the result: a global limit of
     # max_vocab_rows + 1 truncates what crosses to the driver, so on
     # the pathological input this guard exists for (a non-language-
@@ -310,8 +216,8 @@ def bpe_train_local_finish(
         raise ValueError(
             f"bpe_train_local_finish: vocabulary exceeds "
             f"max_vocab_rows={max_vocab_rows}; this input's unique-"
-            f"word table is not language-bounded — use bpe_train or "
-            f"raise the guard explicitly"
+            f"word table is not language-bounded — filter the input or "
+            f"raise max_vocab_rows explicitly"
         )
     freqs = {r["w"]: r["freq"] for r in rows}
     merges = _heap_train_from_freqs(freqs, n_merges=n_merges)
@@ -355,13 +261,13 @@ def _heap_train_from_freqs(
             heapq.heappop(heap)  # stale
         if best is None:
             raise ValueError(
-                f"bpe_train: no mergeable pairs left after {rank} merges "
-                f"(requested {n_merges}){ctx}; corpus too small for this "
-                f"vocab"
+                f"bpe training: no mergeable pairs left after {rank} "
+                f"merges (requested {n_merges}){ctx}; corpus too small "
+                f"for this vocab"
             )
         l, r = best
-        # Bit-identity with `_train` relies on Python tuple order ==
-        # Spark UTF8 binary order for the (left, right) tie-break,
+        # Bit-identity with the relational oracle relies on Python
+        # tuple order == its byte order for the (left, right) tie-break,
         # which holds for ASCII symbols only (ADVICE r15: WORD_RE is
         # '^[a-z]+$' today; enforce the assumption so widening it to
         # unicode letters fails loudly instead of silently diverging
@@ -369,9 +275,9 @@ def _heap_train_from_freqs(
         if not (l + r).isascii():
             raise ValueError(
                 f"bpe heap trainer: non-ASCII merge pair "
-                f"({l!r}, {r!r}){ctx} — the heap tie-break is only "
-                f"UTF8-order-identical to the distributed trainers for "
-                f"ASCII symbols; use bpe_train for this vocabulary"
+                f"({l!r}, {r!r}){ctx} — the heap's (pair_count DESC, "
+                f"left, right) tie-break matches the oracle's UTF8 byte "
+                f"order only for ASCII symbols"
             )
         merges.append((rank, l, r, counts[(l, r)]))
         touched: set[tuple[str, str]] = set()
@@ -423,11 +329,12 @@ def _collect_merges(merge_table: DataFrame) -> list[tuple[str, str]]:
 
 
 def _validate_merge_symbols(rows, label: str) -> None:
-    """Fail loudly on NULL/empty merge symbols (ADVICE r16): a corrupt
-    persisted row with a NULL left_sym/right_sym would otherwise take
-    `merge_pair_scan_col`'s NULL passthrough arm downstream and
-    silently SKIP that rank — the exact silent-corruption class the
-    rank-contiguity check was added to kill."""
+    """Fail loudly on NULL/empty merge symbols (ADVICE r16): a NULL or
+    empty left/right never matches in the replay scan, so that rank
+    would be silently SKIPPED — the exact silent-corruption class the
+    rank-contiguity check was added to kill.  Every path into
+    `replay_merges` (stored tables and caller-supplied lists) runs
+    this check."""
     bad = [
         (rank, l, r)
         for rank, l, r in rows
@@ -441,6 +348,23 @@ def _validate_merge_symbols(rows, label: str) -> None:
         )
 
 
+def _resolve_merges(
+    merges: list[tuple[str, str]] | None,
+    merge_table: DataFrame | None,
+    fn: str,
+) -> list[tuple[str, str]]:
+    """The merge list an apply runs: a caller-supplied list, validated
+    like a stored table's symbols, or the stored table collected."""
+    if merges is not None:
+        _validate_merge_symbols(
+            ((i, l, r) for i, (l, r) in enumerate(merges)), "merges list"
+        )
+        return list(merges)
+    if merge_table is None:
+        raise ValueError(f"{fn}: pass merge_table or merges")
+    return _collect_merges(merge_table)
+
+
 def replay_merges(
     vocab: DataFrame,
     merges: list[tuple[str, str]],
@@ -450,7 +374,7 @@ def replay_merges(
 ) -> DataFrame:
     """Replay a learned merge list over a symbol-array frame: one
     pure-projection greedy scan per merge, applied in rank order
-    (exactly `_train`'s per-round vocabulary evolution, so the
+    (exactly the trainer's per-round vocabulary evolution, so the
     segmentation is bit-identical to training's final state).  No
     Spark job per merge — Catalyst collapses the chained projections;
     a lazy localCheckpoint every `checkpoint_every` merges bounds
@@ -475,11 +399,7 @@ def replay_merges(
     if not merges:
         return vocab
     if not all(
-        l is not None
-        and r is not None
-        and _SAFE_SYM_RE.match(l)
-        and _SAFE_SYM_RE.match(r)
-        for l, r in merges
+        _SAFE_SYM_RE.match(l) and _SAFE_SYM_RE.match(r) for l, r in merges
     ):
         out = vocab
         for i, (left, right) in enumerate(merges, start=1):
@@ -549,13 +469,10 @@ def bpe_apply(
     vocabulary of `docs` (one vocab-sized shuffle), replay the merges
     as chained pure projections (`replay_merges`), and join the
     resulting per-word unit counts back to the token stream.  On the
-    training corpus this is bit-identical to `bpe_apply_counts` (the
+    training corpus this reproduces training's final segmentation (the
     distinct word set IS the training vocab's word set); on new
     corpora it segments unseen words by the same rank-order replay."""
-    if merges is None:
-        if merge_table is None:
-            raise ValueError("bpe_apply: pass merge_table or merges")
-        merges = _collect_merges(merge_table)
+    merges = _resolve_merges(merges, merge_table, "bpe_apply")
     from metrics_service_spark.operators.similarity import _spread
 
     # `word_freqs` (a shared — typically checkpointed — (w, freq)
@@ -578,27 +495,6 @@ def bpe_apply(
         words = word_freqs.select("w", F.split("w", "").alias("syms"))
     seg = replay_merges(words, merges, checkpoint_every=checkpoint_every)
     units = seg.select("w", F.size("syms").alias("__units"))
-    return _count_with_units(docs, units, id_col, text_col)
-
-
-def bpe_apply_counts(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    *,
-    n_merges: int = 6,
-    max_word_len: int = MAX_WORD_LEN,
-) -> DataFrame:
-    """Train-then-apply (fused): per document, whitespace token count
-    and the BPE unit count under the learned merges.  Application is a
-    JOIN against the vocabulary's final segmentation (vocab-sized
-    work, never per-occurrence re-scanning).  For the production
-    train-once/apply-many path use `bpe_apply` with a stored merge
-    table."""
-    _, vocab = _train(
-        docs, text_col, n_merges=n_merges, max_word_len=max_word_len
-    )
-    units = vocab.select("w", F.size("syms").alias("__units"))
     return _count_with_units(docs, units, id_col, text_col)
 
 
@@ -941,13 +837,7 @@ def bpe_encode_digest(
         )
         .filter(F.col("w") != "")
     )
-    # r18 (guide §3.1): the planner picked a SortMergeJoin here, which
-    # SORTS the full positional token stream by w; the id-map side is
-    # vocab-bounded per partition, so a shuffled-hash build on it keeps
-    # the same scale-safe shuffle while dropping both sorts (broadcast
-    # is deliberately NOT forced: the distinct-word map grows with the
-    # corpus and would breach executor memory at production scale)
-    per_tok = toks.join(word_ids.hint("shuffle_hash"), "w", "left").select(
+    per_tok = toks.join(word_ids, "w", "left").select(
         id_col,
         "pos",
         F.coalesce(
@@ -1091,10 +981,7 @@ def bpe_apply_stats(
     jobs); the output is group-bounded (|langs| rows), so the result
     never carries corpus mass.  All arithmetic is integer floor-div,
     bit-reproducible against the relational oracle."""
-    if merges is None:
-        if merge_table is None:
-            raise ValueError("bpe_apply_stats: pass merge_table or merges")
-        merges = _collect_merges(merge_table)
+    merges = _resolve_merges(merges, merge_table, "bpe_apply_stats")
     from metrics_service_spark.operators.similarity import _spread
 
     group_cols = list(group_cols or [])
@@ -1381,164 +1268,6 @@ def _grouped_word_frequencies(
     )
 
 
-def bpe_train_grouped(
-    docs: DataFrame,
-    text_col: str = "text",
-    *,
-    group_col: str = "lang",
-    budgets: dict[str, int],
-    max_word_len: int = MAX_WORD_LEN,
-    word_freqs: DataFrame | None = None,
-) -> DataFrame:
-    """Train ONE BPE merge table PER GROUP (language) in a single
-    distributed program — the step `vocab_budget_rebalance`'s output
-    drives: each language gets its own merge budget, the whole fleet
-    trains together, and no language's rounds wait on a separate job
-    submission.
-
-    Per round, every still-active language merges its own best pair:
-    pair counting is one grouped aggregation over the (group-keyed)
-    vocabulary, the per-group argmax is a row_number window over the
-    vocab-bounded pair frame (count DESC, left, right — the same
-    tie-break as `_train`), the n_groups winning rows come back to the
-    driver (the Lloyd-centroid-class bounded collect), and the merge
-    applies as ONE broadcast join + column-valued greedy scan
-    (`merge_pair_scan_col`) — a language with no merge this round
-    passes through via the NULL arm.  Rounds run max(budgets) times;
-    a language stops merging once its budget is spent.
-
-    Raises loudly if any language exhausts its mergeable pairs before
-    its budget — same contract as the other trainers.  Output:
-    (group, rank, left_sym, right_sym, pair_count), replayed
-    bit-for-bit by `sql_bpe_grouped_merge_table`."""
-    spark = docs.sparkSession
-    from pyspark.sql import Window
-
-    if not budgets:
-        raise ValueError("bpe_train_grouped: budgets must be non-empty")
-    gwf = (
-        _grouped_word_frequencies(
-            docs, text_col, group_col, max_word_len=max_word_len
-        )
-        if word_freqs is None
-        else word_freqs
-    )
-    vocab = (
-        gwf.select(group_col, "w", "freq", F.split("w", "").alias("syms"))
-        .localCheckpoint(eager=False)
-    )
-    merges: list[tuple[str, int, str, str, int]] = []
-    for rank in range(max(budgets.values())):
-        active = sorted(g for g, b in budgets.items() if b > rank)
-        pair_arr = F.transform(
-            F.sequence(F.lit(1), F.size("syms") - 1),
-            lambda i: F.struct(
-                F.element_at("syms", i).alias("l"),
-                F.element_at("syms", i + F.lit(1)).alias("r"),
-            ),
-        )
-        pc = (
-            vocab.filter(
-                F.col(group_col).isin(active) & (F.size("syms") >= 2)
-            )
-            .select(group_col, "freq", F.explode(pair_arr).alias("p"))
-            .groupBy(
-                group_col,
-                F.col("p.l").alias("l"),
-                F.col("p.r").alias("r"),
-            )
-            .agg(F.sum("freq").alias("pair_count"))
-        )
-        # r17 (guide §2.4): per-group argmax as min(struct(-count, l,
-        # r)) — the same (count DESC, l, r) tie-break as the previous
-        # row_number window, but as a partially-aggregable SortAggregate.
-        # Measured plan delta (plans/r17/bpe_train_grouped_round_argmax_
-        # {before,after}.txt): same exchange count (WindowGroupLimit
-        # pushdown already pruned the window form map-side on 3.5+),
-        # but the map-side sort drops from 4 sort keys over the full
-        # pair frame to the group key alone, and the post-shuffle
-        # Window + Filter stage collapses into the final aggregate.
-        rows = (
-            pc.groupBy(group_col)
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("pair_count")).alias("__nc"), "l", "r"
-                    )
-                ).alias("__m")
-            )
-            .select(
-                group_col,
-                F.col("__m.l").alias("l"),
-                F.col("__m.r").alias("r"),
-                (-F.col("__m.__nc")).alias("pair_count"),
-            )
-            .collect()
-        )
-        got = {r[group_col]: r for r in rows}
-        missing = [g for g in active if g not in got]
-        if missing:
-            raise ValueError(
-                f"bpe_train_grouped: no mergeable pairs left for "
-                f"group(s) {missing} after {rank} merges (budgets "
-                f"{ {g: budgets[g] for g in missing} }); corpus too "
-                f"small for these budgets"
-            )
-        for g in active:
-            merges.append(
-                (g, rank, got[g]["l"], got[g]["r"], got[g]["pair_count"])
-            )
-        # r17: the winners are driver-known literals, so the round's
-        # merge applies as a literal CASE-WHEN of codegen flat-string
-        # scans per active group — no broadcast join, no interpreted
-        # fold (guide §2.4/§4.1); inactive/NULL groups take the
-        # passthrough arm exactly like the old left join's NULL arm.
-        # Unsafe symbols (never produced by WORD_RE training) keep the
-        # original broadcast join + column-valued fold.
-        if all(
-            _SAFE_SYM_RE.match(got[g]["l"]) and _SAFE_SYM_RE.match(got[g]["r"])
-            for g in active
-        ):
-            flat = _syms_to_flat(F.col("syms"))
-            scan = None
-            for g in active:
-                branch = _flat_merge_replace(flat, got[g]["l"], got[g]["r"])
-                cond = F.col(group_col) == g
-                scan = (
-                    F.when(cond, branch)
-                    if scan is None
-                    else scan.when(cond, branch)
-                )
-            vocab = vocab.select(
-                group_col,
-                "w",
-                "freq",
-                _flat_to_syms(scan.otherwise(flat)).alias("syms"),
-            ).localCheckpoint(eager=False)
-        else:
-            best = spark.createDataFrame(
-                [(g, got[g]["l"], got[g]["r"]) for g in active],
-                f"{group_col} string, __l string, __r string",
-            )
-            vocab = (
-                vocab.join(F.broadcast(best), group_col, "left")
-                .select(
-                    group_col,
-                    "w",
-                    "freq",
-                    merge_pair_scan_col(
-                        F.col("syms"), F.col("__l"), F.col("__r")
-                    ).alias("syms"),
-                )
-                .localCheckpoint(eager=False)
-            )
-    return spark.createDataFrame(
-        merges,
-        f"{group_col} string, rank int, left_sym string, "
-        f"right_sym string, pair_count bigint",
-    )
-
-
 def bpe_train_grouped_local_finish(
     docs: DataFrame,
     text_col: str = "text",
@@ -1549,14 +1278,19 @@ def bpe_train_grouped_local_finish(
     max_vocab_rows: int = MAX_VOCAB_ROWS,
     word_freqs: DataFrame | None = None,
 ) -> DataFrame:
-    """Production twin of `bpe_train_grouped`: ONE corpus shuffle (the
-    grouped word-frequency agg), the per-group vocabularies collected
-    under the same bounded-transfer guard as
+    """Train ONE BPE merge table PER GROUP (language) under per-group
+    merge budgets — the step `vocab_budget_rebalance`'s output drives.
+    ONE corpus shuffle (the grouped word-frequency agg), the per-group
+    vocabularies collected under the same bounded-transfer guard as
     `bpe_train_local_finish`, then the lazy-invalidation heap trainer
     runs per group on the driver — O(1) Spark jobs at any budget.
-    Bit-identical to the distributed grouped trainer: per-group
-    training is independent, and per group both run the classic
-    trainer with the same filter, tie-break, and greedy scan."""
+    Per-group training is independent: each group's slice equals
+    `bpe_train_local_finish` on that group's documents at its budget.
+
+    Groups with a budget <= 0 train nothing.  Raises loudly if any
+    group exhausts its mergeable pairs before its budget.  Output:
+    (group, rank, left_sym, right_sym, pair_count), replayed
+    bit-for-bit by `sql_bpe_grouped_merge_table`."""
     if not budgets:
         raise ValueError("bpe_train_grouped_local_finish: budgets empty")
     # only groups that will actually train consume the bounded-transfer
@@ -1579,8 +1313,8 @@ def bpe_train_grouped_local_finish(
     if len(rows) > max_vocab_rows:
         raise ValueError(
             f"bpe_train_grouped_local_finish: vocabulary exceeds "
-            f"max_vocab_rows={max_vocab_rows}; use bpe_train_grouped or "
-            f"raise the guard explicitly"
+            f"max_vocab_rows={max_vocab_rows}; filter the input or "
+            f"raise max_vocab_rows explicitly"
         )
     spark = docs.sparkSession
     merges: list[tuple[str, int, str, str, int]] = []
@@ -1609,7 +1343,8 @@ def sql_bpe_grouped_ctes(
     riding every state, the per-round argmax partitioned by group, and
     each group's budget gating which rounds it participates in.  A
     group without a b{n} row (budget spent) LEFT-joins a NULL pair and
-    its syms pass through, mirroring `merge_pair_scan_col`'s NULL arm.
+    its syms pass through unchanged — the trainer's group that has
+    stopped merging.
     Vocab states are always AS MATERIALIZED (each r{n} has two
     consumers; see sql_bpe_ctes).
 
@@ -1758,6 +1493,7 @@ def sql_bpe_budget_retrain(
 {ctes}
 {unions}"""
 
+
 def bpe_budget_retrain(
     docs: DataFrame,
     text_col: str = "text",
@@ -1767,34 +1503,18 @@ def bpe_budget_retrain(
     total_budget: int,
     min_per_group: int = 1,
     max_word_len: int = MAX_WORD_LEN,
-    trainer: str = "distributed",
 ) -> DataFrame:
     """The full tokenizer-improvement loop, end to end: train the
     CURRENT tokenizer (driver-local finish — O(1) jobs), evaluate its
     per-language fertility (`bpe_apply_stats`), apportion the next
     vocabulary's merge budget by reclaimable excess mass
     (`vocab_budget_rebalance`), and retrain PER LANGUAGE under those
-    budgets.  The budget crossing to the driver is |langs| rows (the
-    same bounded-transfer class as the merge table); everything else
-    stays on the cluster.  Output: the new per-language merge table,
-    replayed bit-for-bit by `sql_bpe_budget_retrain`.
-
-    ``trainer`` picks the retraining engine (VERDICT r16 #3):
-    ``"distributed"`` runs `bpe_train_grouped` — O(max_budget)
-    sequential rounds, corpus never leaves the cluster beyond the
-    per-round |langs|-row argmax; ``"local_finish"`` runs
-    `bpe_train_grouped_local_finish` — ONE corpus shuffle + bounded
-    vocab collect + driver heap trainer, so the WHOLE loop is O(1)
-    Spark jobs regardless of total_budget (the production shape at a
-    32k-merge budget, where sequential rounds would hit the job-launch
-    floor `tools/probe_bpe_vocab.py` priced at ~9 h).  The two are
-    bit-identical per language (equivalence-tested), so both arms
-    replay against the same oracle."""
-    if trainer not in ("distributed", "local_finish"):
-        raise ValueError(
-            f"bpe_budget_retrain: trainer must be 'distributed' or "
-            f"'local_finish', got {trainer!r}"
-        )
+    budgets (`bpe_train_grouped_local_finish`).  The budget crossing to
+    the driver is |langs| rows (the same bounded-transfer class as the
+    merge table); the vocabulary collects are guarded like every
+    driver-local finish, so the WHOLE loop is O(1) Spark jobs
+    regardless of total_budget.  Output: the new per-language merge
+    table, replayed bit-for-bit by `sql_bpe_budget_retrain`."""
     # r17 (guide §2.4): ONE grouped word-frequency pass serves the
     # whole loop.  The flat (w, freq) frame the current-tokenizer train
     # and the fertility eval need is the grouped frame re-aggregated by
@@ -1836,12 +1556,7 @@ def bpe_budget_retrain(
         for r in budget_rows
         if r["merge_budget"] > 0
     }
-    train = (
-        bpe_train_grouped
-        if trainer == "distributed"
-        else bpe_train_grouped_local_finish
-    )
-    return train(
+    return bpe_train_grouped_local_finish(
         docs,
         text_col,
         group_col=group_col,
@@ -1959,20 +1674,20 @@ def bpe_apply_grouped(
     word_freqs: DataFrame | None = None,
 ) -> DataFrame:
     """Tokenize every document with ITS OWN group's stored merge table
-    — the apply side of `bpe_train_grouped` (a multilingual pipeline
-    trains one tokenizer per language and then segments each document
-    with its language's table).  Zero training jobs, like `bpe_apply`.
+    — the apply side of `bpe_train_grouped_local_finish` (a
+    multilingual pipeline trains one tokenizer per language and then
+    segments each document with its language's table).  Zero training
+    jobs, like `bpe_apply`.
 
     Plan shape: collect the grouped merge table (sum-of-budgets rows,
     validated per group), build the DISTINCT (group, word) vocabulary
-    of `docs` (one vocab-sized shuffle), then replay rank levels — at
-    level k every group that still has a rank-k merge applies it via
-    ONE broadcast join + the column-valued greedy scan (groups past
-    their budget take the NULL passthrough arm, exactly the training
-    rounds' shape) — and join the per-(group, word) unit counts back
-    to the token stream on (group, word).  A lazy localCheckpoint
-    every `checkpoint_every` levels bounds expression depth, same
-    cadence trade as `replay_merges`."""
+    of `docs` (one vocab-sized shuffle), replay each group's literal
+    merge chain over its slice as codegen flat-string scans
+    (`_grouped_vocab_replay`; words of groups without a table pass
+    through char-segmented), and join the per-(group, word) unit
+    counts back to the token stream on (group, word).  A lazy
+    localCheckpoint every `checkpoint_every` merges bounds expression
+    depth, same cadence trade as `replay_merges`."""
     from metrics_service_spark.operators.similarity import _spread
 
     merges = _collect_grouped_merges(merge_table, group_col)
@@ -2060,11 +1775,12 @@ def bpe_encode_digest_grouped(
     join is all-or-nothing per language (no partial sequences).
 
     Plan shape: the shared grouped replay (`_grouped_vocab_replay`,
-    vocab-sized, rank-level broadcast joins) feeds a (group, unit) id
-    join against the grouped export — both sides vocab-bounded; the
-    corpus token stream joins per-(group, word) id arrays and ONE
-    doc-keyed aggregation reassembles each sequence by (pos, sympos),
-    the same single corpus-mass exchange as the flat encode."""
+    vocab-sized, one literal flat-string chain per group) feeds a
+    (group, unit) id join against the grouped export — both sides
+    vocab-bounded; the corpus token stream joins per-(group, word) id
+    arrays and ONE doc-keyed aggregation reassembles each sequence by
+    (pos, sympos), the same single corpus-mass exchange as the flat
+    encode."""
     merges = _collect_grouped_merges(merge_table, group_col)
     # one shared grouped (group, w, freq) pass feeds BOTH the export's
     # char set and the replay vocabulary (r17, guide §2.4 — the flat
@@ -2121,12 +1837,7 @@ def bpe_encode_digest_grouped(
         )
         .filter(F.col("w") != "")
     )
-    # r18 (guide §3.1): shuffled-hash build on the vocab-bounded id
-    # map instead of sorting the full token stream (see the flat
-    # encode's per_tok note)
-    per_tok = toks.join(
-        word_ids.hint("shuffle_hash"), [group_col, "w"], "left"
-    ).select(
+    per_tok = toks.join(word_ids, [group_col, "w"], "left").select(
         id_col,
         "pos",
         F.coalesce(

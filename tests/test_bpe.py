@@ -4,12 +4,16 @@ the relational oracle depends on (operators/bpe.py)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from metrics_service_spark.operators.bpe import (
-    bpe_apply_counts,
-    bpe_train,
+    MAX_WORD_LEN,
+    _py_greedy_merge,
+    bpe_apply,
+    bpe_train_local_finish,
     merge_pair_scan,
     word_frequencies,
 )
@@ -18,6 +22,32 @@ from metrics_service_spark.operators.bpe import (
 def _scan(spark, syms, left, right):
     df = spark.createDataFrame([(syms,)], "syms array<string>")
     return df.select(merge_pair_scan(F.col("syms"), left, right).alias("m")).first()["m"]
+
+
+def _py_apply(docs, merges):
+    """Pure-Python `bpe_apply`: {doc_id: (n_ws_tokens, n_bpe_units)},
+    each trainable word segmented by the merges in rank order, every
+    other token one unit."""
+    out = {}
+    for doc_id, text in docs:
+        toks = text.lower().split()
+        units = 0
+        for w in toks:
+            if re.fullmatch("[a-z]+", w) and len(w) <= MAX_WORD_LEN:
+                syms = list(w)
+                for left, right in merges:
+                    syms = _py_greedy_merge(syms, left, right)
+                units += len(syms)
+            else:
+                units += 1
+        out[doc_id] = (len(toks), units)
+    return out
+
+
+def _merges(table):
+    return [
+        (r["left_sym"], r["right_sym"]) for r in table.orderBy("rank").collect()
+    ]
 
 
 def test_greedy_non_overlapping_runs(spark):
@@ -38,7 +68,7 @@ def test_scan_distinct_pair_and_misses(spark):
 def test_argmax_tiebreak_lexicographic(spark):
     # 'ba' and 'ab' tie at count 2; (count DESC, l, r) must pick (a, b)
     docs = spark.createDataFrame([("abab",), ("ba",)], "text string")
-    table = bpe_train(docs, "text", n_merges=1).collect()
+    table = bpe_train_local_finish(docs, "text", n_merges=1).collect()
     assert (table[0]["left_sym"], table[0]["right_sym"]) == ("a", "b")
     assert table[0]["pair_count"] == 2
 
@@ -49,7 +79,7 @@ def test_train_raises_on_pair_exhaustion(spark):
     # oracle (the codebase's iterative-operator standard)
     docs = spark.createDataFrame([("a b c",)], "text string")
     with pytest.raises(ValueError, match="no mergeable pairs"):
-        bpe_train(docs, "text", n_merges=1)
+        bpe_train_local_finish(docs, "text", n_merges=1)
 
 
 def test_word_filter_and_apply_fallback(spark):
@@ -60,73 +90,38 @@ def test_word_filter_and_apply_fallback(spark):
     )
     vocab = {r["w"] for r in word_frequencies(docs, "text").collect()}
     assert vocab == {"abab"}
-    out = bpe_apply_counts(docs, "doc_id", "text", n_merges=1).first()
+    table = bpe_train_local_finish(docs, "text", n_merges=1)
+    out = bpe_apply(docs, table).first()
     # merge (a,b) -> abab segments to [ab, ab] = 2 units; 1234 and the
     # long word fall back to 1 unit each
     assert out["n_ws_tokens"] == 4
     assert out["n_bpe_units"] == 2 + 2 + 1 + 1
 
 
-def test_local_finish_matches_distributed(spark):
-    # the driver-local-finish trainer must be bit-identical to the
-    # distributed round loop: same argmax tie-break, same greedy scan
-    from metrics_service_spark.operators.bpe import bpe_train_local_finish
-
-    docs = spark.createDataFrame(
-        [("ab ab ab abc",), ("banana bandana cabbage",), ("ba abab",)],
-        "text string",
-    )
-    want = [
-        tuple(r)
-        for r in bpe_train(docs, "text", n_merges=4).orderBy("rank").collect()
-    ]
-    got = [
-        tuple(r)
-        for r in bpe_train_local_finish(docs, "text", n_merges=4)
-        .orderBy("rank")
-        .collect()
-    ]
-    assert got == want
-
-
 def test_local_finish_vocab_guard_raises(spark):
-    from metrics_service_spark.operators.bpe import bpe_train_local_finish
-
     docs = spark.createDataFrame([("ab cd ef",)], "text string")
     with pytest.raises(ValueError, match="max_vocab_rows"):
         bpe_train_local_finish(docs, "text", n_merges=1, max_vocab_rows=2)
 
 
 def test_local_finish_exhaustion_raises(spark):
-    # same loud failure contract as _train: never a short merge table
-    from metrics_service_spark.operators.bpe import bpe_train_local_finish
-
+    # pairs run out after one merge: never a short merge table
     docs = spark.createDataFrame([("ab ab",)], "text string")
     with pytest.raises(ValueError, match="no mergeable pairs"):
         bpe_train_local_finish(docs, "text", n_merges=3)
 
 
 def test_apply_stored_matches_fused(spark):
-    # production path == fused path bit-for-bit on the training corpus
-    from metrics_service_spark.operators.bpe import (
-        bpe_apply,
-        bpe_train_local_finish,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "ab ab ab abc zz9"), (2, "banana ab bandana"), (3, "ba abab")],
-        "doc_id int, text string",
-    )
+    # stored-table apply on the training corpus == a per-word Python
+    # replay of the same table (train and apply fused by hand)
+    texts = [(1, "ab ab ab abc zz9"), (2, "banana ab bandana"), (3, "ba abab")]
+    docs = spark.createDataFrame(texts, "doc_id int, text string")
     table = bpe_train_local_finish(docs, "text", n_merges=3)
     got = {
         r["doc_id"]: (r["n_ws_tokens"], r["n_bpe_units"])
         for r in bpe_apply(docs, table).collect()
     }
-    want = {
-        r["doc_id"]: (r["n_ws_tokens"], r["n_bpe_units"])
-        for r in bpe_apply_counts(docs, n_merges=3).collect()
-    }
-    assert got == want
+    assert got == _py_apply(texts, _merges(table))
 
 
 def test_apply_stored_on_new_corpus(spark):
@@ -169,7 +164,7 @@ def test_train_matches_handrolled_reference(spark):
     # hand: freqs ab:3 abc:1 -> round0 merges (a,b) count 4; round1
     # pairs: (ab,c):1 -> merges (ab, c)
     docs = spark.createDataFrame([("ab ab ab abc",)], "text string")
-    rows = bpe_train(docs, "text", n_merges=2).collect()
+    rows = bpe_train_local_finish(docs, "text", n_merges=2).collect()
     assert [(r["left_sym"], r["right_sym"], r["pair_count"]) for r in rows] == [
         ("a", "b", 4),
         ("ab", "c", 1),
@@ -219,31 +214,24 @@ def test_apply_arbitrary_stored_table_fuzz(spark):
 
 def test_merge_table_storage_roundtrip_apply(spark, tmp_path):
     # train once -> persist through the TRANSACTIONAL manifest table ->
-    # read back -> apply: the full production loop, bit-identical to
-    # the in-session fused form
-    from metrics_service_spark.operators.bpe import (
-        bpe_apply,
-        bpe_apply_counts,
-        bpe_train_local_finish,
-    )
+    # read back -> apply: the full production loop, bit-identical to a
+    # per-word Python replay of the in-session table
     from metrics_service_spark.sources.merge_table import (
         overwrite_table,
         read_table,
     )
 
-    docs = spark.createDataFrame(
-        [(1, "ab ab ab abc"), (2, "banana bandana ab"), (3, "ba abab")],
-        "doc_id int, text string",
-    )
+    texts = [(1, "ab ab ab abc"), (2, "banana bandana ab"), (3, "ba abab")]
+    docs = spark.createDataFrame(texts, "doc_id int, text string")
     table = bpe_train_local_finish(docs, "text", n_merges=3)
     tdir = str(tmp_path / "bpe_merges")
     overwrite_table(table, tdir)
     stored = read_table(spark, tdir)
-    got = sorted(tuple(r) for r in bpe_apply(docs, stored).collect())
-    want = sorted(
-        tuple(r) for r in bpe_apply_counts(docs, n_merges=3).collect()
-    )
-    assert got == want
+    got = {
+        r["doc_id"]: (r["n_ws_tokens"], r["n_bpe_units"])
+        for r in bpe_apply(docs, stored).collect()
+    }
+    assert got == _py_apply(texts, _merges(table))
 
 
 def test_apply_stats_fertility_by_group(spark):
@@ -322,10 +310,10 @@ def test_local_finish_guard_bounds_the_transfer(spark):
 
 
 def test_local_finish_rejects_non_ascii_merge(spark):
-    # ADVICE r15: the heap tie-break is UTF8-order-identical to
-    # bpe_train only for ASCII symbols; if WORD_RE is ever widened to
-    # unicode letters the local finish must refuse, not silently
-    # diverge on ties
+    # ADVICE r15: the heap tie-break is UTF8-order-identical to the
+    # oracle's ORDER BY only for ASCII symbols; if WORD_RE is ever
+    # widened to unicode letters the local finish must refuse, not
+    # silently diverge on ties
     from unittest import mock
 
     from metrics_service_spark.operators import bpe
@@ -462,20 +450,24 @@ def _lang_docs(spark):
 
 def test_grouped_matches_per_group_training(spark):
     # training per group is independent: the grouped trainer's slice
-    # for each lang must equal bpe_train run on that lang's subset at
-    # that lang's budget
-    from metrics_service_spark.operators.bpe import bpe_train, bpe_train_grouped
+    # for each lang must equal the flat trainer run on that lang's
+    # subset at that lang's budget
+    from metrics_service_spark.operators.bpe import (
+        bpe_train_grouped_local_finish,
+    )
 
     docs = _lang_docs(spark)
     budgets = {"en": 3, "fr": 2}
     got = {
         (r["lang"], r["rank"]): (r["left_sym"], r["right_sym"], r["pair_count"])
-        for r in bpe_train_grouped(docs, "text", budgets=budgets).collect()
+        for r in bpe_train_grouped_local_finish(
+            docs, "text", budgets=budgets
+        ).collect()
     }
     want = {}
     for g, b in budgets.items():
         sub = docs.filter(F.col("lang") == g)
-        for r in bpe_train(sub, "text", n_merges=b).collect():
+        for r in bpe_train_local_finish(sub, "text", n_merges=b).collect():
             want[(g, r["rank"])] = (
                 r["left_sym"], r["right_sym"], r["pair_count"],
             )
@@ -483,26 +475,8 @@ def test_grouped_matches_per_group_training(spark):
     assert len(got) == sum(budgets.values())
 
 
-def test_grouped_local_finish_matches_distributed(spark):
-    from metrics_service_spark.operators.bpe import (
-        bpe_train_grouped,
-        bpe_train_grouped_local_finish,
-    )
-
-    docs = _lang_docs(spark)
-    budgets = {"en": 4, "fr": 1}
-    key = lambda r: (r["lang"], r["rank"])  # noqa: E731
-    val = lambda r: (r["left_sym"], r["right_sym"], r["pair_count"])  # noqa: E731
-    got = {key(r): val(r) for r in
-           bpe_train_grouped_local_finish(docs, "text", budgets=budgets).collect()}
-    want = {key(r): val(r) for r in
-            bpe_train_grouped(docs, "text", budgets=budgets).collect()}
-    assert got == want
-
-
 def test_grouped_exhaustion_raises(spark):
     from metrics_service_spark.operators.bpe import (
-        bpe_train_grouped,
         bpe_train_grouped_local_finish,
     )
 
@@ -511,9 +485,7 @@ def test_grouped_exhaustion_raises(spark):
         "doc_id int, text string, lang string",
     )
     # en exhausts after 1 merge (only pair (a,b)); budget asks for 3
-    with pytest.raises(ValueError, match="en"):
-        bpe_train_grouped(docs, "text", budgets={"en": 3, "fr": 1})
-    with pytest.raises(ValueError, match="no mergeable pairs"):
+    with pytest.raises(ValueError, match="no mergeable pairs.*'en'"):
         bpe_train_grouped_local_finish(
             docs, "text", budgets={"en": 3, "fr": 1}
         )
@@ -527,7 +499,7 @@ def test_grouped_oracle_replays_bitwise(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from metrics_service_spark.operators.bpe import (
-        bpe_train_grouped,
+        bpe_train_grouped_local_finish,
         sql_bpe_grouped_merge_table,
     )
     from metrics_service_spark.testing.oracle import compare_query
@@ -551,27 +523,13 @@ def test_grouped_oracle_replays_bitwise(spark, tmp_path):
     )
     docs = spark.read.parquet(os.path.join(str(tmp_path), "documents.parquet"))
     budgets = {"en": 3, "fr": 2, "de": 1}
-    got = bpe_train_grouped(docs, "text", budgets=budgets)
+    got = bpe_train_grouped_local_finish(docs, "text", budgets=budgets)
     compare_query(
         got,
         sql_bpe_grouped_merge_table(budgets),
         str(tmp_path),
         "grouped_bpe",
     )
-
-
-def test_merge_pair_scan_col_null_passthrough(spark):
-    from metrics_service_spark.operators.bpe import merge_pair_scan_col
-
-    df = spark.createDataFrame(
-        [(["a", "b", "a"], "a", "b"), (["a", "b", "a"], None, None)],
-        "syms array<string>, l string, r string",
-    )
-    rows = df.select(
-        merge_pair_scan_col(F.col("syms"), F.col("l"), F.col("r")).alias("m")
-    ).collect()
-    assert rows[0]["m"] == ["ab", "a"]
-    assert rows[1]["m"] == ["a", "b", "a"]
 
 
 def test_budget_retrain_realizes_apportioned_budgets(spark):
@@ -744,9 +702,9 @@ def test_grouped_merge_table_storage_roundtrip_apply(spark, tmp_path):
 
 
 def test_collectors_reject_null_or_empty_symbols(spark):
-    # ADVICE r16: a persisted row with NULL/empty merge symbols would
-    # ride merge_pair_scan_col's NULL passthrough arm and silently
-    # skip that rank — both collectors must fail loudly instead
+    # ADVICE r16: a persisted row with NULL/empty merge symbols never
+    # matches in the replay scan and would silently skip that rank —
+    # both collectors must fail loudly instead
     from metrics_service_spark.operators.bpe import (
         bpe_apply,
         bpe_apply_grouped,
@@ -770,6 +728,19 @@ def test_collectors_reject_null_or_empty_symbols(spark):
     )
     with pytest.raises(ValueError, match="NULL/empty"):
         bpe_apply_grouped(docs, grouped_null)
+
+
+@pytest.mark.parametrize("merges", [[("a", None)], [("", "b")], [("a", "")]])
+@pytest.mark.parametrize("fn", ["bpe_apply", "bpe_apply_stats"])
+def test_merges_list_rejects_null_or_empty_symbols(spark, fn, merges):
+    # a caller-supplied merges= list gets the stored table's symbol
+    # check: a NULL/empty symbol never matches, so the apply would
+    # silently return the character-level count
+    from metrics_service_spark.operators import bpe
+
+    docs = spark.createDataFrame([(1, "ab ab abc")], "doc_id int, text string")
+    with pytest.raises(ValueError, match="NULL/empty"):
+        getattr(bpe, fn)(docs, merges=merges)
 
 
 def test_vocab_budget_overflow_guard_raises(spark):

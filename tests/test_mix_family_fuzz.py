@@ -329,14 +329,14 @@ def test_linkage_recall_matches_oracle_on_adversarial_corpora(
 def test_grouped_bpe_fuzz_vs_oracle(spark, tmp_path_factory, corpus, budgets):
     """The grouped trainer and its parameterized relational oracle
     must agree bitwise on adversarial tiny corpora — per-group argmax
-    ties, budget-spent NULL-arm passthroughs, punctuation/empty
+    ties, budget-spent groups riding through, punctuation/empty
     noise.  Draws where a group exhausts its pairs before its budget
     (the loud-raise contract, covered by its own test) are skipped."""
     import pytest as _pytest
     from hypothesis import assume
 
     from metrics_service_spark.operators.bpe import (
-        bpe_train_grouped,
+        bpe_train_grouped_local_finish,
         sql_bpe_grouped_merge_table,
     )
 
@@ -349,7 +349,7 @@ def test_grouped_bpe_fuzz_vs_oracle(spark, tmp_path_factory, corpus, budgets):
     )
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     try:
-        got = bpe_train_grouped(docs, "text", budgets=budgets)
+        got = bpe_train_grouped_local_finish(docs, "text", budgets=budgets)
         n = got.count()
     except ValueError as e:
         assume("no mergeable pairs" not in str(e))

@@ -54,23 +54,6 @@ def test_bpe_merge_scan_is_pure_projection(spark):
     assert "Exchange" not in plan
 
 
-def test_bpe_pair_counts_partial_aggregate(spark):
-    """Pair counting must map-side combine: two HashAggregates (partial
-    + final) around exactly one exchange, so the shuffle carries
-    per-partition pair sums, never the raw pair stream."""
-    from metrics_service_spark.operators.bpe import _pair_counts
-
-    # literal vocab: isolates the per-round plan (in _train the vocab
-    # sits behind a checkpoint, so rounds never re-pay its shuffle)
-    vocab = spark.createDataFrame(
-        [("aab", 2, ["a", "a", "b"]), ("ab", 3, ["a", "b"])],
-        "w string, freq long, syms array<string>",
-    )
-    plan = _executed(_pair_counts(vocab))
-    assert plan.count("HashAggregate") >= 2
-    assert plan.count("Exchange") <= 2  # pair shuffle (+ AQE read)
-
-
 def test_auc_cumulative_window_is_bucket_partitioned(spark):
     """global_cumsum's in-bucket window must be PARTITIONED (by the
     coarse score bucket) — the only single-partition exchanges allowed

@@ -12,7 +12,10 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from metrics_service_spark.operators.bpe import bpe_train, merge_pair_scan
+from metrics_service_spark.operators.bpe import (
+    bpe_train_local_finish,
+    merge_pair_scan,
+)
 from metrics_service_spark.operators.closure import pagerank_int
 from metrics_service_spark.operators.sampling import priority_sample
 
@@ -113,7 +116,7 @@ def test_bpe_train_matches_python_reference(spark, seed):
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     got = [
         (r["rank"], r["left_sym"], r["right_sym"], r["pair_count"])
-        for r in bpe_train(df, "text", n_merges=4)
+        for r in bpe_train_local_finish(df, "text", n_merges=4)
         .orderBy("rank")
         .collect()
     ]

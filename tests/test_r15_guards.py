@@ -66,7 +66,7 @@ def test_bpe_apply_plan_is_vocab_join_plus_agg(spark):
 def test_bpe_local_finish_job_count_independent_of_merges(spark, count_jobs):
     """The driver-local finish runs the ONE corpus-sized aggregation
     and collects the vocab — total Spark jobs must be the same at 2
-    and at 6 merges (vs _train's per-merge argmax + checkpoint jobs)."""
+    and at 6 merges (a per-round Spark loop would add jobs per merge)."""
     from metrics_service_spark.operators.bpe import bpe_train_local_finish
 
     docs = spark.createDataFrame(

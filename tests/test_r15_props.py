@@ -1,7 +1,7 @@
 """Reference-model property tests for the r15 BPE paths: the
 incremental-pair-count driver-local trainer and the stored-table apply
 are checked against an INDEPENDENT naive recount-from-scratch model
-(the same one test_r14_props pins the distributed trainer to)."""
+and a per-word Python replay."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ import pytest
 
 from metrics_service_spark.operators.bpe import (
     bpe_apply,
-    bpe_apply_counts,
     bpe_train_local_finish,
 )
 
@@ -87,10 +86,21 @@ def test_apply_stored_matches_fused_randomized(spark, seed):
         r["doc_id"]: (r["n_ws_tokens"], r["n_bpe_units"])
         for r in bpe_apply(df, table).collect()
     }
-    want = {
-        r["doc_id"]: (r["n_ws_tokens"], r["n_bpe_units"])
-        for r in bpe_apply_counts(df, n_merges=4).collect()
-    }
+    # train-and-apply fused in Python: every word (all trainable here)
+    # segmented by the table in rank order
+    merges = [
+        (r["left_sym"], r["right_sym"]) for r in table.orderBy("rank").collect()
+    ]
+    want = {}
+    for i, text in rows:
+        toks = text.split()
+        units = 0
+        for w in toks:
+            syms = list(w)
+            for left, right in merges:
+                syms = _py_merge(syms, left, right)
+            units += len(syms)
+        want[i] = (len(toks), units)
     assert got == want
 
 

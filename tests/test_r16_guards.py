@@ -1,14 +1,8 @@
-"""r16 plan-quality guards: the grouped trainer's per-round plan shape
-(broadcast merge apply, no per-group corpus scans), the grouped local
-finish's job-count independence from budgets, and the budget-retrain
-loop's bounded driver transfers (the test_r10..r15_guards pattern)."""
+"""r16 plan-quality guards: the grouped local finish's job-count
+independence from budgets and the budget-retrain loop's bounded driver
+transfers (the test_r10..r15_guards pattern)."""
 
 from __future__ import annotations
-
-import contextlib
-import io
-
-from pyspark.sql import functions as F
 
 
 def _executed(df) -> str:
@@ -48,41 +42,12 @@ def test_grouped_local_finish_job_count_independent_of_budgets(spark, count_jobs
     assert small == large
 
 
-def test_grouped_round_is_one_broadcast_join(spark):
-    """Each grouped round's merge application must be ONE broadcast
-    hash join of the |langs|-row best-pair frame onto the vocab — no
-    shuffle join, no per-group filter fan-out of the vocab scan."""
-    from metrics_service_spark.operators.bpe import (
-        _grouped_word_frequencies,
-        merge_pair_scan_col,
-    )
-
-    docs = _lang_docs(spark)
-    vocab = _grouped_word_frequencies(docs, "text", "lang").select(
-        "lang", "w", "freq", F.split("w", "").alias("syms")
-    )
-    best = spark.createDataFrame(
-        [("en", "a", "b"), ("fr", "c", "d")],
-        "lang string, __l string, __r string",
-    )
-    out = vocab.join(F.broadcast(best), "lang", "left").select(
-        "lang",
-        "w",
-        merge_pair_scan_col(F.col("syms"), F.col("__l"), F.col("__r")).alias(
-            "syms"
-        ),
-    )
-    plan = _executed(out)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_budget_retrain_driver_transfers_are_bounded(spark):
-    """The chained loop's only collects are the vocab (guarded), the
-    current merge table, the |langs| budget rows, and the per-round
-    |langs| argmax rows — gate: total rows collected across the run
-    stays in the hundreds on a corpus of any size (here: count the
-    actual collects via a wrapped DataFrame.collect)."""
+    """The chained loop's only collects are the vocabularies (guarded),
+    the current merge table and the |langs| budget rows — gate: total
+    rows collected across the run stays in the hundreds on a corpus of
+    any size (here: count the actual collects via a wrapped
+    DataFrame.collect)."""
     from unittest import mock
 
     from metrics_service_spark.operators import bpe
@@ -104,6 +69,6 @@ def test_budget_retrain_driver_transfers_are_bounded(spark):
             docs, "text", n_merges_current=2, total_budget=5, min_per_group=1
         )
     # vocab (~unique words), merge table (2), budgets (2 langs),
-    # per-round argmaxes (<= 5 rounds x 2 langs)
+    # grouped vocab (~unique words)
     assert sum(sizes) < 200
     assert max(sizes) < 100

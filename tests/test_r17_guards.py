@@ -1,7 +1,6 @@
-"""r17 plan-quality guards: the budget-retrain loop's O(1)-jobs
-local-finish arm (job count independent of total_budget), the two
-trainer arms' bit-identity, and the dead-group vocab-transfer fix
-(the test_r10..r16_guards pattern)."""
+"""r17 plan-quality guards: the budget-retrain loop's O(1) jobs (job
+count independent of total_budget) and the dead-group vocab-transfer
+fix (the test_r10..r16_guards pattern)."""
 
 from __future__ import annotations
 
@@ -21,11 +20,11 @@ def _lang_docs(spark):
 
 
 def test_budget_retrain_local_job_count_independent_of_budget(spark, count_jobs):
-    """With trainer='local_finish' the WHOLE loop (current train ->
-    fertility -> apportionment -> grouped retrain) must launch the
-    same number of Spark jobs at total_budget 3 and 9 — the retrain
-    stage is one bounded collect + driver heap trainer, never
-    O(budget) sequential rounds (VERDICT r16 #3)."""
+    """The WHOLE loop (current train -> fertility -> apportionment ->
+    grouped retrain) must launch the same number of Spark jobs at
+    total_budget 3 and 9 — the retrain stage is one bounded collect +
+    driver heap trainer, never O(budget) sequential rounds (VERDICT
+    r16 #3)."""
     from metrics_service_spark.operators.bpe import bpe_budget_retrain
 
     docs = _lang_docs(spark)
@@ -38,42 +37,10 @@ def test_budget_retrain_local_job_count_independent_of_budget(spark, count_jobs)
                 n_merges_current=2,
                 total_budget=total_budget,
                 min_per_group=1,
-                trainer="local_finish",
             )
         )
 
     assert jobs(3) == jobs(9)
-
-
-def test_budget_retrain_trainer_arms_bit_identical(spark):
-    """The distributed and local-finish retrain arms must emit the
-    same merge table row for row — that equivalence is what lets
-    doc_bpe_budget_retrain_local reuse the distributed entry's
-    oracle."""
-    from metrics_service_spark.operators.bpe import bpe_budget_retrain
-
-    docs = _lang_docs(spark)
-    kw = dict(n_merges_current=2, total_budget=5, min_per_group=1)
-    dist = sorted(
-        tuple(r)
-        for r in bpe_budget_retrain(docs, "text", **kw).collect()
-    )
-    local = sorted(
-        tuple(r)
-        for r in bpe_budget_retrain(
-            docs, "text", trainer="local_finish", **kw
-        ).collect()
-    )
-    assert dist == local
-
-
-def test_budget_retrain_rejects_unknown_trainer(spark):
-    from metrics_service_spark.operators.bpe import bpe_budget_retrain
-
-    with pytest.raises(ValueError, match="trainer"):
-        bpe_budget_retrain(
-            _lang_docs(spark), "text", total_budget=3, trainer="bogus"
-        )
 
 
 def test_dead_group_vocab_rows_do_not_consume_transfer_headroom(spark):

@@ -100,13 +100,13 @@ COMMENTARY = {
     "metrics_request_daily_country": "adds the date-range scope (strict-gt/lte pushed through the adapter aliases to PushedFilters — plan-gated), day x country agg, end-exclusive spine crossJoin(broadcast countries), bucket-only citations join",
     "metrics_request_user": "the user dispatch path: family from userID membership AND isPublic (one driver collect of the matched identifier rows), then the landing shape — the scope that must EXCLUDE private datasets",
     "metrics_request_repository": "repository scope is a pure scan predicate on the adapter's nodeId (no identifier family — the citations side is the UNSCOPED relation, mirroring gatherCitations without a target set); YEAR buckets with the 4-char citation key",
-    "doc_bpe_train": "the returned frame is the k-row merge table built from the per-round argmax collects, so the dumped plan is a local scan BY DESIGN; the training work runs as per-round jobs over the checkpointed vocab — word-freq groupBy is the only corpus shuffle, the greedy merge scan is a pure projection (no per-round exchange) and pair counts map-side combine, all pinned by tests/test_r14_guards.py",
-    "doc_bpe_apply": "re-tokenization is a JOIN against the vocabulary's final segmentation — explode + vocab join + per-doc agg; out-of-vocab tokens take the coalesce fallback, never a per-occurrence merge scan",
+    "doc_bpe_train": "the returned frame is the k-row merge table (local scan BY DESIGN); the training work is ONE corpus-sized word-frequency shuffle + a bounded vocab collect — the merge loop runs driver-local (incremental pair counts + lazy heap), so total Spark jobs are O(1) regardless of n_merges (job-count-gated in tests/test_r15_guards.py)",
+    "doc_bpe_apply": "train via the driver-local finish, then apply the STORED table: one shared (checkpointed) word-frequency pass feeds the train collect and the replay vocab; the merges replay as chained codegen flat-string projections (no exchange per merge), then one vocab-sized unit join + one per-doc agg — out-of-vocab tokens take the coalesce fallback",
     "doc_lm_fclass": "TWO occurrence-mass shuffles by design (bigram count build + train/probe join, the doc_bigram_coherence class twice); _spread above the explode; frequency class is integer binary-length, computed after the join on count rows",
     "emb_knn_pagerank": "the audited knn-graph plan feeds 3 FIXED integer power rounds: per round one src-keyed join + one dst-keyed map-side-combined agg; N enters as a broadcast one-row aggregate; no collect, no convergence tail",
     "doc_classifier_auc": "rules + classifier projections collapse to a SCORE histogram; the cumulative is global_cumsum (per-bucket sums + broadcast offsets — the only SinglePartition exchanges move the tiny offset frame and the final row); AUC arithmetic is a one-row integer projection",
     "doc_priority_sample": "pure projection (md5 hex arithmetic + exact long priority) + ONE group-keyed exchange with a WindowGroupLimit-pushed top-k — the doc_source_quota class; output bounded by k x strata",
-    "doc_bpe_train_local": "the returned frame is the k-row merge table (local scan BY DESIGN, like doc_bpe_train); the training work is ONE corpus-sized word-frequency shuffle + a bounded vocab collect — the merge loop runs driver-local (incremental pair counts + lazy heap), so total Spark jobs are O(1) regardless of n_merges",
+    "doc_bpe_train_local": "doc_bpe_train's kernel (same function): the returned frame is the k-row merge table (local scan BY DESIGN); ONE corpus-sized word-frequency shuffle + a bounded vocab collect, merge loop driver-local — O(1) Spark jobs regardless of n_merges",
     "doc_bpe_apply_stored": "ZERO training jobs: the stored merge table replays as chained pure-projection scans over the distinct-word vocab (no exchange per merge — gated), then one vocab-sized unit join + one per-doc agg; corpus tokens are touched exactly once",
     "metrics_request_portal": "portal scope is an arrays_overlap predicate on the adapter's portalIdentifier (no identifier family -> unscoped citations, like repository); month spine + full-outer merge — the dispatcher's audited J6/A12 tail",
     "metrics_request_group": "group-subject membership + isPublic drive the family (one driver collect, the user-path shape); family IN-list + month spine + citations matched against the family literal",
@@ -117,13 +117,13 @@ COMMENTARY = {
     "doc_bpe_apply_m48": "doc_bpe_apply_stored's zero-training-jobs skeleton at 48 merges: the replay chain crosses its localCheckpoint(every=32) boundary, so the plan roots at a checkpointed VOCAB-sized RDD scan (never the corpus) with the post-checkpoint merge projections above it; corpus tokens still touched exactly once by the unit join + per-doc agg",
     "doc_vocab_budget": "the fertility report's consumer: the corpus-mass work is bpe_apply_stats' audited one-pass shape collapsing to |langs| rows; the Hamilton apportionment is two SinglePartition windows + integer projections over that tiny frame — exact budget sum at zero corpus cost",
     "search_stream_batch_twin": "the streaming ingest's transform graph on a batch frame: pure per-row codegen (regexp + kv + md5 + hour format); only the batch seam's raw-rows _spread exchange, no key-based shuffle — identical per-micro-batch transform under readStream",
-    "doc_bpe_train_grouped": "the returned frame is the sum(budgets)-row merge table (local scan BY DESIGN, like doc_bpe_train); per round the work is one grouped pair-count agg over the checkpointed group-keyed vocab, a per-group row_number argmax, a |langs|-row collect, and ONE broadcast join + column-valued greedy scan applying every language's merge together",
-    "doc_bpe_train_grouped_local": "ONE corpus-sized grouped word-frequency shuffle + a bounded vocab collect; the per-language heap trainers run on the driver — O(1) Spark jobs at any budget (the returned frame is the merge table, local scan by design)",
-    "doc_bpe_budget_retrain": "the full loop chains the audited shapes: local-finish train (one corpus shuffle) -> fertility stats (one corpus pass, |langs| rows) -> Hamilton apportionment (tiny-frame windows) -> grouped retrain (per-round grouped agg + windowed argmax + broadcast merge apply); the only driver transfers are the vocab (guarded), the merge table, and the |langs| budget rows",
+    "doc_bpe_train_grouped": "the returned frame is the sum(budgets)-row merge table (local scan BY DESIGN); the work is ONE corpus-sized grouped word-frequency shuffle + a bounded vocab collect, then per-language heap trainers on the driver — O(1) Spark jobs at any budget",
+    "doc_bpe_train_grouped_local": "doc_bpe_train_grouped's kernel (same function): ONE corpus-sized grouped word-frequency shuffle + a bounded vocab collect; the per-language heap trainers run on the driver — O(1) Spark jobs at any budget (the returned frame is the merge table, local scan by design)",
+    "doc_bpe_budget_retrain": "the full loop chains the audited shapes over ONE checkpointed grouped word-frequency pass: local-finish train (vocab collect) -> fertility stats (one corpus pass, |langs| rows) -> Hamilton apportionment (tiny-frame windows) -> grouped local-finish retrain (grouped vocab collect, driver heap trainers); O(1) Spark jobs at any total_budget; the only driver transfers are the vocabularies (guarded), the merge table, and the |langs| budget rows",
     "doc_classifier_calibration": "the doc_classifier_auc collapse: two per-doc projections -> one value-domain-bounded score histogram; the observed range is a broadcast one-row aggregate and the bin rollup runs on histogram rows — no corpus window, no driver collect",
-    "doc_bpe_apply_grouped": "zero training jobs: the grouped table replays as rank-level broadcast joins + column-valued greedy scans over the distinct (lang, word) vocab (NULL passthrough past each language's budget), then ONE (lang, word)-keyed unit join + per-doc agg — corpus tokens touched once",
-    "doc_bpe_apply_grouped_m40": "doc_bpe_apply_grouped's skeleton at 40 ranks for one language: the grouped replay crosses its localCheckpoint(every=32) boundary, so the plan roots at a checkpointed VOCAB-sized RDD scan (never the corpus) with the post-checkpoint rank-level broadcast joins above it; corpus tokens still touched exactly once by the (lang, word) unit join + per-doc agg",
-    "doc_bpe_budget_retrain_local": "the retrain loop on its production trainer: local-finish current train (one corpus shuffle) -> fertility stats (one corpus pass) -> Hamilton apportionment (tiny-frame windows) -> grouped LOCAL-FINISH retrain (one more corpus shuffle + bounded vocab collect + driver heap trainers) — O(1) Spark jobs at any total_budget; the returned frame is the merge table (local scan by design)",
+    "doc_bpe_apply_grouped": "zero training jobs: each language's stored merges replay as a literal codegen flat-string chain over its slice of the checkpointed distinct (lang, word) vocab (languages without a table pass through char-segmented; no join, no broadcast), then ONE (lang, word)-keyed unit join + per-doc agg — corpus tokens touched once",
+    "doc_bpe_apply_grouped_m40": "doc_bpe_apply_grouped's skeleton at 40 ranks for one language: that language's replay chain crosses its localCheckpoint(every=32) boundary, so its branch roots at a checkpointed VOCAB-sized RDD scan (never the corpus) with the post-checkpoint flat-string projections above it; corpus tokens still touched exactly once by the (lang, word) unit join + per-doc agg",
+    "doc_bpe_budget_retrain_local": "doc_bpe_budget_retrain's kernel (same function): one grouped word-frequency pass, vocab collects under the guard, driver heap trainers — O(1) Spark jobs at any total_budget; the returned frame is the merge table (local scan by design)",
     "paragraph_index_batch_twin": "the streaming fold unit on a batch frame: closed-form chunk explode + md5 + ONE map-side-combined count groupBy — paragraph mass collapses before the only exchange; identical per-micro-batch plan under foreachBatch",
     "doc_bpe_vocab_export": "base chars from the one corpus tokenize pass collapsed map-side to the <=|charset| distinct set, unioned with the merge-table frame; the dedup groupBy and dense-id window run on the vocab-bounded (chars + n_merges)-row frame — the |langs|-row singleton-window class, zero corpus term beyond the tokenize scan",
     "doc_bpe_vocab_export_grouped": "per-language export: the grouped tokenize pass collapses map-side to |langs| x |charset| distinct chars, filtered by a broadcast semi-join on the sum-of-budgets merge table (never a collect); dedup + per-language dense-id window run on the vocab-bounded union",
