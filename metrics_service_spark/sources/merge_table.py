@@ -21,9 +21,12 @@ protocol those formats use, from parquet + JSON primitives only:
   retries on fresh state).
 - The manifest also records each commit's data schema (partition
   columns excluded), once per commit directory ("stage") that still
-  has live files, so reads plan without a Spark job: Spark never
-  samples a footer to infer the schema (Delta keeps its schema in the
-  log for the same reason).
+  has live files: Spark never samples a footer to infer the schema
+  (Delta keeps its schema in the log for the same reason).  Spark
+  lists the files a manifest names on the driver, one local stat each,
+  never with its parallel listing job, so a read of any file count
+  plans without any Spark job.  This bounds the layer to POSIX paths
+  (see `_driver_listing`).
 - Old data files are never mutated or deleted by a commit, so a
   reader that resolved version N keeps a consistent snapshot while
   version N+1 lands (snapshot isolation for concurrent reads);
@@ -52,9 +55,11 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
 import time
 import uuid
 from bisect import bisect_left
+from contextlib import contextmanager
 from urllib.parse import unquote, urlparse
 
 import pyarrow.parquet as pq
@@ -280,6 +285,33 @@ class ConflictError(RuntimeError):
     current version and retry (the reference's retry_on_conflict)."""
 
 
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_listing_lock = threading.Lock()
+
+
+@contextmanager
+def _driver_listing(spark: SparkSession, n_paths: int):
+    """Within the block, Spark lists up to `n_paths` paths on the
+    driver, not with its parallel listing job (one task per path, the
+    default above 32 paths).  The session's threshold is restored
+    after, under one module lock, so concurrent reads never restore
+    each other's value.
+
+    The bound: the manifest layer works on POSIX paths only.  The
+    driver already touches every file the layer writes (`_write_files`
+    walks the stage and reads each footer, `_commit` creates the
+    manifest with O_EXCL), so one more local stat per read file is of
+    the same order.  On an object store at 10^5 files per read, a
+    driver stat per file would cost more than the job."""
+    with _listing_lock:
+        prev = spark.conf.get(_LISTING_THRESHOLD)
+        spark.conf.set(_LISTING_THRESHOLD, str(max(int(prev), n_paths)))
+        try:
+            yield
+        finally:
+            spark.conf.set(_LISTING_THRESHOLD, prev)
+
+
 def _read_files(
     spark: SparkSession,
     table_dir: str,
@@ -293,20 +325,24 @@ def _read_files(
     number of versions still contributing files, not file count.
 
     Each stage is read with the data schema its manifest recorded
-    (`schemas`), so planning launches no schema-inference job; only a
-    stage written before schemas were recorded falls back to inference.
-    Partition column types are inferred from the paths either way."""
+    (`schemas`), and Spark lists the files the manifest names on the
+    driver (`_driver_listing`), so planning launches no Spark job; only
+    a stage written before schemas were recorded falls back to
+    inference.  Partition column types are inferred from the paths
+    either way."""
     by_stage: dict[str, list[str]] = {}
     for e in entries:
         by_stage.setdefault(_stage_of(e), []).append(
             os.path.join(table_dir, e["path"])
         )
     parts = []
-    for stage, paths in sorted(by_stage.items()):
-        reader = spark.read.option("basePath", os.path.join(table_dir, stage))
-        if stage in schemas:
-            reader = reader.schema(StructType.fromJson(schemas[stage]))
-        parts.append(reader.parquet(*paths))
+    # the listing is eager: it runs inside reader.parquet
+    with _driver_listing(spark, max(map(len, by_stage.values()))):
+        for stage, paths in sorted(by_stage.items()):
+            reader = spark.read.option("basePath", os.path.join(table_dir, stage))
+            if stage in schemas:
+                reader = reader.schema(StructType.fromJson(schemas[stage]))
+            parts.append(reader.parquet(*paths))
     out = parts[0]
     for p in parts[1:]:
         # allowMissingColumns: commits may evolve the schema (Delta

@@ -4,6 +4,10 @@ Reference analog: the reference scans Solr pages (eventprocessor.py:75-154)
 and ES scrolls (metricselasticsearch.py:52-141) with hand-written cursors;
 here a scan is `spark.read.parquet` — Spark partitions the scan, pushes
 predicates into the parquet reader, and prunes columns (SURVEY.md S1/S2).
+The scan's schema comes from the footer of the table's first parquet
+file, read on the driver, so no schema-inference job runs before a
+query does (Dremel, VLDB 2020: at interactive sizes fixed per-query
+costs, not the data read, set the latency).
 
 At 100 TB the event table would be written partitioned by event date
 (`.partitionBy("event_date")`) so the per-query date-range filter
@@ -15,9 +19,11 @@ layout is partitioned.
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -79,23 +85,12 @@ def rowcount_bound(
     dedicated `dim.count()` job per build is pure added latency.  On a
     single-row-group file the bound degrades to the table row count —
     still correct, still jobless."""
-    import glob as _glob
-
     import pyarrow.parquet as pq
 
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    # the fixture tables are single files; a Spark-written table (e.g.
-    # the scale-probe scratch dirs) is a DIRECTORY of part files whose
-    # footers sum the same way
-    paths = (
-        sorted(_glob.glob(os.path.join(path, "*.parquet")))
-        if os.path.isdir(path)
-        else [path]
-    )
     total = 0
-    for p in paths:
+    for p in _parquet_files(os.path.join(sf_dir, f"{name}.parquet")):
         md = pq.ParquetFile(p).metadata
         names = {md.schema.column(i).name: i for i in range(md.num_columns)}
         for col in ranges or ():
@@ -118,23 +113,69 @@ def rowcount_bound(
     return total
 
 
+def _parquet_files(path: str) -> list[str]:
+    """The parquet files of a table path.  The fixture tables are
+    single files; a Spark-written table (e.g. the scale-probe scratch
+    dirs) is a DIRECTORY of part files, listed in sorted order."""
+    if os.path.isdir(path):
+        return sorted(glob.glob(os.path.join(path, "*.parquet")))
+    return [path]
+
+
+def _footer_schema(path: str) -> StructType:
+    """The Spark schema of the parquet table at `path`, read on the
+    driver from the footer of its first file — the schema Spark infers
+    with a one-task job, without the job.  Un-adjusted timestamps map
+    to TIMESTAMP_NTZ and adjusted ones to TIMESTAMP, as Spark reads
+    them; INT64 TIMESTAMP(NANOS) maps to bigint, as Spark reads it
+    under `spark.sql.legacy.parquet.nanosAsLong`.  INT96, which Spark
+    writes timestamps as by default and Arrow also shows as
+    `timestamp[ns]`, maps to TIMESTAMP, as Spark reads it.  A type
+    Spark's Arrow conversion cannot map raises: there is no inference
+    fallback."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    files = _parquet_files(path)
+    if not files:
+        raise FileNotFoundError(f"no parquet file under {path}")
+    footer = pq.ParquetFile(files[0])
+    physical = {c.path: c.physical_type for c in footer.schema}
+
+    def spark_view(f):
+        if not (pa.types.is_timestamp(f.type) and f.type.unit == "ns"):
+            return f
+        if physical.get(f.name) == "INT96":
+            return f.with_type(pa.timestamp("us", tz="UTC"))
+        return f.with_type(pa.int64())
+
+    arrow = pa.schema(spark_view(f) for f in footer.schema_arrow)
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table `name` of the fixture directory `sf_dir`, with every
+    timestamp column a session-tz TIMESTAMP.  The read takes its
+    schema from the parquet footer (`_footer_schema`), so loading a
+    table launches no Spark job."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = _footer_schema(path)
     if name == "events":
         # events.ts has been parquet TIMESTAMP(NANOS) in some fixture
         # generations, which Spark's vectorized reader rejects; read it
         # as int64 nanos and truncate to microseconds — exactly what
         # DuckDB does when it surfaces the column as TIMESTAMP (µs).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = spark.read.schema(schema).parquet(path)
         from pyspark.sql import functions as F
 
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return _normalize_ntz(df)
-    return _normalize_ntz(spark.read.parquet(path))
+    return _normalize_ntz(spark.read.schema(schema).parquet(path))
 
 
 def register_views(

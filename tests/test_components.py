@@ -140,7 +140,7 @@ def test_order_components_job_budget(spark, sf_dir, count_jobs):
     from metrics_service_spark.catalog import all_queries
 
     q = all_queries()["order_components"].fn
-    assert count_jobs(lambda: q(spark, sf_dir).collect()) == 14
+    assert count_jobs(lambda: q(spark, sf_dir).collect()) == 13
 
 
 def test_pagerank_int_hand_checked(spark):

@@ -854,13 +854,13 @@ def _commits(spark, tdir, n):
 
 def test_manifest_layer_job_budget(spark, tmp_path, count_jobs):
     """Reads plan from the manifest: no Spark job on a table of several
-    commits (and at most 32 files, below Spark's parallel-listing
-    threshold).  MERGE and DELETE cost the same number of jobs at 2 and
-    at 5 live commits, with and without a key probe, so cost does not
-    grow with the commit count.  A merge whose keys fall outside every
-    carried file's recorded key range launches no probe job: it costs
-    what a merge that skips the probe by contract costs, and less than
-    one whose key needs it."""
+    commits (see `test_manifest_reads_list_files_on_the_driver` for
+    tables past Spark's parallel-listing threshold).  MERGE and DELETE
+    cost the same number of jobs at 2 and at 5 live commits, with and
+    without a key probe, so cost does not grow with the commit count.
+    A merge whose keys fall outside every carried file's recorded key
+    range launches no probe job: it costs what a merge that skips the
+    probe by contract costs, and less than one whose key needs it."""
     _commits(spark, str(tmp_path / "r"), 3)
     assert count_jobs(lambda: read_table(spark, str(tmp_path / "r"))) == 0
 
@@ -892,6 +892,80 @@ def test_manifest_layer_job_budget(spark, tmp_path, count_jobs):
     assert probed > pruned
     assert probed == merge_jobs(2, keys=(0, 11))
     assert delete_jobs(2) == delete_jobs(5)
+
+
+def _wide(spark, tdir, n_parts):
+    """A one-commit table of `n_parts` files, one per partition; every
+    file's recorded key range [p, p + 400 - n_parts] holds key 200."""
+    df = spark.range(400).select(
+        F.col("id").alias("k"), (F.col("id") % n_parts).alias("part")
+    )
+    overwrite_table(df.coalesce(1), tdir, partition_cols=["part"])
+    assert len(_manifest(tdir)["files"]) == n_parts
+
+
+def test_manifest_reads_list_files_on_the_driver(spark, tmp_path, count_jobs):
+    """A read of more than 32 files (Spark's parallel-listing threshold)
+    plans without any Spark job, and MERGE and DELETE, whose key probe
+    reads every file but the touched one, cost the same at 20 and at 40
+    live files.  Every read leaves the session's listing threshold as it
+    found it, also one that raises on a file the manifest names but the
+    disk lacks."""
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    before = spark.conf.get(threshold)
+    wide = str(tmp_path / "wide")
+    _wide(spark, wide, 40)
+    assert count_jobs(lambda: read_table(spark, wide)) == 0
+    assert spark.conf.get(threshold) == before
+
+    def merge_jobs(n):
+        tdir = str(tmp_path / f"m{n}")
+        _wide(spark, tdir, n)
+        upd = spark.createDataFrame([(200, 0)], "k long, part long")
+        return count_jobs(
+            lambda: merge_table(spark, tdir, upd, key_cols=["k"], partition_cols=["part"])
+        )
+
+    def delete_jobs(n):
+        tdir = str(tmp_path / f"d{n}")
+        _wide(spark, tdir, n)
+        keys = spark.createDataFrame([(200,)], "k long")
+        return count_jobs(lambda: delete_from_table(spark, tdir, keys, key_cols=["k"]))
+
+    assert merge_jobs(40) == merge_jobs(20)
+    assert delete_jobs(40) == delete_jobs(20)
+
+    os.remove(os.path.join(wide, _manifest(wide)["files"][7]["path"]))
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        read_table(spark, wide)
+    assert spark.conf.get(threshold) == before
+
+
+def test_concurrent_reads_restore_listing_threshold(spark, tmp_path):
+    """Concurrent reads from 8 threads, each raising the session's
+    listing threshold for its own file count, leave it as they found
+    it: a restore that interleaved with another read's would keep a
+    raised value."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    before = spark.conf.get(threshold)
+    tables = [str(tmp_path / f"t{n}") for n in (33, 40, 47)]
+    for t, n in zip(tables, (33, 40, 47)):
+        _wide(spark, t, n)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [
+                pool.submit(read_table, spark, tables[i % 3]) for i in range(24)
+            ]
+            counts = {len(f.result(timeout=120).inputFiles()) for f in futures}
+    finally:
+        sys.setswitchinterval(interval)
+    assert counts == {33, 40, 47}
+    assert spark.conf.get(threshold) == before
 
 
 def _strip_stats(tdir):

@@ -3,14 +3,18 @@
 Usage:
   python tools/check_entries.py [sf_dir] name1 name2 ...
   python tools/check_entries.py [sf_dir] --all [--json OUT.json]
+  python tools/check_entries.py --diff BEFORE.json AFTER.json
 
 Runs each entry's Spark query and DuckDB oracle at sf_dir (default
 /root/testdata/sf0.01) through the same bitwise comparator the test
-suite uses, printing per-entry PASS/FAIL.  ``--all`` sweeps the whole
-catalog; ``--json`` additionally writes a machine-readable artifact
-(name -> {status, rows, seconds}) — the per-round FULLCHECK_r{N}.json
-that makes "stale entries are locally bitwise-green" auditable without
-re-running the 10-minute sweep (VERDICT r9 #3).
+suite uses, printing per-entry PASS/FAIL and the Spark jobs the entry
+launched (query build, execution and the comparator's collect),
+counted under a job group of its own as the tests' `count_jobs` does.
+``--all`` sweeps the whole catalog; ``--json`` additionally writes a
+machine-readable artifact (name -> {status, rows, seconds, jobs}) that
+makes "stale entries are locally bitwise-green" auditable without
+re-running the 10-minute sweep.  ``--diff`` prints the per-entry job counts of two
+such artifacts side by side, as a markdown table.
 """
 
 from __future__ import annotations
@@ -19,6 +23,7 @@ import json
 import os
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -27,8 +32,31 @@ from metrics_service_spark.session import get_spark  # noqa: E402
 from metrics_service_spark.testing.oracle import OracleMismatch, compare_query  # noqa: E402
 
 
+def diff(before_path: str, after_path: str) -> None:
+    """Print the per-entry jobs of two `--json` artifacts as a markdown
+    table, then the entries whose count rose."""
+    with open(before_path) as f:
+        before = json.load(f)["results"]
+    with open(after_path) as f:
+        after = json.load(f)["results"]
+    print("| entry | before | after | delta |\n|---|---|---|---|")
+    rose = []
+    for name in sorted(before.keys() & after.keys()):
+        b, a = before[name].get("jobs"), after[name].get("jobs")
+        if b is None or a is None:
+            print(f"| {name} | {b} | {a} | |")
+            continue
+        print(f"| {name} | {b} | {a} | {a - b:+d} |")
+        if a > b:
+            rose.append(name)
+    print(f"\n{len(rose)} entries rose: {', '.join(rose)}")
+
+
 def main() -> None:
     args = sys.argv[1:]
+    if args[:1] == ["--diff"]:
+        diff(args[1], args[2])
+        return
     sf_dir = "/root/testdata/sf0.01"
     json_out = None
     if "--json" in args:
@@ -54,7 +82,8 @@ def main() -> None:
         )
     else:
         spark = get_spark("check-entries")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
     catalog = all_queries()
     if args == ["--all"]:
         args = list(catalog)
@@ -62,28 +91,32 @@ def main() -> None:
     results: dict[str, dict] = {}
     for name in args:
         spec = catalog[name]
+        group = f"check-entries-{name}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
         t0 = time.perf_counter()
         try:
             if spec.oracle is None:
                 n = spec.fn(spark, sf_dir).count()
-                status = "rows-only"
-                print(f"{name}: rows-only ({n} rows) {time.perf_counter()-t0:.1f}s")
+                status, line = "rows-only", f"rows-only ({n} rows)"
             else:
                 n = compare_query(spec.fn(spark, sf_dir), spec.oracle, sf_dir, name)
-                status = "pass"
-                print(f"{name}: PASS ({n} rows) {time.perf_counter()-t0:.1f}s")
+                status, line = "pass", f"PASS ({n} rows)"
         except OracleMismatch as e:
             failed.append(name)
-            status, n = "fail", None
-            print(f"{name}: FAIL {e}")
+            status, n, line = "fail", None, f"FAIL {e}"
         except Exception as e:  # driver-sim realism: record, keep sweeping
             failed.append(name)
-            status, n = "error", None
-            print(f"{name}: ERROR {type(e).__name__}: {e}")
+            status, n, line = "error", None, f"ERROR {type(e).__name__}: {e}"
+        finally:
+            sc._jsc.clearJobGroup()
+        seconds = time.perf_counter() - t0
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        print(f"{name}: {line} {seconds:.1f}s {jobs} jobs")
         results[name] = {
             "status": status,
             "rows": n,
-            "seconds": round(time.perf_counter() - t0, 2),
+            "seconds": round(seconds, 2),
+            "jobs": jobs,
         }
     if json_out:
         summary = {
