@@ -314,13 +314,16 @@ def q_order_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("src"),
         F.lag("o_orderkey").over(w2).alias("dst"),
     ).filter(F.col("dst").isNotNull())
-    # chain graph (deg <= 2): hop=3 composes the neighborhood once
-    # into ceil(9/3)=3 label-propagation rounds; max_iters=9 is exact
-    # (10-node chains by construction: diameter <= 9), so there are no
-    # convergence-count jobs either.  Measured at sf0.1: hop=2 ~2.8s,
-    # hop=3 ~2.3s warm on the propagation loop.  Label propagation,
-    # not the star kernel: the diameter bound is structural, and on
-    # star this entry ran 32 jobs / 103 stages against 14 / 32 here
+    # chain graph (deg <= 2, ~26k edges at sf0.02): the kernel finishes
+    # it on the driver in 2 jobs (the edge checkpoint's Arrow collect
+    # and the result collect).  hop and max_iters shape only the
+    # distributed rounds an edge set past LOCAL_FINISH_EDGES runs:
+    # hop=3 composes the neighborhood once into ceil(9/3)=3
+    # label-propagation rounds, and max_iters=9 is exact (10-node
+    # chains by construction: diameter <= 9), so there are no
+    # convergence-count jobs either.  Label propagation, not the star
+    # kernel: the diameter bound is structural, and on star the
+    # distributed loop ran 32 jobs / 103 stages against 14 / 32 here
     # (identical rows at sf0.01 and sf0.1).
     return connected_components(edges, max_iters=9, hop=3)
 

@@ -26,6 +26,14 @@ Scale notes:
   that, large-star/small-star contraction (~log n rounds,
   `connected_components_star`) is the tool for full family resolution
   of 10^8 edges.
+- Both connected-components kernels first try a driver finish
+  (`_local_finish`): an edge set of at most LOCAL_FINISH_EDGES rows
+  crosses to the driver in one bounded Arrow collect and is labeled by
+  union-find there, so a small graph pays one job instead of a round
+  loop of barrier jobs that each move a few KB.  Only a larger edge
+  set runs the distributed loop, and only that loop has a round
+  budget.  Measured on star CC (SCALE.md): the driver finish is
+  10-15x faster from 10^4 to 10^6 edges.
 
 One function per algorithm, one loop per function: pointer jumping
 (`resolve_chains`), seeded BFS (`expand_family`), label propagation
@@ -40,8 +48,17 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 CHECKPOINT_EVERY = 5
+
+#: edge-count bound of the driver finish (`_local_finish`): an edge set
+#: of at most this many rows is labeled by union-find on the driver
+#: instead of by the distributed loop.  Measured on star CC over random
+#: graphs (4 cores, SCALE.md): 0.62 vs 6.43 s at 10^4 edges, 0.87 vs
+#: 12.7 s at 10^5 and 7.4 vs 77 s at 10^6 — the driver finish wins at
+#: every size up to here, and a million int64 pairs is ~16 MB of heap.
+LOCAL_FINISH_EDGES = 1_000_000
 
 
 def _compose_hops(edges: DataFrame, a: str, b: str, hop: int) -> DataFrame:
@@ -59,6 +76,76 @@ def _compose_hops(edges: DataFrame, a: str, b: str, hop: int) -> DataFrame:
         )
         acc = acc.unionByName(exact)
     return acc.filter(F.col(a) != F.col(b)).distinct().localCheckpoint(eager=False)
+
+
+def _local_finish(
+    edges: DataFrame, schema: StructType, *, null_partner: bool
+) -> DataFrame | None:
+    """Label a small graph on the driver: (node, component), component
+    = the minimum node id of its component, or None when `edges` (two
+    columns, endpoint ids) holds more than LOCAL_FINISH_EDGES rows.
+
+    ONE Spark job moves the edge set: a `limit(LOCAL_FINISH_EDGES + 1)`
+    Arrow collect, whose +1 sentinel row is how overflow is detected
+    and which bounds what crosses to the driver on a large input.
+    Ids are ranked by Arrow's sort (byte order for strings, as Spark
+    compares them), so union-find that always hangs the larger root
+    under the smaller one leaves every node's root at its component's
+    minimum rank.  `schema` is the calling kernel's output schema:
+    both endpoints are cast to its node type before the collect, and
+    the result carries its exact column names, types and nullability.
+
+    Every non-NULL endpoint is a node (self-loops included).  A NULL
+    endpoint never carries a label in either distributed loop; with
+    `null_partner` (label propagation at hop=1, where a NULL `a` row
+    still groups and takes its partners' labels) a NULL node row is
+    added with the smallest component among the ids paired with NULL,
+    when there are any."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = schema["node"].dataType
+    a, b = edges.columns
+    tbl = (
+        edges.select(F.col(a).cast(t), F.col(b).cast(t))
+        .limit(LOCAL_FINISH_EDGES + 1)
+        .toArrow()
+    )
+    if tbl.num_rows > LOCAL_FINISH_EDGES:
+        return None
+    u, v = (c.combine_chunks() for c in tbl.columns)
+    nodes = pc.unique(pa.concat_arrays([u, v]).drop_null())
+    nodes = nodes.take(pc.sort_indices(nodes))
+    iu, iv = (
+        pc.index_in(x, value_set=nodes).fill_null(-1).to_numpy().tolist()
+        for x in (u, v)
+    )
+    parent = list(range(len(nodes)))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for x, y in zip(iu, iv):
+        if x >= 0 and y >= 0:
+            rx, ry = find(x), find(y)
+            if rx != ry:
+                parent[max(rx, ry)] = min(rx, ry)
+    roots = [find(x) for x in range(len(nodes))]
+    # an edge with exactly one NULL end: its id end is max(x, y)
+    partners = (
+        [max(x, y) for x, y in zip(iu, iv) if min(x, y) < 0 <= max(x, y)]
+        if null_partner
+        else []
+    )
+    if partners:
+        roots.append(min(roots[p] for p in partners))
+        nodes = pa.concat_arrays([nodes, pa.nulls(1, nodes.type)])
+    comp = nodes.take(pa.array(roots, pa.int64()))
+    out = pa.table([nodes, comp], names=["node", "component"])
+    return edges.sparkSession.createDataFrame(out, schema=schema)
 
 
 def resolve_chains(
@@ -255,16 +342,33 @@ def connected_components(
     neighbors.  Returns (node, component) with component = min node id
     in the component.
 
-    Contract: `max_iters` is a bound on every component's diameter
-    that the CALLER CAN PROVE from how the graph is built (e.g. chains
-    of at most 10 nodes have diameter <= 9).  The loop runs exactly
-    ceil(max_iters / hop) rounds with no convergence probe, so an
-    under-budgeted `max_iters` would return split labels.  A caller
-    without such a bound uses `connected_components_star`, whose
-    O(log n) rounds are diameter-independent and whose non-convergence
-    raises.  The trade, measured on order_components (chains of
+    An edge set of at most LOCAL_FINISH_EDGES rows is finished on the
+    driver (`_local_finish`: union-find, one Arrow collect): exact
+    labels whatever `max_iters` and `hop` say, in the distributed
+    loop's column names and types.  Only a larger edge set runs the
+    propagation rounds below, and `max_iters` and `hop` govern only
+    those rounds.  order_components (~26k chain edges at sf0.02) is 2
+    jobs this way; its 3 propagation rounds made it 13.
+
+    Contract of the distributed loop: `max_iters` is a bound on every
+    component's diameter that the CALLER CAN PROVE from how the graph
+    is built (e.g. chains of at most 10 nodes have diameter <= 9).
+    The loop runs exactly ceil(max_iters / hop) rounds with no
+    convergence probe, so an under-budgeted `max_iters` would return
+    split labels there.  A caller without such a bound uses
+    `connected_components_star`, whose O(log n) rounds are
+    diameter-independent and whose non-convergence raises.  The trade,
+    measured on order_components before the driver finish (chains of
     diameter <= 9, identical rows): label propagation ran 14 jobs / 32
     stages, the star kernel 32 jobs / 103 stages, at sf0.01 and sf0.1.
+
+    Every non-NULL endpoint is a node, self-loop-only ones included.
+    NULL is a node only at hop=1, when it is paired with an id (it
+    receives labels but never passes one on; composition drops it).
+    The driver finish gives its row the smallest component among those
+    ids; the distributed loop gives it the smallest label they hold
+    one round before the last, the same value once `max_iters` exceeds
+    their components' diameter.
 
     `hop=h` composes the symmetrized edge relation with itself once up
     front (<=h-hop neighborhoods), so a label travels h steps per
@@ -284,9 +388,22 @@ def connected_components(
     edges = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).localCheckpoint(eager=False)
-    sym = edges.union(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=False)
+    sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    # the output schema comes from analysis of the rounds' last step
+    # (no job).  A NULL `a` row groups and takes its partners' labels
+    # only when the 1-hop edges are propagated as they are: composition
+    # filters `a != b`, which drops every NULL endpoint
+    small = _local_finish(
+        edges,
+        sym.groupBy("a")
+        .agg(F.min("b").alias("component"))
+        .select(F.col("a").alias("node"), "component")
+        .schema,
+        null_partner=hop == 1,
+    )
+    if small is not None:
+        return small
+    sym = sym.localCheckpoint(eager=False)
     # nodes has TWO consumers (the initial labels and the self-loop
     # rows of `prop`) — checkpointing it runs the distinct once;
     # `labels` itself is a projection over this leaf and needs no
@@ -340,14 +457,16 @@ def _canonize(e: DataFrame) -> DataFrame:
     )
 
 
-def _symmetric(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    # checkpoint before canonizing: the mirror union references the
-    # frame twice, and the caller's edge derivation may be expensive
-    # (see connected_components)
-    return _canonize(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .localCheckpoint(eager=False)
+def _star_labels(e: DataFrame) -> DataFrame:
+    # on a converged edge set every node is adjacent to its component
+    # minimum
+    return (
+        e.groupBy("u")
+        .agg(F.min("v").alias("__mn"))
+        .select(
+            F.col("u").alias("node"),
+            F.least(F.col("u"), F.col("__mn")).alias("component"),
+        )
     )
 
 
@@ -370,15 +489,39 @@ def connected_components_star(
     join; convergence is detected by an order-insensitive edge-set
     fingerprint (sum of pair hashes), one tiny aggregate per round.
 
+    An edge set of at most LOCAL_FINISH_EDGES rows (after dropping
+    self-loops and NULL endpoints) is finished on the driver instead
+    (`_local_finish`: union-find, one Arrow collect), before the
+    canonical distinct and the first `round_stats`:
+    doc_linkage_clusters (a few hundred pair edges at sf0.02) is 14
+    jobs this way; the star rounds made it 37.  The rounds,
+    ``max_iters`` and the raise below govern only the larger edge sets
+    that run the distributed loop; the driver finish always converges.
+
     Fails LOUD: a fingerprint that is still moving after ``max_iters``
     rounds raises instead of emitting a possibly-split labeling — at
     sf0.01 an oracle would catch the silent form, at 100 TB nothing
     would.  O(log n) rounds means 20 covers ~10^6-node components, so
     the raise is a guard, not a practical ceiling.
 
-    Returns (node, component), component = min node id.
+    Returns (node, component), component = min node id, for every
+    endpoint of an edge whose endpoints differ and are both non-NULL.
     """
-    e = _symmetric(edges, src, dst).localCheckpoint(eager=False)
+    # checkpoint before canonizing: the mirror union references the
+    # frame twice, and the caller's edge derivation may be expensive
+    # (see connected_components).  `u != v` drops self-loops and NULL
+    # endpoints, so neither is ever a node of the result.
+    e = (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .localCheckpoint(eager=False)
+    )
+    small = _local_finish(
+        e, _star_labels(_canonize(e)).schema, null_partner=False
+    )
+    if small is not None:
+        return small
+    e = _canonize(e).localCheckpoint(eager=False)
 
     def star_raw(e: DataFrame, large: bool) -> DataFrame:
         # r17 (guide §2.4): m(u) = min(u, neighborhood) used to be a
@@ -502,16 +645,7 @@ def connected_components_star(
             "O(log n), so this indicates astronomically large components "
             "or a data problem)"
         )
-    # converged: every node is adjacent to its component minimum
-    comp = (
-        e.groupBy("u")
-        .agg(F.min("v").alias("__mn"))
-        .select(
-            F.col("u").alias("node"),
-            F.least(F.col("u"), F.col("__mn")).alias("component"),
-        )
-    )
-    return comp
+    return _star_labels(e)
 
 
 def pagerank_int(

@@ -1438,7 +1438,9 @@ def tiered_dedup(
         max_cell=max_cell,
     ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     # the keep-list contract is exact-closure equality (the oracle
-    # computes the full recursive closure) — an exhausted round budget
+    # computes the full recursive closure).  A pair set of at most
+    # LOCAL_FINISH_EDGES rows is labeled exactly on the driver; a
+    # larger one runs the star rounds, where an exhausted round budget
     # on a long-chain component must raise, not silently return split
     # labels (ADVICE r11), and the star kernel always raises.  r17:
     # alternating-star CC (O(log n) rounds in component size) replaces
@@ -1998,9 +2000,10 @@ def linkage_multipass_pairs(
     over the same base).
 
     ``deduplicate=False`` skips the union distinct for consumers that
-    dedup downstream anyway (connected components canon-distincts the
-    edge set in `_symmetric` — a pre-distinct there is a pure extra
-    shuffle)."""
+    dedup downstream anyway (connected components takes duplicate
+    pairs as they come: its driver finish unions them and its
+    distributed loop canon-distincts the edge set — a pre-distinct
+    there is a pure extra shuffle)."""
     from metrics_service_spark.operators.similarity import _spread
 
     block_cols = block_cols or []

@@ -16,6 +16,7 @@ from __future__ import annotations
 import datetime as _dt
 import math
 import os
+import tempfile
 
 import duckdb
 from pyspark.sql import DataFrame
@@ -28,8 +29,12 @@ class OracleMismatch(AssertionError):
 
 
 def run_oracle(sql: str, sf_dir: str) -> list[tuple]:
-    con = duckdb.connect()
-    try:
+    # an in-memory DuckDB spills to `./.tmp` of the working directory by
+    # default, where two connections delete each other's temp blocks:
+    # each connection spills to a directory of its own instead
+    with tempfile.TemporaryDirectory(prefix="duckdb-oracle-") as spill, duckdb.connect(
+        config={"temp_directory": spill}
+    ) as con:
         for name in TABLES:
             path = os.path.join(sf_dir, f"{name}.parquet")
             if os.path.exists(path):
@@ -39,8 +44,6 @@ def run_oracle(sql: str, sf_dir: str) -> list[tuple]:
         cur = con.execute(sql)
         cols = [d[0] for d in cur.description]
         return cols, cur.fetchall()
-    finally:
-        con.close()
 
 
 def _canon_value(v):

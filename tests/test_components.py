@@ -1,18 +1,29 @@
 """Connected-components algorithm tests: large-star/small-star and
 min-label propagation (with a structural round bound) both equal
-union-find on random graphs, the star form converges in few rounds on
-long chains, and order_components keeps its job budget."""
+union-find on random graphs, on the driver finish and on the
+distributed loops alike; the driver finish returns the distributed
+loops' rows and schema; the star form converges in few rounds on long
+chains; and both curation entries keep their job budgets."""
 
 from __future__ import annotations
 
 import random
+from collections import Counter
 
 import pytest
 
+from metrics_service_spark.operators import closure
 from metrics_service_spark.operators.closure import (
     connected_components,
     connected_components_star,
 )
+
+#: the two ways each kernel can run: the driver finish under the
+#: default bound, and the distributed loop with the bound at 0
+BOUNDS = [
+    pytest.param(closure.LOCAL_FINISH_EDGES, id="driver"),
+    pytest.param(0, id="distributed"),
+]
 
 
 def _cc_py(edges):
@@ -33,8 +44,10 @@ def _cc_py(edges):
     return {n: find(n) for n in parent}
 
 
+@pytest.mark.parametrize("bound", BOUNDS)
 @pytest.mark.parametrize("seed", [0, 5])
-def test_star_matches_unionfind_random(spark, seed):
+def test_star_matches_unionfind_random(spark, monkeypatch, seed, bound):
+    monkeypatch.setattr(closure, "LOCAL_FINISH_EDGES", bound)
     rng = random.Random(seed)
     edges = [
         (rng.randint(0, 80), rng.randint(0, 80)) for _ in range(120)
@@ -55,9 +68,11 @@ def test_star_matches_unionfind_random(spark, seed):
     assert got_prop == want
 
 
-def test_star_long_chain_few_rounds(spark):
+def test_star_long_chain_few_rounds(spark, monkeypatch):
     # a 200-node path: min-propagation needs ~200 rounds; the star
-    # algorithm must finish within its default max_iters (log-round)
+    # algorithm must finish within its default max_iters (log-round).
+    # The rounds run only in the distributed loop: bound 0.
+    monkeypatch.setattr(closure, "LOCAL_FINISH_EDGES", 0)
     edges = [(i, i + 1) for i in range(200)]
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {
@@ -68,10 +83,13 @@ def test_star_long_chain_few_rounds(spark):
     assert len(got) == 201
 
 
-def test_star_raises_when_round_budget_exhausted(spark):
+def test_star_raises_when_round_budget_exhausted(spark, monkeypatch):
     # the star form must fail LOUD when the edge-set fingerprint is
     # still moving at max_iters; a path needs >1 star round, so
-    # max_iters=1 on a long chain cannot reach the fixpoint
+    # max_iters=1 on a long chain cannot reach the fixpoint.  Only the
+    # distributed loop has a round budget: a 64-edge path finishes on
+    # the driver under the default bound, so the bound is set to 0.
+    monkeypatch.setattr(closure, "LOCAL_FINISH_EDGES", 0)
     edges = [(i, i + 1) for i in range(64)]
     df = spark.createDataFrame(edges, "src long, dst long")
     with pytest.raises(RuntimeError, match="still\\s+moving"):
@@ -133,14 +151,130 @@ def test_early_stop_off_equals_on_random_graph(spark):
 
 
 def test_order_components_job_budget(spark, sf_dir, count_jobs):
-    """order_components (label propagation: hop=3 composition, 3
-    probe-free rounds) launches a fixed number of Spark jobs, build
-    plus collect.  Pinned so a probe, an extra checkpoint or a switch
-    to the star kernel (32 jobs at sf0.01) cannot land unnoticed."""
+    """order_components (label propagation over a few thousand chain
+    edges, finished on the driver) launches a fixed number of Spark
+    jobs, build plus collect: the input-edge checkpoint with its Arrow
+    collect, and the collect of the result.  Pinned so a probe, an
+    extra checkpoint or a return to the distributed rounds (13 jobs)
+    cannot land unnoticed."""
     from metrics_service_spark.catalog import all_queries
 
     q = all_queries()["order_components"].fn
-    assert count_jobs(lambda: q(spark, sf_dir).collect()) == 13
+    assert count_jobs(lambda: q(spark, sf_dir).collect()) == 2
+
+
+def test_doc_linkage_clusters_job_budget(spark, sf_dir, count_jobs):
+    """doc_linkage_clusters runs star CC over a pair graph of a few
+    hundred edges, finished on the driver.  Pinned so a per-round
+    loop (round_stats plus checkpoints: 25 jobs here in all) cannot
+    come back unnoticed."""
+    from metrics_service_spark.catalog import all_queries
+
+    q = all_queries()["doc_linkage_clusters"].fn
+    assert count_jobs(lambda: q(spark, sf_dir).collect()) == 14
+
+
+def _random_edges(rng: random.Random, n: int, nodes: int) -> list:
+    """Edges with self-loops, duplicate and mirrored pairs and NULL
+    endpoints on either side."""
+    out = []
+    for _ in range(n):
+        a, b = rng.randrange(nodes), rng.randrange(nodes)
+        roll = rng.random()
+        if roll < 0.1:
+            b = a
+        elif roll < 0.15:
+            a = None
+        elif roll < 0.2:
+            b = None
+        out.append((a, b))
+        if rng.random() < 0.2:
+            out.append((b, a) if rng.random() < 0.5 else (a, b))
+    return out
+
+
+def _diameter(edges) -> int:
+    """The largest shortest-path distance within any component, by a
+    BFS from every node."""
+    adj: dict = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    best = 0
+    for start in adj:
+        dist, frontier = {start: 0}, [start]
+        while frontier:
+            nxt = []
+            for x in frontier:
+                for y in adj[x] - dist.keys():
+                    dist[y] = dist[x] + 1
+                    nxt.append(y)
+            frontier = nxt
+        best = max(best, *dist.values())
+    return best
+
+
+def _graphs():
+    rng = random.Random(41)
+    sparse = _random_edges(rng, 60, 70)
+    dense = _random_edges(rng, 150, 60)
+    return [
+        ("sparse", "src long, dst long", sparse),
+        ("dense", "src long, dst long", dense),
+        ("string", "src string, dst string",
+         [tuple(None if x is None else f"n{x:03d}" for x in e) for e in dense]),
+        ("int_long", "src int, dst long", sparse),
+        ("not_null", "src long not null, dst long not null",
+         [(a, b) for a, b in dense if a is not None and b is not None]),
+        ("self_loops", "src long, dst long", [(i, i) for i in range(9)] * 2),
+        ("empty", "src long, dst long", []),
+    ]
+
+
+@pytest.mark.parametrize(
+    "ddl,edges", [pytest.param(d, e, id=k) for k, d, e in _graphs()]
+)
+def test_local_finish_equals_distributed(spark, monkeypatch, ddl, edges):
+    """The driver finish returns the distributed loop's rows and
+    schema exactly, for both kernels, on graphs with self-loops,
+    duplicate and mirrored edges, NULL endpoints, int and string ids,
+    an all-self-loop input and no edges at all."""
+    df = spark.createDataFrame(edges, ddl)
+    real = [(a, b) for a, b in edges if a is not None and b is not None]
+    ids = {x for e in edges for x in e if x is not None}
+    want = _cc_py(real)
+    # the largest component diameter, plus a round to spare so the
+    # NULL row's label (one hop past its partners) has settled too
+    rounds = _diameter(real) + 1
+    runs = {
+        "star": lambda: connected_components_star(df),
+        "hop1": lambda: connected_components(df, max_iters=rounds),
+        "hop3": lambda: connected_components(df, max_iters=rounds, hop=3),
+    }
+    for name, run in runs.items():
+        got = []
+        for bound in (closure.LOCAL_FINISH_EDGES, 0):
+            monkeypatch.setattr(closure, "LOCAL_FINISH_EDGES", bound)
+            out = run()
+            got.append((out.schema, Counter(map(tuple, out.collect()))))
+        monkeypatch.undo()
+        driver, distributed = got
+        assert driver == distributed, name
+        labels = distributed[1]
+        # the node sets, as the distributed loops return them: star
+        # filters `u != v`, so self-loop-only and NULL endpoints are
+        # not nodes; label propagation keeps every non-NULL endpoint,
+        # and at hop=1 a NULL paired with an id takes that id's label
+        if name == "star":
+            nodes = {x for a, b in real if a != b for x in (a, b)}
+        else:
+            nodes = set(ids)
+        null_row = name == "hop1" and any(
+            (a is None) != (b is None) for a, b in edges
+        )
+        assert {n for n, _ in labels} == nodes | ({None} if null_row else set())
+        assert all(c == want.get(n, n) for n, c in labels if n is not None), name
+        assert all(n == 1 for n in labels.values()), name
 
 
 def test_pagerank_int_hand_checked(spark):

@@ -6,17 +6,20 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from metrics_service_spark.operators import closure
 from metrics_service_spark.operators.closure import (
     connected_components_star,
     pagerank_int,
 )
 
 
-def test_star_cc_detects_converged_input_without_a_round(spark):
+def test_star_cc_detects_converged_input_without_a_round(spark, monkeypatch):
     # a min-centered star forest is the star operators' fixpoint: the
     # r18 star-forest check must recognize it at round 0, so even
     # max_iters=0 yields the labeling instead of raising (the r17
-    # shape needed one full confirming round to see the fixpoint)
+    # shape needed one full confirming round to see the fixpoint).
+    # The check runs only in the distributed loop: bound 0.
+    monkeypatch.setattr(closure, "LOCAL_FINISH_EDGES", 0)
     edges = [(0, 5), (0, 7), (0, 9), (20, 21), (20, 23)]
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {
@@ -26,9 +29,12 @@ def test_star_cc_detects_converged_input_without_a_round(spark):
     assert got == {0: 0, 5: 0, 7: 0, 9: 0, 20: 20, 21: 20, 23: 20}
 
 
-def test_star_cc_detection_is_not_premature_on_paths(spark):
+def test_star_cc_detection_is_not_premature_on_paths(spark, monkeypatch):
     # a path is NOT a star forest mid-contraction: the detection must
-    # not fire early, so an exhausted round budget still raises
+    # not fire early, so an exhausted round budget still raises.  The
+    # detection runs only in the distributed loop: a 64-edge path
+    # finishes on the driver under the default bound, so it is 0 here.
+    monkeypatch.setattr(closure, "LOCAL_FINISH_EDGES", 0)
     edges = [(i, i + 1) for i in range(64)]
     df = spark.createDataFrame(edges, "src long, dst long")
     with pytest.raises(RuntimeError, match="still\\s+moving"):

@@ -44,7 +44,7 @@ COMMENTARY = {
     "emb_semdedup_incr": "ONE fused assignment pass (side tag) lazily checkpointed; batch x index equi-join on cell only; index never self-paired",
     "mm_image_meta_real_mixed": "mapInPandas encode -> sniff -> header decode; repartition by media id for encode parallelism; join back to the fmt tag is a broadcast hash join",
     "doc_jaccard_pairs": "shingles computed ABOVE the repartition exchange (all cores) and checkpointed once for both self-join sides; BHJ on (lang, length-bucket); cheap prunes short-circuit the single array_intersect in the residual condition",
-    "doc_dedup_clusters": "jaccard pair shape as above; alternating-star contraction (O(log n) rounds, one window + one canonical distinct + a duplicate-retaining mirror per round) labels the pair graph",
+    "doc_dedup_clusters": "jaccard pair shape as above; the pair graph (under LOCAL_FINISH_EDGES) is labeled by union-find on the driver and re-enters as one LocalTableScan; a larger one runs alternating-star contraction (O(log n) rounds, one window + one canonical distinct + a duplicate-retaining mirror per round)",
     "doc_split_leakage_safe": "documents parquet scanned at most TWICE across the whole pipeline (shingle derivation + final per-doc join; checkpointed subplans included) and the max_cell<=1000 cell-population cap-filter is present — the r7 probe-caught quadratic's linearity guard, mirrored in the oracle CTE; gated by test_split_leakage_safe_bounded_scans_and_cap_filter",
     "emb_contamination": "ONE fused assignment pass for corpus+benchmark (the literal-matrix argmax projection appears in exactly one subplan via the tagged union); the only data-mass join keys on cell; verdict joins move only the tiny dropped-id set; no shuffle on a raw vector column; gated by test_emb_contamination_fused_assignment_cell_keyed",
     "emb_pq_topk_int": "train is iters fused corpus passes with bounded m*k*d_sub collects; encode is a pure projection over two literals (flat code matrix + norms); search broadcasts the per-query integer LUT and scores each corpus row with m element_at lookups — no dim-wide multiply on the corpus side, no cartesian (query join is broadcast), one top-k window",
@@ -71,7 +71,7 @@ COMMENTARY = {
     "emb_knn_hubness": "the audited knn-graph plan feeds a dst-keyed degree aggregate (map-side partial) and one left join back to the id column — nothing beyond the graph cost",
     "emb_proto_prune": "the per-cell count window shares the prototypicality rank window cell partitioning (ONE exchange); the keep rule is a pure integer cross-multiply projection",
     "emb_curation_pipeline": "ONE checkpointed two-level assignment frame feeds the SemDeDup pair join, the keep-list join AND the balanced-quota window — dedup and sampling share the assignment pass; quota is WindowGroupLimit-pushed",
-    "mm_dedup_clusters": "phash pair discovery (the audited banded shape) feeds alternating-star contraction over the EDGE set only (checkpointed rounds, 3 edge-set exchanges per round); the final attach is a left join back to the corpus id column",
+    "mm_dedup_clusters": "phash pair discovery (the audited banded shape) feeds connected components over the EDGE set only: union-find on the driver under LOCAL_FINISH_EDGES (one LocalTableScan), alternating-star contraction above it (checkpointed rounds, 3 edge-set exchanges per round); the final attach is a left join back to the corpus id column",
     "doc_dup_span_runs": "dup_spans' audited span frame (checkpointed once) feeds the corpus count AND the flag join; the islands window runs over ONLY the flagged subset (doc-keyed); coverage is an exploded (doc,pos) distinct — the flagged set itself is deliberately NOT checkpointed (materializing the whole duplicated-window mass OOM'd the 50x probe); zero-filled final join",
     "doc_temperature_mix": "count agg collapses to ~n_sources rows map-side; the exact-isqrt weight + round_frac_bigint quota is a pure projection over that tiny frame; quotas broadcast back; ONE source-keyed exchange for the rank window (variable quota, so the limit can't push — still a single streaming pass per partition)",
     "emb_ann_recall": "both arms in one plan: the exact arm broadcasts the 8-query frame over one corpus scan, the IVF arm reuses its audited assign/probe shape; the intersection join moves k-bounded rows per query; recall arithmetic is a plain-BIGINT projection — |queries| is the knob that bounds the whole eval",
