@@ -4389,10 +4389,13 @@ def q_doc_linkage_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`linkage_multipass_pairs`, guide §8), and the pre-CC distinct is
     dropped — `connected_components_star` filters self-loops itself
     and tolerates duplicate and mirrored pairs, so it was a pure
-    extra shuffle.  The pair graph is a few hundred edges (2,935 at
-    sf0.1), so the star kernel finishes it on the driver in one
-    Arrow collect: 14 jobs for the whole entry at sf0.02, 11 of them
-    the linkage passes, where the star rounds made it 37."""
+    extra shuffle.  Both stages finish on the driver: the linkage
+    pairs come from one bounded Arrow collect of the corpus
+    projection, and the pair graph (a few hundred edges, 2,935 at
+    sf0.1) is labeled by the star kernel's union-find from a second.
+    4 jobs for the whole entry at sf0.01: the two collects plus the
+    final join's broadcast and collect, where the checkpointed linkage
+    passes made it 14 and the star rounds 37."""
     from metrics_service_spark.operators.closure import (
         connected_components_star,
     )

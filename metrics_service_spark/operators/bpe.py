@@ -47,6 +47,8 @@ import re as _re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from metrics_service_spark.operators.driver import _bounded_arrow
+
 #: bounds the per-word symbol array (and with it the scan-expression
 #: cost) — words longer than this are ignored for training and count
 #: as one unit on apply, like any non-alphabetic token
@@ -195,13 +197,12 @@ def bpe_train_local_finish(
     runs out of mergeable pairs before n_merges raises loudly rather
     than return a short table.  `sql_bpe_merge_table` replays the run
     bit-for-bit."""
-    # Bound the TRANSFER, not just the result: a global limit of
-    # max_vocab_rows + 1 truncates what crosses to the driver, so on
-    # the pathological input this guard exists for (a non-language-
-    # bounded unique-word table, e.g. IDs/hashes in text) the loud
-    # error fires before the driver can swap — while below the bound
-    # the limit is a no-op and completeness is untouched.  The +1
-    # sentinel row is how overflow is detected (ADVICE r15).
+    # Bound the TRANSFER, not just the result: `_bounded_arrow`'s
+    # limit of max_vocab_rows + 1 truncates what crosses to the
+    # driver, so on the pathological input this guard exists for (a
+    # non-language-bounded unique-word table, e.g. IDs/hashes in text)
+    # the loud error fires before the driver can swap — while below
+    # the bound the limit is a no-op and completeness is untouched.
     # `word_freqs` lets a caller that ALSO tokenizes the same corpus
     # downstream (export/apply/encode) hand in one shared — typically
     # lazily checkpointed — (w, freq) frame instead of paying a second
@@ -211,15 +212,15 @@ def bpe_train_local_finish(
         if word_freqs is None
         else word_freqs
     )
-    rows = wf.limit(max_vocab_rows + 1).collect()
-    if len(rows) > max_vocab_rows:
+    tbl = _bounded_arrow(wf, max_vocab_rows)
+    if tbl is None:
         raise ValueError(
             f"bpe_train_local_finish: vocabulary exceeds "
             f"max_vocab_rows={max_vocab_rows}; this input's unique-"
             f"word table is not language-bounded — filter the input or "
             f"raise max_vocab_rows explicitly"
         )
-    freqs = {r["w"]: r["freq"] for r in rows}
+    freqs = dict(zip(tbl["w"].to_pylist(), tbl["freq"].to_pylist()))
     merges = _heap_train_from_freqs(freqs, n_merges=n_merges)
     return docs.sparkSession.createDataFrame(
         merges, "rank int, left_sym string, right_sym string, pair_count bigint"
@@ -1305,17 +1306,16 @@ def bpe_train_grouped_local_finish(
         if word_freqs is None
         else word_freqs
     )
-    rows = (
-        gwf.filter(F.col(group_col).isin(live))
-        .limit(max_vocab_rows + 1)
-        .collect()
+    tbl = _bounded_arrow(
+        gwf.filter(F.col(group_col).isin(live)), max_vocab_rows
     )
-    if len(rows) > max_vocab_rows:
+    if tbl is None:
         raise ValueError(
             f"bpe_train_grouped_local_finish: vocabulary exceeds "
             f"max_vocab_rows={max_vocab_rows}; filter the input or "
             f"raise max_vocab_rows explicitly"
         )
+    rows = tbl.to_pylist()
     spark = docs.sparkSession
     merges: list[tuple[str, int, str, str, int]] = []
     for g in live:

@@ -85,9 +85,8 @@ def _local_finish(
     = the minimum node id of its component, or None when `edges` (two
     columns, endpoint ids) holds more than LOCAL_FINISH_EDGES rows.
 
-    ONE Spark job moves the edge set: a `limit(LOCAL_FINISH_EDGES + 1)`
-    Arrow collect, whose +1 sentinel row is how overflow is detected
-    and which bounds what crosses to the driver on a large input.
+    ONE Spark job moves the edge set: `_bounded_arrow`'s collect of at
+    most LOCAL_FINISH_EDGES + 1 rows (operators/driver.py).
     Ids are ranked by Arrow's sort (byte order for strings, as Spark
     compares them), so union-find that always hangs the larger root
     under the smaller one leaves every node's root at its component's
@@ -104,14 +103,14 @@ def _local_finish(
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    from metrics_service_spark.operators.driver import _bounded_arrow
+
     t = schema["node"].dataType
     a, b = edges.columns
-    tbl = (
-        edges.select(F.col(a).cast(t), F.col(b).cast(t))
-        .limit(LOCAL_FINISH_EDGES + 1)
-        .toArrow()
+    tbl = _bounded_arrow(
+        edges.select(F.col(a).cast(t), F.col(b).cast(t)), LOCAL_FINISH_EDGES
     )
-    if tbl.num_rows > LOCAL_FINISH_EDGES:
+    if tbl is None:
         return None
     u, v = (c.combine_chunks() for c in tbl.columns)
     nodes = pc.unique(pa.concat_arrays([u, v]).drop_null())
@@ -493,8 +492,9 @@ def connected_components_star(
     self-loops and NULL endpoints) is finished on the driver instead
     (`_local_finish`: union-find, one Arrow collect), before the
     canonical distinct and the first `round_stats`:
-    doc_linkage_clusters (a few hundred pair edges at sf0.02) is 14
-    jobs this way; the star rounds made it 37.  The rounds,
+    doc_linkage_clusters (a few hundred pair edges at sf0.01) is 4
+    jobs this way, its linkage pairs finished on the driver as well;
+    the star rounds made it 37.  The rounds,
     ``max_iters`` and the raise below govern only the larger edge sets
     that run the distributed loop; the driver finish always converges.
 

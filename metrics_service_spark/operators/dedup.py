@@ -38,6 +38,18 @@ from metrics_service_spark.functions.stable import (
 DEFAULT_BANDS = 8
 DEFAULT_ROWS_PER_BAND = 2
 
+#: rows bound of the linkage driver finish (`_linkage_local_finish`):
+#: a (block_cols…, __id, __pfx) projection of at most this many rows
+#: crosses to the driver in one bounded Arrow collect.
+LINKAGE_LOCAL_ROWS = 250_000
+#: candidate-pair bound of the linkage driver finish: the pairs both
+#: arms hand Spark to score.  Measured on the linkage entries from
+#: 500 to 250,000 documents (4 cores, SCALE.md), the driver finish was
+#: faster at every size, by 1.05-5x, up to 1.39M candidates; both bounds
+#: sit at that largest measured size, where the driver's Python side
+#: peaks near 0.7 GB.
+LINKAGE_LOCAL_PAIRS = 1_400_000
+
 
 def shingle_array(tokens: Column, n: int) -> Column:
     """Distinct n-word shingles from a token array (1-based slice)."""
@@ -1975,6 +1987,177 @@ def _sorted_neighborhood_from_base(
     )
 
 
+def _driver_comparable(dt) -> bool:
+    """Whether Python's ==, < and hashing on the collected values of a
+    column of type `dt` agree with Spark's comparisons on it: not for
+    floats (Spark groups NaN with NaN and sorts it last) nor for
+    collated strings."""
+    from pyspark.sql import types as T
+
+    return dt == T.StringType() or isinstance(
+        dt,
+        (
+            T.IntegralType,
+            T.DecimalType,
+            T.BooleanType,
+            T.BinaryType,
+            T.DateType,
+            T.TimestampType,
+            T.TimestampNTZType,
+        ),
+    )
+
+
+def _linkage_local_finish(
+    proj: DataFrame,
+    *,
+    neighborhood: int,
+    block_chars: int,
+    max_dist: int,
+    block_cols: list[str],
+    max_cell: int | None,
+    deduplicate: bool,
+) -> DataFrame | None:
+    """`linkage_multipass_pairs` on the driver: the candidate pairs of
+    both arms built from ONE bounded Arrow collect of the
+    (block_cols…, __id, __pfx) projection `proj`, scored by Spark.
+    None when the projection holds more than LINKAGE_LOCAL_ROWS rows,
+    the arms more than LINKAGE_LOCAL_PAIRS candidates, or a column
+    whose comparisons Python does not share with Spark
+    (`_driver_comparable`), or when ``neighborhood < 2`` (whose offset
+    sequence runs backwards); the caller then runs the distributed
+    path.
+
+    The candidates are the distributed arms' join results:
+    - strict: rows of one (block_cols, __bk) cell (no NULL key; the
+      block key is Spark's own substring, collected with the rest), in
+      cells of at most ``max_cell`` rows, paired with __id < __id2;
+    - sorted neighborhood: each block (no NULL block column) ranked by
+      (__pfx, __id) ascending, NULLs first, and every row paired with
+      its next ``neighborhood - 1`` rows in rank order.
+    A candidate with a NULL prefix is dropped here: its levenshtein is
+    NULL, which the scoring filter drops too.  Spark scores what is
+    left with the same expressions as the distributed arms: the
+    levenshtein of the two prefixes in the arms' argument order under
+    ``max_dist``, and least/greatest ids (which are the strict arm's
+    own (__id, __id2), as __id < __id2 there).  The candidate frame is
+    lazily checkpointed first, which launches no job: the optimizer
+    folds a filter straight over the local relation `createDataFrame`
+    returns into that relation and evaluates it on one driver thread,
+    where over the checkpoint the scoring runs on every core.
+
+    ``deduplicate`` drops repeats of a row pair (a pair both arms
+    find) before scoring.  With unique ids a row pair is the only
+    source of its (id_a, id_b), so that is the union distinct; with
+    repeated or several NULL ids the scored frame is distinct-ed as
+    well."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from metrics_service_spark.operators.driver import _bounded_arrow
+
+    schema = proj.schema
+    if (
+        neighborhood < 2
+        or schema["__pfx"].dataType != T.StringType()
+        or not all(
+            _driver_comparable(schema[c].dataType)
+            for c in [*block_cols, "__id"]
+        )
+    ):
+        return None
+    tbl = _bounded_arrow(
+        proj.withColumn("__bk", F.substring(F.col("__pfx"), 1, block_chars)),
+        LINKAGE_LOCAL_ROWS,
+    )
+    if tbl is None:
+        return None
+    ids, pfx, bk = (tbl[c].to_pylist() for c in ("__id", "__pfx", "__bk"))
+    keys = (
+        zip(*(tbl[c].to_pylist() for c in block_cols))
+        if block_cols
+        else [()] * len(ids)
+    )
+    blocks: dict[tuple, list[int]] = {}
+    cells: dict[tuple, list[int]] = {}
+    for i, key in enumerate(keys):
+        if None in key:
+            continue
+        blocks.setdefault(key, []).append(i)
+        if bk[i] is not None:
+            cells.setdefault((key, bk[i]), []).append(i)
+    strict = [
+        c for c in cells.values() if max_cell is None or len(c) <= max_cell
+    ]
+    span = neighborhood - 1
+    n_pairs = sum(len(c) * (len(c) - 1) // 2 for c in strict)
+    for b in blocks.values():
+        k = min(span, len(b) - 1)
+        n_pairs += k * len(b) - k * (k + 1) // 2
+    if n_pairs > LINKAGE_LOCAL_PAIRS:
+        return None
+
+    left: list[int] = []
+    right: list[int] = []
+    seen: set[tuple[int, int]] = set()
+
+    def emit(i: int, j: int) -> None:
+        if pfx[i] is None or pfx[j] is None:
+            return
+        if deduplicate:
+            pair = (i, j) if i < j else (j, i)
+            if pair in seen:
+                return
+            seen.add(pair)
+        left.append(i)
+        right.append(j)
+
+    for cell in strict:
+        for x, i in enumerate(cell):
+            for j in cell[x + 1 :]:
+                if ids[i] is None or ids[j] is None or ids[i] == ids[j]:
+                    continue
+                lo, hi = (i, j) if ids[i] < ids[j] else (j, i)
+                emit(lo, hi)
+    for block in blocks.values():
+        block.sort(
+            key=lambda i: (pfx[i] is not None, pfx[i], ids[i] is not None, ids[i])
+        )
+        for x, i in enumerate(block):
+            for j in block[x + 1 : x + 1 + span]:
+                emit(i, j)
+
+    idx_l, idx_r = pa.array(left, pa.int64()), pa.array(right, pa.int64())
+    cand = pa.table(
+        {
+            "__id": tbl["__id"].take(idx_l),
+            "__id2": tbl["__id"].take(idx_r),
+            "__pfx": tbl["__pfx"].take(idx_l),
+            "__pfx2": tbl["__pfx"].take(idx_r),
+        }
+    )
+    fid, fpfx = schema["__id"], schema["__pfx"]
+    pairs = proj.sparkSession.createDataFrame(
+        cand,
+        schema=T.StructType(
+            [
+                T.StructField("__id", fid.dataType, fid.nullable),
+                T.StructField("__id2", fid.dataType, fid.nullable),
+                T.StructField("__pfx", fpfx.dataType, fpfx.nullable),
+                T.StructField("__pfx2", fpfx.dataType, fpfx.nullable),
+            ]
+        ),
+    )
+    dist = F.levenshtein(F.col("__pfx"), F.col("__pfx2"), max_dist)
+    out = pairs.localCheckpoint(eager=False).filter(dist >= 0).select(
+        F.least("__id", "__id2").alias("id_a"),
+        F.greatest("__id", "__id2").alias("id_b"),
+        dist.cast("int").alias("dist"),
+    )
+    unique_ids = len(set(ids)) == len(ids)
+    return out.distinct() if deduplicate and not unique_ids else out
+
+
 def linkage_multipass_pairs(
     df: DataFrame,
     id_col: str,
@@ -1991,29 +2174,49 @@ def linkage_multipass_pairs(
 ) -> DataFrame:
     """Strict-prefix blocked pairs ∪ sorted-neighborhood pairs,
     distinct on the (pair, dist) row — the multi-pass linkage union,
-    with the two arms sharing ONE corpus scan: the (block_cols…,
-    __id, __pfx) base derives once and is lazily checkpointed; the
-    strict arm adds its block key on top, the SN arm its ranks
-    (guide §8 — at 100 TB this halves the corpus reads of the
-    composed entries vs calling the two pass functions separately;
-    pair set bit-identical, both arms compute the same expressions
-    over the same base).
+    with the two arms sharing ONE corpus scan of the (block_cols…,
+    __id, __pfx) projection.
+
+    A projection within the driver finish's bounds
+    (`_linkage_local_finish`: LINKAGE_LOCAL_ROWS rows,
+    LINKAGE_LOCAL_PAIRS candidates) is paired on the driver from one
+    bounded Arrow collect, its only job of its own: Spark scores the
+    candidates in the consumer's job, where the distributed path pays
+    a checkpoint barrier per arm stage first.  Past
+    either bound the distributed path runs: the projection is spread
+    and lazily checkpointed once, the strict arm adds its block key
+    on top, the SN arm its ranks (guide §8 — at 100 TB this halves
+    the corpus reads of the composed entries vs calling the two pass
+    functions separately; pair set bit-identical, both arms compute
+    the same expressions over the same base).  Both paths return the
+    same rows and schema.
 
     ``deduplicate=False`` skips the union distinct for consumers that
     dedup downstream anyway (connected components takes duplicate
     pairs as they come: its driver finish unions them and its
     distributed loop canon-distincts the edge set — a pre-distinct
-    there is a pure extra shuffle)."""
+    there is a pure extra shuffle).  The rows are then the two arms'
+    pairs as they come, a pair both arms find twice."""
     from metrics_service_spark.operators.similarity import _spread
 
     block_cols = block_cols or []
-    base = _spread(
-        df.select(
-            *[F.col(c) for c in block_cols],
-            F.col(id_col).alias("__id"),
-            F.substring(F.col(text_col), 1, prefix_chars).alias("__pfx"),
-        )
-    ).localCheckpoint(eager=False)
+    proj = df.select(
+        *[F.col(c) for c in block_cols],
+        F.col(id_col).alias("__id"),
+        F.substring(F.col(text_col), 1, prefix_chars).alias("__pfx"),
+    )
+    local = _linkage_local_finish(
+        proj,
+        neighborhood=neighborhood,
+        block_chars=block_chars,
+        max_dist=max_dist,
+        block_cols=block_cols,
+        max_cell=max_cell,
+        deduplicate=deduplicate,
+    )
+    if local is not None:
+        return local
+    base = _spread(proj).localCheckpoint(eager=False)
     strict = fuzzy_prefix_pairs_blocked(
         base.withColumn("__bk", F.substring(F.col("__pfx"), 1, block_chars)),
         max_dist=max_dist,

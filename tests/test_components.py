@@ -3,7 +3,7 @@ min-label propagation (with a structural round bound) both equal
 union-find on random graphs, on the driver finish and on the
 distributed loops alike; the driver finish returns the distributed
 loops' rows and schema; the star form converges in few rounds on long
-chains; and both curation entries keep their job budgets."""
+chains; and the curation and linkage entries keep their job budgets."""
 
 from __future__ import annotations
 
@@ -164,14 +164,28 @@ def test_order_components_job_budget(spark, sf_dir, count_jobs):
 
 
 def test_doc_linkage_clusters_job_budget(spark, sf_dir, count_jobs):
-    """doc_linkage_clusters runs star CC over a pair graph of a few
-    hundred edges, finished on the driver.  Pinned so a per-round
-    loop (round_stats plus checkpoints: 25 jobs here in all) cannot
-    come back unnoticed."""
+    """doc_linkage_clusters pairs its documents on the driver from one
+    bounded collect of the corpus projection, then runs star CC over
+    the pair graph of a few hundred edges, finished on the driver
+    too: the two collects, then the final join's broadcast and
+    collect.  Pinned so a checkpoint barrier of the distributed
+    linkage arms (14 jobs here in all) or a per-round CC loop (25)
+    cannot come back unnoticed."""
     from metrics_service_spark.catalog import all_queries
 
     q = all_queries()["doc_linkage_clusters"].fn
-    assert count_jobs(lambda: q(spark, sf_dir).collect()) == 14
+    assert count_jobs(lambda: q(spark, sf_dir).collect()) == 4
+
+
+def test_doc_linkage_multipass_job_budget(spark, sf_dir, count_jobs):
+    """doc_linkage_multipass: the bounded collect of the corpus
+    projection, and the collect that scores the driver-built
+    candidates on every core.  The distributed arms it replaces ran
+    13 jobs here."""
+    from metrics_service_spark.catalog import all_queries
+
+    q = all_queries()["doc_linkage_multipass"].fn
+    assert count_jobs(lambda: q(spark, sf_dir).collect()) == 2
 
 
 def _random_edges(rng: random.Random, n: int, nodes: int) -> list:

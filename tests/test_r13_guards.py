@@ -17,8 +17,10 @@ import re
 
 from pyspark.sql import functions as F
 
+from metrics_service_spark.operators import dedup
 from metrics_service_spark.operators.dedup import (
     fuzzy_prefix_pairs,
+    linkage_multipass_pairs,
     sorted_neighborhood_pairs,
 )
 from metrics_service_spark.sources.tables import load_table
@@ -28,7 +30,10 @@ def _pairs(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_global_rank_mode_matches_window_mode(spark, sf_dir):
+def test_global_rank_mode_matches_window_mode(spark, sf_dir, monkeypatch):
+    # the multi-pass union runs its arms only past the driver finish's
+    # bound: at 0 it takes both rank modes through the distributed SN arm
+    monkeypatch.setattr(dedup, "LINKAGE_LOCAL_ROWS", 0)
     docs = load_table(spark, sf_dir, "documents")
     kw = dict(
         neighborhood=6, prefix_chars=80, max_dist=48, block_cols=["lang"]
@@ -40,6 +45,14 @@ def test_global_rank_mode_matches_window_mode(spark, sf_dir):
     w, g = _pairs(window_mode), _pairs(global_mode)
     assert w == g
     assert len(w) > 0  # the fixture contains near-dups; empty = vacuous
+    multi_kw = dict(kw, block_chars=4, max_cell=64)
+    assert _pairs(
+        linkage_multipass_pairs(docs, "doc_id", "text", **multi_kw)
+    ) == _pairs(
+        linkage_multipass_pairs(
+            docs, "doc_id", "text", rank_bucket_chars=2, **multi_kw
+        )
+    )
 
 
 def test_global_rank_mode_survives_hot_single_block(spark, sf_dir):

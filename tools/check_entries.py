@@ -25,7 +25,8 @@ import sys
 import time
 import uuid
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from metrics_service_spark.catalog import all_queries  # noqa: E402
 from metrics_service_spark.session import get_spark  # noqa: E402
@@ -67,6 +68,12 @@ def main() -> None:
         args.remove("--vanilla")
     if args and os.path.isdir(args[0]):
         sf_dir = args.pop(0)
+    # the mapInPandas entries' Python workers import the package as
+    # well; they take PYTHONPATH from the environment the session
+    # starts with
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     if vanilla:
         # driver-parity mode: the round driver builds its own PLAIN
         # session (no engine-tuned confs) — sweeping under the same

@@ -86,7 +86,7 @@ COMMENTARY = {
     "doc_canonical_dedup": "map-side: translate char-map + split/filter/join canonical form + two md5s (no java-regex scan — measured 14x slower); ONE map-side-combined hash agg; countDistinct adds the standard two-level agg over collapsed groups",
     "doc_sorted_neighborhood": "block-keyed rank window over the _spread checkpointed prefix frame; offset explode caps candidates at N*(w-1); (block, rank) equi-join + per-candidate codegen levenshtein — the strict-block complement, unioned by multi-pass linkage",
     "doc_sorted_neighborhood_global": "identical candidates/join/pairs, but the rank is the BUCKETED global numbering: per-(block, 2-char-prefix-chunk) row_number windows + one tiny broadcast offset frame — no row_number window partitioned by the bare block cols anywhere in the plan (a hot block fans across ~charset^2 sort tasks); 50x measured 1.9x vs the window form's 16.7x",
-    "doc_linkage_multipass": "the union of two linear passes (strict-prefix block join + sorted-neighborhood global-rank join) and ONE distinct shuffle over the pair set — candidate mass is the sum of the passes, never corpus^2; the SN arm ships hot-block-safe",
+    "doc_linkage_multipass": "driver finish at catalog scale: one bounded Arrow collect of the (lang, id, 80-char prefix) projection, both arms' candidates paired on the driver, so the plan is only the levenshtein filter over the checkpointed candidate frame (Scan ExistingRDD) — no exchange; past LINKAGE_LOCAL_ROWS / LINKAGE_LOCAL_PAIRS the union of the two linear passes and ONE distinct shuffle run instead, the SN arm hot-block-safe",
     "doc_linkage_recall": "the all-pairs truth runs ONLY over the guarded md5 sample (limit-probe raises past max_sample; BNLJ streams the _spread side); both blocking arms run on the same checkpointed sample; per-method counts are 1-row aggs crossJoined against the broadcast truth row",
     "metrics_star_bucketed": "pid-bucketed catalog scan -> filter -> project -> partial+final HashAggregate with ZERO exchanges: HashPartitioning(pid) is a subset of the 9 grain keys and alias propagation carries pid->dataset_id through the projection — the refresh aggregation is scan-local at any scale",
     "doc_fuzzy_prefix_bucketed": "the linkage-silver bucketed scan: cell count AND block self-join both plan scan-local (SortMergeJoin, zero shuffle exchanges under auto-broadcast off — plan-gated); the (lang, bk) derivation is pre-paid at write time",
