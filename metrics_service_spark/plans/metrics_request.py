@@ -7,14 +7,20 @@ COUNTER-filtered composite aggregation in ES, merges Postgres citation
 counts, and pivots into parallel arrays with a zero-filled month spine
 (metricsreader.py:1569-1816).
 
-Here the identifier family is resolved on the driver with one collect
-into a pid list, which the rest of the lifecycle uses as ONE lazy
-DataFrame program:
+Here the identifier family is resolved on the driver with one bounded
+collect into a pid list, which the rest of the lifecycle uses as ONE
+lazy DataFrame program:
   driver-resolved IN-list (the reference's `terms {pid.key: [...]}`
-  filter) -> COUNTER filter -> groupBy(date_trunc, dims) with exact
-  distinct -> full-outer merge with the citations aggregate ->
-  date-spine zero-fill.
-Process boundaries (HTTP->Solr->ES->Postgres) become Spark stages.
+  filter) -> COUNTER filter -> exact counts per (date_trunc, dims)
+  from a two-level aggregate -> full-outer merge with the citations
+  aggregate -> date-spine zero-fill.
+The reference's process boundaries (HTTP->Solr->ES->Postgres) are not
+Spark stages here.  Under adaptive execution every shuffle stage is a
+job of its own, so a request whose inputs Spark already knows to be
+small (`ONE_PARTITION_BYTES`) moves its scoped events into one
+partition with one shuffle and runs the rest without an exchange:
+three jobs with the family collect.  Larger inputs, and inputs of
+unknown size, run the same program distributed.
 
 Known deviations from the reference, implemented intentionally
 (SURVEY.md §7.4 "reference bugs to not replicate silently"):
@@ -22,8 +28,8 @@ Known deviations from the reference, implemented intentionally
   -> intended semantics (a real nodeId equality filter).
 - `formatDataPerUser` stale month_index bug (metricsreader.py:1060-1068)
   -> correct outer merge for citation-only months.
-- "unique" counts use exact countDistinct, not the ES `cardinality`
-  HLL approximation.
+- "unique" counts are exact distinct eventId counts, not the ES
+  `cardinality` HLL approximation.
 """
 
 from __future__ import annotations
@@ -33,6 +39,8 @@ from datetime import datetime
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from metrics_service_spark.operators.driver import _bounded_arrow, _fits_bytes
 
 EXCLUDED_TAGS = (
     "ignore_ip",
@@ -45,6 +53,16 @@ EXCLUDED_TAGS = (
 
 AGG_FORMATS = {"month": "yyyy-MM", "day": "yyyy-MM-dd", "year": "yyyy"}
 CITATION_KEY_LEN = {"month": 7, "day": 10, "year": 4}
+
+# Identifier rows one request's filter may match; past it family_map
+# raises instead of collecting an unbounded family to the driver.
+FAMILY_ROWS = 100_000
+
+# Spark's size estimate, in bytes, up to which a request's events and
+# citations are each planned in one partition (SCALE.md crossover).
+# Keep it under spark.sql.maxSinglePartitionBytes (128 MB): past that
+# Spark shuffles one-partition join sides apart again.
+ONE_PARTITION_BYTES = 32 * 1024 * 1024
 
 
 @dataclass
@@ -65,6 +83,32 @@ def _cites_pid(pid: Column, target_id: Column) -> Column:
     of the lowercased pid, Dryad '?'-suffix stripped from the pid
     (metricsreader.py:423-468)."""
     return F.instr(F.lower(F.substring_index(pid, "?", 1)), F.lower(target_id)) > 0
+
+
+def _one_partition(events: DataFrame, citations: DataFrame) -> bool:
+    """Whether a request plans in one partition (see `plan`): both
+    size estimates are within ONE_PARTITION_BYTES."""
+    return _fits_bytes(events, ONE_PARTITION_BYTES) and _fits_bytes(
+        citations, ONE_PARTITION_BYTES
+    )
+
+
+def _format_counts(groups: DataFrame, keys: list[str]) -> DataFrame:
+    """Per `keys`: downloads and views (DATA and METADATA event totals)
+    and their unique eventId counts, from `groups`, the events counted
+    per (keys…, formatType, eventId).  A NULL eventId group counts
+    toward the totals and not the uniques, as countDistinct skips
+    NULLs.  Two plain aggregates instead of two countDistincts: the
+    distinct rewrite's Expand reports no partitioning, so it needs an
+    exchange even over one partition."""
+    is_data = F.col("formatType") == "DATA"
+    is_meta = F.col("formatType") == "METADATA"
+    return groups.groupBy(*keys).agg(
+        F.sum(F.when(is_data, F.col("count"))).alias("downloads"),
+        F.sum(F.when(is_meta, F.col("count"))).alias("views"),
+        F.count(F.when(is_data, F.col("eventId"))).alias("unique_downloads"),
+        F.count(F.when(is_meta, F.col("eventId"))).alias("unique_views"),
+    )
 
 
 def run_metrics_request(
@@ -91,9 +135,10 @@ class MetricsRequestPlanner:
         matches (reference: getResolvePIDs keyed by the requested pid,
         pid_resolution.py:285-416; catalogPIDs dict in
         metricsreader.py:480-508; identifiers-2 lookups,
-        metricsreader.py:1259-1343).  Resolved with ONE driver collect of
-        the matched identifier rows — the reference likewise resolves the
-        family in the client and ships it to ES as a `terms` list."""
+        metricsreader.py:1259-1343).  Resolved with ONE bounded driver
+        collect of the matched identifier rows — the reference likewise
+        resolves the family in the client and ships it to ES as a `terms`
+        list.  Raises ValueError past FAMILY_ROWS matched rows."""
         ids = self.t.identifiers
         vals = F.array(*[F.lit(v) for v in values])
         if filter_type in ("dataset", "catalog", "package"):
@@ -104,7 +149,9 @@ class MetricsRequestPlanner:
             )
 
             def hit(row, v):
-                return v in (row.PID, row.SID) or v in (row.datasetIdentifierFamily or ())
+                return v in (row["PID"], row["SID"]) or v in (
+                    row["datasetIdentifierFamily"] or ()
+                )
 
         elif filter_type in ("user", "group"):
             # user/group queries require public datasets
@@ -112,18 +159,28 @@ class MetricsRequestPlanner:
             matched = ids.filter(F.arrays_overlap("userID", vals) & F.col("isPublic"))
 
             def hit(row, v):
-                return v in (row.userID or ())
+                return v in (row["userID"] or ())
 
         else:
             raise ValueError(f"family_map does not apply to {filter_type!r}")
-        rows = matched.select("PID", "SID", "userID", "datasetIdentifierFamily").collect()
+        tbl = _bounded_arrow(
+            matched.select("PID", "SID", "userID", "datasetIdentifierFamily"),
+            FAMILY_ROWS,
+        )
+        if tbl is None:
+            raise ValueError(
+                f"{filter_type} filter {values!r} matches more than "
+                f"{FAMILY_ROWS} identifier rows; the family is a literal "
+                "IN-list in the request plan and must stay request-sized"
+            )
+        rows = tbl.to_pylist()
         fams = {}
         for v in values:
             members = set()
             for r in rows:
                 if hit(r, v):
-                    members.add(r.PID)
-                    members.update(r.datasetIdentifierFamily or ())
+                    members.add(r["PID"])
+                    members.update(r["datasetIdentifierFamily"] or ())
             members.discard(None)
             fams[v] = sorted(members)
         return fams
@@ -217,14 +274,17 @@ class MetricsRequestPlanner:
         return ev, family, meta
 
     # -- citations (process boundary #3 in the reference) -----------------
-    def citations_for_family(self, family: list[str] | None) -> DataFrame:
+    def citations_for_family(
+        self, family: list[str] | None, *, one_partition: bool = False
+    ) -> DataFrame:
         """gatherCitations (metricsreader.py:423-468): target_id matched
         as lowercase substring of a family pid, Dryad '?'-suffix
         stripped from the pid before comparison.  The family is a
         literal array, so the match is a per-row `exists` with no join;
         each citation counted once (reference breaks after first
-        matching pid)."""
-        cites = self.t.citations
+        matching pid).  `one_partition` coalesces the citations into
+        one partition first (see `plan`)."""
+        cites = self.t.citations.coalesce(1) if one_partition else self.t.citations
         if family is None:
             return cites
         matched = cites.filter(
@@ -236,7 +296,17 @@ class MetricsRequestPlanner:
     def plan(self, request: dict) -> DataFrame:
         """Build the full result DataFrame: one row per spine bucket
         (x country when grouped), with total/unique downloads & views
-        and citation counts, zero-filled."""
+        and citation counts, zero-filled.
+
+        When Spark's size estimates of the scoped events and of the
+        citations are both within `ONE_PARTITION_BYTES`, the events
+        enter one partition through one shuffle after the scope
+        filters (the scan keeps its tasks; a narrow coalesce would open
+        every file in one task) and the citations through a narrow
+        coalesce, which adds no job.  One partition satisfies every aggregate's,
+        the dedup's and the joins' distribution, so the rest of the
+        plan adds no exchange.  Past the bound, or for an input of
+        unknown size, the same code runs distributed."""
         group_by = list(request.get("groupBy", ["month"]))
         agg_type = next(
             (g for g in group_by if g in AGG_FORMATS), "month"
@@ -245,19 +315,18 @@ class MetricsRequestPlanner:
         fmt = AGG_FORMATS[agg_type]
 
         ev, family, meta = self.scoped_events(request)
-        bucket = F.date_format("dateLogged", fmt).alias("bucket")
-        dims = [bucket] + ([F.col("geoip.country_code2").alias("country")] if by_country else [])
-
-        is_data = F.col("formatType") == "DATA"
-        is_meta = F.col("formatType") == "METADATA"
-        agg = ev.groupBy(*dims).agg(
-            F.count(F.when(is_data, 1)).alias("downloads"),
-            F.count(F.when(is_meta, 1)).alias("views"),
-            F.countDistinct(F.when(is_data, F.col("eventId"))).alias("unique_downloads"),
-            F.countDistinct(F.when(is_meta, F.col("eventId"))).alias("unique_views"),
+        one = _one_partition(ev, self.t.citations)
+        if one:
+            ev = ev.repartition(1)
+        dims = ["bucket"] + (["country"] if by_country else [])
+        dim_cols = [F.date_format("dateLogged", fmt).alias("bucket")] + (
+            [F.col("geoip.country_code2").alias("country")] if by_country else []
+        )
+        agg = _format_counts(
+            ev.groupBy(*dim_cols, "formatType", "eventId").count(), dims
         )
 
-        cites = self.citations_for_family(family)
+        cites = self.citations_for_family(family, one_partition=one)
         key_len = CITATION_KEY_LEN[agg_type]
         cite_agg = (
             cites.filter(F.col("link_publication_date").isNotNull())
@@ -269,55 +338,52 @@ class MetricsRequestPlanner:
 
         merged = agg.join(cite_agg, "bucket", "full_outer")
 
-        spine = self._spine(meta, agg_type)
-        if spine is not None:
+        buckets = self._spine(meta, agg_type)
+        if buckets is not None:
+            if one:
+                # a full outer join reports no partitioning, though over
+                # one partition its output is one partition: say so, or
+                # the spine join shuffles both sides
+                merged = merged.coalesce(1)
             if by_country:
-                countries = agg.select("country").distinct()
-                spine = spine.crossJoin(F.broadcast(countries))
-                merged = spine.join(merged, ["bucket", "country"], "full_outer")
+                keys = agg.select("country").distinct()
             else:
-                merged = spine.join(merged, ["bucket"], "full_outer")
+                keys = self.spark.range(1, numPartitions=1)
+            spine = keys.select(F.explode(buckets).alias("bucket"), *dims[1:])
+            merged = spine.join(merged, dims, "full_outer")
 
-        out_cols = ["bucket"] + (["country"] if by_country else [])
         fills = ["downloads", "views", "unique_downloads", "unique_views", "citations"]
         # the reply is bounded by the request (spine buckets x countries)
         # and every input here is already aggregated per bucket, so one
         # partition sorts it: no range-partition sampling job or shuffle
         return (
             merged.select(
-                *out_cols,
+                *dims,
                 *[F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c) for c in fills],
             )
             .coalesce(1)
-            .sortWithinPartitions(*out_cols)
+            .sortWithinPartitions(*dims)
         )
 
-    def _spine(self, meta: dict, agg_type: str) -> DataFrame | None:
-        """Bucket spine over the requested range.  The reference builds
-        it with `range((end - start).days)` over day offsets and dedupes
-        the formatted keys (metricsreader.py:1029-1033) — the END DAY IS
+    def _spine(self, meta: dict, agg_type: str) -> Column | None:
+        """The bucket spine over the requested range, as one array of
+        distinct bucket keys.  The reference builds it with
+        `range((end - start).days)` over day offsets and dedupes the
+        formatted keys (metricsreader.py:1029-1033) — the END DAY IS
         EXCLUSIVE, so a range ending on the 1st of a month contributes
         no bucket for that month/day.  We generate days in [start, end)
         to match."""
         if meta["start"] is None:
             return None
         fmt = AGG_FORMATS[agg_type]
-        start = meta["start"].strftime("%Y-%m-%d")
-        end = meta["end"].strftime("%Y-%m-%d")
-        return (
-            self.spark.range(1)
-            .select(
-                F.explode(
-                    F.sequence(
-                        F.lit(start).cast("date"),
-                        F.lit(end).cast("date"),
-                        F.expr("INTERVAL 1 DAY"),
-                    )
-                ).alias("d")
+        start = F.lit(meta["start"].strftime("%Y-%m-%d")).cast("date")
+        end = F.lit(meta["end"].strftime("%Y-%m-%d")).cast("date")
+        days = F.sequence(start, end, F.expr("INTERVAL 1 DAY"))
+        return F.array_distinct(
+            F.transform(
+                F.filter(days, lambda d: d < end),  # end-exclusive
+                lambda d: F.date_format(d, fmt),
             )
-            .filter(F.col("d") < F.lit(end).cast("date"))  # end-exclusive
-            .select(F.date_format("d", fmt).alias("bucket"))
-            .distinct()
         )
 
     # -- catalog / search page summary -------------------------------------
@@ -386,39 +452,43 @@ class MetricsRequestPlanner:
         ev = self.counter_filtered_events().filter(
             F.col("pid").isin(sorted({p for _, p in seed_pids}))
         )
-        counts = (
+        one = _one_partition(ev, self.t.citations)
+        if one:
+            ev = ev.repartition(1)
+        counts = _format_counts(
             ev.select(
                 seeds_where(lambda m: m["pid"] == F.col("pid")), "formatType", "eventId"
             )
-            .groupBy("seed")
-            .agg(
-                F.countDistinct(
-                    F.when(F.col("formatType") == "DATA", F.col("eventId"))
-                ).alias("__dl"),
-                F.countDistinct(
-                    F.when(F.col("formatType") == "METADATA", F.col("eventId"))
-                ).alias("__vw"),
-            )
+            .groupBy("seed", "formatType", "eventId")
+            .count(),
+            ["seed"],
         )
         cites = (
-            self.t.citations.select(
+            self.citations_for_family(None, one_partition=one)
+            .select(
                 seeds_where(lambda m: _cites_pid(m["pid"], F.col("target_id"))),
                 "target_id",
                 "source_id",
             )
             .dropDuplicates(["seed", "target_id", "source_id"])
             .groupBy("seed")
-            .agg(F.count(F.lit(1)).alias("__ct"))
+            .agg(F.count(F.lit(1)).alias("citations"))
         )
-        seeds = self.spark.createDataFrame([(v,) for v in values], "seed string")
+        seeds = self.spark.range(1, numPartitions=1).select(
+            F.explode(F.array(*[F.lit(v) for v in values]).cast("array<string>")).alias("seed")
+        )
+        if one:
+            # one partition on every side: merge joins need no exchange,
+            # where a broadcast of either aggregate costs a job
+            counts, cites = counts.hint("merge"), cites.hint("merge")
         return (
             seeds.join(counts, "seed", "left")
             .join(cites, "seed", "left")
             .select(
                 "seed",
-                F.coalesce("__dl", F.lit(0)).cast("long").alias("downloads"),
-                F.coalesce("__vw", F.lit(0)).cast("long").alias("views"),
-                F.coalesce("__ct", F.lit(0)).cast("long").alias("citations"),
+                F.coalesce("unique_downloads", F.lit(0)).cast("long").alias("downloads"),
+                F.coalesce("unique_views", F.lit(0)).cast("long").alias("views"),
+                F.coalesce("citations", F.lit(0)).cast("long").alias("citations"),
             )
         )
 

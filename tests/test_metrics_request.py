@@ -121,9 +121,13 @@ def test_family_map_splits_families_by_seed(planner):
 def test_request_job_budget(planner, count_jobs):
     """A dataset-scoped month-range request runs 8 Spark jobs: the one
     driver collect of the identifier family, two event shuffles, two
-    citation shuffles, the spine's distinct, the merged aggregates'
-    shuffle onto the spine's bucket key, and the result.  No broadcast
-    theta-join of the family and no range-partitioned final sort."""
+    citation shuffles, the spine's shuffle onto the bucket key, the
+    merged aggregates' shuffle onto it, and the result.  No broadcast
+    theta-join of the family and no range-partitioned final sort.  The
+    fixture's tables come from `createDataFrame`, whose size Spark does
+    not know, so this is the distributed plan: an input of unknown size
+    never takes the one-partition path (see
+    `test_parquet_landing_request_job_budget`)."""
     req = request("dataset", ["doi:10.5063/A1"])
     out = {}
 
@@ -353,3 +357,194 @@ def test_oracle_mx_guard_fires_loudly():
     assert "SELECT 10000 AS mx" in breached
     with pytest.raises(Exception, match="series guard"):
         con.execute(breached).fetchall()
+
+
+# --- one-partition plans vs the distributed plan ---------------------------
+# `plan` and `catalog_summary_frame` move request-sized inputs into one
+# partition (ONE_PARTITION_BYTES).  Parquet-backed tables report their
+# size, so the gate fires on them; at bound 0 the same code runs
+# distributed.  Both must return the same rows.
+
+ADV_FAMILY = [("doi:10.5063/A1", "urn:sid:A", ["doi:10.5063/A1"], True, "METADATA",
+               ["uid=alice"], ["doi:10.5063/A1", "doi:10.5063/A2?ver=1"])]
+
+
+def _adv_event(eid, day, *, fmt="DATA", month=1, country="US", pid="doi:10.5063/A1"):
+    from metrics_service_spark.testing.fixtures import _ev
+
+    row = list(_ev(eid, pid, day, fmt=fmt, month=month))
+    row[16] = (country, "city", 1.0, 2.0)
+    return tuple(row)
+
+
+ADV_EVENTS = [
+    # Jan DATA: two NULL eventIds (totals only), k1, and k2 twice
+    _adv_event(None, 2),
+    _adv_event(None, 3),
+    _adv_event("k1", 4),
+    _adv_event("k2", 6),
+    _adv_event("k2", 6),
+    # Jan METADATA: k1 again, so one eventId is both a download and a view
+    _adv_event("k1", 5, fmt="METADATA"),
+    # Feb: a DATA row in DE and a METADATA row with a NULL country
+    _adv_event("k4", 11, month=2, country="DE"),
+    _adv_event("k3", 10, month=2, fmt="METADATA", country=None, pid="doi:10.5063/A2?ver=1"),
+]
+ADV_CITATIONS = [
+    # 2017-11 is a citation-only month; the Feb citation is listed twice
+    ("10.5063/a1", "doi:10.1000/src1", None, "2017-11-05", None, "t1", None, None, 2017, "cites"),
+    ("10.5063/a1", "doi:10.1000/src2", None, "2018-02-20", None, "t2", None, None, 2018, "cites"),
+    ("10.5063/a1", "doi:10.1000/src2", None, "2018-02-20", None, "t2", None, None, 2018, "cites"),
+]
+
+
+@pytest.fixture(scope="module")
+def parquet_planner(spark, tmp_path_factory):
+    """The adversarial events and citations, written to and read back
+    from parquet so Spark knows their size."""
+    from pyspark.sql import types as T
+
+    from metrics_service_spark.plans.metrics_request import MetricsTables
+    from metrics_service_spark.schemas import CITATION_SCHEMA, EVENT_SCHEMA, IDENTIFIER_SCHEMA
+
+    base = tmp_path_factory.mktemp("adv")
+    nullable = T.StructType([T.StructField(f.name, f.dataType, True) for f in EVENT_SCHEMA])
+    spark.createDataFrame(ADV_EVENTS, nullable).write.parquet(str(base / "events"))
+    spark.createDataFrame(ADV_CITATIONS, CITATION_SCHEMA).write.parquet(str(base / "cites"))
+    tables = MetricsTables(
+        events=spark.read.parquet(str(base / "events")),
+        identifiers=spark.createDataFrame(ADV_FAMILY, IDENTIFIER_SCHEMA),
+        citations=spark.read.parquet(str(base / "cites")),
+    )
+    return MetricsRequestPlanner(spark, tables)
+
+
+def _final_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+
+
+def _both_bounds(monkeypatch, build):
+    """`build()`'s collected rows and final plan at the default bound and
+    at bound 0."""
+    from metrics_service_spark.plans import metrics_request
+
+    out = []
+    for bound in (metrics_request.ONE_PARTITION_BYTES, 0):
+        monkeypatch.setattr(metrics_request, "ONE_PARTITION_BYTES", bound)
+        df = build()
+        out.append(([tuple(r) for r in df.collect()], _final_plan(df)))
+    monkeypatch.undo()
+    return out
+
+
+ADV_REQUESTS = {
+    "month": request("dataset", ["doi:10.5063/A1"]),
+    "month_country": request("dataset", ["doi:10.5063/A1"], group_by=["month", "country"]),
+    "day_country": request("dataset", ["doi:10.5063/A1"], group_by=["day", "country"]),
+    "no_range": {**request("dataset", ["doi:10.5063/A1"]), "filterBy": [
+        {"filterType": "dataset", "values": ["doi:10.5063/A1"], "interpretAs": "list"}]},
+    "repository": request("repository", ["urn:node:KNB"], group_by=["year"]),
+    "user": request("user", ["uid=alice"]),
+}
+
+
+@pytest.mark.parametrize("name", sorted(ADV_REQUESTS))
+def test_one_partition_plan_equals_distributed(parquet_planner, monkeypatch, name):
+    (one, one_plan), (dist, dist_plan) = _both_bounds(
+        monkeypatch, lambda: parquet_planner.plan(ADV_REQUESTS[name])
+    )
+    assert sorted(one, key=repr) == sorted(dist, key=repr)
+    assert "SinglePartition, REPARTITION_BY_NUM" in one_plan
+    assert "REPARTITION_BY_NUM" not in dist_plan
+
+
+def test_one_partition_uniques_by_hand(parquet_planner):
+    """NULL eventIds count toward totals only, an eventId read as DATA
+    and as METADATA is unique on both sides, a repeated row is one
+    unique, and the citation-only month and the deduplicated citation
+    are outer-merged."""
+    rows = _rows(parquet_planner.plan(ADV_REQUESTS["month"]))
+    # (bucket, downloads, views, unique_downloads, unique_views, citations)
+    assert rows == [
+        ("2017-11", 0, 0, 0, 0, 1),
+        ("2018-01", 5, 1, 2, 1, 0),
+        ("2018-02", 1, 1, 1, 1, 1),
+    ]
+    by_country = [
+        r for r in _rows(parquet_planner.plan(ADV_REQUESTS["month_country"])) if any(r[2:])
+    ]
+    assert sorted(by_country, key=repr) == sorted([
+        ("2017-11", None, 0, 0, 0, 0, 1),
+        ("2018-01", "US", 5, 1, 2, 1, 0),
+        ("2018-02", None, 0, 1, 0, 1, 1),
+        ("2018-02", "DE", 1, 0, 1, 0, 1),
+    ], key=repr)
+
+
+def test_one_partition_catalog_summary_equals_distributed(parquet_planner, monkeypatch):
+    req = {"filterBy": [{"filterType": "catalog", "interpretAs": "list",
+                         "values": ["doi:10.5063/A1", "urn:sid:A", "doi:10.5063/NONE"]}]}
+    (one, one_plan), (dist, dist_plan) = _both_bounds(
+        monkeypatch, lambda: parquet_planner.catalog_summary_frame(req)
+    )
+    # (seed, downloads, views, citations): uniques of the whole family
+    want = [("doi:10.5063/A1", 3, 2, 2), ("doi:10.5063/NONE", 0, 0, 0), ("urn:sid:A", 3, 2, 2)]
+    assert sorted(one) == sorted(dist) == want
+    assert "SinglePartition, REPARTITION_BY_NUM" in one_plan
+    assert "REPARTITION_BY_NUM" not in dist_plan
+
+
+REQUEST_ENTRIES = [
+    "metrics_request_landing",
+    "metrics_request_daily_country",
+    "metrics_request_user",
+    "metrics_request_repository",
+    "metrics_request_portal",
+    "metrics_request_group",
+    "metrics_request_package",
+    "metrics_request_catalog_summary",
+]
+
+
+@pytest.mark.parametrize("name", REQUEST_ENTRIES)
+def test_request_entries_equal_at_both_bounds(spark, sf_dir, monkeypatch, name):
+    from metrics_service_spark.catalog import all_queries
+
+    fn = all_queries()[name].fn
+    (one, one_plan), (dist, dist_plan) = _both_bounds(monkeypatch, lambda: fn(spark, sf_dir))
+    assert sorted(one, key=repr) == sorted(dist, key=repr)
+    assert "SinglePartition, REPARTITION_BY_NUM" in one_plan
+    assert "REPARTITION_BY_NUM" not in dist_plan
+
+
+def test_parquet_landing_request_job_budget(spark, sf_dir, count_jobs):
+    """The landing request over parquet-backed tables runs 3 Spark jobs:
+    the family collect, the one shuffle that moves the scoped events
+    into one partition, and the result.  The final plan holds exactly
+    that one Exchange."""
+    from metrics_service_spark.catalog.request import LANDING_REQUEST, _tables
+    from metrics_service_spark.plans.metrics_request import run_metrics_request
+
+    tables = _tables(spark, sf_dir)
+    out = {}
+
+    def run():
+        out["df"] = run_metrics_request(spark, LANDING_REQUEST, tables)
+        out["rows"] = out["df"].collect()
+
+    assert count_jobs(run) == 3
+    assert len(out["rows"]) == 3
+    final = _final_plan(out["df"])
+    assert final.count("Exchange ") == 1
+    assert "Exchange SinglePartition" in final
+
+
+def test_family_collect_is_bounded(planner, monkeypatch):
+    """Past FAMILY_ROWS matched identifier rows the family resolution
+    raises instead of collecting an unbounded family."""
+    from metrics_service_spark.plans import metrics_request
+
+    monkeypatch.setattr(metrics_request, "FAMILY_ROWS", 1)
+    assert planner.family_map("dataset", ["doi:10.5063/B1"]) == {"doi:10.5063/B1": ["doi:10.5063/B1"]}
+    with pytest.raises(ValueError, match="more than 1 identifier rows"):
+        planner.family_map("dataset", ["doi:10.5063/A1", "doi:10.5063/B1"])

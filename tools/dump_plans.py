@@ -96,10 +96,10 @@ COMMENTARY = {
     "mm_scene_cuts": "ONE Arrow pass through the media seam emits frame-signature rows; the cut test is a per-media lag window over FRAME rows (frame mass ~ media count x sample rate, never pixel mass)",
     "ev_session_quantiles": "the audited sessionizer output collapses to a (day, seconds) histogram; per-day quantile windows run over distinct durations — the ev_sessionize shuffle is the only corpus-mass exchange",
     "doc_linkage_incremental": "batch-vs-corpus block equi-join (never a corpus self-join); the corpus-cell max_cell broadcast prune fires BEFORE the join; per-candidate codegen levenshtein",
-    "metrics_request_landing": "the dispatcher end-to-end: identifier family resolved by one driver collect into a pid IN-list (the reference's `terms` filter) pushed to the scan with the COUNTER filter, monthly agg, citations matched by a per-row `exists` over the family literal (no join), full-outer merge, single-partition final sort (no range-partition exchange) — process boundaries in the reference, stages here",
-    "metrics_request_daily_country": "adds the date-range scope (strict-gt/lte pushed through the adapter aliases to PushedFilters — plan-gated), day x country agg, end-exclusive spine crossJoin(broadcast countries), bucket-only citations join",
+    "metrics_request_landing": "the dispatcher end-to-end: identifier family resolved by one bounded driver collect into a pid IN-list (the reference's `terms` filter) pushed to the scan with the COUNTER filter; inputs within ONE_PARTITION_BYTES, so the scoped events enter one partition through the plan's ONLY exchange (SinglePartition) and the citations through a narrow Coalesce 1; the two-level exact-count agg (no Expand), the citation dedup (a per-row `exists` over the family literal, no join), the full-outer merge and the final sort add no exchange — 3 jobs with the family collect",
+    "metrics_request_daily_country": "adds the date-range scope (strict-gt/lte pushed through the adapter aliases to PushedFilters — plan-gated), day x country agg, end-exclusive spine exploded from one bucket array per country (no cross join, no broadcast), bucket-only citations join; the countries branch prunes its own scan, so two SinglePartition exchanges and no other",
     "metrics_request_user": "the user dispatch path: family from userID membership AND isPublic (one driver collect of the matched identifier rows), then the landing shape — the scope that must EXCLUDE private datasets",
-    "metrics_request_repository": "repository scope is a pure scan predicate on the adapter's nodeId (no identifier family — the citations side is the UNSCOPED relation, mirroring gatherCitations without a target set); YEAR buckets with the 4-char citation key",
+    "metrics_request_repository": "repository scope is a pure scan predicate on the adapter's nodeId (no identifier family — the citations side is the UNSCOPED relation, mirroring gatherCitations without a target set); YEAR buckets with the 4-char citation key; the spine join stays in the one partition (Coalesce 1 above the first full-outer merge), so no exchange besides the events' SinglePartition one",
     "doc_bpe_train": "the returned frame is the k-row merge table (local scan BY DESIGN); the training work is ONE corpus-sized word-frequency shuffle + a bounded vocab collect — the merge loop runs driver-local (incremental pair counts + lazy heap), so total Spark jobs are O(1) regardless of n_merges (job-count-gated in tests/test_r15_guards.py)",
     "doc_bpe_apply": "train via the driver-local finish, then apply the STORED table: one shared (checkpointed) word-frequency pass feeds the train collect and the replay vocab; the merges replay as chained codegen flat-string projections (no exchange per merge), then one vocab-sized unit join + one per-doc agg — out-of-vocab tokens take the coalesce fallback",
     "doc_lm_fclass": "TWO occurrence-mass shuffles by design (bigram count build + train/probe join, the doc_bigram_coherence class twice); _spread above the explode; frequency class is integer binary-length, computed after the join on count rows",
@@ -113,7 +113,7 @@ COMMENTARY = {
     "metrics_request_package": "two-seed PID/SID/family expansion resolved on the driver into one sorted IN-list — the SID match arm end-to-end; no date filter so no spine, buckets full-outer the citation months",
     "emb_knn_pagerank_conserving": "emb_knn_pagerank's audited shape (per round one src-keyed join + one dst-keyed map-side-combined agg) plus ONE per-round dangling sum — a filter on the carried out-degree (__deg IS NULL) collapsed to a single broadcast row, no anti-join; no collect, no convergence tail",
     "doc_bpe_fertility": "bpe_apply_stored's zero-training-jobs skeleton with the group columns riding the token stream: one vocab replay, one token join, ONE language-keyed aggregation — output is |langs| rows, integer basis-point fertility",
-    "metrics_request_catalog_summary": "per-seed families resolved by one driver collect into a literal (seed, pid) array that tags events (after a pid IN-list) and citations with their seeds — no join, no broadcast — + ONE seed-keyed unique-count aggregation; one zero-filled row per requested id",
+    "metrics_request_catalog_summary": "per-seed families resolved by one bounded driver collect into a literal (seed, pid) array that tags events (after a pid IN-list) and citations with their seeds — no join — + ONE seed-keyed two-level unique-count aggregation over the one-partition events; the requested ids explode from a literal on one split and merge-join both aggregates without a broadcast; one zero-filled row per requested id",
     "doc_bpe_apply_m48": "doc_bpe_apply_stored's zero-training-jobs skeleton at 48 merges: the replay chain crosses its localCheckpoint(every=32) boundary, so the plan roots at a checkpointed VOCAB-sized RDD scan (never the corpus) with the post-checkpoint merge projections above it; corpus tokens still touched exactly once by the unit join + per-doc agg",
     "doc_vocab_budget": "the fertility report's consumer: the corpus-mass work is bpe_apply_stats' audited one-pass shape collapsing to |langs| rows; the Hamilton apportionment is two SinglePartition windows + integer projections over that tiny frame — exact budget sum at zero corpus cost",
     "search_stream_batch_twin": "the streaming ingest's transform graph on a batch frame: pure per-row codegen (regexp + kv + md5 + hour format); only the batch seam's raw-rows _spread exchange, no key-based shuffle — identical per-micro-batch transform under readStream",
