@@ -293,7 +293,8 @@ FROM agg a FULL JOIN cagg c ON a.bucket = c.bucket
 # Daily/country variant: the dispatcher joins citations on bucket ONLY
 # (so within the spine a day's citation count repeats across that
 # day's country rows, and citation-only days surface with NULL
-# country), then full-outers the (day x observed-countries) spine —
+# country), then full-outers the (day x observed-countries) spine,
+# null-safe on country so a NULL country is one row per day —
 # mirrored stage by stage below.
 ORACLE_DAILY_COUNTRY_REQUEST = f"""
 WITH {_REQUEST_CTES},
@@ -337,7 +338,7 @@ SELECT COALESCE(s.bucket, m.bucket) AS bucket,
        CAST(COALESCE(m.unique_views, 0) AS BIGINT) AS unique_views,
        CAST(COALESCE(m.citations, 0) AS BIGINT) AS citations
 FROM spine s
-FULL JOIN merged m ON s.bucket = m.bucket AND s.country = m.country
+FULL JOIN merged m ON s.bucket = m.bucket AND s.country IS NOT DISTINCT FROM m.country
 """
 
 

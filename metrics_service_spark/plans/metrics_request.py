@@ -337,6 +337,7 @@ class MetricsRequestPlanner:
         )
 
         merged = agg.join(cite_agg, "bucket", "full_outer")
+        fills = ["downloads", "views", "unique_downloads", "unique_views", "citations"]
 
         buckets = self._spine(meta, agg_type)
         if buckets is not None:
@@ -350,9 +351,14 @@ class MetricsRequestPlanner:
             else:
                 keys = self.spark.range(1, numPartitions=1)
             spine = keys.select(F.explode(buckets).alias("bucket"), *dims[1:])
-            merged = spine.join(merged, dims, "full_outer")
+            # null-safe, so a NULL country's aggregate row meets its
+            # spine row: one row per (bucket, country)
+            on = [F.col(f"s.{d}").eqNullSafe(F.col(f"m.{d}")) for d in dims]
+            merged = spine.alias("s").join(merged.alias("m"), on, "full_outer").select(
+                *[F.coalesce(F.col(f"s.{d}"), F.col(f"m.{d}")).alias(d) for d in dims],
+                *[F.col(f"m.{c}") for c in fills],
+            )
 
-        fills = ["downloads", "views", "unique_downloads", "unique_views", "citations"]
         # the reply is bounded by the request (spine buckets x countries)
         # and every input here is already aggregated per bucket, so one
         # partition sorts it: no range-partition sampling job or shuffle

@@ -37,11 +37,17 @@ protocol those formats use, from parquet + JSON primitives only:
   untouched partitions carry their files forward by reference.
   Replaying the same batch converges to the same state, so
   foreachBatch retries are safe.
-- MERGE and DELETE collect the batch's distinct keys to the driver
-  once and use them twice: recorded key ranges skip files before the
-  key probe, and a literal IN list filters the probe and the rewrite.
-  The key set of one batch must fit on the driver (a broadcast join of
-  it would need the same).
+- MERGE and DELETE collect the batch's keys to the driver once, one
+  Arrow table of at most `KEY_ROWS` rows (past it they raise), and use
+  them three times: recorded key ranges skip files before the key
+  probe, the probe tests the remaining files for a key, and a literal
+  IN list filters the rewrite.  The key set of one batch must fit on
+  the driver (a broadcast join of it would need the same).
+- The key probe runs on the driver, with no Spark job, when the
+  range-admitted files record at most `PROBE_ROWS` rows in all and
+  their integral key columns are data columns pyarrow reads as Spark
+  does; otherwise a column-pruned Spark scan probes them (see
+  `_files_holding_keys`).
 
 At 100 TB the manifest lists file paths, partition values and a few
 integers of stats per file (KBs per thousand files) and the MERGE
@@ -62,6 +68,7 @@ from bisect import bisect_left
 from contextlib import contextmanager
 from urllib.parse import unquote, urlparse
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,7 +85,18 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from metrics_service_spark.operators.driver import _bounded_arrow
+
 _MANIFEST_DIR = "_manifests"
+
+#: Batch rows MERGE and DELETE collect to the driver for their key set
+#: (MERGE's with its partition values); past it they raise.
+KEY_ROWS = 1_000_000
+
+#: Recorded rows of the range-admitted files up to which the key probe
+#: reads their key columns on the driver instead of launching a Spark
+#: job (SCALE.md crossover).
+PROBE_ROWS = 10_000_000
 
 # Spark/Hive encode special chars in partition directory names as %XX
 # (escapePathName) and NULL as this sentinel.  Manifest entries store
@@ -129,6 +147,8 @@ def _stage_of(entry: dict) -> str:
 #: The integral types, which record min/max stats, with their SQL
 #: literal suffixes.
 _INTEGRAL = {ByteType: "Y", ShortType: "S", IntegerType: "", LongType: "L"}
+#: Their type names in a recorded schema.
+_INTEGRAL_NAMES = {t.typeName() for t in _INTEGRAL}
 
 
 def _footer_stats(path: str, integral: set[str]) -> dict:
@@ -352,10 +372,32 @@ def _read_files(
     return out
 
 
-def _distinct_keys(rows: list, key_cols: list[str]) -> set[tuple]:
-    """The distinct key tuples of collected `rows`, less those with a
-    NULL component: an equi-join never matches them."""
-    keys = {tuple(r[c] for c in key_cols) for r in rows}
+def _collect_keys(df: DataFrame, cols: list[str]) -> pa.Table:
+    """`df`'s `cols` as one Arrow table, in one Spark job; raises past
+    `KEY_ROWS` rows rather than collect an unbounded batch."""
+    tbl = _bounded_arrow(df.select(*cols), KEY_ROWS)
+    if tbl is None:
+        raise ValueError(
+            f"the key batch holds more than {KEY_ROWS} rows; MERGE and "
+            "DELETE hold a batch's keys on the driver, so split the batch"
+        )
+    return tbl
+
+
+def _py_values(tbl: pa.Table, field: StructField) -> list:
+    """Column `field` of a collected `tbl` as `collect()` gives its
+    values: a timestamp as a naive local datetime."""
+    col = tbl.column(field.name)
+    if isinstance(field.dataType, TimestampType):
+        return [field.dataType.fromInternal(v) for v in col.cast(pa.int64()).to_pylist()]
+    return col.to_pylist()
+
+
+def _distinct_keys(tbl: pa.Table, fields: list[StructField]) -> set[tuple]:
+    """The distinct key tuples, the columns `fields`, of a collected
+    `tbl`, less those with a NULL component: an equi-join never
+    matches them."""
+    keys = set(zip(*(_py_values(tbl, f) for f in fields)))
     return {k for k in keys if None not in k}
 
 
@@ -440,26 +482,85 @@ def _may_hold_keys(
     return [e for e in entries if admits(e)]
 
 
+def _lacks_keys(entry: dict, schemas: dict[str, dict], key_cols: list[str]) -> bool:
+    """Whether `entry`'s stage recorded a schema without some key
+    column (partition columns aside): a read fills the column with
+    NULL there, so the file holds no key."""
+    stage = _stage_of(entry)
+    if stage not in schemas:
+        return False
+    names = {f["name"].lower() for f in schemas[stage]["fields"]}
+    names |= {p.lower() for p in entry["partition"]}
+    return any(c.lower() not in names for c in key_cols)
+
+
+def _probe_on_driver(entries: list[dict], schemas: dict[str, dict], keys: pa.Table) -> bool:
+    """Whether the driver can probe `entries` for `keys` exactly as
+    Spark reads them: at most `PROBE_ROWS` recorded rows in all,
+    integral key columns in the batch and in every stage's recorded
+    schema, under the key's own name (Spark would also resolve a name
+    that matches only case-insensitively), and no key in a partition
+    column."""
+    if any("rows" not in e for e in entries):
+        return False
+    if sum(e["rows"] for e in entries) > PROBE_ROWS:
+        return False
+    if not all(pa.types.is_integer(t) for t in keys.schema.types):
+        return False
+    cols = keys.column_names
+    folded = {c.lower() for c in cols}
+    if any(p.lower() in folded for e in entries for p in e["partition"]):
+        return False
+    for stage in {_stage_of(e) for e in entries}:
+        if stage not in schemas:
+            return False
+        named = [f for f in schemas[stage]["fields"] if f["name"].lower() in folded]
+        if sorted(f["name"] for f in named) != sorted(cols):
+            return False
+        if any(f["type"] not in _INTEGRAL_NAMES for f in named):
+            return False
+    return True
+
+
 def _files_holding_keys(
     spark: SparkSession,
     table_dir: str,
     entries: list[dict],
     schemas: dict[str, dict],
-    key_cols: list[str],
+    keys: pa.Table,
     member: Column,
 ) -> list[dict]:
-    """The entries whose files hold a row `member` matches: a
-    column-pruned key-probe scan (key columns only — the touched-file
-    scan Delta MERGE runs) of `entries`, which the callers first narrow
-    with `_may_hold_keys`; with no entry left no job runs.  Matching by
-    input_file_name, not partition value, sidesteps Hive
+    """The entries whose files hold one of `keys` (the collected key
+    columns, one row per batch row; `member` is their membership
+    filter), in manifest order.  The callers first narrow `entries`
+    with `_may_hold_keys`; a stage whose recorded schema lacks a key
+    column holds none; with no entry left nothing runs.
+
+    Small probes run on the driver (see `_probe_on_driver`): pyarrow
+    reads the key columns of each file and semi-joins them with `keys`,
+    cast to int64, with no Spark job.  Otherwise one column-pruned
+    key-probe scan (key columns only — the touched-file scan Delta
+    MERGE runs) filtered by `member` matches rows to files by
+    input_file_name, not partition value, which sidesteps Hive
     partition-type inference (a string partition "01" reads back as
     int 1 and would never match its manifest string).  The match is on
     the path relative to the table directory: one write task gives its
     file the same name in every partition it writes, so a basename
     would match them all."""
+    key_cols = keys.column_names
+    entries = [e for e in entries if not _lacks_keys(e, schemas, key_cols)]
     if not entries:
         return []
+    if _probe_on_driver(entries, schemas, keys):
+        as_long = pa.schema([(c, pa.int64()) for c in key_cols])
+        wanted = keys.drop_null().cast(as_long)
+
+        def holds(e: dict) -> bool:
+            path = os.path.join(table_dir, e["path"])
+            got = pq.ParquetFile(path).read(columns=key_cols).select(key_cols)
+            return got.cast(as_long).join(wanted, key_cols, join_type="left semi").num_rows > 0
+
+        return [e for e in entries if holds(e)]
     probe = (
         _read_files(spark, table_dir, entries, schemas)
         .select(*key_cols, F.input_file_name().alias("__file"))
@@ -570,10 +671,10 @@ def merge_table(
     state-table layout.  Idempotent under replay.  A batch row whose
     key holds a NULL is inserted and replaces nothing.
 
-    Driver bound: one collect brings the batch's partition and key
-    columns (one row per batch row) to the driver, which keeps their
-    distinct values; the batch's keys must fit there (a broadcast of
-    its key set would need the same).
+    Driver bound: one Arrow collect brings the batch's partition and
+    key columns (one row per batch row) to the driver, and a batch of
+    more than `KEY_ROWS` rows raises ValueError; the batch's keys must
+    fit there (a broadcast of its key set would need the same).
 
     `expected_base` pins the snapshot the caller computed `updates`
     against: if another writer committed in between (current version
@@ -599,11 +700,14 @@ def merge_table(
     manifest = _read_manifest(table_dir, base)
     entries, schemas = manifest["files"], manifest["schemas"]
     # one collect gives both the touched partitions and the key set
-    rows = updates.select(*dict.fromkeys(partition_cols + key_cols)).collect()
-    keys = _distinct_keys(rows, key_cols)
-    member = _member([updates.schema[c] for c in key_cols], keys)
+    tbl = _collect_keys(updates, list(dict.fromkeys(partition_cols + key_cols)))
+    fields = [updates.schema[c] for c in key_cols]
+    keys = _distinct_keys(tbl, fields)
+    member = _member(fields, keys)
     if partition_cols:
-        touched = {tuple(str(r[c]) for c in partition_cols) for r in rows}
+        touched = set(zip(*(
+            map(str, _py_values(tbl, updates.schema[c])) for c in partition_cols
+        )))
         hit = [
             e
             for e in entries
@@ -615,7 +719,7 @@ def merge_table(
             # holding an updated key into the rewrite set
             extra_hit = _files_holding_keys(
                 spark, table_dir, _may_hold_keys(carried, key_cols, keys),
-                schemas, key_cols, member,
+                schemas, tbl.select(key_cols), member,
             )
             hit += extra_hit
             carried = [e for e in carried if e not in extra_hit]
@@ -647,10 +751,11 @@ def delete_from_table(
     manifest by reference.  The touched-file set comes from the
     key-probe MERGE uses, matched on each file's path in the table, so
     cost tracks the files containing deleted keys, not the table.  The
-    distinct `keys` are collected to the driver once and must fit
-    there, as MERGE's do.  Old versions still contain the rows —
-    run `vacuum` after the retention window to physically reclaim them
-    (the same two-step contract as Delta DELETE + VACUUM).  Returns the
+    `keys` are collected to the driver once and must fit there, as
+    MERGE's do: more than `KEY_ROWS` rows raise ValueError.  Old
+    versions still contain the rows — run `vacuum` after the retention
+    window to physically reclaim them (the same two-step contract as
+    Delta DELETE + VACUUM).  Returns the
     new version (the current one if no key matched)."""
     base = current_version(table_dir)
     if expected_base is not None and base != expected_base:
@@ -662,11 +767,13 @@ def delete_from_table(
         raise FileNotFoundError(f"no committed version under {table_dir}")
     manifest = _read_manifest(table_dir, base)
     entries, schemas = manifest["files"], manifest["schemas"]
-    keyset = _distinct_keys(keys.select(*key_cols).collect(), key_cols)
-    member = _member([keys.schema[c] for c in key_cols], keyset)
+    tbl = _collect_keys(keys, key_cols)
+    fields = [keys.schema[c] for c in key_cols]
+    keyset = _distinct_keys(tbl, fields)
+    member = _member(fields, keyset)
     hit = _files_holding_keys(
         spark, table_dir, _may_hold_keys(entries, key_cols, keyset),
-        schemas, key_cols, member,
+        schemas, tbl, member,
     )
     if not hit:
         return base

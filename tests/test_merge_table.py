@@ -9,11 +9,13 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from metrics_service_spark.plans.gold import metrics_star
 from metrics_service_spark.sources.eventlog import eventlog_view
+from metrics_service_spark.sources import merge_table as mt
 from metrics_service_spark.sources.merge_table import (
     ConflictError,
     current_version,
@@ -21,6 +23,10 @@ from metrics_service_spark.sources.merge_table import (
     merge_table,
     overwrite_table,
     read_table,
+    _collect_keys,
+    _distinct_keys,
+    _files_holding_keys,
+    _may_hold_keys,
     _member,
     vacuum,
 )
@@ -672,7 +678,9 @@ def test_two_column_key_merge_and_delete(spark, tmp_path):
 
 def test_membership_literals_for_every_key_type(spark):
     """The membership filter's SQL literals equal the collected key
-    values for each column type a key may have: quotes and backslashes
+    values for each column type a key may have, and the key set that
+    MERGE and DELETE collect through Arrow holds the values and gives
+    the literals that `collect()` gives: quotes and backslashes
     in strings, dates, both timestamp kinds, decimals, bytes, floats,
     booleans.  A struct key of narrower literals matches wider
     columns, as when a batch's key types are narrower than the
@@ -692,11 +700,23 @@ def test_membership_literals_for_every_key_type(spark):
         "b byte, h short, i int, l long, s string, d date, t timestamp, "
         "n timestamp_ntz, m decimal(6,2), x binary, f double, z boolean",
     )
-    first = df.collect()[0]
+    rows = df.collect()
+    first = rows[0]
+
+    def collected(cols):
+        """The key set as MERGE and DELETE collect it."""
+        fields = [df.schema[c] for c in cols]
+        return fields, _distinct_keys(_collect_keys(df, cols), fields)
+
     for c in df.columns:
-        member = _member([df.schema[c]], {(first[c],)})
+        fields, keys = collected([c])
+        assert keys == {(r[c],) for r in rows}, c
+        member = _member(fields, {(first[c],)})
+        assert str(_member(fields, {k for k in keys if k == (first[c],)})) == str(member), c
         assert df.filter(member).collect() == [first], c
-    pair = _member([df.schema["i"], df.schema["s"]], {(3, "a'b\\c"), (7, "b")})
+    fields, keys = collected(["i", "s"])
+    assert keys == {(3, "a'b\\c"), (7, "a'b")}
+    pair = _member(fields, {(3, "a'b\\c"), (7, "b")})
     assert df.filter(pair).collect() == [first]
     wide = df.selectExpr("CAST(h AS long) AS h", "CAST(i AS long) AS i")
     narrow = _member([df.schema["h"], df.schema["i"]], {(2, 3), (6, 3)})
@@ -853,6 +873,16 @@ def _commits(spark, tdir, n):
 
 
 def test_manifest_layer_job_budget(spark, tmp_path, count_jobs):
+    _manifest_layer_job_budget(spark, tmp_path, count_jobs)
+
+
+def test_manifest_layer_job_budget_spark_probe(spark, tmp_path, count_jobs, monkeypatch):
+    """The same budget with the key probe on Spark (`PROBE_ROWS` 0)."""
+    monkeypatch.setattr(mt, "PROBE_ROWS", 0)
+    _manifest_layer_job_budget(spark, tmp_path, count_jobs)
+
+
+def _manifest_layer_job_budget(spark, tmp_path, count_jobs):
     """Reads plan from the manifest: no Spark job on a table of several
     commits (see `test_manifest_reads_list_files_on_the_driver` for
     tables past Spark's parallel-listing threshold).  MERGE and DELETE
@@ -860,7 +890,10 @@ def test_manifest_layer_job_budget(spark, tmp_path, count_jobs):
     without a key probe, so cost does not grow with the commit count.
     A merge whose keys fall outside every carried file's recorded key
     range launches no probe job: it costs what a merge that skips the
-    probe by contract costs, and less than one whose key needs it."""
+    probe by contract costs.  A merge whose key needs the probe costs
+    the same on the driver probe and more on the Spark probe
+    (`PROBE_ROWS` 0); DELETE is 2 jobs on the driver probe, the key
+    collect and the write."""
     _commits(spark, str(tmp_path / "r"), 3)
     assert count_jobs(lambda: read_table(spark, str(tmp_path / "r"))) == 0
 
@@ -889,9 +922,13 @@ def test_manifest_layer_job_budget(spark, tmp_path, count_jobs):
     # key 11 (21) lies in part 1's (part 2's) range only: those merges
     # probe one carried file each, at the same cost at 2 and 5 commits
     probed = merge_jobs(5, keys=(0, 21))
-    assert probed > pruned
     assert probed == merge_jobs(2, keys=(0, 11))
     assert delete_jobs(2) == delete_jobs(5)
+    if mt.PROBE_ROWS:
+        assert probed == pruned
+        assert delete_jobs(3) == 2
+    else:
+        assert probed > pruned
 
 
 def _wide(spark, tdir, n_parts):
@@ -905,12 +942,24 @@ def _wide(spark, tdir, n_parts):
 
 
 def test_manifest_reads_list_files_on_the_driver(spark, tmp_path, count_jobs):
+    _manifest_reads_list_files_on_the_driver(spark, tmp_path, count_jobs)
+
+
+def test_manifest_reads_list_files_on_the_driver_spark_probe(
+    spark, tmp_path, count_jobs, monkeypatch
+):
+    """The same listing with the key probe on Spark (`PROBE_ROWS` 0)."""
+    monkeypatch.setattr(mt, "PROBE_ROWS", 0)
+    _manifest_reads_list_files_on_the_driver(spark, tmp_path, count_jobs)
+
+
+def _manifest_reads_list_files_on_the_driver(spark, tmp_path, count_jobs):
     """A read of more than 32 files (Spark's parallel-listing threshold)
     plans without any Spark job, and MERGE and DELETE, whose key probe
     reads every file but the touched one, cost the same at 20 and at 40
-    live files.  Every read leaves the session's listing threshold as it
-    found it, also one that raises on a file the manifest names but the
-    disk lacks."""
+    live files, on the driver probe and on the Spark probe.  Every read
+    leaves the session's listing threshold as it found it, also one
+    that raises on a file the manifest names but the disk lacks."""
     threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     before = spark.conf.get(threshold)
     wide = str(tmp_path / "wide")
@@ -1005,3 +1054,195 @@ def test_merge_and_delete_without_recorded_stats(spark, tmp_path):
     after_merge, after_delete = got[0]
     assert [(p, v) for k, p, v in after_merge if k == 21] == [(0, "moved")]
     assert {k for k, _, _ in after_merge} - {k for k, _, _ in after_delete} == {11, 22, 30}
+
+
+# --- the key probe on the driver vs the Spark probe ------------------------
+# `_files_holding_keys` reads small probes' key columns with pyarrow
+# (`PROBE_ROWS`); at bound 0 the Spark probe runs.  Both must find the
+# same files, and MERGE and DELETE must leave the same rows.  Every
+# table has a `part` partition column and a string `v`.
+
+
+def _integral(spark, tdir):
+    """Byte, short, int and long keys, each NULL on some rows, in files
+    of several row groups.  Partition 0 holds even bytes and shorts
+    only, the others odd ones, so every file's key range admits both."""
+    p = F.col("id") % 3
+    odd = (p != 0).cast("int")
+
+    def nulled(every, value):
+        return F.when(F.col("id") % every == 0, None).otherwise(value)
+
+    df = spark.range(3000).select(
+        nulled(11, F.col("id") % 50 * 2 + odd).cast("byte").alias("b"),
+        nulled(13, F.col("id") % 500 * 2 + odd).cast("short").alias("h"),
+        nulled(17, F.col("id")).cast("int").alias("i"),
+        nulled(19, F.col("id") * 10**9).alias("l"),
+        p.cast("int").alias("part"),
+        F.lit("a").alias("v"),
+    )
+    spark.conf.set("parquet.block.size", "2048")
+    try:
+        overwrite_table(df.repartition(2, "i"), tdir, partition_cols=["part"])
+    finally:
+        spark.conf.unset("parquet.block.size")
+    assert all(
+        pq.read_metadata(os.path.join(tdir, e["path"])).num_row_groups > 1
+        for e in _manifest(tdir)["files"]
+    )
+
+
+def _pairs(spark, tdir):
+    """(year, month) keys, a NULL month among them, over two commits."""
+    schema = "year int, month int, part int, v string"
+    overwrite_table(spark.createDataFrame(
+        [(2023, 1, 0, "a"), (2023, 2, 1, "a"), (2024, 1, 0, "a"), (2024, None, 1, "a")],
+        schema,
+    ), tdir, partition_cols=["part"])
+    merge_table(spark, tdir, spark.createDataFrame(
+        [(2024, 2, 2, "a"), (2024, 3, 2, "a"), (2025, None, 2, "a")], schema,
+    ), key_cols=["year", "month"], partition_cols=["part"])
+
+
+def _evolved(spark, tdir):
+    """Key `u` arrives in the second commit: the first commit's files,
+    and its stage's recorded schema, lack it."""
+    overwrite_table(_state(spark, 9, "a"), tdir, partition_cols=["part"])
+    merge_table(spark, tdir, _state(spark, 12, "b").filter("k = 9").withColumn(
+        "u", F.col("k") % 2
+    ), key_cols=["k"], partition_cols=["part"])
+
+
+def _cased(spark, tdir):
+    overwrite_table(_state(spark, 9, "a").withColumnRenamed("k", "K"), tdir,
+                    partition_cols=["part"])
+
+
+def _three_commits(spark, tdir):
+    _commits(spark, tdir, 3)
+
+
+def _stripped(spark, tdir):
+    _three_commits(spark, tdir)
+    _strip_stats(tdir)
+
+
+def _schemaless(spark, tdir):
+    _three_commits(spark, tdir)
+    for name in os.listdir(os.path.join(tdir, "_manifests")):
+        path = os.path.join(tdir, "_manifests", name)
+        with open(path) as fh:
+            m = json.load(fh)
+        del m["schemas"]
+        with open(path, "w") as fh:
+            json.dump(m, fh)
+
+
+def _texts(spark, tdir):
+    overwrite_table(_state(spark, 9, "a").withColumn("s", F.col("k").cast("string")),
+                    tdir, partition_cols=["part"])
+
+
+# name: (table builder, key columns, key rows, their schema, whether
+# the probe runs no Spark job)
+PROBE_CASES = {
+    "byte": (_integral, ["b"], [(3,), (77,), (None,)], "b byte", True),
+    "short": (_integral, ["h"], [(5,), (999,), (None,)], "h short", True),
+    "int": (_integral, ["i"], [(7,), (1150,), (None,)], "i int", True),
+    # an int batch key against a long column
+    "long": (_integral, ["l"], [(10**9,), (2 * 10**9,), (None,)], "l int", True),
+    "long_wide": (_integral, ["l"], [(4 * 10**9,), (10**15,)], "l long", True),
+    "pair": (_pairs, ["year", "month"],
+             [(2024, 2), (2023, 1), (2024, None), (2025, None)], "year int, month int", True),
+    "evolved": (_evolved, ["u"], [(1,)], "u long", True),
+    "partition_key": (_three_commits, ["part"], [(1,)], "part int", False),
+    "string_key": (_texts, ["s"], [("4",), ("x",)], "s string", False),
+    "case_mismatch": (_cased, ["k"], [(4,), (8,)], "k long", False),
+    "no_stats": (_stripped, ["k"], [(11,), (22,)], "k long", False),
+    "no_schema": (_schemaless, ["k"], [(11,), (22,)], "k long", False),
+    # outside every recorded key range: no entry is admitted
+    "empty": (_three_commits, ["k"], [(5,), (99,)], "k long", True),
+}
+
+
+def _probe_args(spark, tdir, keys, key_cols):
+    """`_files_holding_keys`' arguments as DELETE passes them."""
+    m = _manifest(tdir)
+    tbl = _collect_keys(keys, key_cols)
+    fields = [keys.schema[c] for c in key_cols]
+    keyset = _distinct_keys(tbl, fields)
+    admitted = _may_hold_keys(m["files"], key_cols, keyset)
+    return spark, tdir, admitted, m.get("schemas", {}), tbl, _member(fields, keyset)
+
+
+def _table_rows(spark, tdir):
+    df = read_table(spark, tdir)
+    return sorted((tuple(r) for r in df.select(*sorted(df.columns)).collect()), key=repr)
+
+
+@pytest.mark.parametrize("name", sorted(PROBE_CASES))
+def test_driver_probe_equals_spark_probe(spark, tmp_path, count_jobs, monkeypatch, name):
+    """The driver probe finds the same files as the Spark probe, with no
+    Spark job, and MERGE (moving the keys' rows to partition 0) and
+    DELETE leave the same rows; where the driver cannot read the keys
+    as Spark does, the Spark probe runs at either bound."""
+    build, key_cols, key_rows, key_schema, driver = PROBE_CASES[name]
+    default = mt.PROBE_ROWS
+    keys = spark.createDataFrame(key_rows, key_schema)
+    tdir = str(tmp_path / "probe")
+    build(spark, tdir)
+    args = _probe_args(spark, tdir, keys, key_cols)
+    hits = []
+    jobs = count_jobs(lambda: hits.extend(_files_holding_keys(*args)))
+    assert (jobs == 0) == driver
+    if name == "empty":
+        assert args[2] == hits == []
+    else:
+        assert 0 < len(hits) < len(_manifest(tdir)["files"])
+    monkeypatch.setattr(mt, "PROBE_ROWS", 0)
+    assert _files_holding_keys(*args) == hits
+
+    got = []
+    for bound in (default, 0):
+        monkeypatch.setattr(mt, "PROBE_ROWS", bound)
+        tdir = str(tmp_path / f"b{bound}")
+        build(spark, tdir)
+        moved = (
+            read_table(spark, tdir).join(keys, key_cols, "left_semi")
+            .withColumnsRenamed({c: c for c in key_cols})
+            .withColumn("v", F.lit("moved")).withColumn("part", F.lit(0))
+        )
+        merge_table(spark, tdir, moved, key_cols=key_cols, partition_cols=["part"])
+        after_merge = _table_rows(spark, tdir)
+        delete_from_table(spark, tdir, keys, key_cols=key_cols)
+        got.append((after_merge, _table_rows(spark, tdir)))
+    assert got[0] == got[1]
+
+
+def test_key_collect_is_one_bounded_job(spark, tmp_path, count_jobs, monkeypatch):
+    """MERGE and DELETE collect their keys in one Spark job, as many as
+    a plain `collect()` of the same columns, from a one-file parquet
+    batch and from a frame of 4 partitions; a batch of more than
+    `KEY_ROWS` rows raises before anything is written."""
+    path = str(tmp_path / "batch")
+    rows = [(i, i % 3) for i in range(50)]
+    spark.createDataFrame(rows, "k long, part int").coalesce(1).write.parquet(path)
+    frames = [
+        spark.read.parquet(path),
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), "k long, part int"),
+    ]
+    for df in frames:
+        assert count_jobs(lambda: _collect_keys(df, ["part", "k"])) == 1
+        assert count_jobs(lambda: df.select("part", "k").collect()) == 1
+
+    tdir = str(tmp_path / "t")
+    overwrite_table(_state(spark, 6, "a"), tdir, partition_cols=["part"])
+    monkeypatch.setattr(mt, "KEY_ROWS", 2)
+    batch = _state(spark, 3, "b")
+    with pytest.raises(ValueError, match="more than 2 rows"):
+        merge_table(spark, tdir, batch, key_cols=["k"], partition_cols=["part"])
+    with pytest.raises(ValueError, match="more than 2 rows"):
+        delete_from_table(spark, tdir, batch, key_cols=["k"])
+    assert current_version(tdir) == 0
+    delete_from_table(spark, tdir, _state(spark, 2, "b"), key_cols=["k"])
+    assert _rows(read_table(spark, tdir)) == [(k, k % 3, "a") for k in range(2, 6)]

@@ -548,3 +548,49 @@ def test_family_collect_is_bounded(planner, monkeypatch):
     assert planner.family_map("dataset", ["doi:10.5063/B1"]) == {"doi:10.5063/B1": ["doi:10.5063/B1"]}
     with pytest.raises(ValueError, match="more than 1 identifier rows"):
         planner.family_map("dataset", ["doi:10.5063/A1", "doi:10.5063/B1"])
+
+
+def test_null_country_is_one_row(spark, sf_dir, tmp_path, monkeypatch):
+    """A METADATA event with a NULL country (user_id -6: -6 % 5 names
+    no country in the engine's adapter nor in the oracle's) makes one
+    (day, NULL) row in the daily-country request, equal to the oracle's
+    reply at both `ONE_PARTITION_BYTES` bounds, and the day's
+    by-country counts sum to its per-day counts."""
+    import datetime as dt
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from metrics_service_spark.catalog.request import (
+        DAILY_COUNTRY_REQUEST,
+        ORACLE_DAILY_COUNTRY_REQUEST,
+        _tables,
+    )
+    from metrics_service_spark.plans import metrics_request
+    from metrics_service_spark.plans.metrics_request import run_metrics_request
+    from metrics_service_spark.testing.oracle import compare_query
+
+    ev = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    extra = pa.table({
+        "event_id": [pc.max(ev["event_id"]).as_py() + 1],
+        "ts": [dt.datetime(2024, 1, 15, 12)], "user_id": [-6], "event_type": ["view"],
+        "value": [10.0], "props": ['{"k": 7}'],
+    }, schema=ev.schema)
+    pq.write_table(pa.concat_tables([ev, extra]), str(tmp_path / "events.parquet"))
+    per_day = {**DAILY_COUNTRY_REQUEST, "groupBy": ["day"]}
+    counts = ["downloads", "views", "unique_downloads", "unique_views"]
+    for bound in (metrics_request.ONE_PARTITION_BYTES, 0):
+        monkeypatch.setattr(metrics_request, "ONE_PARTITION_BYTES", bound)
+        tables = _tables(spark, str(tmp_path))
+        df = run_metrics_request(spark, DAILY_COUNTRY_REQUEST, tables)
+        compare_query(df, ORACLE_DAILY_COUNTRY_REQUEST, str(tmp_path), name="null_country")
+        rows = df.collect()
+        null_day = [r for r in rows if r["bucket"] == "2024-01-15" and r["country"] is None]
+        assert [(r["views"], r["unique_views"]) for r in null_day] == [(1, 1)]
+        days = {(r["bucket"], r["country"]) for r in rows}
+        assert len(days) == len(rows)
+        for r in run_metrics_request(spark, per_day, tables).collect():
+            day = [x for x in rows if x["bucket"] == r["bucket"]]
+            assert [sum(x[c] for x in day) for c in counts] == [r[c] for c in counts]
