@@ -315,8 +315,10 @@ def q_order_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("o_orderkey").over(w2).alias("dst"),
     ).filter(F.col("dst").isNotNull())
     # chain graph (deg <= 2, ~26k edges at sf0.02): the kernel finishes
-    # it on the driver in 2 jobs (the edge checkpoint's Arrow collect
-    # and the result collect).  hop and max_iters shape only the
+    # it on the driver in 2 jobs (the AQE map stage of the chain
+    # window's exchange, run as a job of its own, and the edges' Arrow
+    # collect; the result is a local relation, whose collect runs no
+    # job).  hop and max_iters shape only the
     # distributed rounds an edge set past LOCAL_FINISH_EDGES runs:
     # hop=3 composes the neighborhood once into ceil(9/3)=3
     # label-propagation rounds, and max_iters=9 is exact (10-node

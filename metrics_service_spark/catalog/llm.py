@@ -291,13 +291,11 @@ def q_doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc = connected_components_star(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
         max_iters=12,
+        nodes=docs.select("doc_id"),
     )
-    return (
-        docs.select("doc_id")
-        .join(cc.withColumnRenamed("node", "doc_id"), "doc_id", "left")
-        .select("doc_id", F.coalesce("component", "doc_id").alias("cluster"))
-        .withColumn("is_canonical", F.col("doc_id") == F.col("cluster"))
-    )
+    return cc.select(
+        "doc_id", F.col("component").alias("cluster")
+    ).withColumn("is_canonical", F.col("doc_id") == F.col("cluster"))
 
 
 # recursive CTE with UNION (not UNION ALL) dedups rows globally, so the
@@ -4392,10 +4390,12 @@ def q_doc_linkage_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra shuffle.  Both stages finish on the driver: the linkage
     pairs come from one bounded Arrow collect of the corpus
     projection, and the pair graph (a few hundred edges, 2,935 at
-    sf0.1) is labeled by the star kernel's union-find from a second.
-    4 jobs for the whole entry at sf0.01: the two collects plus the
-    final join's broadcast and collect, where the checkpointed linkage
-    passes made it 14 and the star rounds 37."""
+    sf0.1) is labeled by the star kernel's union-find from a second,
+    which brings the doc ids across with the edges and labels them
+    there (`nodes=`), so there is no final join: the result is a local
+    relation whose collect runs no job.  2 jobs for the whole entry at
+    sf0.01, the two collects, where the join-back made it 4, the
+    checkpointed linkage passes 14 and the star rounds 37."""
     from metrics_service_spark.operators.closure import (
         connected_components_star,
     )
@@ -4414,14 +4414,12 @@ def q_doc_linkage_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduplicate=False,
     ).select("id_a", "id_b")
     cc = connected_components_star(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        nodes=docs.select("doc_id"),
     )
-    return (
-        docs.select("doc_id")
-        .join(cc.withColumnRenamed("node", "doc_id"), "doc_id", "left")
-        .select("doc_id", F.coalesce("component", "doc_id").alias("cluster"))
-        .withColumn("is_canonical", F.col("doc_id") == F.col("cluster"))
-    )
+    return cc.select(
+        "doc_id", F.col("component").alias("cluster")
+    ).withColumn("is_canonical", F.col("doc_id") == F.col("cluster"))
 
 
 def linkage_clusters_oracle(

@@ -352,16 +352,15 @@ def q_mm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id_a", "id_b"
     )
     cc = connected_components_star(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        # the media ids, read without `attach_payload`'s repartition
+        nodes=load_table(spark, sf_dir, "documents").select(
+            F.col("doc_id").cast("long").alias("media_id")
+        ),
     )
-    return (
-        media.select("media_id")
-        .join(cc.withColumnRenamed("node", "media_id"), "media_id", "left")
-        .select(
-            "media_id", F.coalesce("component", "media_id").alias("cluster")
-        )
-        .withColumn("is_canonical", F.col("media_id") == F.col("cluster"))
-    )
+    return cc.select(
+        "media_id", F.col("component").alias("cluster")
+    ).withColumn("is_canonical", F.col("media_id") == F.col("cluster"))
 
 
 ORACLE_MM_DEDUP_CLUSTERS = f"""

@@ -34,6 +34,16 @@ Scale notes:
   set runs the distributed loop, and only that loop has a round
   budget.  Measured on star CC (SCALE.md): the driver finish is
   10-15x faster from 10^4 to 10^6 edges.
+- Star CC also labels the caller's rows (`nodes=`): the one-column
+  frame of ids to label crosses in the same collect as the edges, and
+  the result is the left join of the labels onto those rows with
+  `coalesce(component, id)`, computed on the driver.  The local
+  relation it returns needs no join, and so no broadcast job.  Three
+  routes, by size: edges within LOCAL_FINISH_EDGES and ids within
+  LOCAL_FINISH_NODES (the one collect, tried only when Spark's size
+  estimate of the ids admits it); only the edges within their bound
+  (the edge-only finish, then the join-back in Spark); neither (the
+  star rounds, then the same join-back).
 
 One function per algorithm, one loop per function: pointer jumping
 (`resolve_chains`), seeded BFS (`expand_family`), label propagation
@@ -45,10 +55,14 @@ PageRank (`pagerank_int`).
 from __future__ import annotations
 
 import math
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegralType, StructType
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 CHECKPOINT_EVERY = 5
 
@@ -59,6 +73,21 @@ CHECKPOINT_EVERY = 5
 #: 12.7 s at 10^5 and 7.4 vs 77 s at 10^6 — the driver finish wins at
 #: every size up to here, and a million int64 pairs is ~16 MB of heap.
 LOCAL_FINISH_EDGES = 1_000_000
+
+#: node-row bound of star CC's labeled finish (`_local_label`): at most
+#: this many of the caller's ids cross to the driver with the edges.
+#: Measured on doc_linkage_clusters' pair edges and the documents' ids
+#: (4 cores, SCALE.md): that one collect was no slower than the
+#: edge-only finish plus the join back in Spark from 500 to 250,000
+#: ids, the largest corpus measured.
+LOCAL_FINISH_NODES = 250_000
+
+#: the labeled finish is tried only when Spark's size estimate of the
+#: ids (`_fits_bytes`, no job) is within this many bytes per allowed
+#: row.  The estimate read 23-29 bytes per id of the documents corpus
+#: from sf0.01 to 50x (7.2 MB at 250,000 ids); a frame of unknown size
+#: (a `createDataFrame`) does not fit.
+NODE_ESTIMATE_BYTES = 32
 
 
 def _compose_hops(edges: DataFrame, a: str, b: str, hop: int) -> DataFrame:
@@ -86,13 +115,10 @@ def _local_finish(
     columns, endpoint ids) holds more than LOCAL_FINISH_EDGES rows.
 
     ONE Spark job moves the edge set: `_bounded_arrow`'s collect of at
-    most LOCAL_FINISH_EDGES + 1 rows (operators/driver.py).
-    Ids are ranked by Arrow's sort (byte order for strings, as Spark
-    compares them), so union-find that always hangs the larger root
-    under the smaller one leaves every node's root at its component's
-    minimum rank.  `schema` is the calling kernel's output schema:
-    both endpoints are cast to its node type before the collect, and
-    the result carries its exact column names, types and nullability.
+    most LOCAL_FINISH_EDGES + 1 rows (operators/driver.py).  `schema`
+    is the calling kernel's output schema: both endpoints are cast to
+    its node type before the collect, and the result carries its exact
+    column names, types and nullability.
 
     Every non-NULL endpoint is a node (self-loops included).  A NULL
     endpoint never carries a label in either distributed loop; with
@@ -101,7 +127,6 @@ def _local_finish(
     added with the smallest component among the ids paired with NULL,
     when there are any."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     from metrics_service_spark.operators.driver import _bounded_arrow
 
@@ -112,27 +137,7 @@ def _local_finish(
     )
     if tbl is None:
         return None
-    u, v = (c.combine_chunks() for c in tbl.columns)
-    nodes = pc.unique(pa.concat_arrays([u, v]).drop_null())
-    nodes = nodes.take(pc.sort_indices(nodes))
-    iu, iv = (
-        pc.index_in(x, value_set=nodes).fill_null(-1).to_numpy().tolist()
-        for x in (u, v)
-    )
-    parent = list(range(len(nodes)))
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for x, y in zip(iu, iv):
-        if x >= 0 and y >= 0:
-            rx, ry = find(x), find(y)
-            if rx != ry:
-                parent[max(rx, ry)] = min(rx, ry)
-    roots = [find(x) for x in range(len(nodes))]
+    nodes, roots, iu, iv = _union_find(*(c.combine_chunks() for c in tbl.columns))
     # an edge with exactly one NULL end: its id end is max(x, y)
     partners = (
         [max(x, y) for x, y in zip(iu, iv) if min(x, y) < 0 <= max(x, y)]
@@ -145,6 +150,108 @@ def _local_finish(
     comp = nodes.take(pa.array(roots, pa.int64()))
     out = pa.table([nodes, comp], names=["node", "component"])
     return edges.sparkSession.createDataFrame(out, schema=schema)
+
+
+def _union_find(
+    u: pa.Array, v: pa.Array
+) -> tuple[pa.Array, list[int], list[int], list[int]]:
+    """Union-find over the edge rows (u[i], v[i]), two Arrow arrays.
+
+    Returns the distinct non-NULL ids in sorted order, each one's root
+    (an index into them: its component's minimum id), and each row's
+    two endpoint indexes (-1 for NULL).  Ids are ranked by Arrow's
+    sort (byte order for strings, as Spark compares them), so
+    union-find that always hangs the larger root under the smaller one
+    leaves every node's root at its component's minimum rank."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ids = pc.unique(pa.concat_arrays([u, v]).drop_null())
+    ids = ids.take(pc.sort_indices(ids))
+    iu, iv = (
+        pc.index_in(x, value_set=ids).fill_null(-1).to_numpy().tolist()
+        for x in (u, v)
+    )
+    parent = list(range(len(ids)))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for x, y in zip(iu, iv):
+        if x >= 0 and y >= 0:
+            rx, ry = find(x), find(y)
+            if rx != ry:
+                parent[max(rx, ry)] = min(rx, ry)
+    return ids, [find(x) for x in range(len(ids))], iu, iv
+
+
+def _local_label(
+    edges: DataFrame, nodes: DataFrame, schema: StructType
+) -> DataFrame | bool:
+    """Star CC's labeled finish: `_join_back(nodes, labels)` computed
+    on the driver, one row per `nodes` row (one column of ids) in
+    `schema`, that frame's schema, as a local relation.  The caller
+    passes `nodes` only when its ids compare as the component type
+    does (`_same_key`).
+
+    ONE Spark job: the edge rows and the node rows cross in one Arrow
+    collect, told apart by a tag column, of at most LOCAL_FINISH_EDGES
+    + LOCAL_FINISH_NODES + 1 rows.  That is `_bounded_arrow`'s collect,
+    kept when it overflows, because its rows then say which bound was
+    passed.  Returns the labeled rows when at most LOCAL_FINISH_EDGES
+    edge rows and LOCAL_FINISH_NODES node rows came across (then every
+    row did).  Otherwise returns whether the edge-only finish can
+    still fit: False when more edge rows came across, True when only
+    the node rows passed their bound."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = schema["component"].dataType
+    a, b = edges.columns
+    (n,) = nodes.columns
+    rows = edges.select(
+        F.lit(False).alias("__node"), F.col(a).cast(t), F.col(b).cast(t)
+    ).union(nodes.select(F.lit(True), F.col(n).cast(t), F.lit(None).cast(t)))
+    tbl = rows.limit(LOCAL_FINISH_EDGES + LOCAL_FINISH_NODES + 1).toArrow()
+    tag, u, v = (c.combine_chunks() for c in tbl.columns)
+    keys = u.filter(tag)
+    if tbl.num_rows - len(keys) > LOCAL_FINISH_EDGES:
+        return False
+    if len(keys) > LOCAL_FINISH_NODES:
+        return True
+    edge_rows = pc.invert(tag)
+    ids, roots, _, _ = _union_find(u.filter(edge_rows), v.filter(edge_rows))
+    # the left join: an id on no edge (or NULL) finds no label and
+    # coalesces to itself
+    label = ids.take(pa.array(roots, pa.int64())).take(
+        pc.index_in(keys, value_set=ids, skip_nulls=True)
+    )
+    out = pa.table([keys, pc.coalesce(label, keys)], names=schema.names)
+    return edges.sparkSession.createDataFrame(out, schema=schema)
+
+
+def _join_back(nodes: DataFrame, labels: DataFrame) -> DataFrame:
+    """One row per `nodes` row (one column of ids): the id and its
+    component in `labels` (node, component), the id itself when it has
+    no label; a NULL id keeps NULL.  Duplicate ids stay duplicated."""
+    (n,) = nodes.columns
+    lab = labels.select(
+        F.col("node").alias("__node"), F.col("component").alias("__comp")
+    )
+    return nodes.join(lab, F.col(n) == F.col("__node"), "left").select(
+        n, F.coalesce("__comp", n).alias("component")
+    )
+
+
+def _same_key(nodes: DataFrame, labels: DataFrame) -> bool:
+    """True when `nodes`' ids match labels as values of the component
+    type: the same type, or integers of any width (the join widens
+    both sides, and so does the cast to the component type)."""
+    x, y = nodes.schema.fields[0].dataType, labels.schema["node"].dataType
+    return x == y or (isinstance(x, IntegralType) and isinstance(y, IntegralType))
 
 
 def resolve_chains(
@@ -475,6 +582,7 @@ def connected_components_star(
     src: str = "src",
     dst: str = "dst",
     max_iters: int = 20,
+    nodes: DataFrame | None = None,
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
@@ -488,15 +596,29 @@ def connected_components_star(
     join; convergence is detected by an order-insensitive edge-set
     fingerprint (sum of pair hashes), one tiny aggregate per round.
 
-    An edge set of at most LOCAL_FINISH_EDGES rows (after dropping
-    self-loops and NULL endpoints) is finished on the driver instead
-    (`_local_finish`: union-find, one Arrow collect), before the
-    canonical distinct and the first `round_stats`:
-    doc_linkage_clusters (a few hundred pair edges at sf0.01) is 4
-    jobs this way, its linkage pairs finished on the driver as well;
-    the star rounds made it 37.  The rounds,
-    ``max_iters`` and the raise below govern only the larger edge sets
-    that run the distributed loop; the driver finish always converges.
+    Three routes, by size:
+    1. With `nodes`, when Spark's size estimate of the ids admits
+       LOCAL_FINISH_NODES rows (`_fits_bytes`, no job), the edge rows
+       (after dropping self-loops and NULL endpoints) and the node rows
+       cross to the driver in ONE collect (`_local_label`).  When the
+       edge rows number at most LOCAL_FINISH_EDGES and the node rows
+       at most LOCAL_FINISH_NODES, union-find labels the edges and the
+       node rows are labeled there too.  The result is a local relation, so
+       collecting it runs no job: doc_linkage_clusters is 2 jobs at
+       sf0.01 (its linkage pairs' collect and this one).
+    2. When the edges fit LOCAL_FINISH_EDGES but route 1 did not run
+       or its node rows overflowed, or no `nodes` is given: the
+       edge-only driver finish (`_local_finish`), then, with `nodes`,
+       the join-back in Spark.  A large corpus with few pairs stays
+       off the rounds.  An estimate past the bound, of unknown size,
+       or ids not of the edges' key type (`_same_key`) skip route 1
+       with no job.
+    3. Otherwise the distributed star rounds below, then the same
+       join-back.  When route 1's collect already saw more than
+       LOCAL_FINISH_EDGES edge rows, the edge-only collect is skipped.
+       Only this route has rounds: ``max_iters`` and the raise below
+       govern it alone; the driver finishes always converge.  The
+       star rounds made doc_linkage_clusters 37 jobs.
 
     Fails LOUD: a fingerprint that is still moving after ``max_iters``
     rounds raises instead of emitting a possibly-split labeling — at
@@ -504,9 +626,19 @@ def connected_components_star(
     would.  O(log n) rounds means 20 covers ~10^6-node components, so
     the raise is a guard, not a practical ceiling.
 
-    Returns (node, component), component = min node id, for every
-    endpoint of an edge whose endpoints differ and are both non-NULL.
+    Without `nodes`: returns (node, component), component = min node
+    id, for every endpoint of an edge whose endpoints differ and are
+    both non-NULL.  With `nodes` (a one-column frame of the ids to
+    label): returns one row per `nodes` row, (that column, component),
+    exactly `nodes` left-joined to those labels with
+    ``coalesce(component, id)`` (`_join_back`): duplicate rows stay, an
+    id on no edge is its own component, a NULL id gets NULL, and an
+    edge endpoint absent from `nodes` does not appear.  The schema is
+    the join-back frame's in every route, taken from analysis (no
+    job).
     """
+    from metrics_service_spark.operators.driver import _fits_bytes
+
     # checkpoint before canonizing: the mirror union references the
     # frame twice, and the caller's edge derivation may be expensive
     # (see connected_components).  `u != v` drops self-loops and NULL
@@ -516,11 +648,26 @@ def connected_components_star(
         .filter(F.col("u") != F.col("v"))
         .localCheckpoint(eager=False)
     )
-    small = _local_finish(
-        e, _star_labels(_canonize(e)).schema, null_partner=False
-    )
+    labels = _star_labels(_canonize(e))
+    # route 1 when the ids' size estimate admits it; its collect, when
+    # it overflows, tells whether route 2 can still fit
+    edges_fit = True
+    if (
+        nodes is not None
+        and _same_key(nodes, labels)
+        and _fits_bytes(nodes, NODE_ESTIMATE_BYTES * LOCAL_FINISH_NODES)
+    ):
+        done = _local_label(e, nodes, _join_back(nodes, labels).schema)
+        if not isinstance(done, bool):
+            return done
+        edges_fit = done
+
+    def out(labels: DataFrame) -> DataFrame:
+        return labels if nodes is None else _join_back(nodes, labels)
+
+    small = _local_finish(e, labels.schema, null_partner=False) if edges_fit else None
     if small is not None:
-        return small
+        return out(small)
     e = _canonize(e).localCheckpoint(eager=False)
 
     def star_raw(e: DataFrame, large: bool) -> DataFrame:
@@ -645,7 +792,7 @@ def connected_components_star(
             "O(log n), so this indicates astronomically large components "
             "or a data problem)"
         )
-    return _star_labels(e)
+    return out(_star_labels(e))
 
 
 def pagerank_int(

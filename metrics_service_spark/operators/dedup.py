@@ -1450,24 +1450,23 @@ def tiered_dedup(
         max_cell=max_cell,
     ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     # the keep-list contract is exact-closure equality (the oracle
-    # computes the full recursive closure).  A pair set of at most
-    # LOCAL_FINISH_EDGES rows is labeled exactly on the driver; a
-    # larger one runs the star rounds, where an exhausted round budget
-    # on a long-chain component must raise, not silently return split
-    # labels (ADVICE r11), and the star kernel always raises.  r17:
-    # alternating-star CC (O(log n) rounds in component size) replaces
-    # min-label propagation (O(diameter) rounds) — identical
-    # (node, min-id) labeling, and chain-shaped near-dup families at
-    # scale can no longer exhaust a diameter-bounded round budget (the
-    # same upgrade doc_linkage_clusters and mm_dedup_clusters made).
-    cc = connected_components_star(pairs, max_iters=max_iters)
-    near = (
-        keepers.select(id_col)
-        .join(cc.withColumnRenamed("node", id_col), id_col, "left")
-        .select(
-            F.col(id_col).alias("__kid"),
-            F.coalesce("component", F.col(id_col)).alias("__near_canon"),
-        )
+    # computes the full recursive closure).  The kernel labels every
+    # keeper (`nodes=`, a keeper on no pair is its own canon): pairs
+    # and keepers within their driver bounds (LOCAL_FINISH_EDGES,
+    # LOCAL_FINISH_NODES) in one collect, with no join back; more
+    # keepers, the edge-only finish and a join; a larger pair set
+    # runs the star rounds, where an exhausted round budget on a long-chain
+    # component must raise, not silently return split labels (ADVICE
+    # r11), and the star kernel always raises.  r17: alternating-star
+    # CC (O(log n) rounds in component size) replaces min-label
+    # propagation (O(diameter) rounds) — identical (node, min-id)
+    # labeling, and chain-shaped near-dup families at scale can no
+    # longer exhaust a diameter-bounded round budget (the same upgrade
+    # doc_linkage_clusters and mm_dedup_clusters made).
+    near = connected_components_star(
+        pairs, max_iters=max_iters, nodes=keepers.select(id_col)
+    ).select(
+        F.col(id_col).alias("__kid"), F.col("component").alias("__near_canon")
     )
     return (
         tagged.join(near, F.col(id_col) == F.col("__kid"), "left")

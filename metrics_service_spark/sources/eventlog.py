@@ -18,7 +18,8 @@ Mapping (mirrored verbatim in the DuckDB oracle SQL, see catalog/):
     dateLogged = ts
     sessionId  = user_id (stand-in; real sessionization in operators/)
     tags       = ['machine_ua'] if value > 180 else []   (P4 exclusion)
-    country    = ('US','DE','FR','CN','BR')[user_id % 5]
+    country    = ('US','DE','FR','CN','BR')[user_id % 5], NULL when the
+                 remainder is negative (a negative user_id) or NULL
 """
 
 from __future__ import annotations
@@ -39,6 +40,8 @@ COUNTRIES = ("US", "DE", "FR", "CN", "BR")
 
 
 def eventlog_view(events: DataFrame) -> DataFrame:
+    # no branch matches a negative remainder: NULL country, as in
+    # EVENTLOG_SQL (ORACLE_COMPAT.md)
     country = F.when(F.col("user_id") % 5 == 0, COUNTRIES[0])
     for i, c in enumerate(COUNTRIES[1:], start=1):
         country = country.when(F.col("user_id") % 5 == i, c)
@@ -91,7 +94,14 @@ def counter_filter(eventlog: DataFrame) -> DataFrame:
 
 # The same mapping as a DuckDB SQL fragment, used to prefix oracle
 # queries: SELECT ... FROM ({EVENTLOG_SQL}) — keep in sync with above.
-EVENTLOG_SQL = """
+# The country is a CASE on the remainder, not a list index: DuckDB
+# counts a negative list index from the end.
+_COUNTRY_SQL = (
+    "CASE user_id % 5 "
+    + " ".join(f"WHEN {i} THEN '{c}'" for i, c in enumerate(COUNTRIES))
+    + " END"
+)
+EVENTLOG_SQL = f"""
 SELECT
   CAST(event_id AS VARCHAR) AS eventId,
   'pid' || json_extract_string(props, '$.k') AS pid,
@@ -106,7 +116,7 @@ SELECT
   ts AS dateLogged,
   user_id AS sessionId,
   CASE WHEN value > 180 THEN ['machine_ua'] ELSE [] END AS tags,
-  ['US','DE','FR','CN','BR'][CAST(user_id % 5 AS INT) + 1] AS country,
+  {_COUNTRY_SQL} AS country,
   value
 FROM events
 """

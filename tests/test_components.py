@@ -2,8 +2,10 @@
 min-label propagation (with a structural round bound) both equal
 union-find on random graphs, on the driver finish and on the
 distributed loops alike; the driver finish returns the distributed
-loops' rows and schema; the star form converges in few rounds on long
-chains; and the curation and linkage entries keep their job budgets."""
+loops' rows and schema; star CC with `nodes=` returns the join-back of
+its labels onto the node rows on all three routes; the star form
+converges in few rounds on long chains; and the curation and linkage
+entries keep their job budgets."""
 
 from __future__ import annotations
 
@@ -153,10 +155,11 @@ def test_early_stop_off_equals_on_random_graph(spark):
 def test_order_components_job_budget(spark, sf_dir, count_jobs):
     """order_components (label propagation over a few thousand chain
     edges, finished on the driver) launches a fixed number of Spark
-    jobs, build plus collect: the input-edge checkpoint with its Arrow
-    collect, and the collect of the result.  Pinned so a probe, an
-    extra checkpoint or a return to the distributed rounds (13 jobs)
-    cannot land unnoticed."""
+    jobs, build plus collect: the AQE map stage of the chain window's
+    exchange, run on its own as a job, and the Arrow collect of the
+    edges.  The result is a local relation, so its collect runs no
+    job.  Pinned so a probe, an extra checkpoint or a return to the
+    distributed rounds (13 jobs) cannot land unnoticed."""
     from metrics_service_spark.catalog import all_queries
 
     q = all_queries()["order_components"].fn
@@ -167,14 +170,31 @@ def test_doc_linkage_clusters_job_budget(spark, sf_dir, count_jobs):
     """doc_linkage_clusters pairs its documents on the driver from one
     bounded collect of the corpus projection, then runs star CC over
     the pair graph of a few hundred edges, finished on the driver
-    too: the two collects, then the final join's broadcast and
-    collect.  Pinned so a checkpoint barrier of the distributed
-    linkage arms (14 jobs here in all) or a per-round CC loop (25)
-    cannot come back unnoticed."""
+    too, with the doc ids in the same collect: the two collects, and
+    no final join (the result is a local relation).  Pinned so the
+    join-back's broadcast and scan (4 jobs), a checkpoint barrier of
+    the distributed linkage arms (14 jobs here in all) or a per-round
+    CC loop (25) cannot come back unnoticed."""
     from metrics_service_spark.catalog import all_queries
 
     q = all_queries()["doc_linkage_clusters"].fn
-    assert count_jobs(lambda: q(spark, sf_dir).collect()) == 4
+    assert count_jobs(lambda: q(spark, sf_dir).collect()) == 2
+
+
+@pytest.mark.parametrize(
+    "name,jobs", [("doc_dedup_clusters", 7), ("mm_dedup_clusters", 4)]
+)
+def test_dedup_clusters_job_budget(spark, sf_dir, count_jobs, name, jobs):
+    """The two dedup keep-lists label their rows inside star CC's
+    driver finish (`nodes=`): their pair stages' jobs, then one
+    bounded collect of the pairs and the ids, and no join back onto
+    the corpus (which cost 2 more jobs: the broadcast of the labels
+    and the corpus scan).  mm_dedup_clusters reads its ids from the
+    documents directly, so the collect waits on no repartition."""
+    from metrics_service_spark.catalog import all_queries
+
+    q = all_queries()[name].fn
+    assert count_jobs(lambda: q(spark, sf_dir).collect()) == jobs
 
 
 def test_doc_linkage_multipass_job_budget(spark, sf_dir, count_jobs):
@@ -289,6 +309,130 @@ def test_local_finish_equals_distributed(spark, monkeypatch, ddl, edges):
         assert {n for n, _ in labels} == nodes | ({None} if null_row else set())
         assert all(c == want.get(n, n) for n, c in labels if n is not None), name
         assert all(n == 1 for n in labels.values()), name
+
+
+def _node_graphs():
+    """(edge ddl, edges, node ddl, node rows) cases for `nodes=`."""
+    rng = random.Random(7)
+    edges = _random_edges(rng, 50, 40)
+    ends = sorted({x for e in edges for x in e if x is not None})
+    # duplicates, NULLs, ids on no edge (100+), and some endpoints left
+    # out of the node rows
+    nodes = [(x,) for x in ends[::2]] + [(ends[0],), (ends[0],), (None,)]
+    nodes += [(None,), (100,), (101,), (101,)]
+    return [
+        ("long", "src long, dst long", edges, "id long", nodes),
+        ("int_long", "src long, dst long", edges, "id int", nodes),
+        ("long_int", "src int, dst int", edges, "id long", nodes),
+        (
+            "string",
+            "src string, dst string",
+            [tuple(None if x is None else f"n{x:03d}" for x in e) for e in edges],
+            "id string",
+            [(None if x is None else f"n{x:03d}",) for (x,) in nodes],
+        ),
+        ("not_null_nodes", "src long, dst long", edges, "id long not null",
+         [(x,) for (x,) in nodes if x is not None]),
+        ("no_edges", "src long, dst long", [], "id long", nodes),
+        ("no_nodes", "src long, dst long", edges, "id long", []),
+        ("both_empty", "src long, dst long", [], "id long", []),
+        ("self_loops", "src long, dst long", [(i, i) for i in range(6)] * 2,
+         "id long", [(i,) for i in range(8)]),
+    ]
+
+
+@pytest.mark.parametrize(
+    "eddl,edges,nddl,nodes",
+    [pytest.param(*c[1:], id=c[0]) for c in _node_graphs()],
+)
+def test_star_nodes_equals_join_back(spark, monkeypatch, eddl, edges, nddl, nodes):
+    """`connected_components_star(edges, nodes=...)` returns exactly
+    the left join of the labels onto the node rows with
+    coalesce(component, id) that its callers used to write, rows and
+    schema, on each route: the one driver collect of edges and nodes
+    (default bounds, the size gate lifted); the edge-only driver
+    finish then the join, after that collect's node rows overflowed
+    (edge bound at the kept edge count, node bound 1) or with no
+    collect when the ids' size estimate is unknown; and the
+    distributed rounds then the join (edge bound 0), where the
+    edge-only collect is skipped because the first collect already
+    saw the edges overflow."""
+    from pyspark.sql import functions as F
+
+    edf = spark.createDataFrame(edges, eddl)
+    ndf = spark.createDataFrame(nodes, nddl)
+    (n,) = ndf.columns
+    # the labels are the same on every route
+    # (test_local_finish_equals_distributed)
+    cc = connected_components_star(edf)
+    want = ndf.join(cc.withColumnRenamed("node", n), n, "left").select(
+        n, F.coalesce("component", n).alias("component")
+    )
+    rows = Counter(map(tuple, want.collect()))
+    assert sum(rows.values()) == len(nodes)
+    calls: list[str] = []
+    for name in ("_local_label", "_local_finish"):
+        fn = getattr(closure, name)
+
+        def spy(*a, _f=fn, _n=name, **k):
+            calls.append(_n)
+            return _f(*a, **k)
+
+        monkeypatch.setattr(closure, name, spy)
+    # the rows the star kernel keeps: both ends non-NULL and distinct
+    kept = sum(1 for a, b in edges if a is not None and b is not None and a != b)
+    e0, n0 = closure.LOCAL_FINISH_EDGES, closure.LOCAL_FINISH_NODES
+    # a `createDataFrame` frame has no size estimate: `gate` lifts the
+    # estimate bound past Long.MaxValue, so the node bound alone decides
+    for edge_bound, node_bound, gate in (
+        (e0, n0, True),
+        (kept, 1, True),
+        (e0, n0, False),
+        (0, n0, True),
+    ):
+        monkeypatch.setattr(closure, "LOCAL_FINISH_EDGES", edge_bound)
+        monkeypatch.setattr(closure, "LOCAL_FINISH_NODES", node_bound)
+        monkeypatch.setattr(closure, "NODE_ESTIMATE_BYTES", 1 << 63 if gate else 32)
+        calls.clear()
+        got = connected_components_star(edf, nodes=ndf)
+        route = edge_bound, node_bound, gate
+        # route 1 returns the driver's rows as a local relation
+        local = got._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
+        route1 = gate and kept <= edge_bound and len(nodes) <= node_bound
+        assert local == route1, route
+        assert calls.count("_local_label") == gate, route
+        edge_only = not route1 and not (gate and kept > edge_bound)
+        assert calls.count("_local_finish") == edge_only, route
+        assert got.schema == want.schema, route
+        assert Counter(map(tuple, got.collect())) == rows, route
+
+
+def test_star_nodes_size_gate(spark, tmp_path, monkeypatch, count_jobs):
+    """Route 1 runs only when Spark's size estimate of the ids admits
+    LOCAL_FINISH_NODES rows: a small parquet scan takes it (one job,
+    the collect of edges and ids); past the estimate bound the kernel
+    goes to the edge-only finish with no job spent on the ids (one job,
+    the edge collect; the join runs at the result's collect)."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "ids.parquet")
+    spark.range(100).select(F.col("id").alias("doc_id")).write.parquet(path)
+    ids = spark.read.parquet(path)
+    edf = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 5), (200, 1)], "src long, dst long"
+    )
+    want = {(i, 1 if i in (1, 2, 3) else 5 if i == 7 else i) for i in range(100)}
+    for node_bound, local in ((closure.LOCAL_FINISH_NODES, True), (1, False)):
+        monkeypatch.setattr(closure, "LOCAL_FINISH_NODES", node_bound)
+        got = []
+        jobs = count_jobs(
+            lambda: got.append(connected_components_star(edf, nodes=ids))
+        )
+        assert jobs == 1, node_bound
+        (out,) = got
+        is_local = out._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"
+        assert is_local == local, node_bound
+        assert set(map(tuple, out.collect())) == want, node_bound
 
 
 def test_pagerank_int_hand_checked(spark):

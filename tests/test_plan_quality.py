@@ -335,12 +335,15 @@ def test_every_catalog_plan_free_of_global_antipatterns(spark, sf_dir):
     assert not offenders, offenders
 
 
-def _plans_incl_checkpoints(spark, sf_dir, name, monkeypatch):
+def _plans_incl_checkpoints(spark, sf_dir, name, monkeypatch, collects=False):
     """Capture the physical plan of EVERY lazily-checkpointed subframe
     plus the final frame: lazy localCheckpoints truncate lineage at
     call time, so the interesting subplans (assignment, pair
     generation, cap filters) are LogicalRDD leaves in the final plan
-    and invisible to a plain executedPlan() gate."""
+    and invisible to a plain executedPlan() gate.  With `collects`,
+    also the plan of every Arrow collect made while the frame is
+    built (the driver finishes), whose result comes back as a local
+    relation with no scan of its own."""
     # patch the RUNTIME class (pyspark.sql.classic.dataframe.DataFrame
     # overrides the pyspark.sql.DataFrame base's method in PySpark 4)
     from pyspark.sql.classic.dataframe import DataFrame
@@ -353,6 +356,14 @@ def _plans_incl_checkpoints(spark, sf_dir, name, monkeypatch):
         return orig(self, eager=eager)
 
     monkeypatch.setattr(DataFrame, "localCheckpoint", patched)
+    if collects:
+        to_arrow = DataFrame.toArrow
+
+        def collected(self):
+            captured.append(self._jdf.queryExecution().executedPlan().toString())
+            return to_arrow(self)
+
+        monkeypatch.setattr(DataFrame, "toArrow", collected)
     spark.catalog.clearCache()
     df = CATALOG[name].fn(spark, sf_dir)
     captured.append(df._jdf.queryExecution().executedPlan().toString())
@@ -363,15 +374,17 @@ def test_split_leakage_safe_bounded_scans_and_cap_filter(
     spark, sf_dir, monkeypatch
 ):
     """PLANS.md 'leakage-safe split' keeps: across the whole pipeline
-    (checkpointed subplans included) the documents parquet is scanned
-    at most twice — once for the shingle/pair derivation, once for the
-    final per-doc assignment join — and the max_cell linearity guard
+    (checkpointed subplans and driver collects included) the documents
+    parquet is scanned at most twice — once for the shingle/pair
+    derivation, once for the doc ids the clusters label (in the star
+    CC finish's collect with the pair graph; past its bounds, in the
+    final per-doc join) — and the max_cell linearity guard
     (the r7 probe-caught quadratic's fix) is present as a real filter
     on the cell-population frame."""
     import re
 
     plans = _plans_incl_checkpoints(
-        spark, sf_dir, "doc_split_leakage_safe", monkeypatch
+        spark, sf_dir, "doc_split_leakage_safe", monkeypatch, collects=True
     )
     n_doc_scans = sum(p.count("documents.parquet") for p in plans)
     assert n_doc_scans <= 2, n_doc_scans

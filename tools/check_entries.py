@@ -13,8 +13,13 @@ counted under a job group of its own as the tests' `count_jobs` does.
 ``--all`` sweeps the whole catalog; ``--json`` additionally writes a
 machine-readable artifact (name -> {status, rows, seconds, jobs}) that
 makes "stale entries are locally bitwise-green" auditable without
-re-running the 10-minute sweep.  ``--diff`` prints the per-entry job counts of two
-such artifacts side by side, as a markdown table.
+re-running the 10-minute sweep.  Each entry's record also holds
+``aqe_stage_jobs``: how many of its jobs were AQE stage
+materializations (a job name containing ``withThreadLocalCaptured``,
+run on its own ahead of the action that needs the stage), so a
+barrier can be told from an action.  ``--diff`` prints the per-entry
+job counts of two such artifacts side by side, as a markdown table,
+with the AQE stage jobs of each.
 """
 
 from __future__ import annotations
@@ -33,6 +38,12 @@ from metrics_service_spark.session import get_spark  # noqa: E402
 from metrics_service_spark.testing.oracle import OracleMismatch, compare_query  # noqa: E402
 
 
+#: the call site Spark names a job after when AQE materializes a query
+#: stage on its own (a lazy localCheckpoint's planning, a stage of a
+#: later action), as opposed to the action's own job
+AQE_STAGE_JOB = "withThreadLocalCaptured"
+
+
 def diff(before_path: str, after_path: str) -> None:
     """Print the per-entry jobs of two `--json` artifacts as a markdown
     table, then the entries whose count rose."""
@@ -40,15 +51,17 @@ def diff(before_path: str, after_path: str) -> None:
         before = json.load(f)["results"]
     with open(after_path) as f:
         after = json.load(f)["results"]
-    print("| entry | before | after | delta |\n|---|---|---|---|")
+    print(
+        "| entry | before | after | delta | AQE stage jobs before | after |"
+        "\n|---|---|---|---|---|---|"
+    )
     rose = []
     for name in sorted(before.keys() & after.keys()):
         b, a = before[name].get("jobs"), after[name].get("jobs")
-        if b is None or a is None:
-            print(f"| {name} | {b} | {a} | |")
-            continue
-        print(f"| {name} | {b} | {a} | {a - b:+d} |")
-        if a > b:
+        sb, sa = (r[name].get("aqe_stage_jobs") for r in (before, after))
+        delta = "" if b is None or a is None else f"{a - b:+d}"
+        print(f"| {name} | {b} | {a} | {delta} | {sb} | {sa} |")
+        if delta and a > b:
             rose.append(name)
     print(f"\n{len(rose)} entries rose: {', '.join(rose)}")
 
@@ -91,6 +104,7 @@ def main() -> None:
         spark = get_spark("check-entries")
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
+    store = sc._jsc.sc().statusStore()
     catalog = all_queries()
     if args == ["--all"]:
         args = list(catalog)
@@ -117,13 +131,20 @@ def main() -> None:
         finally:
             sc._jsc.clearJobGroup()
         seconds = time.perf_counter() - t0
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-        print(f"{name}: {line} {seconds:.1f}s {jobs} jobs")
+        job_ids = sc.statusTracker().getJobIdsForGroup(group)
+        stage_jobs = sum(
+            AQE_STAGE_JOB in store.job(j).name() for j in job_ids
+        )
+        print(
+            f"{name}: {line} {seconds:.1f}s {len(job_ids)} jobs"
+            f" ({stage_jobs} AQE stage)"
+        )
         results[name] = {
             "status": status,
             "rows": n,
             "seconds": round(seconds, 2),
-            "jobs": jobs,
+            "jobs": len(job_ids),
+            "aqe_stage_jobs": stage_jobs,
         }
     if json_out:
         summary = {

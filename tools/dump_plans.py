@@ -1,9 +1,12 @@
 """Regenerate PLANS.md: formatted physical plans of the headline
 queries with the scale-relevant properties called out.
 
-    python tools/dump_plans.py [sf_dir]
+    python tools/dump_plans.py [sf_dir [name ...]]
 
 Run after changing any operator so the committed plans stay honest.
+With entry names, only those sections are regenerated: the rest of
+PLANS.md is kept as it is, and every section stays in COMMENTARY
+order.
 """
 
 from __future__ import annotations
@@ -44,8 +47,8 @@ COMMENTARY = {
     "emb_semdedup_incr": "ONE fused assignment pass (side tag) lazily checkpointed; batch x index equi-join on cell only; index never self-paired",
     "mm_image_meta_real_mixed": "mapInPandas encode -> sniff -> header decode; repartition by media id for encode parallelism; join back to the fmt tag is a broadcast hash join",
     "doc_jaccard_pairs": "shingles computed ABOVE the repartition exchange (all cores) and checkpointed once for both self-join sides; BHJ on (lang, length-bucket); cheap prunes short-circuit the single array_intersect in the residual condition",
-    "doc_dedup_clusters": "jaccard pair shape as above; the pair graph (under LOCAL_FINISH_EDGES) is labeled by union-find on the driver and re-enters as one LocalTableScan; a larger one runs alternating-star contraction (O(log n) rounds, one window + one canonical distinct + a duplicate-retaining mirror per round)",
-    "doc_split_leakage_safe": "documents parquet scanned at most TWICE across the whole pipeline (shingle derivation + final per-doc join; checkpointed subplans included) and the max_cell<=1000 cell-population cap-filter is present — the r7 probe-caught quadratic's linearity guard, mirrored in the oracle CTE; gated by test_split_leakage_safe_bounded_scans_and_cap_filter",
+    "doc_dedup_clusters": "jaccard pair shape as above; the pair graph and the doc ids (together under LOCAL_FINISH_EDGES) cross to the driver in one collect, union-find labels the docs there, and the whole result is ONE LocalTableScan — no join back to the corpus; past the bound the edge-only finish or alternating-star contraction (O(log n) rounds, one window + one canonical distinct + a duplicate-retaining mirror per round) feeds a left join back to the doc ids",
+    "doc_split_leakage_safe": "documents parquet scanned at most TWICE across the whole pipeline (shingle derivation + the clusters' per-doc labels, which the CC finish collects with the pair graph; checkpointed subplans included) and the max_cell<=1000 cell-population cap-filter is present — the r7 probe-caught quadratic's linearity guard, mirrored in the oracle CTE; gated by test_split_leakage_safe_bounded_scans_and_cap_filter",
     "emb_contamination": "ONE fused assignment pass for corpus+benchmark (the literal-matrix argmax projection appears in exactly one subplan via the tagged union); the only data-mass join keys on cell; verdict joins move only the tiny dropped-id set; no shuffle on a raw vector column; gated by test_emb_contamination_fused_assignment_cell_keyed",
     "emb_pq_topk_int": "train is iters fused corpus passes with bounded m*k*d_sub collects; encode is a pure projection over two literals (flat code matrix + norms); search broadcasts the per-query integer LUT and scores each corpus row with m element_at lookups — no dim-wide multiply on the corpus side, no cartesian (query join is broadcast), one top-k window",
     "emb_ivfpq_topk_int": "coarse argmax assignment + residuals checkpointed ONCE (train + encode both consume it); candidates from a broadcast equi-join on cell (nprobe cells per query); ADC score = per-cell centroid dot + m LUT lookups; bit-exact lossless-limit test pins the decomposition",
@@ -71,7 +74,7 @@ COMMENTARY = {
     "emb_knn_hubness": "the audited knn-graph plan feeds a dst-keyed degree aggregate (map-side partial) and one left join back to the id column — nothing beyond the graph cost",
     "emb_proto_prune": "the per-cell count window shares the prototypicality rank window cell partitioning (ONE exchange); the keep rule is a pure integer cross-multiply projection",
     "emb_curation_pipeline": "ONE checkpointed two-level assignment frame feeds the SemDeDup pair join, the keep-list join AND the balanced-quota window — dedup and sampling share the assignment pass; quota is WindowGroupLimit-pushed",
-    "mm_dedup_clusters": "phash pair discovery (the audited banded shape) feeds connected components over the EDGE set only: union-find on the driver under LOCAL_FINISH_EDGES (one LocalTableScan), alternating-star contraction above it (checkpointed rounds, 3 edge-set exchanges per round); the final attach is a left join back to the corpus id column",
+    "mm_dedup_clusters": "phash pair discovery (the audited banded shape) feeds connected components that label the media ids: pairs plus ids under LOCAL_FINISH_EDGES cross to the driver in one collect and the result is ONE LocalTableScan (no join back); past the bound alternating-star contraction (checkpointed rounds, 3 edge-set exchanges per round) feeds a left join back to the corpus id column",
     "doc_dup_span_runs": "dup_spans' audited span frame (checkpointed once) feeds the corpus count AND the flag join; the islands window runs over ONLY the flagged subset (doc-keyed); coverage is an exploded (doc,pos) distinct — the flagged set itself is deliberately NOT checkpointed (materializing the whole duplicated-window mass OOM'd the 50x probe); zero-filled final join",
     "doc_temperature_mix": "count agg collapses to ~n_sources rows map-side; the exact-isqrt weight + round_frac_bigint quota is a pure projection over that tiny frame; quotas broadcast back; ONE source-keyed exchange for the rank window (variable quota, so the limit can't push — still a single streaming pass per partition)",
     "emb_ann_recall": "both arms in one plan: the exact arm broadcasts the 8-query frame over one corpus scan, the IVF arm reuses its audited assign/probe shape; the intersection join moves k-bounded rows per query; recall arithmetic is a plain-BIGINT projection — |queries| is the knob that bounds the whole eval",
@@ -87,9 +90,11 @@ COMMENTARY = {
     "doc_sorted_neighborhood": "block-keyed rank window over the _spread checkpointed prefix frame; offset explode caps candidates at N*(w-1); (block, rank) equi-join + per-candidate codegen levenshtein — the strict-block complement, unioned by multi-pass linkage",
     "doc_sorted_neighborhood_global": "identical candidates/join/pairs, but the rank is the BUCKETED global numbering: per-(block, 2-char-prefix-chunk) row_number windows + one tiny broadcast offset frame — no row_number window partitioned by the bare block cols anywhere in the plan (a hot block fans across ~charset^2 sort tasks); 50x measured 1.9x vs the window form's 16.7x",
     "doc_linkage_multipass": "driver finish at catalog scale: one bounded Arrow collect of the (lang, id, 80-char prefix) projection, both arms' candidates paired on the driver, so the plan is only the levenshtein filter over the checkpointed candidate frame (Scan ExistingRDD) — no exchange; past LINKAGE_LOCAL_ROWS / LINKAGE_LOCAL_PAIRS the union of the two linear passes and ONE distinct shuffle run instead, the SN arm hot-block-safe",
+    "doc_linkage_clusters": "two driver finishes and no final join: the linkage pairs from one bounded collect of the corpus projection, then star CC brings the pair graph and the doc ids across in one collect and labels the docs by union-find — the result is ONE LocalTableScan, whose collect runs no job (2 jobs in all at sf0.01)",
     "doc_linkage_recall": "the all-pairs truth runs ONLY over the guarded md5 sample (limit-probe raises past max_sample; BNLJ streams the _spread side); both blocking arms run on the same checkpointed sample; per-method counts are 1-row aggs crossJoined against the broadcast truth row",
     "metrics_star_bucketed": "pid-bucketed catalog scan -> filter -> project -> partial+final HashAggregate with ZERO exchanges: HashPartitioning(pid) is a subset of the 9 grain keys and alias propagation carries pid->dataset_id through the projection — the refresh aggregation is scan-local at any scale",
     "doc_fuzzy_prefix_bucketed": "the linkage-silver bucketed scan: cell count AND block self-join both plan scan-local (SortMergeJoin, zero shuffle exchanges under auto-broadcast off — plan-gated); the (lang, bk) derivation is pre-paid at write time",
+    "doc_dedup_tiers": "one corpus scan: the content-hash window computes each row's exact canon in the grouping's own exchange, one lazy checkpoint feeds every consumer; the keepers' near-dup labels come from star CC's driver finish (pairs plus keeper ids in one collect, a LocalTableScan), joined once to the tagged corpus for the verdict",
     "doc_cluster_best": "the audited jaccard+CC cluster shape feeds one quality projection and a cluster-keyed argmax window — cluster sizes bounded by the cell caps, so window mass is cluster-local",
     "doc_length_quantiles": "exact per-lang percentiles over the (lang, n_chars) HISTOGRAM: one combiner-friendly groupBy is the only corpus shuffle; windows run over distinct values per lang, not rows — FLAT at the 50x probe",
     "doc_source_overlap": "explode -> (source, gram) distinct -> self-join whose per-gram fan-out is bounded by source cardinality; grand-total gram count reuses the distinct frame",
@@ -133,14 +138,49 @@ COMMENTARY = {
 }
 
 
+def _sections(text: str) -> dict[str, list[str]]:
+    """PLANS.md's sections by entry name, each as its lines."""
+    out: dict[str, list[str]] = {}
+    name = None
+    for line in text.split("\n"):
+        if line.startswith("## "):
+            name = line[3:]
+            out[name] = []
+        if name is not None:
+            out[name].append(line)
+    return out
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    names = sys.argv[2:] or list(COMMENTARY)
     from metrics_service_spark.catalog import all_queries
     from metrics_service_spark.session import get_spark
 
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+    sections: dict[str, list[str]] = {}
+    if sys.argv[2:]:
+        with open(path, encoding="utf-8") as fh:
+            sections = _sections(fh.read())
     spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     cat = all_queries()
+    for name in names:
+        spark.catalog.clearCache()
+        df = cat[name].fn(spark, sf_dir)
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        sections[name] = [
+            f"## {name}",
+            "",
+            f"**Keep:** {COMMENTARY[name]}",
+            "",
+            "```",
+            plan.rstrip(),
+            "```",
+            "",
+        ]
     out = [
         "# PLANS — formatted physical plans of the headline queries",
         "",
@@ -150,24 +190,11 @@ def main() -> None:
         "then the `explain('formatted')` output.",
         "",
     ]
-    for name, note in COMMENTARY.items():
-        spark.catalog.clearCache()
-        df = cat[name].fn(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        out.append(f"## {name}")
-        out.append("")
-        out.append(f"**Keep:** {note}")
-        out.append("")
-        out.append("```")
-        out.append(plan.rstrip())
-        out.append("```")
-        out.append("")
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+    for name in COMMENTARY:
+        out.extend(sections.get(name, []))
     with open(path, "w", encoding="utf-8") as fh:
         fh.write("\n".join(out))
-    print(f"wrote {path} ({len(COMMENTARY)} plans)")
+    print(f"wrote {path} ({len(names)} of {len(COMMENTARY)} plans regenerated)")
 
 
 if __name__ == "__main__":
