@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -433,72 +434,14 @@ def kmeans_step(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_cells: int = 16,
-    dim: int = 64,
 ) -> DataFrame:
-    """One exact Lloyd iteration as DataFrame ops, fully deterministic:
-    seeds are the n_cells vectors with the smallest md5(id) (md5 so the
-    DuckDB oracle can replicate the selection — xxhash64 has no DuckDB
-    equivalent), assignment is argmax INTEGER quantized dot (ties to the
-    lowest cell), and the output is the per-(cell, dimension) quantized
-    sum/count/mean — the new centroid in quantized space.
-
-    The full k-means loop is this step iterated with the previous
-    output as centroids; one step suffices to oracle-check the
-    assignment + vector-mean machinery end-to-end.
-
-    Scale: seeds broadcast; assignment is one corpus scan (map-side
-    argmax over n_cells dots); the re-centering shuffle moves
-    (cell, pos) partial sums — map-side combined, k*dim rows total."""
-    spark = embeddings.sparkSession
-    seeds = (
-        embeddings.select(
-            quantize(F.col(vec_col)).alias("__sv"),
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            F.col(id_col).alias("__sid"),
-        )
-        .orderBy("__h", "__sid")
-        .limit(n_cells)
-        .collect()
-    )
-    centroids = spark.createDataFrame(
-        [(i, list(r["__sv"])) for i, r in enumerate(seeds)],
-        "cell int, cvec array<long>",
-    )
-    scored = (
-        _spread(
-            embeddings.select(
-                F.col(id_col).alias("__vid"),
-                quantize(F.col(vec_col)).alias("__v"),
-            )
-        )
-        .join(F.broadcast(centroids))
-        .select(
-            "__vid",
-            "__v",
-            "cell",
-            dot_long(F.col("__v"), F.col("cvec")).alias("__dot"),
-        )
-    )
-    w = Window.partitionBy("__vid").orderBy(F.col("__dot").desc(), F.col("cell").asc())
-    assigned = (
-        scored.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
-        .select("__vid", "__v", "cell")
-    )
-    return (
-        assigned.select("cell", F.posexplode("__v").alias("pos0", "qv"))
-        .groupBy("cell", (F.col("pos0") + 1).alias("pos"))
-        .agg(
-            F.sum("qv").alias("sum_q"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            "cell",
-            F.col("pos").cast("long").alias("pos"),
-            "sum_q",
-            "n",
-            round_frac(F.col("sum_q"), F.col("n"), 4).alias("mean_q"),
-        )
+    """One exact Lloyd iteration: `kmeans_train` with one assignment
+    pass from the md5 seeds.  The output is the per-(cell, dimension)
+    quantized sum/count/mean, the new centroid in quantized space; one
+    step suffices to oracle-check the assignment + vector-mean
+    machinery end to end."""
+    return kmeans_train(
+        embeddings, id_col=id_col, vec_col=vec_col, n_cells=n_cells, iters=1
     )
 
 
@@ -514,8 +457,8 @@ def ivf_topk_int(
 ) -> DataFrame:
     """IVF approximate top-k: each query probes its `nprobe` nearest
     cells and ranks exactly within them.  Every step is exact integer
-    arithmetic over quantized vectors — md5-ordered seed selection (as
-    in `kmeans_step`), argmax-integer-dot cell assignment, integer-dot
+    arithmetic over quantized vectors — md5-ordered seed selection
+    (`_md5_seeds`), argmax-integer-dot cell assignment, integer-dot
     probe selection, integer-dot ranking — so a DuckDB oracle replays
     the whole index + search bit-for-bit.
 
@@ -525,19 +468,14 @@ def ivf_topk_int(
     corpus.  Recall is tuned by (n_cells, nprobe); nprobe=n_cells
     degenerates to exact brute force."""
     spark = embeddings.sparkSession
-    seeds = (
+    seeds = _md5_seeds(
         embeddings.select(
-            quantize(F.col(vec_col)).alias("__sv"),
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            F.col(id_col).alias("__sid"),
-        )
-        .orderBy("__h", "__sid")
-        .limit(n_cells)
-        .collect()
+            F.col(id_col).alias("__vid"), quantize(F.col(vec_col)).alias("__v")
+        ),
+        n_cells,
     )
     centroids = spark.createDataFrame(
-        [(i, list(r["__sv"])) for i, r in enumerate(seeds)],
-        "cell int, cvec array<long>",
+        list(enumerate(seeds)), "cell int, cvec array<long>"
     )
     scored = (
         embeddings.select(
@@ -741,25 +679,48 @@ def quantize_at(vec: Column, scale: int) -> Column:
     )
 
 
+def _md5_seeds(quant: DataFrame, n: int) -> list[list[int]]:
+    """The `__v` of the n rows of a (__vid, __v: array<long>) frame
+    with the smallest (md5(__vid), __vid), as one bounded driver
+    collect: the deterministic seed rule of every md5-seeded kernel
+    (md5, not xxhash64, because DuckDB can replay it).  Fewer rows than
+    n give fewer seeds.  A NULL id, vector or element among the seeds
+    raises: Spark sorts a NULL md5 first where DuckDB sorts it last,
+    so such a seed would silently diverge from the oracle."""
+    rows = (
+        quant.select(
+            "__v",
+            F.md5(F.col("__vid").cast("string")).alias("__h"),
+            F.col("__vid").alias("__sid"),
+        )
+        .orderBy("__h", "__sid")
+        .limit(n)
+        .collect()
+    )
+    for r in rows:
+        if r["__sid"] is None or r["__v"] is None or None in r["__v"]:
+            raise ValueError(
+                f"md5 seed selection met a NULL id, vector or element (id "
+                f"{r['__sid']!r}): the seed order is undefined across "
+                "engines — drop or fill NULL embeddings first"
+            )
+    return [[int(x) for x in r["__v"]] for r in rows]
+
+
 def _md5_seed_centroids(
     embeddings: DataFrame, id_col: str, vec_col: str, n_cells: int
 ) -> list[list[int]]:
-    """The n_cells quantized vectors with the smallest md5(id) —
-    deterministic, DuckDB-replayable seed selection (the bounded
-    driver collect shared by the SemDeDup family).  The collected
-    seeds are also where the SEM_QUANT int64 no-overflow contract is
-    validated (see _check_sem_bounds)."""
-    seeds = (
+    """`_md5_seeds` at SEM_QUANT resolution, the seed collect shared by
+    the SemDeDup family.  The collected seeds are also where the
+    SEM_QUANT int64 no-overflow contract is validated (see
+    _check_sem_bounds)."""
+    cvecs = _md5_seeds(
         embeddings.select(
-            quantize_at(F.col(vec_col), SEM_QUANT).alias("__sv"),
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            F.col(id_col).alias("__sid"),
-        )
-        .orderBy("__h", "__sid")
-        .limit(n_cells)
-        .collect()
+            F.col(id_col).alias("__vid"),
+            quantize_at(F.col(vec_col), SEM_QUANT).alias("__v"),
+        ),
+        n_cells,
     )
-    cvecs = [[int(x) for x in r["__sv"]] for r in seeds]
     _check_sem_bounds(cvecs)
     return cvecs
 
@@ -1373,6 +1334,19 @@ def _floordiv_mean(sum_q: int, n: int) -> int:
     return (sum_q - ((sum_q % n + n) % n)) // n
 
 
+def _recenter(
+    prev: list[list[int]], stats: Iterable[tuple[int, int, int, int]]
+) -> list[list[int]]:
+    """The Lloyd centroid update: each (key, pos, sum_q, n) stats row
+    overwrites position pos of centroid key with the exact floor mean
+    (`_floordiv_mean`); a key with no rows (an empty cell) carries its
+    previous centroid over."""
+    out = [list(cv) for cv in prev]
+    for key, pos, sum_q, n in stats:
+        out[key][pos] = _floordiv_mean(sum_q, n)
+    return out
+
+
 def lloyd_centroids(
     quant: DataFrame, n_cells: int, iters: int
 ) -> list[list[int]]:
@@ -1385,18 +1359,7 @@ def lloyd_centroids(
     collect + the exact floor-division mean; empty cells carry their
     previous centroid.  Returns the FINAL centroid list — the caller
     decides what to compute with the last assignment."""
-    seeds = (
-        quant.select(
-            F.col("__v").alias("__sv"),
-            F.md5(F.col("__vid").cast("string")).alias("__h"),
-            F.col("__vid").alias("__sid"),
-        )
-        .orderBy("__h", "__sid")
-        .limit(n_cells)
-        .collect()
-    )
-    centroids = [[int(x) for x in r["__sv"]] for r in seeds]
-    n_cells = len(centroids)
+    centroids = _md5_seeds(quant, n_cells)
     for _ in range(iters - 1):
         stats = (
             _argmax_cells(quant, centroids)
@@ -1405,18 +1368,7 @@ def lloyd_centroids(
             .agg(F.sum("qv").alias("sum_q"), F.count(F.lit(1)).alias("n"))
             .collect()
         )
-        by_cell: dict[int, dict[int, tuple[int, int]]] = {}
-        for r in stats:
-            by_cell.setdefault(r["cell"], {})[r["pos0"]] = (r["sum_q"], r["n"])
-        centroids = [
-            [
-                _floordiv_mean(*by_cell[cell][pos])
-                for pos in range(len(centroids[cell]))
-            ]
-            if cell in by_cell
-            else centroids[cell]
-            for cell in range(n_cells)
-        ]
+        centroids = _recenter(centroids, stats)
     return centroids
 
 
@@ -1429,9 +1381,9 @@ def kmeans_train(
     iters: int = 2,
 ) -> DataFrame:
     """Full k-means training loop: `iters` assignment passes with a
-    floor-division integer centroid update between them — the
-    iterative generalization of `kmeans_step`, deterministic enough
-    that a SQL oracle replays the whole 2-iteration run bit-for-bit.
+    floor-division integer centroid update between them (`kmeans_step`
+    is iters=1), deterministic enough that a SQL oracle replays the
+    whole 2-iteration run bit-for-bit.
 
     Per iteration: (1) assignment is a PURE PROJECTION — the current
     centroids (k x dim ints, driver-held like the seed collect) are
@@ -1443,8 +1395,7 @@ def kmeans_train(
     per iteration and NOTHING data-sized is ever shuffled or
     collected: the only shuffle is the k*dim partial-sum exchange,
     map-side combined.  Output: the final assignment's per-(cell,
-    pos) sum/count/mean in quantized space — `kmeans_step`'s schema,
-    so the two are drop-in comparable.
+    pos) sum/count/mean in quantized space.
 
     Assignment routes through the shared `_argmax_cells`, so beyond
     `_LITERAL_CELL_LIMIT` cells it switches automatically from inlined
@@ -1695,24 +1646,11 @@ def _pq_train_quant(
     if dim % m:
         raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
     d_sub = dim // m
-    seeds = (
-        quant.select(
-            F.col("__v").alias("__sv"),
-            F.md5(F.col("__vid").cast("string")).alias("__h"),
-            F.col("__vid").alias("__sid"),
-        )
-        .orderBy("__h", "__sid")
-        .limit(k_codes)
-        .collect()
-    )
+    seeds = _md5_seeds(quant, k_codes)
     codebooks = [
-        [
-            [int(x) for x in r["__sv"][j * d_sub : (j + 1) * d_sub]]
-            for r in seeds
-        ]
-        for j in range(m)
+        [sv[j * d_sub : (j + 1) * d_sub] for sv in seeds] for j in range(m)
     ]
-    k = len(codebooks[0])
+    k = len(seeds)
     for _ in range(iters - 1):
         # (j, code, p, qv) tuples per vector, built as ONE bound array
         # so the assignment expression runs once per row — exploding
@@ -1749,24 +1687,11 @@ def _pq_train_quant(
             )
             .collect()
         )
-        upd: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
-        for r in stats:
-            upd.setdefault((r["__j"], r["__code"]), {})[r["__p"]] = (
-                r["sum_q"],
-                r["n"],
-            )
-        codebooks = [
-            [
-                [
-                    _floordiv_mean(*upd[(j, c)][p])
-                    for p in range(d_sub)
-                ]
-                if (j, c) in upd
-                else codebooks[j][c]
-                for c in range(k)
-            ]
-            for j in range(m)
-        ]
+        flat = _recenter(
+            [cv for book in codebooks for cv in book],
+            ((j * k + c, p, s, n) for j, c, p, s, n in stats),
+        )
+        codebooks = [flat[j * k : (j + 1) * k] for j in range(m)]
     return codebooks
 
 
@@ -1933,25 +1858,12 @@ def ivfpq_topk_int(
     residual frame; every step (seeding, assignment ties, floor-div
     updates, LUT sums) is the deterministic integer arithmetic the
     DuckDB oracle replays bit-for-bit."""
-    spark = embeddings.sparkSession
-    seeds = (
-        embeddings.select(
-            quantize(F.col(vec_col)).alias("__sv"),
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            F.col(id_col).alias("__sid"),
-        )
-        .orderBy("__h", "__sid")
-        .limit(n_cells)
-        .collect()
+    proj = embeddings.select(
+        F.col(id_col).alias("__vid"), quantize(F.col(vec_col)).alias("__v")
     )
-    cvecs = [[int(x) for x in r["__sv"]] for r in seeds]
+    cvecs = _md5_seeds(proj, n_cells)
     cells_lit = _lit_matrix(cvecs, "bigint")
-    quant = _spread(
-        embeddings.select(
-            F.col(id_col).alias("__vid"),
-            quantize(F.col(vec_col)).alias("__v"),
-        )
-    )
+    quant = _spread(proj)
     # coarse assignment + residuals, materialized ONCE (train pass +
     # encode pass both consume it)
     assigned = (
@@ -2158,24 +2070,13 @@ def cluster_balanced_sample(
     cell-keyed window whose per-cell top-k is WindowGroupLimit-pushed
     map-side, and nothing driver-bound growing with data.  Output:
     (id, cell, rk) for the kept rows."""
-    seeds = (
-        embeddings.select(
-            quantize(F.col(vec_col)).alias("__sv"),
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            F.col(id_col).alias("__sid"),
-        )
-        .orderBy("__h", "__sid")
-        .limit(n_cells)
-        .collect()
+    proj = embeddings.select(
+        F.col(id_col).alias("__vid"), quantize(F.col(vec_col)).alias("__v")
     )
-    cvecs = [[int(x) for x in r["__sv"]] for r in seeds]
+    cvecs = _md5_seeds(proj, n_cells)
     # _spread: the argmax HOF must run on all cores even off a
     # one-row-group source (r9 probe find, same class as kmeans_train)
-    quant = _spread(
-        embeddings.select(
-            F.col(id_col).alias("__vid"), quantize(F.col(vec_col)).alias("__v")
-        )
-    )
+    quant = _spread(proj)
     w = Window.partitionBy("cell").orderBy(
         F.md5(F.col("__vid").cast("string")).asc(), F.col("__vid").asc()
     )
@@ -2451,24 +2352,12 @@ def prototypicality_int(
     and a per-cell window whose partition mass is bounded by the
     footer-derived geometry — no corpus-wide sort anywhere.
     Output (vec_id, cell, proto_q, cell_rank)."""
-    seeds = (
-        embeddings.select(
-            quantize(F.col(vec_col)).alias("__sv"),
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
-            F.col(id_col).alias("__sid"),
-        )
-        .orderBy("__h", "__sid")
-        .limit(n_cells)
-        .collect()
+    proj = embeddings.select(
+        F.col(id_col).alias("__vid"), quantize(F.col(vec_col)).alias("__v")
     )
-    cvecs = [[int(x) for x in r["__sv"]] for r in seeds]
+    cvecs = _md5_seeds(proj, n_cells)
     cells_lit = _lit_matrix(cvecs, "bigint")
-    quant = _spread(
-        embeddings.select(
-            F.col(id_col).alias("__vid"),
-            quantize(F.col(vec_col)).alias("__v"),
-        )
-    )
+    quant = _spread(proj)
     w = Window.partitionBy("cell").orderBy(
         F.col("proto_q").desc(), F.col("__vid").asc()
     )

@@ -258,12 +258,15 @@ def test_semdedup_within_cell_join_is_equi(spark, sf_dir):
 def test_kmeans_train_final_pass_is_projection(spark, sf_dir):
     # every assignment pass inlines the driver-held centroids as
     # literals: the final plan must contain NO per-vector window (the
-    # cross-join+row_number argmax shape) and no cartesian — just
-    # scan -> project -> posexplode -> hash aggregate
-    plan = _plan(spark, sf_dir, "emb_kmeans_train")
-    assert "Window" not in plan
-    assert "CartesianProduct" not in plan
-    assert "HashAggregate" in plan
+    # cross-join+row_number argmax shape) and no cartesian or
+    # nested-loop join — just scan -> project -> posexplode -> hash
+    # aggregate; emb_kmeans_step is the same kernel at iters=1
+    for name in ("emb_kmeans_train", "emb_kmeans_step"):
+        plan = _plan(spark, sf_dir, name)
+        assert "Window" not in plan, name
+        assert "CartesianProduct" not in plan, name
+        assert "NestedLoopJoin" not in plan, name
+        assert "HashAggregate" in plan, name
 
 
 #: The ONLY queries allowed a Pandas (Arrow) stage: the media-decode

@@ -6,6 +6,7 @@ the exact-dim guard of the LSH signatures."""
 
 from __future__ import annotations
 
+import hashlib
 import math
 import random
 
@@ -368,6 +369,69 @@ def test_kmeans_train_large_k_broadcast_path_identical(spark, sf_dir, monkeypatc
         for r in sim.kmeans_train(emb, n_cells=k, iters=2).collect()
     )
     assert bcast == lit and len({c for c, *_ in bcast}) > 1
+
+
+def test_md5_seeds_match_hashlib_reference(spark):
+    """`_md5_seeds` takes the n rows with the smallest (md5(str(id)),
+    id), the rule every md5-seeded oracle replays; an n above the row
+    count returns every row in that order."""
+    from metrics_service_spark.operators import similarity as sim
+
+    rows = [(i, [i, -i, 3 * i]) for i in range(-6, 9)]
+    quant = spark.createDataFrame(rows, "__vid long, __v array<long>")
+    ref = [
+        v
+        for _, v in sorted(
+            rows, key=lambda r: (hashlib.md5(str(r[0]).encode()).hexdigest(), r[0])
+        )
+    ]
+    assert sim._md5_seeds(quant, 5) == ref[:5]
+    assert sim._md5_seeds(quant, 40) == ref
+
+
+@pytest.mark.parametrize(
+    "bad", [(None, [1, 2]), (2, None), (2, [1, None])], ids=["id", "vec", "elem"]
+)
+def test_md5_seeds_reject_null_seeds(spark, bad):
+    """A NULL id, vector or element among the seeds raises: Spark sorts
+    a NULL md5 first and DuckDB last, so the seeds would differ from
+    every md5-seeded oracle (and a NULL element used to die in int())."""
+    from metrics_service_spark.operators import similarity as sim
+
+    quant = spark.createDataFrame(
+        [(1, [3, 4]), bad, (3, [5, 6])], "__vid long, __v array<long>"
+    )
+    with pytest.raises(ValueError, match="NULL"):
+        sim._md5_seeds(quant, 3)
+    vec = None if bad[1] is None else [None if x is None else x / 10 for x in bad[1]]
+    emb = spark.createDataFrame(
+        [(1, [0.3, 0.4]), (bad[0], vec)], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match="NULL"):
+        sim.kmeans_step(emb, n_cells=2)
+
+
+def test_recenter_floor_mean_and_empty_cell_carry_over(spark):
+    """`_recenter` writes the floor mean (toward -inf) per (key, pos)
+    and carries a key with no stats rows over; through
+    `lloyd_centroids`, a seed whose vectors all argmax elsewhere is
+    such an empty cell."""
+    from metrics_service_spark.operators import similarity as sim
+
+    prev = [[1, 2], [3, 4], [5, 6]]
+    stats = [(0, 0, 7, 2), (0, 1, -7, 2), (2, 0, 10, 3), (2, 1, -1, 3)]
+    assert sim._recenter(prev, stats) == [[3, -4], [3, 4], [3, -1]]
+    assert prev == [[1, 2], [3, 4], [5, 6]]
+
+    # [1, 9] scores 82 against its own seed and 90 against [0, 10], so
+    # its cell is empty and keeps the seed; [0, 10] takes both
+    vecs = {1: [10, 0], 2: [0, 10], 3: [1, 9]}
+    quant = spark.createDataFrame(
+        list(vecs.items()), "__vid long, __v array<long>"
+    )
+    order = sorted(vecs, key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
+    after = {1: [10, 0], 2: [0, 9], 3: [1, 9]}
+    assert sim.lloyd_centroids(quant, 3, 2) == [after[i] for i in order]
 
 
 def test_sem_quant_bounds_validated_at_seed_collect(spark):
