@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from metrics_service_spark.catalog import QuerySpec
 from metrics_service_spark.operators.closure import expand_family, resolve_chains
+from metrics_service_spark.operators.driver import _one_task
 from metrics_service_spark.sources.tables import load_table, rowcount_bound
 
 
@@ -94,9 +95,12 @@ GROUP BY 1
 # --- J1/J2: obsolescence-chain transitive closure ------------------------
 def q_order_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each customer's orders (by date) form an obsoletes chain; resolve
-    every order to its root + depth via the iterative driver-loop join
-    (pid_resolution.py:207-282 analog, depth cap 20)."""
-    orders = load_table(spark, sf_dir, "orders")
+    every order to its root + depth by pointer jumping
+    (pid_resolution.py:207-282 analog, depth cap 20).  A small orders
+    scan is read in one partition (`_one_task`), so the chain window
+    plans no exchange, and the chains are walked on the driver from
+    one collect: 1 job at sf0.01."""
+    orders = _one_task(load_table(spark, sf_dir, "orders"))
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     edges = orders.select(
         F.col("o_orderkey").alias("child"),
@@ -232,21 +236,24 @@ def q_pid_family_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer's first 10 orders into a chain (both directions, like the
     reference's resourceMap/documents bidirectional membership); seeds
     are a deterministic sample."""
-    orders = load_table(spark, sf_dir, "orders")
+    orders = _one_task(load_table(spark, sf_dir, "orders"))
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    # the chain link comes from the same window pass as the row number:
+    # within a customer's first 10 orders, the previous order by date
+    # is the previous one by rank.  Edges AND seeds derive from this
+    # frame — materialize it once instead of running the sort again
     lim = (
-        orders.withColumn("rn", F.row_number().over(w))
+        orders.select(
+            "o_orderkey",
+            F.row_number().over(w).alias("rn"),
+            F.lag("o_orderkey").over(w).alias("parent"),
+        )
         .filter(F.col("rn") <= 10)
-        .select("o_orderkey", "o_custkey", "rn")
-        # edges AND seeds derive from this window — materialize it once
-        # instead of running the row_number sort twice
         .localCheckpoint(eager=False)
     )
-    w2 = Window.partitionBy("o_custkey").orderBy("rn")
-    e1 = lim.select(
-        F.col("o_orderkey").alias("child"),
-        F.lag("o_orderkey").over(w2).alias("parent"),
-    ).filter(F.col("parent").isNotNull())
+    e1 = lim.select(F.col("o_orderkey").alias("child"), "parent").filter(
+        F.col("parent").isNotNull()
+    )
     edges = e1.select(F.col("child").alias("src"), F.col("parent").alias("dst")).union(
         e1.select(F.col("parent").alias("src"), F.col("child").alias("dst"))
     )
@@ -302,7 +309,7 @@ def q_order_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     id = min order key in the chain."""
     from metrics_service_spark.operators.closure import connected_components
 
-    orders = load_table(spark, sf_dir, "orders")
+    orders = _one_task(load_table(spark, sf_dir, "orders"))
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     lim = (
         orders.withColumn("rn", F.row_number().over(w))
@@ -315,10 +322,10 @@ def q_order_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("o_orderkey").over(w2).alias("dst"),
     ).filter(F.col("dst").isNotNull())
     # chain graph (deg <= 2, ~26k edges at sf0.02): the kernel finishes
-    # it on the driver in 2 jobs (the AQE map stage of the chain
-    # window's exchange, run as a job of its own, and the edges' Arrow
-    # collect; the result is a local relation, whose collect runs no
-    # job).  hop and max_iters shape only the
+    # it on the driver in 1 job, the edges' Arrow collect (a small
+    # orders scan is read in one partition, so the chain window plans
+    # no exchange; the result is a local relation, whose collect runs
+    # no job).  hop and max_iters shape only the
     # distributed rounds an edge set past LOCAL_FINISH_EDGES runs:
     # hop=3 composes the neighborhood once into ceil(9/3)=3
     # label-propagation rounds, and max_iters=9 is exact (10-node

@@ -44,6 +44,13 @@ Scale notes:
   estimate of the ids admits it); only the edges within their bound
   (the edge-only finish, then the join-back in Spark); neither (the
   star rounds, then the same join-back).
+- The seeded BFS and the chain walk finish on the driver too
+  (`_local_bfs`, `_local_chains`): one bounded Arrow collect, then the
+  distributed loop's own rounds replayed in numpy (`_pairs` is its
+  equi-join), so their rows equal the loop's whatever the graph holds.
+  Each bounds its input rows and its output (BFS_LOCAL_ROWS and
+  BFS_LOCAL_PAIRS, CHAIN_LOCAL_ROWS and CHAIN_LOCAL_STATE); past
+  either, the distributed loop runs.
 
 One function per algorithm, one loop per function: pointer jumping
 (`resolve_chains`), seeded BFS (`expand_family`), label propagation
@@ -59,9 +66,19 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegralType, StructType
+from pyspark.sql.types import (
+    ByteType,
+    DataType,
+    IntegerType,
+    IntegralType,
+    LongType,
+    ShortType,
+    StringType,
+    StructType,
+)
 
 if TYPE_CHECKING:
+    import numpy as np
     import pyarrow as pa
 
 CHECKPOINT_EVERY = 5
@@ -88,6 +105,27 @@ LOCAL_FINISH_NODES = 250_000
 #: from sf0.01 to 50x (7.2 MB at 250,000 ids); a frame of unknown size
 #: (a `createDataFrame`) does not fit.
 NODE_ESTIMATE_BYTES = 32
+
+#: input bound of the driver BFS (`_local_bfs`): at most this many seed
+#: and edge rows cross to the driver, in one collect.
+BFS_LOCAL_ROWS = 1_000_000
+
+#: output bound of the driver BFS: past this many (seed, member) pairs,
+#: or rows of one round's join, the distributed loop runs instead.
+#: Needed beside the input bound because the pairs can outgrow it:
+#: `build_identifiers` seeds every pid.
+BFS_LOCAL_PAIRS = 2_000_000
+
+#: input bound of the driver chain walk (`_local_chains`): at most this
+#: many (child, parent) rows cross to the driver, in one collect.
+CHAIN_LOCAL_ROWS = 1_000_000
+
+#: output bound of the driver chain walk: past this many rows in one
+#: round's state the distributed loop runs instead.  Duplicate child
+#: rows multiply the state, in Spark's self-join as on the driver.
+CHAIN_LOCAL_STATE = 2_000_000
+
+_INTEGRAL_WIDTH = (ByteType(), ShortType(), IntegerType(), LongType())
 
 
 def _compose_hops(edges: DataFrame, a: str, b: str, hop: int) -> DataFrame:
@@ -188,6 +226,198 @@ def _union_find(
     return ids, [find(x) for x in range(len(ids))], iu, iv
 
 
+def _driver_ids(*types: DataType) -> DataType | None:
+    """The one type the driver BFS and chain walk compare ids as: the
+    widest of `types` when all are integers (Spark's join widens its
+    keys the same way), the plain string type when all are; None
+    otherwise.  Floats, collated strings and mixed types keep Spark's
+    comparison, so their graphs always run distributed."""
+    if all(isinstance(t, IntegralType) for t in types):
+        return max(types, key=_INTEGRAL_WIDTH.index)
+    return StringType() if all(t == StringType() for t in types) else None
+
+
+def _codes(cols: list[pa.Array]) -> tuple[pa.Array, list[np.ndarray]]:
+    """The distinct non-NULL ids of `cols` (Arrow arrays of one type),
+    and each column as int64 indexes into them, -1 for NULL."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ids = pc.unique(pa.concat_arrays(cols).drop_null())
+    return ids, [
+        pc.index_in(c, value_set=ids).fill_null(-1).to_numpy().astype("int64")
+        for c in cols
+    ]
+
+
+def _decode(ids: pa.Array, codes: np.ndarray, t: DataType) -> pa.Array:
+    """The ids at `codes` (NULL at -1), as the Arrow form of `t`."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    return ids.take(pa.array(codes, mask=codes < 0)).cast(to_arrow_type(t))
+
+
+def _pairs(
+    lk: np.ndarray, rk: np.ndarray, limit: int
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """The row pairs (i, j) of the inner equi-join lk[i] == rk[j], each
+    pair once, as Spark's join emits them (a NULL key, -1, matches
+    nothing), or None past `limit` pairs."""
+    import numpy as np
+
+    order = np.argsort(rk, kind="stable")
+    srt = rk[order]
+    lo = np.searchsorted(srt, lk, "left")
+    cnt = np.where(lk >= 0, np.searchsorted(srt, lk, "right") - lo, 0)
+    total = int(cnt.sum())
+    if total > limit:
+        return None
+    li = np.repeat(np.arange(len(lk)), cnt)
+    return li, order[np.arange(total) + np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)]
+
+
+def _local_chains(
+    edges: DataFrame, schema: StructType, t: DataType, *, max_depth: int, rounds: int
+) -> DataFrame | None:
+    """`resolve_chains` on the driver: the same pointer-jumping rounds
+    over the (child, parent) rows of `edges`, each round's self-join
+    done by `_pairs`, so duplicate child rows, cycles, parents that are
+    no node and NULL ids come out as the distributed loop leaves them.
+    `schema` is the loop's output schema, `t` the type the ids are
+    compared as (`_driver_ids`).  ONE Spark job, the bounded
+    collect of at most CHAIN_LOCAL_ROWS rows; None past that bound or
+    past CHAIN_LOCAL_STATE rows in a round."""
+    import numpy as np
+    import pyarrow as pa
+
+    from metrics_service_spark.operators.driver import _bounded_arrow
+
+    child, parent = edges.columns
+    tbl = _bounded_arrow(
+        edges.select(F.col(child).cast(t), F.col(parent).cast(t)), CHAIN_LOCAL_ROWS
+    )
+    if tbl is None:
+        return None
+    ids, (node, par) = _codes([c.combine_chunks() for c in tbl.columns])
+    done = par < 0
+    ptr = np.where(done, node, par)
+    depth = (~done).astype("int64")
+    for i in range(rounds):
+        j = _pairs(ptr, node, CHAIN_LOCAL_STATE)
+        if j is None:
+            return None
+        s, h = j
+        keep = done[s]
+        node, ptr, depth, done = (
+            node[s],
+            np.where(keep, ptr[s], ptr[h]),
+            np.where(keep, depth[s], depth[s] + depth[h]),
+            keep | done[h],
+        )
+        if rounds > 6 and (i + 1) % CHECKPOINT_EVERY == 0 and done.all():
+            break
+    out = done & (depth <= max_depth)
+    cols = [
+        _decode(ids, node[out], schema["node"].dataType),
+        _decode(ids, ptr[out], schema["root"].dataType),
+        pa.array(depth[out], pa.int32()),
+    ]
+    return edges.sparkSession.createDataFrame(
+        pa.table(cols, names=schema.names), schema=schema
+    )
+
+
+def _local_bfs(
+    seeds: DataFrame,
+    edges: DataFrame,
+    schema: StructType,
+    t: DataType,
+    *,
+    max_iters: int,
+    undirected: bool,
+    hop: int,
+) -> DataFrame | None:
+    """`expand_family` on the driver: the same layers, with the same
+    `hop` composition and round count, the same dedup targets (the
+    last two layers when `undirected`, else all) and the same NULL
+    rules (a NULL member joins nothing and is never deduplicated), so
+    the (seed, member) rows equal the distributed loop's, duplicates
+    included.  `seeds` and `edges` have one and two columns (seed;
+    src, dst); `schema` is the loop's output schema, `t` the type the
+    ids are compared as (`_driver_ids`).  ONE Spark job:
+    seeds and edges cross in one collect of at most BFS_LOCAL_ROWS
+    rows, told apart by a tag.  None past that bound or past
+    BFS_LOCAL_PAIRS output pairs or rows of one round's join."""
+    import numpy as np
+    import pyarrow as pa
+
+    from metrics_service_spark.operators.driver import _bounded_arrow
+
+    (seed,) = seeds.columns
+    src, dst = edges.columns
+    rows = seeds.select(
+        F.lit(True).alias("__seed"), F.col(seed).cast(t), F.lit(None).cast(t)
+    ).union(edges.select(F.lit(False), F.col(src).cast(t), F.col(dst).cast(t)))
+    tbl = _bounded_arrow(rows, BFS_LOCAL_ROWS)
+    if tbl is None:
+        return None
+    tag, u, v = (c.combine_chunks() for c in tbl.columns)
+    ids, (uc, vc) = _codes([u, v])
+    is_seed = tag.to_numpy(zero_copy_only=False)
+    a, b = uc[~is_seed], vc[~is_seed]
+    n = len(ids) + 1
+
+    def key(s: np.ndarray, m: np.ndarray) -> np.ndarray:
+        return (s + 1) * n + (m + 1)
+
+    if hop > 1:
+        # `_compose_hops`: the <=hop-hop pairs, self-loops and NULL
+        # endpoints dropped, distinct (each step deduplicated: the
+        # final distinct makes that exact)
+        acc, xa, xb = [key(a, b)], a, b
+        for _ in range(hop - 1):
+            j = _pairs(xb, a, BFS_LOCAL_PAIRS)
+            if j is None:
+                return None
+            k = np.unique(key(xa[j[0]], b[j[1]]))
+            xa, xb = k // n - 1, k % n - 1
+            acc.append(k)
+        k = np.unique(np.concatenate(acc))
+        a, b = k // n - 1, k % n - 1
+        keep = (a >= 0) & (b >= 0) & (a != b)
+        a, b = a[keep], b[keep]
+        max_iters = -(-max_iters // hop)
+    s0 = np.unique(uc[is_seed])
+    layers = [key(s0, s0)]
+    total = len(s0)
+    for _ in range(max_iters):
+        last = layers[-1]
+        j = _pairs(last % n - 1, a, BFS_LOCAL_PAIRS)
+        if j is None:
+            return None
+        k = np.unique(key(last[j[0]] // n - 1, b[j[1]]))
+        has_member = k % n > 0
+        for seen in layers[-2:] if undirected else layers:
+            k = k[~(np.isin(k, seen) & has_member)]
+            has_member = k % n > 0
+        if not len(k):
+            # every later layer is empty too
+            break
+        total += len(k)
+        if total > BFS_LOCAL_PAIRS:
+            return None
+        layers.append(k)
+    k = np.concatenate(layers)
+    cols = [
+        _decode(ids, k // n - 1, schema["seed"].dataType),
+        _decode(ids, k % n - 1, schema["member"].dataType),
+    ]
+    return edges.sparkSession.createDataFrame(
+        pa.table(cols, names=schema.names), schema=schema
+    )
+
+
 def _local_label(
     edges: DataFrame, nodes: DataFrame, schema: StructType
 ) -> DataFrame | bool:
@@ -271,30 +501,33 @@ def resolve_chains(
     Algorithm: pointer jumping (path doubling) — each round every
     node's ancestor pointer leaps twice as far, so chains of depth d
     resolve in ceil(log2(d)) self-joins instead of d frontier joins.
-    At 100 TB this is the difference between 5 shuffles and 20+; state
-    is localCheckpoint-ed per round to keep lineage O(1).
+
+    Integer or string ids of at most CHAIN_LOCAL_ROWS rows run those
+    rounds on the driver (`_local_chains`: one bounded Arrow collect,
+    the self-joins in numpy), with the same rows and schema as the
+    distributed loop, whatever the input holds (duplicate child rows,
+    cycles, parents that are no node, NULL ids).  order_chains is 1
+    job this way at sf0.01, where its distributed loop ran 18-22.
+    Past the bounds (CHAIN_LOCAL_ROWS input rows, CHAIN_LOCAL_STATE
+    rows in a round) the distributed loop runs: at 100 TB the
+    difference between 5 shuffles and 20+, its state localCheckpoint-ed
+    per round to keep lineage O(1).
     """
     state = edges.select(
         F.col(child).alias("node"),
         F.coalesce(F.col(parent), F.col(child)).alias("ptr"),
         F.when(F.col(parent).isNull(), F.lit(0)).otherwise(F.lit(1)).alias("depth"),
         F.col(parent).isNull().alias("done"),
-    ).localCheckpoint(eager=False)
+    )
 
-    # Pointer jumping needs only ceil(log2(depth)) rounds, so for the
-    # reference's depth cap (20 -> 5 rounds) the whole loop is planned
-    # lazily — no per-round driver action, one final job executes the
-    # 5-join tree.  Only genuinely deep closures (rounds > 6) pay for
-    # mid-loop checkpoints (lineage truncation) and early-exit probes.
-    rounds = max(1, math.ceil(math.log2(max(2, max_depth))))
-    for i in range(rounds):
+    def jump(state: DataFrame) -> DataFrame:
         hop = state.select(
             F.col("node").alias("p_node"),
             F.col("ptr").alias("p_ptr"),
             F.col("depth").alias("p_depth"),
             F.col("done").alias("p_done"),
         )
-        state = state.join(hop, state.ptr == hop.p_node, "inner").select(
+        return state.join(hop, state.ptr == hop.p_node, "inner").select(
             "node",
             F.when(F.col("done"), F.col("ptr")).otherwise(F.col("p_ptr")).alias("ptr"),
             F.when(F.col("done"), F.col("depth"))
@@ -302,6 +535,33 @@ def resolve_chains(
             .alias("depth"),
             (F.col("done") | F.col("p_done")).alias("done"),
         )
+
+    def out(state: DataFrame) -> DataFrame:
+        return state.filter(F.col("done") & (F.col("depth") <= max_depth)).select(
+            "node", F.col("ptr").alias("root"), F.col("depth").cast("int").alias("depth")
+        )
+
+    # Pointer jumping needs only ceil(log2(depth)) rounds, so for the
+    # reference's depth cap (20 -> 5 rounds) the whole loop is planned
+    # lazily — no per-round driver action, one final job executes the
+    # 5-join tree.  Only genuinely deep closures (rounds > 6) pay for
+    # mid-loop checkpoints (lineage truncation) and early-exit probes.
+    rounds = max(1, math.ceil(math.log2(max(2, max_depth))))
+    t = _driver_ids(*(edges.schema[c].dataType for c in (child, parent)))
+    if t is not None:
+        # the output schema comes from analysis of one round (no job)
+        small = _local_chains(
+            edges.select(child, parent),
+            out(jump(state)).schema,
+            t,
+            max_depth=max_depth,
+            rounds=rounds,
+        )
+        if small is not None:
+            return small
+    state = state.localCheckpoint(eager=False)
+    for i in range(rounds):
+        state = jump(state)
         # each round references `state` TWICE (self-join), so the lazy
         # loop's final plan embeds 2^rounds copies of the leaf scan —
         # measured at sf0.1 that is still FASTER than truncating every
@@ -315,9 +575,7 @@ def resolve_chains(
             state = state.localCheckpoint(eager=False)
             if state.filter(~F.col("done")).isEmpty():
                 break
-    return state.filter(F.col("done") & (F.col("depth") <= max_depth)).select(
-        "node", F.col("ptr").alias("root"), F.col("depth").cast("int").alias("depth")
-    )
+    return out(state)
 
 
 def expand_family(
@@ -360,6 +618,15 @@ def expand_family(
     not a multiple of h the effective depth cap rounds UP to the next
     multiple (termination is still at fixpoint when the graph is
     shallower).
+
+    Integer or string ids with at most BFS_LOCAL_ROWS seed and edge
+    rows run the same layers on the driver (`_local_bfs`: one bounded
+    Arrow collect, each round in numpy), with the same rows and schema
+    as the distributed loop whatever `undirected`, `hop` and
+    `early_stop` say.  pid_family_closure is 1 job this way at sf0.01,
+    where the loop ran 25.  Past the bounds (BFS_LOCAL_ROWS input rows,
+    BFS_LOCAL_PAIRS output pairs or rows of a round's join) the
+    distributed loop below runs.
     """
     # BFS by layers.  Each round's frontier is dedup'd against ALL
     # prior layers with a CHAIN of anti-joins (not one anti-join
@@ -368,20 +635,42 @@ def expand_family(
     # self-referencing cached plans nests them exponentially).  Every
     # layer is checkpointed, so each plan in flight is one join chain
     # over materialized leaves — O(layers) nodes, O(1) lineage.
+    edges = edges.select(F.col(src).alias(src), F.col(dst).alias(dst))
+    frontier = seeds.select(
+        F.col(seed_col).alias("seed"), F.col(seed_col).alias("member")
+    ).distinct()
+
+    def grow(frontier: DataFrame, edges: DataFrame) -> DataFrame:
+        return (
+            frontier.alias("f")
+            .join(edges.alias("e"), F.col("f.member") == F.col(f"e.{src}"), "inner")
+            .select(F.col("f.seed").alias("seed"), F.col(f"e.{dst}").alias("member"))
+            .distinct()
+        )
+
+    t = _driver_ids(seeds.schema[seed_col].dataType, *(f.dataType for f in edges.schema))
+    if t is not None:
+        # the output schema comes from analysis of one round (no job)
+        small = _local_bfs(
+            seeds.select(seed_col),
+            edges,
+            frontier.unionByName(grow(frontier, edges)).schema,
+            t,
+            max_iters=max_iters,
+            undirected=undirected,
+            hop=hop,
+        )
+        if small is not None:
+            return small
     # materialize the edge list once: every round re-reads it, and the
     # materialized size gives the planner real statistics so the
     # per-round frontier⋈edges join can broadcast the smaller side
     # instead of planning a blind sort-merge (at 10^9-edge scale the
     # checkpoint amortizes over max_iters reads of the same relation)
-    edges = edges.select(
-        F.col(src).alias(src), F.col(dst).alias(dst)
-    ).localCheckpoint(eager=False)
+    edges = edges.localCheckpoint(eager=False)
     if hop > 1:
         edges = _compose_hops(edges, src, dst, hop)
         max_iters = -(-max_iters // hop)
-    frontier = seeds.select(
-        F.col(seed_col).alias("seed"), F.col(seed_col).alias("member")
-    ).distinct()
     # Probe-free loops (early_stop=False: max_iters is a structural
     # bound) leave the SEED layer un-checkpointed: its 3-4 consumers
     # (round-1 join, two anti-join dedup targets, final union) all
@@ -396,12 +685,7 @@ def expand_family(
         frontier = frontier.localCheckpoint(eager=False)
     layers = [frontier]
     for i in range(max_iters):
-        grown = (
-            frontier.alias("f")
-            .join(edges.alias("e"), F.col("f.member") == F.col(f"e.{src}"), "inner")
-            .select(F.col("f.seed").alias("seed"), F.col(f"e.{dst}").alias("member"))
-            .distinct()
-        )
+        grown = grow(frontier, edges)
         dedup_targets = layers[-2:] if undirected else layers
         for seen in dedup_targets:
             grown = grown.join(seen, ["seed", "member"], "left_anti")
@@ -453,8 +737,10 @@ def connected_components(
     labels whatever `max_iters` and `hop` say, in the distributed
     loop's column names and types.  Only a larger edge set runs the
     propagation rounds below, and `max_iters` and `hop` govern only
-    those rounds.  order_components (~26k chain edges at sf0.02) is 2
-    jobs this way; its 3 propagation rounds made it 13.
+    those rounds.  order_components (~26k chain edges at sf0.02) is 1
+    job this way, the edges' collect, its orders read in one partition
+    (`driver._one_task`) so the chain window plans no exchange; its 3
+    propagation rounds made it 13.
 
     Contract of the distributed loop: `max_iters` is a bound on every
     component's diameter that the CALLER CAN PROVE from how the graph

@@ -344,20 +344,22 @@ class MetricsRequestPlanner:
             if one:
                 # a full outer join reports no partitioning, though over
                 # one partition its output is one partition: say so, or
-                # the spine join shuffles both sides
+                # the spine step shuffles
                 merged = merged.coalesce(1)
             if by_country:
-                keys = agg.select("country").distinct()
+                merged = self._country_spine(merged, buckets, fills)
             else:
-                keys = self.spark.range(1, numPartitions=1)
-            spine = keys.select(F.explode(buckets).alias("bucket"), *dims[1:])
-            # null-safe, so a NULL country's aggregate row meets its
-            # spine row: one row per (bucket, country)
-            on = [F.col(f"s.{d}").eqNullSafe(F.col(f"m.{d}")) for d in dims]
-            merged = spine.alias("s").join(merged.alias("m"), on, "full_outer").select(
-                *[F.coalesce(F.col(f"s.{d}"), F.col(f"m.{d}")).alias(d) for d in dims],
-                *[F.col(f"m.{c}") for c in fills],
-            )
+                spine = self.spark.range(1, numPartitions=1).select(
+                    F.explode(buckets).alias("bucket")
+                )
+                merged = spine.alias("s").join(
+                    merged.alias("m"),
+                    F.col("s.bucket").eqNullSafe(F.col("m.bucket")),
+                    "full_outer",
+                ).select(
+                    F.coalesce("s.bucket", "m.bucket").alias("bucket"),
+                    *[F.col(f"m.{c}") for c in fills],
+                )
 
         # the reply is bounded by the request (spine buckets x countries)
         # and every input here is already aggregated per bucket, so one
@@ -370,6 +372,34 @@ class MetricsRequestPlanner:
             .coalesce(1)
             .sortWithinPartitions(*dims)
         )
+
+    @staticmethod
+    def _country_spine(merged: DataFrame, buckets: Column, fills: list[str]) -> DataFrame:
+        """`merged` (one row per (bucket, country)) with a row for every
+        spine bucket of every country the events aggregate holds, NULL
+        included; a country only citations hold (NULL, from citation
+        buckets no event shares) keeps just its own rows.  One group per
+        country over `merged` itself, so the plan reads the aggregate
+        once: a second reference for the country keys shuffled the
+        events a second time."""
+        from_events = F.col("unique_downloads").isNotNull()
+        per_country = merged.groupBy("country").agg(
+            F.collect_list(F.struct("bucket", *fills)).alias("__rows"),
+            F.max(from_events).alias("__events"),
+        )
+        own = F.transform("__rows", lambda r: r["bucket"])
+        rows = per_country.select(
+            F.explode(
+                F.when(F.col("__events"), F.array_union(buckets, own)).otherwise(own)
+            ).alias("bucket"),
+            "country",
+            "__rows",
+        )
+        row = F.try_element_at(
+            F.filter("__rows", lambda r: r["bucket"].eqNullSafe(F.col("bucket"))),
+            F.lit(1),
+        )
+        return rows.select("bucket", "country", *[row[c].alias(c) for c in fills])
 
     def _spine(self, meta: dict, agg_type: str) -> Column | None:
         """The bucket spine over the requested range, as one array of

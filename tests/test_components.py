@@ -154,16 +154,17 @@ def test_early_stop_off_equals_on_random_graph(spark):
 
 def test_order_components_job_budget(spark, sf_dir, count_jobs):
     """order_components (label propagation over a few thousand chain
-    edges, finished on the driver) launches a fixed number of Spark
-    jobs, build plus collect: the AQE map stage of the chain window's
-    exchange, run on its own as a job, and the Arrow collect of the
-    edges.  The result is a local relation, so its collect runs no
-    job.  Pinned so a probe, an extra checkpoint or a return to the
-    distributed rounds (13 jobs) cannot land unnoticed."""
+    edges, finished on the driver) launches one Spark job, build plus
+    collect: the Arrow collect of the edges.  The orders scan is small,
+    so it is read in one partition and the chain window plans no
+    exchange (whose AQE map stage ran as a job of its own).  The result
+    is a local relation, so its collect runs no job.  Pinned so a
+    probe, an extra checkpoint, the window's exchange or a return to
+    the distributed rounds (13 jobs) cannot land unnoticed."""
     from metrics_service_spark.catalog import all_queries
 
     q = all_queries()["order_components"].fn
-    assert count_jobs(lambda: q(spark, sf_dir).collect()) == 2
+    assert count_jobs(lambda: q(spark, sf_dir).collect()) == 1
 
 
 def test_doc_linkage_clusters_job_budget(spark, sf_dir, count_jobs):

@@ -151,14 +151,20 @@ def test_dau_stickiness_no_nested_loop(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_pid_family_closure_lineage_truncated(spark, sf_dir):
-    # the BFS closure localCheckpoints every MID-LOOP round (RDD-leaf
-    # layers) but since r8 leaves the FINAL round lazy (single
-    # consumer, the output union — its checkpoint was a pure extra
-    # barrier job): the plan may contain exactly ONE round's worth of
-    # joins (frontier x composed-edges + two anti-join dedups), all
-    # over checkpointed leaves, and never a parquet replay of the
-    # accumulated lineage
+def test_pid_family_closure_lineage_truncated(spark, sf_dir, monkeypatch):
+    # the fixture's closure finishes on the driver: a local relation
+    plan = _plan(spark, sf_dir, "pid_family_closure")
+    assert "LocalTableScan" in plan and "Join" not in plan
+    # the BFS loop (driver finish off) localCheckpoints every MID-LOOP
+    # round (RDD-leaf layers) but since r8 leaves the FINAL round lazy
+    # (single consumer, the output union — its checkpoint was a pure
+    # extra barrier job): the plan may contain exactly ONE round's
+    # worth of joins (frontier x composed-edges + two anti-join
+    # dedups), all over checkpointed leaves, and never a parquet
+    # replay of the accumulated lineage
+    from metrics_service_spark.operators import closure
+
+    monkeypatch.setattr(closure, "BFS_LOCAL_ROWS", 0)
     plan = _plan(spark, sf_dir, "pid_family_closure")
     assert "Scan parquet" not in plan  # lineage cut at the checkpoints
     assert "Scan ExistingRDD" in plan

@@ -19,7 +19,8 @@ materializations (a job name containing ``withThreadLocalCaptured``,
 run on its own ahead of the action that needs the stage), so a
 barrier can be told from an action.  ``--diff`` prints the per-entry
 job counts of two such artifacts side by side, as a markdown table,
-with the AQE stage jobs of each.
+with the AQE stage jobs of each, then each artifact's total jobs and
+its PASS and rows-only counts.
 """
 
 from __future__ import annotations
@@ -46,7 +47,8 @@ AQE_STAGE_JOB = "withThreadLocalCaptured"
 
 def diff(before_path: str, after_path: str) -> None:
     """Print the per-entry jobs of two `--json` artifacts as a markdown
-    table, then the entries whose count rose."""
+    table, then the entries whose count rose, then each artifact's
+    total jobs and PASS / rows-only counts."""
     with open(before_path) as f:
         before = json.load(f)["results"]
     with open(after_path) as f:
@@ -64,6 +66,13 @@ def diff(before_path: str, after_path: str) -> None:
         if delta and a > b:
             rose.append(name)
     print(f"\n{len(rose)} entries rose: {', '.join(rose)}")
+    for label, runs in (("before", before), ("after", after)):
+        status = [r["status"] for r in runs.values()]
+        print(
+            f"{label}: {sum(r.get('jobs') or 0 for r in runs.values())} jobs,"
+            f" {status.count('pass')} PASS, {status.count('rows-only')} rows-only"
+            f" of {len(runs)} entries"
+        )
 
 
 def main() -> None:

@@ -16,6 +16,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+#: `spark.sql.shuffle.partitions` of every plan in PLANS.md
+SHUFFLE_PARTITIONS = 32
+
 #: query -> what to look for in its plan (rendered as commentary)
 COMMENTARY = {
     "tpch_q1": "single scan; pruned ReadSchema; partial agg before the one shuffle; decimal sums for oracle bit-exactness",
@@ -102,7 +105,7 @@ COMMENTARY = {
     "ev_session_quantiles": "the audited sessionizer output collapses to a (day, seconds) histogram; per-day quantile windows run over distinct durations — the ev_sessionize shuffle is the only corpus-mass exchange",
     "doc_linkage_incremental": "batch-vs-corpus block equi-join (never a corpus self-join); the corpus-cell max_cell broadcast prune fires BEFORE the join; per-candidate codegen levenshtein",
     "metrics_request_landing": "the dispatcher end-to-end: identifier family resolved by one bounded driver collect into a pid IN-list (the reference's `terms` filter) pushed to the scan with the COUNTER filter; inputs within ONE_PARTITION_BYTES, so the scoped events enter one partition through the plan's ONLY exchange (SinglePartition) and the citations through a narrow Coalesce 1; the two-level exact-count agg (no Expand), the citation dedup (a per-row `exists` over the family literal, no join), the full-outer merge and the final sort add no exchange — 3 jobs with the family collect",
-    "metrics_request_daily_country": "adds the date-range scope (strict-gt/lte pushed through the adapter aliases to PushedFilters — plan-gated), day x country agg, end-exclusive spine exploded from one bucket array per country (no cross join, no broadcast), bucket-only citations join; the countries branch prunes its own scan, so two SinglePartition exchanges and no other",
+    "metrics_request_daily_country": "adds the date-range scope (strict-gt/lte pushed through the adapter aliases to PushedFilters — plan-gated), day x country agg, bucket-only citations join; the end-exclusive spine is one bucket array exploded per country group of the merged rows (no cross join, no broadcast, no second read of the aggregate), so the events' SinglePartition exchange is the only one",
     "metrics_request_user": "the user dispatch path: family from userID membership AND isPublic (one driver collect of the matched identifier rows), then the landing shape — the scope that must EXCLUDE private datasets",
     "metrics_request_repository": "repository scope is a pure scan predicate on the adapter's nodeId (no identifier family — the citations side is the UNSCOPED relation, mirroring gatherCitations without a target set); YEAR buckets with the 4-char citation key; the spine join stays in the one partition (Coalesce 1 above the first full-outer merge), so no exchange besides the events' SinglePartition one",
     "doc_bpe_train": "the returned frame is the k-row merge table (local scan BY DESIGN); the training work is ONE corpus-sized word-frequency shuffle + a bounded vocab collect — the merge loop runs driver-local (incremental pair counts + lazy heap), so total Spark jobs are O(1) regardless of n_merges (job-count-gated in tests/test_r15_guards.py)",
@@ -162,7 +165,9 @@ def main() -> None:
     if sys.argv[2:]:
         with open(path, encoding="utf-8") as fh:
             sections = _sections(fh.read())
-    spark = get_spark("plan-dump")
+    # the partition count PLANS.md was made at, whatever the machine's
+    # cores, so a regenerated section diffs only where its plan changed
+    spark = get_spark("plan-dump", shuffle_partitions=SHUFFLE_PARTITIONS)
     spark.sparkContext.setLogLevel("ERROR")
     cat = all_queries()
     for name in names:
