@@ -500,7 +500,7 @@ def resolve_chains(
 
     Algorithm: pointer jumping (path doubling) — each round every
     node's ancestor pointer leaps twice as far, so chains of depth d
-    resolve in ceil(log2(d)) self-joins instead of d frontier joins.
+    resolve in ceil(log2(d + 1)) self-joins instead of d frontier joins.
 
     Integer or string ids of at most CHAIN_LOCAL_ROWS rows run those
     rounds on the driver (`_local_chains`: one bounded Arrow collect,
@@ -541,12 +541,13 @@ def resolve_chains(
             "node", F.col("ptr").alias("root"), F.col("depth").cast("int").alias("depth")
         )
 
-    # Pointer jumping needs only ceil(log2(depth)) rounds, so for the
-    # reference's depth cap (20 -> 5 rounds) the whole loop is planned
+    # Pointer jumping marks depths up to 2^rounds - 1 done, so a cap of
+    # d needs ceil(log2(d + 1)) rounds; for the reference's depth cap
+    # (20 -> 5 rounds) the whole loop is planned
     # lazily — no per-round driver action, one final job executes the
     # 5-join tree.  Only genuinely deep closures (rounds > 6) pay for
     # mid-loop checkpoints (lineage truncation) and early-exit probes.
-    rounds = max(1, math.ceil(math.log2(max(2, max_depth))))
+    rounds = max(1, math.ceil(math.log2(max_depth + 1)))
     t = _driver_ids(*(edges.schema[c].dataType for c in (child, parent)))
     if t is not None:
         # the output schema comes from analysis of one round (no job)

@@ -33,21 +33,31 @@ protocol those formats use, from parquet + JSON primitives only:
   `vacuum` reclaims files unreferenced by the newest manifest.
 - `merge` is an upsert by key: only data files whose partition value
   appears in the update batch, or that hold an updated key, are
-  rewritten (filter out the updated keys, union the new rows);
-  untouched partitions carry their files forward by reference.
-  Replaying the same batch converges to the same state, so
-  foreachBatch retries are safe.
-- MERGE and DELETE collect the batch's keys to the driver once, one
-  Arrow table of at most `KEY_ROWS` rows (past it they raise), and use
-  them three times: recorded key ranges skip files before the key
-  probe, the probe tests the remaining files for a key, and a literal
-  IN list filters the rewrite.  The key set of one batch must fit on
-  the driver (a broadcast join of it would need the same).
-- The key probe runs on the driver, with no Spark job, when the
-  range-admitted files record at most `PROBE_ROWS` rows in all and
+  rewritten (filter out the updated keys; the new rows are written
+  beside them); untouched partitions carry their files forward by
+  reference.  Replaying the same batch converges to the same state, so
+  foreachBatch retries are safe.  Every commit records what it did
+  (`op`: operation, where the rewrite ran, file and row counts).
+- MERGE and DELETE hold the batch's keys on the driver once, one Arrow
+  table of at most `KEY_ROWS` rows (past it they raise), and use them
+  three times: recorded key ranges skip files before the key probe, the
+  probe tests the remaining files for a key, and the rewrite drops the
+  keys' rows.  The key set of one batch must fit on the driver (a
+  broadcast join of it would need the same).  DELETE collects its keys
+  in one Spark job.  MERGE with integral data key columns writes the
+  batch first, its plan's only run, and reads the key columns of the
+  files it wrote with pyarrow, no job.  Other keys (and a key in a
+  partition column) are collected from the batch with its partition
+  values in one job, and the batch plan runs again in the one write of
+  its rows and the kept ones (`_keys_in_files`).
+- The key probe and the rewrite run on the driver, with no Spark job,
+  when the files involved record at most `PROBE_ROWS` rows in all and
   their integral key columns are data columns pyarrow reads as Spark
-  does; otherwise a column-pruned Spark scan probes them (see
-  `_files_holding_keys`).
+  does; the rewrite also needs one recorded schema of types pyarrow
+  writes back as Spark wrote them (`_rewrite_on_driver`).  Otherwise a
+  column-pruned Spark scan probes the files (`_files_holding_keys`),
+  and a Spark job filters the hit files with a literal IN list and
+  writes the rest.
 
 At 100 TB the manifest lists file paths, partition values and a few
 integers of stats per file (KBs per thousand files) and the MERGE
@@ -61,6 +71,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import threading
 import time
 import uuid
@@ -69,6 +80,7 @@ from contextlib import contextmanager
 from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -232,6 +244,7 @@ def _commit(
     files: list[dict],
     version: int,
     meta: dict | None = None,
+    op: dict | None = None,
 ) -> int:
     """Commit `files` at exactly `version` (the version the committer
     computed its rewrite against, +1).  O_EXCL create makes exactly one
@@ -243,6 +256,14 @@ def _commit(
     centroid-file pointer).  When None, the PREVIOUS version's meta
     carries forward, so ordinary upserts never drop table properties
     set by an earlier commit; pass a dict (possibly {}) to replace.
+
+    `op` records what this commit did, for this version only (never
+    carried forward; see `_op`): the `operation`, where the `rewrite`
+    of its hit files ran ("driver", "spark", or None when it rewrote
+    none), and its `files_added`, `files_rewritten`, `files_carried`
+    and `rows_removed` (None where the rows were not counted).  The
+    new entries of `files` are those with a "schema"; the rest are
+    carried.
 
     Entries keep their recorded stats (`rows`, `min`, `max`), carried
     or new.  The manifest keeps one data schema per stage `files`
@@ -277,6 +298,11 @@ def _commit(
                     "files": committed,
                     "schemas": schemas,
                     "meta": meta,
+                    "op": {
+                        "files_added": sum("schema" in e for e in files),
+                        "files_carried": sum("schema" not in e for e in files),
+                        **(op or _op(None)),
+                    },
                 },
                 fh,
             )
@@ -377,10 +403,7 @@ def _collect_keys(df: DataFrame, cols: list[str]) -> pa.Table:
     `KEY_ROWS` rows rather than collect an unbounded batch."""
     tbl = _bounded_arrow(df.select(*cols), KEY_ROWS)
     if tbl is None:
-        raise ValueError(
-            f"the key batch holds more than {KEY_ROWS} rows; MERGE and "
-            "DELETE hold a batch's keys on the driver, so split the batch"
-        )
+        raise _too_many_keys()
     return tbl
 
 
@@ -579,6 +602,122 @@ def _files_holding_keys(
     return [e for e in entries if e["path"] in matched]
 
 
+#: The recorded types whose parquet form pyarrow writes back exactly as
+#: Spark wrote it, physical and logical type alike (a decimal would come
+#: back as a fixed-length array, a TIMESTAMP_NTZ as INT96); arrays of
+#: them too.
+_ROUND_TRIP = {
+    "byte", "short", "integer", "long", "float", "double", "boolean",
+    "string", "binary", "date", "timestamp",
+}
+
+
+def _round_trips(dtype) -> bool:
+    """Whether a recorded (JSON) column type is one of `_ROUND_TRIP`'s."""
+    if isinstance(dtype, str):
+        return dtype in _ROUND_TRIP
+    return dtype["type"] == "array" and _round_trips(dtype["elementType"])
+
+
+def _rewrite_on_driver(entries: list[dict], schemas: dict[str, dict], keys: pa.Table) -> bool:
+    """Whether the driver can rewrite `entries` without `keys` (see
+    `_driver_rewrite`): the driver probe's conditions hold
+    (`_probe_on_driver`: at most `PROBE_ROWS` recorded rows, integral
+    data key columns), every stage recorded the same schema, and its
+    columns all round-trip through pyarrow."""
+    if not _probe_on_driver(entries, schemas, keys):
+        return False
+    recorded = [schemas[_stage_of(e)] for e in entries]
+    if any(s != recorded[0] for s in recorded):
+        return False
+    return all(_round_trips(f["type"]) for f in recorded[0]["fields"])
+
+
+def _driver_rewrite(
+    table_dir: str, entries: list[dict], schema: dict, keys: pa.Table, stage: str
+) -> tuple[list[dict], int]:
+    """Rewrite `entries` without the rows whose key is one of `keys`, on
+    the driver with pyarrow and no Spark job, where `_rewrite_on_driver`
+    allows.  Each file's surviving rows (a NULL key survives, as in
+    `_unmatched`) become at most one file in its own partition directory
+    under `stage`, written with the source's physical types (INT96
+    timestamps where Spark wrote them) and its Spark schema metadata.
+    Returns the new entries, with their footer stats, the source's
+    partition values and `schema`, and the rows removed."""
+    key_cols = keys.column_names
+    as_long = pa.schema([(c, pa.int64()) for c in key_cols])
+    wanted = keys.drop_null().cast(as_long)
+    integral = {
+        f["name"] for f in schema["fields"]
+        if isinstance(f["type"], str) and f["type"] in _INTEGRAL_NAMES
+    }
+    new: list[dict] = []
+    removed = 0
+    for e in entries:
+        pf = pq.ParquetFile(
+            os.path.join(table_dir, e["path"]), coerce_int96_timestamp_unit="us"
+        )
+        int96 = any(c.physical_type == "INT96" for c in pf.schema)
+        tbl = pf.read()
+        rows = pa.array(range(tbl.num_rows), pa.int64())
+        hit = (
+            tbl.select(key_cols).cast(as_long).append_column("__row", rows)
+            .join(wanted, key_cols, join_type="left semi")
+        )
+        kept = tbl.filter(pc.invert(pc.is_in(rows, value_set=hit["__row"])))
+        removed += tbl.num_rows - kept.num_rows
+        if not kept.num_rows:
+            continue
+        part_dir = os.path.relpath(os.path.dirname(e["path"]), _stage_of(e))
+        rel = os.path.normpath(
+            os.path.join(stage, part_dir, f"part-{uuid.uuid4().hex}.parquet")
+        )
+        path = os.path.join(table_dir, rel)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(kept, path, use_deprecated_int96_timestamps=int96)
+        new.append({"path": rel, "partition": dict(e["partition"]),
+                    **_footer_stats(path, integral), "schema": schema})
+    return new, removed
+
+
+def _rewrite(
+    spark: SparkSession,
+    table_dir: str,
+    hit: list[dict],
+    schemas: dict[str, dict],
+    keys: pa.Table,
+    member: Column,
+    partition_cols: list[str],
+    stage: str | None = None,
+) -> tuple[list[dict], dict]:
+    """The copy-on-write step MERGE and DELETE share: `hit`'s rows less
+    those whose key is one of `keys` (`member` their membership
+    filter), as new entries (none for a file left empty), and the
+    commit's `op` fields that say how.  The driver rewrites them into
+    `stage` (a new one by default) where `_rewrite_on_driver` allows;
+    otherwise one Spark job reads the files filtered and writes the
+    rest, partitioned by `partition_cols`, into a new stage."""
+    if not hit:
+        return [], {"rewrite": None, "files_rewritten": 0, "rows_removed": 0}
+    if _rewrite_on_driver(hit, schemas, keys):
+        new, removed = _driver_rewrite(
+            table_dir, hit, schemas[_stage_of(hit[0])], keys,
+            stage or f"stage-{uuid.uuid4().hex}",
+        )
+        how = "driver"
+    else:
+        kept = _read_files(spark, table_dir, hit, schemas).filter(_unmatched(member))
+        # the write is the emptiness test: a partitioned write of no
+        # rows makes no file, an unpartitioned one a single empty file,
+        # which its recorded row count keeps out of the manifest
+        new = [e for e in _write_files(kept, table_dir, partition_cols) if e["rows"]]
+        removed = None
+        if all("rows" in e for e in hit):
+            removed = sum(e["rows"] for e in hit) - sum(e["rows"] for e in new)
+        how = "spark"
+    return new, {"rewrite": how, "files_rewritten": len(hit), "rows_removed": removed}
+
+
 def read_table(
     spark: SparkSession,
     table_dir: str,
@@ -623,6 +762,95 @@ def read_table(
     return _read_files(spark, table_dir, entries, manifest["schemas"])
 
 
+def _op(
+    operation: str | None,
+    *,
+    rewrite: str | None = None,
+    files_rewritten: int = 0,
+    rows_removed: int | None = None,
+) -> dict:
+    """A commit's `op` record less the file counts `_commit` adds."""
+    return {
+        "operation": operation,
+        "rewrite": rewrite,
+        "files_rewritten": files_rewritten,
+        "rows_removed": rows_removed,
+    }
+
+
+def _too_many_keys() -> ValueError:
+    return ValueError(
+        f"the key batch holds more than {KEY_ROWS} rows; MERGE and "
+        "DELETE hold a batch's keys on the driver, so split the batch"
+    )
+
+
+def _keys_in_files(fields: list[StructField], partition_cols: list[str]) -> bool:
+    """Whether MERGE can read its keys, the columns `fields`, from the
+    files it writes: integral data columns, none a partition column
+    (whose type a read infers from the path)."""
+    return all(type(f.dataType) in _INTEGRAL for f in fields) and not (
+        {f.name for f in fields} & set(partition_cols)
+    )
+
+
+def _written_keys(table_dir: str, written: list[dict], key_cols: list[str]) -> pa.Table:
+    """MERGE's key columns, one row per batch row, read with pyarrow
+    from the files it just wrote (`written`), with no Spark job; past
+    `KEY_ROWS` recorded rows it raises before reading any key."""
+    if sum(e["rows"] for e in written) > KEY_ROWS:
+        raise _too_many_keys()
+    if not written:
+        return pa.table({c: pa.array([], pa.int64()) for c in key_cols})
+    return pa.concat_tables(
+        pq.ParquetFile(os.path.join(table_dir, e["path"])).read(columns=key_cols)
+        for e in written
+    )
+
+
+def _path_value(v) -> str:
+    """A collected partition value as the manifest records it, the
+    string Spark writes in its path: a boolean is 'true' or 'false'."""
+    return str(v).lower() if isinstance(v, bool) else str(v)
+
+
+def _merge_hits(
+    spark: SparkSession,
+    table_dir: str,
+    entries: list[dict],
+    schemas: dict[str, dict],
+    touched: set[tuple],
+    keys: pa.Table,
+    fields: list[StructField],
+    partition_cols: list[str],
+    partition_from_key: bool,
+) -> tuple[list[dict], list[dict], Column]:
+    """MERGE's hit and carried entries, and the membership filter of
+    `keys` (the batch's key columns `fields`).  The hit files are those
+    of the `touched` partitions (tuples of `partition_cols` values as
+    the manifest records them) and the other files that hold a key,
+    found by the key probe unless `partition_from_key` rules them out."""
+    keyset = _distinct_keys(keys, fields)
+    member = _member(fields, keyset)
+    hit = [
+        e
+        for e in entries
+        if partition_cols
+        and tuple(e["partition"].get(c) for c in partition_cols) in touched
+    ]
+    carried = [e for e in entries if e not in hit]
+    if carried and not (partition_cols and partition_from_key):
+        # global key matching: pull exactly the carried FILES holding an
+        # updated key into the rewrite set
+        extra_hit = _files_holding_keys(
+            spark, table_dir, _may_hold_keys(carried, keys.column_names, keyset),
+            schemas, keys, member,
+        )
+        hit += extra_hit
+        carried = [e for e in carried if e not in extra_hit]
+    return hit, carried, member
+
+
 def overwrite_table(
     df: DataFrame,
     table_dir: str,
@@ -643,7 +871,7 @@ def overwrite_table(
             f"under {table_dir}"
         )
     files = _write_files(df, table_dir, partition_cols or [])
-    return _commit(table_dir, files, base + 1, meta=meta)
+    return _commit(table_dir, files, base + 1, meta=meta, op=_op("overwrite"))
 
 
 def merge_table(
@@ -660,21 +888,29 @@ def merge_table(
     update rows, new keys are inserted.  Keys match GLOBALLY (Delta
     MERGE semantics): if an existing key arrives with a NEW partition
     value, its old row in the old partition is rewritten out, not
-    carried forward as a duplicate.  The partitions rewritten are the
-    union of (a) partitions present in `updates` and (b) partitions
-    currently holding any updated key — (b) is found with a
-    column-pruned key-probe of the remaining files whose recorded key
-    ranges admit an updated key (no job when none does).  Pass
+    carried forward as a duplicate.  The files rewritten are those of
+    (a) the partitions the update's written files landed in and (b) the
+    other files that hold an updated key — (b) is found with the key
+    probe of the files whose recorded key ranges admit an updated key
+    (no Spark job when none does, or the driver probes them; see
+    `_files_holding_keys`).  An unpartitioned table has no (a).  Pass
     `partition_from_key=True` when every partition value is a
     deterministic function of the key (an updated key can then only
     live in its update-batch partition) to skip the probe — the common
     state-table layout.  Idempotent under replay.  A batch row whose
     key holds a NULL is inserted and replaces nothing.
 
-    Driver bound: one Arrow collect brings the batch's partition and
-    key columns (one row per batch row) to the driver, and a batch of
-    more than `KEY_ROWS` rows raises ValueError; the batch's keys must
-    fit there (a broadcast of its key set would need the same).
+    With integral data key columns the update is written first, the
+    one run of its plan, the key set is read from the written files
+    (`_written_keys`) and the rewrite of the hit files follows
+    (`_rewrite`); with small hit files the probe and the rewrite run on
+    the driver, so the write is MERGE's one Spark job.  Other keys are
+    collected from `updates` with its partition values, and one write
+    holds the update rows and the hit files' kept rows: two jobs, the
+    batch plan run twice.  Driver bound: a batch of more than
+    `KEY_ROWS` rows raises ValueError (after removing the update's
+    written files); the batch's keys must fit there (a broadcast of its
+    key set would need the same).
 
     `expected_base` pins the snapshot the caller computed `updates`
     against: if another writer committed in between (current version
@@ -694,47 +930,65 @@ def merge_table(
             # created v0 in between gets ConflictError (O_EXCL), never
             # a silent full replace of its commit
             files = _write_files(updates, table_dir, partition_cols)
-            return _commit(table_dir, files, expected_base + 1)
+            return _commit(table_dir, files, expected_base + 1, op=_op("overwrite"))
         return overwrite_table(updates, table_dir, partition_cols=partition_cols)
 
     manifest = _read_manifest(table_dir, base)
     entries, schemas = manifest["files"], manifest["schemas"]
-    # one collect gives both the touched partitions and the key set
-    tbl = _collect_keys(updates, list(dict.fromkeys(partition_cols + key_cols)))
     fields = [updates.schema[c] for c in key_cols]
-    keys = _distinct_keys(tbl, fields)
-    member = _member(fields, keys)
-    if partition_cols:
+    if not _keys_in_files(fields, partition_cols):
+        # one collect gives both the touched partitions and the key set;
+        # the batch plan runs again in the one write of its rows and the
+        # kept ones (writing first and reading the write back costs a
+        # third job, and measured slower on the paragraph-index fold:
+        # SCALE.md "MERGE/DELETE rewrite")
+        tbl = _collect_keys(updates, list(dict.fromkeys(partition_cols + key_cols)))
         touched = set(zip(*(
-            map(str, _py_values(tbl, updates.schema[c])) for c in partition_cols
+            map(_path_value, _py_values(tbl, updates.schema[c])) for c in partition_cols
         )))
-        hit = [
-            e
-            for e in entries
-            if tuple(e["partition"].get(c) for c in partition_cols) in touched
-        ]
-        carried = [e for e in entries if e not in hit]
-        if carried and not partition_from_key:
-            # global key matching: pull exactly the carried FILES
-            # holding an updated key into the rewrite set
-            extra_hit = _files_holding_keys(
-                spark, table_dir, _may_hold_keys(carried, key_cols, keys),
-                schemas, tbl.select(key_cols), member,
-            )
-            hit += extra_hit
-            carried = [e for e in carried if e not in extra_hit]
-    else:
-        hit, carried = entries, []
+        hit, carried, member = _merge_hits(
+            spark, table_dir, entries, schemas, touched, tbl.select(key_cols), fields,
+            partition_cols, partition_from_key,
+        )
+        merged = updates
+        if hit:
+            kept = _read_files(spark, table_dir, hit, schemas).filter(_unmatched(member))
+            # allowMissingColumns = schema evolution (Delta mergeSchema):
+            # an update batch may add columns; surviving old rows read
+            # NULL for them
+            merged = updates.unionByName(kept, allowMissingColumns=True)
+        op = _op("merge", rewrite="spark" if hit else None, files_rewritten=len(hit))
+        new_files = _write_files(merged, table_dir, partition_cols)
+        return _commit(table_dir, carried + new_files, base + 1, op=op)
 
-    merged = updates
-    if hit:
-        kept = _read_files(spark, table_dir, hit, schemas).filter(_unmatched(member))
-        # allowMissingColumns = schema evolution (Delta mergeSchema):
-        # an update batch may add columns; surviving old rows read NULL
-        # for them
-        merged = updates.unionByName(kept, allowMissingColumns=True)
-    new_files = _write_files(merged, table_dir, partition_cols)
-    return _commit(table_dir, carried + new_files, base + 1)
+    # the write is the batch plan's one run: the keys and the touched
+    # partitions come from the files it leaves
+    written = _write_files(updates, table_dir, partition_cols)
+    stage = _stage_of(written[0]) if written else None
+    try:
+        tbl = _written_keys(table_dir, written, key_cols)
+        touched = {tuple(e["partition"][c] for c in partition_cols) for e in written}
+        hit, carried, member = _merge_hits(
+            spark, table_dir, entries, schemas, touched, tbl, fields,
+            partition_cols, partition_from_key,
+        )
+        # the kept rows join the update's own stage where they share its
+        # schema and partition layout, so a snapshot read gains no stage
+        same = written and all(
+            schemas.get(_stage_of(e)) == written[0]["schema"]
+            and list(e["partition"]) == partition_cols
+            for e in hit
+        )
+        kept, op = _rewrite(
+            spark, table_dir, hit, schemas, tbl, member, partition_cols,
+            stage if same else None,
+        )
+    except BaseException:
+        if stage:
+            shutil.rmtree(os.path.join(table_dir, stage), ignore_errors=True)
+        raise
+    new_files = [e for e in written if e["rows"]] + kept
+    return _commit(table_dir, carried + new_files, base + 1, op=_op("merge", **op))
 
 
 def delete_from_table(
@@ -750,9 +1004,11 @@ def delete_from_table(
     with those rows filtered out; every other file carries into the new
     manifest by reference.  The touched-file set comes from the
     key-probe MERGE uses, matched on each file's path in the table, so
-    cost tracks the files containing deleted keys, not the table.  The
-    `keys` are collected to the driver once and must fit there, as
-    MERGE's do: more than `KEY_ROWS` rows raise ValueError.  Old
+    cost tracks the files containing deleted keys, not the table, and
+    the rewrite is MERGE's too (`_rewrite`: on the driver for small hit
+    files and integral keys, so the key collect is DELETE's one Spark
+    job).  The `keys` are collected to the driver once and must fit
+    there, as MERGE's do: more than `KEY_ROWS` rows raise ValueError.  Old
     versions still contain the rows — run `vacuum` after the retention
     window to physically reclaim them (the same two-step contract as
     Delta DELETE + VACUUM).  Returns the
@@ -778,13 +1034,10 @@ def delete_from_table(
     if not hit:
         return base
     carried = [e for e in entries if e not in hit]
-    kept = _read_files(spark, table_dir, hit, schemas).filter(_unmatched(member))
-    partition_cols = sorted(hit[0]["partition"])
-    # the write is the emptiness test: a partitioned write of no rows
-    # makes no file, an unpartitioned one a single empty file, which
-    # its recorded row count keeps out of the manifest
-    new_files = [e for e in _write_files(kept, table_dir, partition_cols) if e["rows"]]
-    return _commit(table_dir, carried + new_files, base + 1)
+    new_files, op = _rewrite(
+        spark, table_dir, hit, schemas, tbl, member, sorted(hit[0]["partition"])
+    )
+    return _commit(table_dir, carried + new_files, base + 1, op=_op("delete", **op))
 
 
 def compact_table(
@@ -835,7 +1088,8 @@ def compact_table(
     else:
         packed = packed.coalesce(1)
     new_files = _write_files(packed, table_dir, partition_cols)
-    return _commit(table_dir, carried + new_files, base + 1)
+    op = _op("compact", rewrite="spark", files_rewritten=len(fragmented), rows_removed=0)
+    return _commit(table_dir, carried + new_files, base + 1, op=op)
 
 
 def vacuum(table_dir: str, *, retention_seconds: float = 3600.0) -> int:

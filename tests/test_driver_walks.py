@@ -87,13 +87,13 @@ CHAINS = {
         5,
         Counter((i, 0, i) for i in range(6)),
     ),
-    # a cap of 4 runs 2 rounds, which mark depths up to 2^2 - 1 done:
-    # the loop drops depth 4, and the driver walk with it
+    # a cap of 4 runs 3 rounds, which mark depths up to 2^3 - 1 done:
+    # depth 4 is kept, 5 and 6 not
     "power_of_two_cap": (
         "child long, parent long",
         _path(7),
         4,
-        Counter((i, 0, i) for i in range(4)),
+        Counter((i, 0, i) for i in range(5)),
     ),
     # past 6 rounds the loop checkpoints and probes for an early exit
     # after the fifth; 7 rounds mark depths up to 127 done

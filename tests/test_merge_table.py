@@ -265,13 +265,13 @@ def test_upsert_state_table_retries_on_conflict(spark, tmp_path, monkeypatch):
     real_commit = mt._commit
     raced = {"done": False}
 
-    def racing_commit(table_dir, files, version):
+    def racing_commit(table_dir, files, version, **kw):
         # a competing writer lands the contested version first, once
         # (carrying the previous version's files, as a no-op merge would)
         if not raced["done"]:
             raced["done"] = True
             real_commit(table_dir, mt._load_manifest(table_dir, version - 1), version)
-        return real_commit(table_dir, files, version)
+        return real_commit(table_dir, files, version, **kw)
 
     monkeypatch.setattr(mt, "_commit", racing_commit)
     df2 = spark.createDataFrame(
@@ -852,13 +852,20 @@ def test_read_without_recorded_schema_falls_back_to_inference(
     assert dict(inferred.dtypes)["grp"] == "int"
     assert sorted(inferred.collect()) == sorted(recorded.collect())
 
-    # a commit on top records its own stage only; the mixed table reads
+    # a commit on top records the stages it wrote only (the update's
+    # and the Spark rewrite's: the legacy stage records no schema to
+    # rewrite on the driver by); the mixed table reads
+    legacy_stage = legacy["files"][0]["path"].split(os.sep, 1)[0]
     upd = spark.createDataFrame([(3, "01", 2.5, ["c"])], df.drop("ts").schema)
     merge_table(
         spark, tdir, upd.withColumn("ts", F.timestamp_seconds(F.col("k"))),
         key_cols=["k"], partition_cols=["grp"],
     )
-    assert len(_manifest(tdir)["schemas"]) == 1
+    m = _manifest(tdir)
+    assert m["op"]["rewrite"] == "spark"
+    assert set(m["schemas"]) == {e["path"].split(os.sep, 1)[0] for e in m["files"]} - {
+        legacy_stage
+    }
     assert sorted(r["k"] for r in read_table(spark, tdir).collect()) == [1, 2, 3]
 
 
@@ -892,8 +899,9 @@ def _manifest_layer_job_budget(spark, tmp_path, count_jobs):
     range launches no probe job: it costs what a merge that skips the
     probe by contract costs.  A merge whose key needs the probe costs
     the same on the driver probe and more on the Spark probe
-    (`PROBE_ROWS` 0); DELETE is 2 jobs on the driver probe, the key
-    collect and the write."""
+    (`PROBE_ROWS` 0).  At the default bounds the probe and the rewrite
+    run on the driver: MERGE is 1 job, its write, and DELETE 1, its
+    key collect."""
     _commits(spark, str(tmp_path / "r"), 3)
     assert count_jobs(lambda: read_table(spark, str(tmp_path / "r"))) == 0
 
@@ -925,8 +933,8 @@ def _manifest_layer_job_budget(spark, tmp_path, count_jobs):
     assert probed == merge_jobs(2, keys=(0, 11))
     assert delete_jobs(2) == delete_jobs(5)
     if mt.PROBE_ROWS:
-        assert probed == pruned
-        assert delete_jobs(3) == 2
+        assert probed == pruned == 1
+        assert delete_jobs(3) == 1
     else:
         assert probed > pruned
 
@@ -1223,7 +1231,8 @@ def test_key_collect_is_one_bounded_job(spark, tmp_path, count_jobs, monkeypatch
     """MERGE and DELETE collect their keys in one Spark job, as many as
     a plain `collect()` of the same columns, from a one-file parquet
     batch and from a frame of 4 partitions; a batch of more than
-    `KEY_ROWS` rows raises before anything is written."""
+    `KEY_ROWS` rows raises with nothing committed, and the stage MERGE
+    wrote before it counted the rows is removed."""
     path = str(tmp_path / "batch")
     rows = [(i, i % 3) for i in range(50)]
     spark.createDataFrame(rows, "k long, part int").coalesce(1).write.parquet(path)
@@ -1239,8 +1248,10 @@ def test_key_collect_is_one_bounded_job(spark, tmp_path, count_jobs, monkeypatch
     overwrite_table(_state(spark, 6, "a"), tdir, partition_cols=["part"])
     monkeypatch.setattr(mt, "KEY_ROWS", 2)
     batch = _state(spark, 3, "b")
+    stages = sorted(os.listdir(tdir))
     with pytest.raises(ValueError, match="more than 2 rows"):
         merge_table(spark, tdir, batch, key_cols=["k"], partition_cols=["part"])
+    assert sorted(os.listdir(tdir)) == stages
     with pytest.raises(ValueError, match="more than 2 rows"):
         delete_from_table(spark, tdir, batch, key_cols=["k"])
     assert current_version(tdir) == 0

@@ -67,13 +67,13 @@ def test_racing_writer_retries_without_lost_counts(spark, tmp_path, monkeypatch)
     real_commit = mt._commit
     raced = {"done": False}
 
-    def racing_commit(table_dir, files, version):
+    def racing_commit(table_dir, files, version, **kw):
         if not raced["done"]:
             raced["done"] = True
             # a competing writer lands the contested version (no-op
             # merge carrying the prior files)
             real_commit(table_dir, mt._load_manifest(table_dir, version - 1), version)
-        return real_commit(table_dir, files, version)
+        return real_commit(table_dir, files, version, **kw)
 
     monkeypatch.setattr(mt, "_commit", racing_commit)
     update_paragraph_index(
