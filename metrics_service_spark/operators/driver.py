@@ -32,7 +32,9 @@ if TYPE_CHECKING:
 #: several did, and a distributed loop downstream inherits its one
 #: partition.  Measured on order_components (4 cores, SCALE.md
 #: "One-task graph inputs"): the one-task read won at sf0.1 (a 3 MB
-#: estimate) and lost from 9 MB up.
+#: estimate) and lost from 9 MB up.  `read_table` reads a snapshot on
+#: the driver into one partition up to the same estimate (SCALE.md
+#: "Snapshot read: driver vs Spark").
 ONE_TASK_BYTES = 4 * 1024 * 1024
 
 #: file-count bound of `_one_task`: one task opens every file of the
@@ -75,9 +77,12 @@ def _one_task(df: DataFrame) -> DataFrame:
     a job.  Meant for a file scan under windows or aggregates that would
     otherwise each need an exchange: one partition satisfies their
     distribution, so the plan shuffles nothing, and a driver collect
-    over it needs no limit stage either.  Not for manifest-table reads
-    of many small files, where one task reading them all loses (SCALE.md
-    "MetricsRequest: one partition vs distributed")."""
+    over it needs no limit stage either.  Not for Spark scans of
+    manifest tables of many small files, where one task reading them
+    all loses (SCALE.md "MetricsRequest: one partition vs
+    distributed"); a small snapshot reaches one partition through
+    `read_table`'s driver read instead, where pyarrow reads the files
+    on driver threads (SCALE.md "Snapshot read: driver vs Spark")."""
     if _fits_bytes(df, ONE_TASK_BYTES) and len(df.inputFiles()) <= ONE_TASK_FILES:
         return df.coalesce(1)
     return df

@@ -19,8 +19,10 @@ Spark stages here.  Under adaptive execution every shuffle stage is a
 job of its own, so a request whose inputs Spark already knows to be
 small (`ONE_PARTITION_BYTES`) moves its scoped events into one
 partition with one shuffle and runs the rest without an exchange:
-three jobs with the family collect.  Larger inputs, and inputs of
-unknown size, run the same program distributed.
+three jobs with the family collect.  Events that already sit in one
+partition and open no file (a snapshot `read_table` read on the
+driver) take a narrow coalesce instead: two jobs.  Larger inputs, and
+inputs of unknown size, run the same program distributed.
 
 Known deviations from the reference, implemented intentionally
 (SURVEY.md §7.4 "reference bugs to not replicate silently"):
@@ -91,6 +93,25 @@ def _one_partition(events: DataFrame, citations: DataFrame) -> bool:
     return _fits_bytes(events, ONE_PARTITION_BYTES) and _fits_bytes(
         citations, ONE_PARTITION_BYTES
     )
+
+
+def _into_one(events: DataFrame) -> DataFrame:
+    """The scoped `events` in one partition, for a one-partition plan
+    (see `plan`): a narrow coalesce when they already sit in one
+    partition and open no file (a snapshot `read_table` read on the
+    driver), else one shuffle, which keeps the scan's tasks where a
+    narrow coalesce would open every file in one task.  Decided from
+    the analyzed plan, without a job or an optimizer pass (which would
+    filter a local relation on the driver once more): projections and
+    filters over a coalesce to one partition of local relations."""
+    node = events._jdf.queryExecution().analyzed()
+    while node.nodeName() in ("Project", "Filter"):
+        node = node.child()
+    if node.nodeName() == "Repartition" and node.numPartitions() == 1 and not node.shuffle():
+        leaves = node.collectLeaves()
+        if all(leaves.apply(i).nodeName() == "LocalRelation" for i in range(leaves.size())):
+            return events.coalesce(1)
+    return events.repartition(1)
 
 
 def _format_counts(groups: DataFrame, keys: list[str]) -> DataFrame:
@@ -300,10 +321,10 @@ class MetricsRequestPlanner:
 
         When Spark's size estimates of the scoped events and of the
         citations are both within `ONE_PARTITION_BYTES`, the events
-        enter one partition through one shuffle after the scope
-        filters (the scan keeps its tasks; a narrow coalesce would open
-        every file in one task) and the citations through a narrow
-        coalesce, which adds no job.  One partition satisfies every aggregate's,
+        enter one partition after the scope filters (`_into_one`: one
+        shuffle, so the scan keeps its tasks, unless they are a
+        one-partition local relation) and the citations through a
+        narrow coalesce, which adds no job.  One partition satisfies every aggregate's,
         the dedup's and the joins' distribution, so the rest of the
         plan adds no exchange.  Past the bound, or for an input of
         unknown size, the same code runs distributed."""
@@ -317,7 +338,7 @@ class MetricsRequestPlanner:
         ev, family, meta = self.scoped_events(request)
         one = _one_partition(ev, self.t.citations)
         if one:
-            ev = ev.repartition(1)
+            ev = _into_one(ev)
         dims = ["bucket"] + (["country"] if by_country else [])
         dim_cols = [F.date_format("dateLogged", fmt).alias("bucket")] + (
             [F.col("geoip.country_code2").alias("country")] if by_country else []
@@ -490,7 +511,7 @@ class MetricsRequestPlanner:
         )
         one = _one_partition(ev, self.t.citations)
         if one:
-            ev = ev.repartition(1)
+            ev = _into_one(ev)
         counts = _format_counts(
             ev.select(
                 seeds_where(lambda m: m["pid"] == F.col("pid")), "formatType", "eventId"

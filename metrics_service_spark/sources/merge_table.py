@@ -58,6 +58,14 @@ protocol those formats use, from parquet + JSON primitives only:
   column-pruned Spark scan probes the files (`_files_holding_keys`),
   and a Spark job filters the hit files with a literal IN list and
   writes the rest.
+- A snapshot read (`read_table`) always plans the Spark scan, job-free,
+  for its schema.  When the recorded rows times Spark's row-size
+  estimate fit `ONE_TASK_BYTES` and the driver can read the files
+  as Spark does, pyarrow reads them on driver threads into a
+  one-partition local relation of known size in that schema
+  (`_driver_read`): a plan over it needs no exchange and no task opens
+  a file, so a gold refresh is its write job alone.  Otherwise the
+  Spark scan is the result.
 
 At 100 TB the manifest lists file paths, partition values and a few
 integers of stats per file (KBs per thousand files) and the MERGE
@@ -77,17 +85,22 @@ import time
 import uuid
 from bisect import bisect_left
 from contextlib import contextmanager
+from datetime import date
 from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
+from pyarrow.fs import LocalFileSystem
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
     ByteType,
     DataType,
+    DateType,
     IntegerType,
     LongType,
     ShortType,
@@ -97,7 +110,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from metrics_service_spark.operators.driver import _bounded_arrow
+from metrics_service_spark.operators.driver import ONE_TASK_BYTES, _bounded_arrow
 
 _MANIFEST_DIR = "_manifests"
 
@@ -116,6 +129,13 @@ PROBE_ROWS = 10_000_000
 # against the caller's actual value, not the path encoding.
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 _ESCAPE_RE = re.compile(r"%([0-9A-Fa-f]{2})")
+_DIGITS = re.compile(r"[+-]?[0-9]+")
+
+#: How the driver read opens a data file: INT96 timestamps (Spark's
+#: default timestamp encoding) as microseconds, the unit Spark reads.
+_PARQUET = ds.ParquetFileFormat(
+    read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+)
 
 
 def _unescape_partition_value(raw: str) -> str:
@@ -358,24 +378,14 @@ def _driver_listing(spark: SparkSession, n_paths: int):
             spark.conf.set(_LISTING_THRESHOLD, prev)
 
 
-def _read_files(
+def _stage_scans(
     spark: SparkSession,
     table_dir: str,
     entries: list[dict],
     schemas: dict[str, dict],
-) -> DataFrame:
-    """Read manifest entries.  Files from different commits live under
-    different stage roots, so partition discovery runs per-stage (each
-    stage is internally consistent) and the scans union — a commit's
-    worth of files is one scan, so the union width is bounded by the
-    number of versions still contributing files, not file count.
-
-    Each stage is read with the data schema its manifest recorded
-    (`schemas`), and Spark lists the files the manifest names on the
-    driver (`_driver_listing`), so planning launches no Spark job; only
-    a stage written before schemas were recorded falls back to
-    inference.  Partition column types are inferred from the paths
-    either way."""
+) -> list[DataFrame]:
+    """One Spark scan per stage of the manifest entries (see
+    `_read_files`), in stage order."""
     by_stage: dict[str, list[str]] = {}
     for e in entries:
         by_stage.setdefault(_stage_of(e), []).append(
@@ -389,6 +399,30 @@ def _read_files(
             if stage in schemas:
                 reader = reader.schema(StructType.fromJson(schemas[stage]))
             parts.append(reader.parquet(*paths))
+    return parts
+
+
+def _read_files(
+    spark: SparkSession,
+    table_dir: str,
+    entries: list[dict],
+    schemas: dict[str, dict],
+    parts: list[DataFrame] | None = None,
+) -> DataFrame:
+    """Read manifest entries.  Files from different commits live under
+    different stage roots, so partition discovery runs per-stage (each
+    stage is internally consistent) and the scans union — a commit's
+    worth of files is one scan, so the union width is bounded by the
+    number of versions still contributing files, not file count.
+
+    Each stage is read with the data schema its manifest recorded
+    (`schemas`), and Spark lists the files the manifest names on the
+    driver (`_driver_listing`), so planning launches no Spark job; only
+    a stage written before schemas were recorded falls back to
+    inference.  Partition column types are inferred from the paths
+    either way.  `parts` are the stage scans when the caller planned
+    them already (`_stage_scans`)."""
+    parts = parts or _stage_scans(spark, table_dir, entries, schemas)
     out = parts[0]
     for p in parts[1:]:
         # allowMissingColumns: commits may evolve the schema (Delta
@@ -718,6 +752,89 @@ def _rewrite(
     return new, {"rewrite": how, "files_rewritten": len(hit), "rows_removed": removed}
 
 
+def _partition_value(raw: str, dtype: DataType):
+    """The value Spark reads from the partition directory value `raw`
+    (as the manifest records it, unescaped) for a partition column it
+    inferred as `dtype`, or None where the driver read does not follow
+    Spark: a type other than string, int, long and date, or a spelling
+    Spark might parse differently (only plain ASCII digits and
+    yyyy-MM-dd dates are taken)."""
+    if isinstance(dtype, StringType):
+        return raw
+    if isinstance(dtype, (IntegerType, LongType)):
+        return int(raw) if _DIGITS.fullmatch(raw) else None
+    if isinstance(dtype, DateType):
+        try:
+            day = date.fromisoformat(raw)
+        except ValueError:
+            return None
+        return day if day.isoformat() == raw else None
+    return None
+
+
+def _driver_read(
+    spark: SparkSession,
+    table_dir: str,
+    entries: list[dict],
+    schemas: dict[str, dict],
+    parts: list[DataFrame],
+    scan: DataFrame,
+) -> DataFrame | None:
+    """`scan`, the Spark read of `entries` (`parts` its stage scans),
+    read instead by pyarrow on the driver into a one-partition local
+    relation, or None where `read_table` keeps the Spark read.
+
+    It runs when Spark's own size estimate of the result, the recorded
+    rows times Spark's row-size estimate of `scan`'s schema (what the
+    local relation reports), is within `ONE_TASK_BYTES`; every
+    entry records its rows, every stage its schema, and every stage
+    scan plans to `scan`'s schema (no evolved schema, the same
+    partition columns, and per-stage partition inference agrees with
+    the union's); the data columns are of `_ROUND_TRIP` types; and
+    every partition value converts as Spark infers it
+    (`_partition_value`).  One threaded pyarrow.dataset scan reads the
+    files (INT96 as microseconds) and fills the partition columns from
+    the manifest, and the relation takes `scan`'s schema.  Past
+    `ONE_TASK_BYTES` of Arrow data (strings or arrays longer than
+    Spark's per-value estimate) the Spark read runs after all, so the
+    bound holds for what the driver holds and one task processes too."""
+    if any("rows" not in e or _stage_of(e) not in schemas for e in entries):
+        return None
+    schema = scan.schema
+    if any(p.schema != schema for p in parts):
+        return None
+    part_names = set(entries[0]["partition"])
+    fields = schema.jsonValue()["fields"]
+    if not all(_round_trips(f["type"]) for f in fields if f["name"] not in part_names):
+        return None
+    row_bytes = 8 + scan._jdf.schema().defaultSize()
+    if sum(e["rows"] for e in entries) * row_bytes > ONE_TASK_BYTES:
+        return None
+    arrow = to_arrow_schema(schema)
+    part_fields = [(f.name, arrow.field(f.name).type, f.dataType)
+                   for f in schema.fields if f.name in part_names]
+    filters = []
+    for e in entries:
+        cond = ds.scalar(True)
+        for name, atype, dtype in part_fields:
+            value = _partition_value(e["partition"][name], dtype)
+            if value is None:
+                return None
+            cond = cond & (ds.field(name) == pa.scalar(value, atype))
+        filters.append(cond)
+    files = ds.FileSystemDataset.from_paths(
+        [os.path.join(table_dir, e["path"]) for e in entries],
+        schema=arrow, format=_PARQUET, filesystem=LocalFileSystem(),
+        partitions=filters,
+    )
+    # one chunk per column: `createDataFrame` sends a batch per chunk,
+    # and the empty batch of an empty file loses the batches after it
+    tbl = files.to_table(use_threads=True).combine_chunks()
+    if tbl.nbytes > ONE_TASK_BYTES:
+        return None
+    return spark.createDataFrame(tbl, schema=schema).coalesce(1)
+
+
 def read_table(
     spark: SparkSession,
     table_dir: str,
@@ -735,7 +852,19 @@ def read_table(
     contains only the surviving files, no I/O or footer reads for the
     rest).  Values compare as strings, matching the manifest encoding;
     a list/tuple/set value matches ANY of its members (IN-list
-    pruning, e.g. `partitions={"cell": touched_cells}`)."""
+    pruning, e.g. `partitions={"cell": touched_cells}`).
+
+    A small snapshot is read on the driver (`_driver_read`): pyarrow
+    reads its files and the result is a one-partition local relation of
+    known size in the Spark read's schema, so planning on it runs no
+    job and needs no exchange, and its frame opens no file
+    (`inputFiles()` is empty).  Larger snapshots, and those the driver
+    read cannot read as Spark does (no recorded `rows` or schema, an
+    evolved schema, a decimal or other type outside `_ROUND_TRIP`), are
+    a Spark scan; either way the rows and the schema are the same.
+    Both paths read a boolean partition column as the strings
+    'true'/'false': Spark's partition inference has no boolean type
+    (ORACLE_COMPAT.md)."""
     if version is None:
         version = current_version(table_dir)
     if version < 0:
@@ -759,7 +888,10 @@ def read_table(
             )
     if not entries:
         raise ValueError(f"empty manifest v{version} under {table_dir}")
-    return _read_files(spark, table_dir, entries, manifest["schemas"])
+    schemas = manifest["schemas"]
+    parts = _stage_scans(spark, table_dir, entries, schemas)
+    scan = _read_files(spark, table_dir, entries, schemas, parts)
+    return _driver_read(spark, table_dir, entries, schemas, parts, scan) or scan
 
 
 def _op(

@@ -318,10 +318,12 @@ def test_merge_schema_evolution(spark, tmp_path):
     assert "score" not in read_table(spark, tdir, version=0).columns
 
 
-def test_read_table_partition_pruning(spark, tmp_path):
+def test_read_table_partition_pruning(spark, tmp_path, monkeypatch):
     """partitions= prunes at the manifest level: the scan plan lists
     only the surviving files — file skipping without touching parquet
-    footers of other partitions."""
+    footers of other partitions.  The Spark read (`ONE_TASK_BYTES`
+    0), whose plan names its files; see the driver read below."""
+    monkeypatch.setattr(mt, "ONE_TASK_BYTES", 0)
     tdir = str(tmp_path / "t")
     overwrite_table(_state(spark, 9, "a"), tdir, partition_cols=["part"])
     df = read_table(spark, tdir, partitions={"part": 1})
@@ -331,6 +333,20 @@ def test_read_table_partition_pruning(spark, tmp_path):
     assert files and all("part=1" in f for f in files)
     with pytest.raises(ValueError, match="no files match"):
         read_table(spark, tdir, partitions={"part": 99})
+
+
+def test_driver_read_partition_pruning(spark, tmp_path):
+    """The driver read of a pruned snapshot opens only the surviving
+    files: with every other partition's files gone from disk it still
+    reads, and gives the pruned rows."""
+    tdir = str(tmp_path / "t")
+    overwrite_table(_state(spark, 9, "a"), tdir, partition_cols=["part"])
+    for e in _manifest(tdir)["files"]:
+        if e["partition"]["part"] != "1":
+            os.remove(os.path.join(tdir, e["path"]))
+    df = read_table(spark, tdir, partitions={"part": 1})
+    assert not df.inputFiles()
+    assert sorted(r["k"] for r in df.collect()) == [1, 4, 7]
 
 
 def test_merge_global_key_match_rewrites_moved_key(spark, tmp_path):
@@ -998,12 +1014,15 @@ def _manifest_reads_list_files_on_the_driver(spark, tmp_path, count_jobs):
     assert spark.conf.get(threshold) == before
 
 
-def test_concurrent_reads_restore_listing_threshold(spark, tmp_path):
+def test_concurrent_reads_restore_listing_threshold(spark, tmp_path, monkeypatch):
     """Concurrent reads from 8 threads, each raising the session's
     listing threshold for its own file count, leave it as they found
     it: a restore that interleaved with another read's would keep a
-    raised value."""
+    raised value.  On the Spark read (`ONE_TASK_BYTES` 0), whose
+    plans name their files."""
     import sys
+
+    monkeypatch.setattr(mt, "ONE_TASK_BYTES", 0)
     from concurrent.futures import ThreadPoolExecutor
 
     threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
