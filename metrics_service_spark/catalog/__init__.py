@@ -28,124 +28,17 @@ class QuerySpec:
     exact_twin: str | None = None
 
 
-# The external correctness driver checks the FIRST 50 entries of
-# all_queries() iteration order each round.  Rounds 1-6 jointly covered
-# all catalog entries (union of CORRECTNESS_r0{1..6}.json).  Rotation
-# policy (per README): order by IMPLEMENTATION-CHANGED-SINCE-LAST-CHECK
-# first — a query whose code was rewritten after its last driver row
-# outranks one whose check is merely old — then by
-# least-recently-checked.  See README "Driver-sample contract".
-_DRIVER_FRONT: tuple[str, ...] = (
-    # -- r17 new/impl-changed first (rotation policy): the two new
-    #    entries (grouped apply crossing ITS checkpoint boundary,
-    #    VERDICT r16 #2; the retrain loop's O(1)-jobs local-finish
-    #    trainer arm, VERDICT r16 #3) and the seven entries whose code
-    #    paths changed this round (ADVICE r16: merge collectors now
-    #    reject NULL/empty symbols — bpe_apply/bpe_apply_stats/grouped
-    #    apply; vocab_budget_rebalance gained the 2^52 product guard;
-    #    bpe_train_grouped_local_finish drops dead-budget groups from
-    #    the bounded transfer; bpe_budget_retrain grew the trainer
-    #    switch) --------------------------------------------------------
-    "doc_bpe_apply_grouped_m40",
-    "doc_bpe_budget_retrain_local",
-    "paragraph_index_batch_twin",
-    "doc_bpe_vocab_export",
-    "doc_bpe_vocab_export_grouped",
-    "doc_bpe_encode_digest",
-    "doc_bpe_encode_grouped",
-    "doc_bpe_apply_grouped",
-    "doc_bpe_budget_retrain",
-    "doc_bpe_train_grouped_local",
-    "doc_vocab_budget",
-    "doc_bpe_fertility",
-    "doc_bpe_apply_stored",
-    "doc_bpe_apply_m48",
-    # -- impl-changed by the r17 full-catalog sweep finding: the modal
-    #    n-gram count was O(grams x distincts) per doc; now one sorted
-    #    linear scan (99.6 -> 1.1 s at sf0.1); plus the new multi-n
-    #    Gopher battery sharing the same scan --------------------------
-    "doc_repetition",
-    "doc_repetition_multi",
-    # -- the 23 remaining r12-stale rows (VERDICT r16 #1): drained in
-    #    full this window; after this round minimum staleness is r13.
-    #    None are no_oracle entries (twin rule holds vacuously) ---------
-    "ev_hash_sessions",
-    "ev_interevent_gap",
-    "ev_last_per_user",
-    "ev_monthly_stats",
-    "ev_pivot_daily",
-    "ev_rolling_7d",
-    "ev_session_having",
-    "ev_sessionize",
-    "ev_sessionize_bucketed",
-    "ev_sessionize_global",
-    "ev_tag_membership",
-    "ev_top3_per_type",
-    "ev_value_tiers",
-    "except_non_purchasers",
-    "full_outer_daily",
-    "mm_dedup_clusters",
-    "pid_family_closure",
-    "semi_join_purchasers",
-    "sushi_instances",
-    "theta_contains",
-    "tpch_q10",
-    "union_distinct_ids",
-    "user_event_family",
-    # -- r13 generation, oldest-checked fill (11 of 47 by name order
-    #    plus doc_repetition above; all hash-verified in their r13 rows
-    #    — emb_semdedup, the one r13 rows-only head, stays out per the
-    #    twin rule) ----------------------------------------------------
-    "doc_cms_ngram_error",
-    "doc_quality_filter_exact",
-    "doc_shuffle_shard",
-    "doc_sorted_neighborhood",
-    "doc_sorted_neighborhood_global",
-    "doc_span_scrub",
-    "doc_tfidf_topk",
-    "doc_unigram_freq",
-    "emb_centroids",
-    "emb_contamination",
-    "emb_cosine_neardup",
-    # -- slots 51+: past the driver's 50-entry line; the remaining 35
-    #    r13-generation rows queue here for r18 (name order; the
-    #    emb_semdedup float head rides with its exact twin) -------------
-    "emb_ivfpq_topk_int",
-    "emb_kmeans_step",
-    "emb_kmeans_train",
-    "emb_knn_hubness",
-    "emb_proto_prune",
-    "emb_prototypicality",
-    "emb_semdedup",
-    "emb_semdedup_incr",
-    "emb_semdedup_int",
-    "ev_dau_stickiness",
-    "ev_dau_stickiness_kmv",
-    "gold_star_bucketed",
-    "landing_page_daily",
-    "matview_awardcharts",
-    "matview_awardmetrics",
-    "matview_landingpage",
-    "matview_repocharts",
-    "matview_repometrics",
-    "matview_routed_repo",
-    "matview_userprofilecharts",
-    "matview_userprofilemetrics",
-    "metrics_star_bucketed",
-    "mm_image_features_exact",
-    "mm_phash_neardup",
-    "tpch_q1",
-    "tpch_q12",
-    "tpch_q14",
-    "tpch_q17",
-    "tpch_q18",
-    "tpch_q19",
-    "tpch_q3",
-    "tpch_q4",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q8",
-)
+#: Second names of one computation: each alias resolves to the very
+#: QuerySpec of the entry it names, so `all_queries()` serves both names
+#: while the differential and the sweeps run the computation once.
+ALIASES: dict[str, str] = {
+    "doc_bpe_train_local": "doc_bpe_train",
+    "doc_bpe_apply_stored": "doc_bpe_apply",
+    "doc_bpe_train_grouped_local": "doc_bpe_train_grouped",
+    "doc_bpe_budget_retrain_local": "doc_bpe_budget_retrain",
+    "emb_ann_ivf_int": "emb_ann_ivf",
+    "emb_ann_lsh_int": "emb_ann_lsh",
+}
 
 
 def all_queries() -> dict[str, QuerySpec]:
@@ -180,9 +73,8 @@ def all_queries() -> dict[str, QuerySpec]:
             raise ValueError(f"duplicate query names: {overlap}")
         merged.update(mod.QUERIES)
 
-    missing = [name for name in _DRIVER_FRONT if name not in merged]
-    if missing:
-        raise ValueError(f"_DRIVER_FRONT names not in catalog: {missing}")
-    ordered = {name: merged.pop(name) for name in _DRIVER_FRONT}
-    ordered.update(merged)
-    return ordered
+    overlap = merged.keys() & ALIASES.keys()
+    if overlap:
+        raise ValueError(f"aliases shadow query names: {overlap}")
+    merged.update({alias: merged[name] for alias, name in ALIASES.items()})
+    return merged

@@ -4195,7 +4195,7 @@ def q_doc_sorted_neighborhood_global(
     same total order across ~|charset|^2 parallel sorts plus a tiny
     broadcast offset frame.  Within a block rank DIFFERENCES are
     unchanged, so the pair set is bit-identical — same oracle as the
-    window form, and tests/test_r13_guards.py gates both the pair
+    window form, and tests/test_dedup.py gates both the pair
     equality and the no-single-block-sort plan shape.  NEW r13
     surface."""
     from metrics_service_spark.operators.dedup import (
@@ -5026,13 +5026,8 @@ QUERIES: dict[str, QuerySpec] = {
     "emb_ann_ivf": QuerySpec(
         q_emb_ann_ivf_int,
         ORACLE_ANN_IVF_INT,
-        "IVF cell-probed approximate top-k",
-        ("llm",),
-    ),
-    "emb_ann_ivf_int": QuerySpec(
-        q_emb_ann_ivf_int,
-        ORACLE_ANN_IVF_INT,
-        "IVF top-k, integer-exact index+search — full pipeline oracle",
+        "IVF cell-probed approximate top-k, integer-exact index+search "
+        "— full pipeline oracle",
         ("llm",),
     ),
     "emb_ann_recall": QuerySpec(
@@ -5125,13 +5120,8 @@ QUERIES: dict[str, QuerySpec] = {
     "emb_ann_lsh": QuerySpec(
         q_emb_ann_lsh_int,
         _oracle_ann_lsh_int(),
-        "LSH-bucketed approximate k-NN",
-        ("llm",),
-    ),
-    "emb_ann_lsh_int": QuerySpec(
-        q_emb_ann_lsh_int,
-        _oracle_ann_lsh_int(),
-        "multi-table LSH k-NN, integer-exact — full pipeline oracle",
+        "multi-table LSH-bucketed approximate k-NN, integer-exact — "
+        "full pipeline oracle",
         ("llm",),
     ),
     "emb_kmeans_step": QuerySpec(
@@ -5454,7 +5444,7 @@ def q_doc_bpe_apply_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production train-once/apply-many path: train via the
     driver-local finish, then apply the STORED merge table with
     bpe_apply — the apply plan contains zero training jobs (no pair
-    counting, no argmax; plan-gated in test_r15_guards.py).  Green
+    counting, no argmax; plan-gated in tests/test_bpe.py).  Green
     proves the stored-table replay reproduces training's segmentation
     bit-for-bit."""
     from metrics_service_spark.operators.bpe import (
@@ -5475,34 +5465,22 @@ def q_doc_bpe_apply_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# doc_bpe_train / doc_bpe_apply keep their names, oracles and bench
-# slots; they run the same kernels as their _local / _stored twins.
+# doc_bpe_train_local and doc_bpe_apply_stored are second names of
+# these two entries (catalog.ALIASES).
 QUERIES["doc_bpe_train"] = QuerySpec(
     q_doc_bpe_train_local,
     _ORACLE_BPE_TRAIN,
     "BPE tokenizer training: 6 merge rounds over the word-frequency "
-    "vocab, exact-integer argmax with (count, left, right) tie-break",
+    "vocab, exact-integer argmax with (count, left, right) tie-break, "
+    "driver-local finish, O(1) Spark jobs",
     ("llm",),
 )
 QUERIES["doc_bpe_apply"] = QuerySpec(
     q_doc_bpe_apply_stored,
     _ORACLE_BPE_APPLY,
-    "apply the learned BPE merges: per-doc whitespace vs BPE unit "
-    "counts via a vocabulary join",
-    ("llm",),
-)
-QUERIES["doc_bpe_train_local"] = QuerySpec(
-    q_doc_bpe_train_local,
-    _ORACLE_BPE_TRAIN,
-    "BPE training, driver-local finish: one corpus shuffle + "
-    "incremental-pair-count merge loop, O(1) Spark jobs",
-    ("llm",),
-)
-QUERIES["doc_bpe_apply_stored"] = QuerySpec(
-    q_doc_bpe_apply_stored,
-    _ORACLE_BPE_APPLY,
     "apply a persisted BPE merge table without retraining: rank-order "
-    "replay over the distinct-word vocab + unit-count join",
+    "replay over the distinct-word vocab, per-doc whitespace vs BPE "
+    "unit counts via a vocabulary join",
     ("llm",),
 )
 
@@ -5681,14 +5659,8 @@ QUERIES["doc_bpe_train_grouped"] = QuerySpec(
     q_doc_bpe_train_grouped_local,
     _ORACLE_BPE_GROUPED,
     "per-language BPE training under per-language merge budgets: one "
-    "grouped word-frequency shuffle + per-language heap trainer",
-    ("llm",),
-)
-QUERIES["doc_bpe_train_grouped_local"] = QuerySpec(
-    q_doc_bpe_train_grouped_local,
-    _ORACLE_BPE_GROUPED,
-    "grouped BPE training, driver-local finish: one corpus shuffle + "
-    "per-language heap trainer, O(1) Spark jobs",
+    "grouped word-frequency shuffle + per-language heap trainer, "
+    "O(1) Spark jobs",
     ("llm",),
 )
 
@@ -5778,15 +5750,8 @@ QUERIES["doc_bpe_budget_retrain"] = QuerySpec(
     q_doc_bpe_budget_retrain,
     _ORACLE_BPE_BUDGET_RETRAIN,
     "the full tokenizer loop: fertility eval -> merge-budget "
-    "apportionment -> per-language grouped retrain, one entry",
-    ("llm",),
-)
-QUERIES["doc_bpe_budget_retrain_local"] = QuerySpec(
-    q_doc_bpe_budget_retrain,
-    _ORACLE_BPE_BUDGET_RETRAIN,
-    "the full tokenizer loop with the O(1)-jobs local-finish trainer: "
-    "fertility eval -> apportionment -> per-language retrain, "
-    "job count independent of the merge budget",
+    "apportionment -> per-language grouped retrain, one entry; job "
+    "count independent of the merge budget",
     ("llm",),
 )
 

@@ -1895,7 +1895,7 @@ def sorted_neighborhood_pairs(
     DIFFERENCES — all the neighborhood join consumes — are identical,
     and cross-block rank adjacencies are discarded by the join's
     block-equality conjunct: both modes return bit-identical pairs
-    (gated in tests/test_r13_guards.py)."""
+    (gated in tests/test_dedup.py)."""
     from pyspark.sql import Window
 
     from metrics_service_spark.operators.rank import global_row_number

@@ -19,10 +19,12 @@ protocol those formats use, from parquet + JSON primitives only:
   O_EXCL create — two concurrent committers race on the version
   number and exactly one wins (optimistic concurrency, the loser
   retries on fresh state).
-- The manifest also records each commit's data schema (partition
-  columns excluded), once per commit directory ("stage") that still
-  has live files: Spark never samples a footer to infer the schema
-  (Delta keeps its schema in the log for the same reason).  Spark
+- The manifest also records each commit's data schema, with the
+  Spark type of each partition column beside it, once per commit
+  directory ("stage") that still has live files: Spark never samples a
+  footer to infer the schema, and a partition column reads back in the
+  type it was written (Delta keeps its schema in the log for the same
+  reason).  Spark
   lists the files a manifest names on the driver, one local stat each,
   never with its parallel listing job, so a read of any file count
   plans without any Spark job.  This bounds the layer to POSIX paths
@@ -98,6 +100,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType,
+    BooleanType,
     ByteType,
     DataType,
     DateType,
@@ -222,13 +225,13 @@ def _write_files(
     columns only, the ones MERGE and DELETE skip files by.
 
     Each entry also carries the commit's data schema (partition columns
-    excluded) under "schema"; `_commit` moves it into the manifest's
-    per-stage "schemas" map.  Partition columns stay out so that reads
-    infer their types from the paths exactly as without a recorded
-    schema."""
+    excluded) under "schema", with the partition columns' fields, in
+    `df`'s types, under its "partitions" key; `_commit` moves it into
+    the manifest's per-stage "schemas" map."""
     stage = os.path.join(table_dir, f"stage-{uuid.uuid4().hex}")
     data = StructType([f for f in df.schema.fields if f.name not in partition_cols])
     schema = data.jsonValue()
+    schema["partitions"] = [df.schema[c].jsonValue() for c in partition_cols]
     integral = {f.name for f in data.fields if type(f.dataType) in _INTEGRAL}
     if partition_cols:
         df.write.mode("overwrite").partitionBy(*partition_cols).parquet(stage)
@@ -378,6 +381,24 @@ def _driver_listing(spark: SparkSession, n_paths: int):
             spark.conf.set(_LISTING_THRESHOLD, prev)
 
 
+def _partition_fields(schemas: dict[str, dict], stages) -> list[StructField]:
+    """The partition columns in the types `_write_files` recorded, when
+    every one of `stages` recorded the same types; none where a stage
+    was written before they were recorded, or where stages disagree (a
+    MERGE over such a stage records the types its paths inferred),
+    and the reads infer them from the paths as Spark does."""
+    recorded = {
+        tuple(
+            StructField(f["name"], StructField.fromJson(f).dataType)
+            for f in schemas[stage]["partitions"]
+        )
+        if "partitions" in schemas.get(stage, {})
+        else None
+        for stage in stages
+    }
+    return list(recorded.pop()) if len(recorded) == 1 and None not in recorded else []
+
+
 def _stage_scans(
     spark: SparkSession,
     table_dir: str,
@@ -391,14 +412,21 @@ def _stage_scans(
         by_stage.setdefault(_stage_of(e), []).append(
             os.path.join(table_dir, e["path"])
         )
+    typed = _partition_fields(schemas, by_stage)
+    # a stage's paths cross to the JVM as one NUL-joined string (no
+    # POSIX path holds a NUL), split there into the reader's String[]:
+    # a fixed number of py4j calls where reader.parquet(*paths) makes
+    # one per path
+    split = spark._jvm.org.apache.commons.lang3.StringUtils.split
     parts = []
     # the listing is eager: it runs inside reader.parquet
     with _driver_listing(spark, max(map(len, by_stage.values()))):
         for stage, paths in sorted(by_stage.items()):
             reader = spark.read.option("basePath", os.path.join(table_dir, stage))
             if stage in schemas:
-                reader = reader.schema(StructType.fromJson(schemas[stage]))
-            parts.append(reader.parquet(*paths))
+                data = StructType.fromJson(schemas[stage]).fields
+                reader = reader.schema(StructType(data + typed))
+            parts.append(reader._df(reader._jreader.parquet(split("\0".join(paths), "\0"))))
     return parts
 
 
@@ -419,8 +447,9 @@ def _read_files(
     (`schemas`), and Spark lists the files the manifest names on the
     driver (`_driver_listing`), so planning launches no Spark job; only
     a stage written before schemas were recorded falls back to
-    inference.  Partition column types are inferred from the paths
-    either way.  `parts` are the stage scans when the caller planned
+    inference.  Partition columns take the types recorded with the
+    schema (`_partition_fields`), or are inferred from the paths where
+    none were.  `parts` are the stage scans when the caller planned
     them already (`_stage_scans`)."""
     parts = parts or _stage_scans(spark, table_dir, entries, schemas)
     out = parts[0]
@@ -754,15 +783,17 @@ def _rewrite(
 
 def _partition_value(raw: str, dtype: DataType):
     """The value Spark reads from the partition directory value `raw`
-    (as the manifest records it, unescaped) for a partition column it
-    inferred as `dtype`, or None where the driver read does not follow
-    Spark: a type other than string, int, long and date, or a spelling
-    Spark might parse differently (only plain ASCII digits and
-    yyyy-MM-dd dates are taken)."""
+    (as the manifest records it, unescaped) for a partition column of
+    type `dtype`, or None where the driver read does not follow Spark:
+    a type other than string, integral, boolean and date, or a spelling
+    Spark might parse differently (only plain ASCII digits, 'true' and
+    'false', and yyyy-MM-dd dates are taken)."""
     if isinstance(dtype, StringType):
         return raw
-    if isinstance(dtype, (IntegerType, LongType)):
+    if type(dtype) in _INTEGRAL:
         return int(raw) if _DIGITS.fullmatch(raw) else None
+    if isinstance(dtype, BooleanType):
+        return {"true": True, "false": False}.get(raw)
     if isinstance(dtype, DateType):
         try:
             day = date.fromisoformat(raw)
@@ -862,9 +893,11 @@ def read_table(
     read cannot read as Spark does (no recorded `rows` or schema, an
     evolved schema, a decimal or other type outside `_ROUND_TRIP`), are
     a Spark scan; either way the rows and the schema are the same.
-    Both paths read a boolean partition column as the strings
-    'true'/'false': Spark's partition inference has no boolean type
-    (ORACLE_COMPAT.md)."""
+    Partition columns read in the types they were written; where a
+    stage read was written before those were recorded, or the stages
+    recorded different types, they are inferred from the paths, as
+    Spark does (a boolean as a string, a yyyy-MM-dd string as a date;
+    ORACLE_COMPAT.md)."""
     if version is None:
         version = current_version(table_dir)
     if version < 0:
@@ -920,7 +953,7 @@ def _too_many_keys() -> ValueError:
 def _keys_in_files(fields: list[StructField], partition_cols: list[str]) -> bool:
     """Whether MERGE can read its keys, the columns `fields`, from the
     files it writes: integral data columns, none a partition column
-    (whose type a read infers from the path)."""
+    (whose value lives in the path, not the file)."""
     return all(type(f.dataType) in _INTEGRAL for f in fields) and not (
         {f.name for f in fields} & set(partition_cols)
     )

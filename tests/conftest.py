@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import sys
 import uuid
@@ -42,3 +44,22 @@ def count_jobs(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     return count
+
+
+@pytest.fixture(scope="session")
+def executed_plan():
+    """`executed_plan(df)`: the text of `df`'s executed physical plan."""
+    return lambda df: df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.fixture(scope="session")
+def formatted_plan():
+    """`formatted_plan(df)`: what `df.explain("formatted")` prints."""
+
+    def formatted(df) -> str:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        return buf.getvalue()
+
+    return formatted

@@ -4,6 +4,7 @@ the relational oracle depends on (operators/bpe.py)."""
 
 from __future__ import annotations
 
+import random
 import re
 
 import pytest
@@ -176,8 +177,6 @@ def test_apply_arbitrary_stored_table_fuzz(spark):
     # training run in the same session — apply must replay ANY rank-
     # ordered list (multi-char symbols, never-matching pairs included)
     # exactly like a per-word python replay
-    import random
-
     from metrics_service_spark.operators.bpe import (
         _py_greedy_merge,
         bpe_apply,
@@ -983,3 +982,377 @@ def test_encode_grouped_matches_per_language_flat_encode(spark):
     # zz: 3 tokens, all -1
     want[5] = (3, hashlib.md5(b"-1,-1,-1").hexdigest())
     assert got == want
+
+
+# --- plan shape and job counts ----------------------------------------------
+def test_merge_scan_is_pure_projection(spark, executed_plan):
+    """One greedy merge round is a codegen F.aggregate scan — NO
+    exchange may appear between the vocab rows and the merged symbol
+    arrays (the no-per-round-shuffle contract the FLAT 50x probe row
+    rests on)."""
+    vocab = spark.createDataFrame(
+        [(["a", "b"],), (["a", "a", "b"],)], "syms array<string>"
+    )
+    plan = executed_plan(
+        vocab.select(merge_pair_scan(F.col("syms"), "a", "b").alias("m"))
+    )
+    assert "Exchange" not in plan
+
+
+def test_apply_launches_no_training_jobs(spark, count_jobs, executed_plan):
+    """Applying a stored merge list is plan construction ONLY: zero
+    Spark jobs (no per-round argmax collect, no checkpoint below the
+    checkpoint_every boundary) — the contract that makes apply-many
+    affordable at production merge counts."""
+    docs = spark.createDataFrame(
+        [(1, "ab ab abc"), (2, "banana")], "doc_id int, text string"
+    )
+    merges = [("a", "b"), ("ab", "c")]
+    assert count_jobs(lambda: bpe_apply(docs, merges=merges)) == 0
+    out = bpe_apply(docs, merges=merges)
+    # and the built plan is join+agg over the replayed vocab: no pair
+    # counting, no argmax anywhere
+    plan = executed_plan(out)
+    assert "pair_count" not in plan
+    assert "TakeOrdered" not in plan
+
+
+def test_apply_exchanges_independent_of_merges(spark, executed_plan):
+    """The corpus side of apply touches tokens exactly once: one join
+    against the vocab-sized unit table, one per-doc aggregate — never
+    a per-merge corpus scan.  Gate: the number of Exchanges must not
+    grow with the merge count (merges are chained pure projections)."""
+    docs = spark.createDataFrame(
+        [(1, "ab ab abc"), (2, "banana")], "doc_id int, text string"
+    )
+    plan2 = executed_plan(bpe_apply(docs, merges=[("a", "b"), ("a", "n")]))
+    plan5 = executed_plan(
+        bpe_apply(
+            docs,
+            merges=[("a", "b"), ("a", "n"), ("an", "an"), ("b", "anan"), ("ab", "c")],
+        )
+    )
+    assert plan2.count("Exchange") == plan5.count("Exchange")
+
+
+def test_local_finish_job_count_independent_of_merges(spark, count_jobs):
+    """The driver-local finish runs the ONE corpus-sized aggregation
+    and collects the vocab — total Spark jobs must be the same at 2
+    and at 6 merges (a per-round Spark loop would add jobs per merge)."""
+    docs = spark.createDataFrame(
+        [("ab ab ab abc",), ("banana bandana cabbage",), ("ba abab dada",)],
+        "text string",
+    )
+
+    def jobs_for(n: int) -> int:
+        return count_jobs(lambda: bpe_train_local_finish(docs, "text", n_merges=n))
+
+    assert jobs_for(2) == jobs_for(6)
+
+
+def test_apply_pushes_column_pruning_to_scan(spark, sf_dir, formatted_plan):
+    """Off the parquet documents table, BOTH scans of the apply plan
+    (vocab build + token stream) must read only the columns they use —
+    text for the vocab, doc_id+text for the counts; never the full
+    documents row."""
+    from metrics_service_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    plan = formatted_plan(bpe_apply(docs, merges=[("a", "b")]))
+    for line in plan.splitlines():
+        if "ReadSchema" in line:
+            assert "lang" not in line and "source" not in line, line
+
+
+def test_grouped_local_finish_job_count_independent_of_budgets(spark, count_jobs):
+    """The grouped local finish runs ONE bounded collect regardless of
+    how many merges the budgets ask for — Spark job count at budget
+    sums 3 and 12 must be equal (the doc_bpe_train contract, per
+    language)."""
+    from metrics_service_spark.operators.bpe import (
+        bpe_train_grouped_local_finish,
+    )
+
+    docs = _lang_docs(spark)
+
+    def jobs(budgets) -> int:
+        return count_jobs(
+            lambda: bpe_train_grouped_local_finish(docs, "text", budgets=budgets)
+        )
+
+    small = jobs({"en": 2, "fr": 1})
+    large = jobs({"en": 8, "fr": 4})
+    assert small == large
+
+
+def test_budget_retrain_driver_transfers_are_bounded(spark):
+    """The chained loop's only collects are the vocabularies (guarded),
+    the current merge table and the |langs| budget rows — gate: total
+    rows collected across the run stays in the hundreds on a corpus of
+    any size (here: count the actual collects via a wrapped
+    DataFrame.collect)."""
+    from unittest import mock
+
+    from metrics_service_spark.operators import bpe
+
+    docs = _lang_docs(spark)
+    # patch the CONCRETE class (pyspark 4 splits the public DataFrame
+    # ABC from classic.DataFrame; instances override collect there)
+    cls = type(docs)
+    sizes: list[int] = []
+    orig = cls.collect
+
+    def spy(self):
+        rows = orig(self)
+        sizes.append(len(rows))
+        return rows
+
+    with mock.patch.object(cls, "collect", spy):
+        bpe.bpe_budget_retrain(
+            docs, "text", n_merges_current=2, total_budget=5, min_per_group=1
+        )
+    # vocab (~unique words), merge table (2), budgets (2 langs),
+    # grouped vocab (~unique words)
+    assert sum(sizes) < 200
+    assert max(sizes) < 100
+
+
+def test_budget_retrain_job_count_independent_of_budget(spark, count_jobs):
+    """The WHOLE loop (current train -> fertility -> apportionment ->
+    grouped retrain) must launch the same number of Spark jobs at
+    total_budget 3 and 9 — the retrain stage is one bounded collect +
+    driver heap trainer, never O(budget) sequential rounds."""
+    from metrics_service_spark.operators.bpe import bpe_budget_retrain
+
+    docs = _lang_docs(spark)
+
+    def jobs(total_budget: int) -> int:
+        return count_jobs(
+            lambda: bpe_budget_retrain(
+                docs,
+                "text",
+                n_merges_current=2,
+                total_budget=total_budget,
+                min_per_group=1,
+            )
+        )
+
+    assert jobs(3) == jobs(9)
+
+
+def test_dead_group_vocab_rows_do_not_consume_transfer_headroom(spark):
+    """A budget<=0 group is skipped after training, so its vocab rows
+    must not count against max_vocab_rows — en alone has 6 distinct
+    words here, fr 5; with fr dead, max_vocab_rows=6 must pass (the 11
+    combined rows would trip the guard)."""
+    from metrics_service_spark.operators.bpe import (
+        bpe_train_grouped_local_finish,
+    )
+
+    docs = _lang_docs(spark)
+    table = bpe_train_grouped_local_finish(
+        docs, "text", budgets={"en": 2, "fr": 0}, max_vocab_rows=6
+    )
+    rows = table.collect()
+    assert {r["lang"] for r in rows} == {"en"}
+    assert len(rows) == 2
+
+
+def test_grouped_apply_deep_replay_roots_at_checkpoint(spark, executed_plan):
+    """Past checkpoint_every=32 the grouped replay must root at the
+    checkpointed VOCAB-sized RDD scan (lineage cut), never re-derive
+    the corpus — the doc_bpe_apply_grouped_m40 plan shape, pinned on a
+    synthetic 40-rank table (pair content is irrelevant to the plan)."""
+    from metrics_service_spark.operators.bpe import bpe_apply_grouped
+
+    docs = _lang_docs(spark)
+    table = spark.createDataFrame(
+        [("en", i, f"q{i}", f"x{i}", 1) for i in range(40)],
+        "lang string, rank int, left_sym string, right_sym string, "
+        "pair_count bigint",
+    )
+    plan = executed_plan(bpe_apply_grouped(docs, table))
+    assert "Scan ExistingRDD" in plan
+
+
+@pytest.mark.slow
+def test_word_freqs_shared_pass_bit_identical(spark):
+    """The shared word-frequency pass (one (w, freq) / (lang, w, freq)
+    frame feeding train + export + replay + apply) must emit
+    bit-identical results to the per-stage derivations it replaces —
+    for the flat apply/export/encode ops and the grouped
+    apply/export/encode ops alike."""
+    from metrics_service_spark.operators.bpe import (
+        _grouped_word_frequencies,
+        bpe_apply_grouped,
+        bpe_apply_stats,
+        bpe_encode_digest,
+        bpe_encode_digest_grouped,
+        bpe_train_grouped_local_finish,
+        bpe_vocab_export,
+        bpe_vocab_export_grouped,
+    )
+
+    docs = _lang_docs(spark)
+    wf = word_frequencies(docs, "text").localCheckpoint(eager=False)
+    gwf = _grouped_word_frequencies(docs, "text", "lang").localCheckpoint(
+        eager=False
+    )
+    table = bpe_train_local_finish(docs, "text", n_merges=3)
+    assert (
+        bpe_train_local_finish(
+            docs, "text", n_merges=3, word_freqs=wf
+        ).collect()
+        == table.collect()
+    )
+    gtable = bpe_train_grouped_local_finish(
+        docs, "text", budgets={"en": 3, "fr": 2}
+    )
+    assert sorted(
+        bpe_train_grouped_local_finish(
+            docs, "text", budgets={"en": 3, "fr": 2}, word_freqs=gwf
+        ).collect()
+    ) == sorted(gtable.collect())
+    for base, shared in (
+        (bpe_apply(docs, table), bpe_apply(docs, table, word_freqs=wf)),
+        (
+            bpe_apply_stats(docs, table, group_cols=["lang"]),
+            bpe_apply_stats(
+                docs, table, group_cols=["lang"], word_freqs=wf
+            ),
+        ),
+        (
+            bpe_vocab_export(docs, table),
+            bpe_vocab_export(docs, table, word_freqs=wf),
+        ),
+        (
+            bpe_encode_digest(docs, table),
+            bpe_encode_digest(docs, table, word_freqs=wf),
+        ),
+        (
+            bpe_apply_grouped(docs, gtable),
+            bpe_apply_grouped(docs, gtable, word_freqs=gwf),
+        ),
+        (
+            bpe_vocab_export_grouped(docs, gtable),
+            bpe_vocab_export_grouped(docs, gtable, word_freqs=gwf),
+        ),
+        (
+            bpe_encode_digest_grouped(docs, gtable),
+            bpe_encode_digest_grouped(docs, gtable, word_freqs=gwf),
+        ),
+    ):
+        assert sorted(map(tuple, base.collect())) == sorted(
+            map(tuple, shared.collect())
+        )
+
+
+# --- randomized properties against independent pure-Python models ---------
+WORDS = ["aa", "aab", "abab", "banana", "bandana", "cabbage", "dada", "a"]
+
+
+def _random_texts(rng, n: int, lo: int, hi: int) -> list[str]:
+    return [
+        " ".join(rng.choice(WORDS) for _ in range(rng.randint(lo, hi)))
+        for _ in range(n)
+    ]
+
+
+def _py_merge(syms: list[str], left: str, right: str) -> list[str]:
+    """Written apart from the package's `_py_greedy_merge`, which the
+    trainer under test uses."""
+    out, i = [], 0
+    while i < len(syms):
+        if i + 1 < len(syms) and syms[i] == left and syms[i + 1] == right:
+            out.append(left + right)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
+
+
+def _py_bpe_train(texts: list[str], n_merges: int, max_word_len: int = 20):
+    """Recounts EVERY pair from scratch each round — deliberately the
+    opposite data-structure choice from the incremental+heap trainer
+    under test, so a bookkeeping bug in either cannot cancel out.
+    None where the pairs run out (the operator raises there)."""
+    freqs: dict[str, int] = {}
+    for t in texts:
+        for w in re.split(r"\s+", t.lower()):
+            if w and re.fullmatch("[a-z]+", w) and len(w) <= max_word_len:
+                freqs[w] = freqs.get(w, 0) + 1
+    vocab = {w: list(w) for w in freqs}
+    merges = []
+    for rank in range(n_merges):
+        pairs: dict[tuple[str, str], int] = {}
+        for w, syms in vocab.items():
+            for a, b in zip(syms, syms[1:]):
+                pairs[(a, b)] = pairs.get((a, b), 0) + freqs[w]
+        if not pairs:
+            return None
+        (left, right), c = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((rank, left, right, c))
+        vocab = {w: _py_merge(s, left, right) for w, s in vocab.items()}
+    return merges
+
+
+def _trained(df, n_merges: int) -> list[tuple]:
+    return [
+        (r["rank"], r["left_sym"], r["right_sym"], r["pair_count"])
+        for r in bpe_train_local_finish(df, "text", n_merges=n_merges)
+        .orderBy("rank")
+        .collect()
+    ]
+
+
+@pytest.mark.parametrize("seed", [3, 11, 29])
+def test_merge_scan_matches_python_reference(spark, seed):
+    rng = random.Random(seed)
+    rows = []
+    for _ in range(40):
+        syms = [rng.choice("ab") for _ in range(rng.randint(0, 10))]
+        rows.append((syms,))
+    df = spark.createDataFrame(rows, "syms array<string>")
+    for left, right in [("a", "a"), ("a", "b"), ("b", "a")]:
+        got = [
+            r["m"]
+            for r in df.select(
+                merge_pair_scan(F.col("syms"), left, right).alias("m")
+            ).collect()
+        ]
+        want = [_py_merge(s[0], left, right) for s in rows]
+        assert got == want, (left, right)
+
+
+@pytest.mark.parametrize("seed", [5, 17])
+def test_bpe_train_matches_python_reference(spark, seed):
+    texts = _random_texts(random.Random(seed), 25, 3, 12)
+    want = _py_bpe_train(texts, n_merges=4)
+    assert want is not None
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    assert _trained(df, 4) == want
+
+
+@pytest.mark.parametrize("seed", [3, 11, 29])
+def test_local_finish_matches_naive_reference(spark, seed):
+    texts = _random_texts(random.Random(seed), 25, 3, 12)
+    want = _py_bpe_train(texts, n_merges=5)
+    assert want is not None
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    assert _trained(df, 5) == want
+
+
+@pytest.mark.parametrize("seed", [7, 23])
+def test_apply_stored_matches_fused_randomized(spark, seed):
+    texts = _random_texts(random.Random(seed), 20, 2, 9)
+    rows = list(enumerate(texts))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    table = bpe_train_local_finish(df, "text", n_merges=4)
+    got = {
+        r["doc_id"]: (r["n_ws_tokens"], r["n_bpe_units"])
+        for r in bpe_apply(df, table).collect()
+    }
+    # train-and-apply fused in Python: every word (all trainable here)
+    # segmented by the table in rank order
+    assert got == _py_apply(rows, _merges(table))

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-from metrics_service_spark.catalog import all_queries
+from metrics_service_spark.catalog import ALIASES, all_queries
 import pytest
 
 #: The catalog entries with no DuckDB oracle: xxhash64 / float heads
@@ -59,6 +59,24 @@ def test_rows_only_entries_name_an_oracle_checked_twin():
 def test_rows_only_set_is_pinned():
     cat = all_queries()
     assert {name for name, spec in cat.items() if not spec.oracle} == ROWS_ONLY
+
+
+def test_aliases_share_their_entry_spec():
+    """The catalog serves 221 names through 215 computations: each
+    alias is the very QuerySpec of the entry it names, and no other two
+    names share one."""
+    cat = all_queries()
+    assert len(cat) == 221
+    assert len({id(spec) for spec in cat.values()}) == 215
+    for alias, name in ALIASES.items():
+        assert cat[alias] is cat[name], alias
+    names_of: dict[int, set[str]] = {}
+    for name, spec in cat.items():
+        names_of.setdefault(id(spec), set()).add(name)
+    shared = [names for names in names_of.values() if len(names) > 1]
+    assert sorted(map(sorted, shared)) == sorted(
+        sorted(pair) for pair in ALIASES.items()
+    )
 
 
 def test_derived_cells_mirrors_fixture_count(sf_dir):

@@ -4,8 +4,11 @@ union-find on random graphs, on the driver finish and on the
 distributed loops alike; the driver finish returns the distributed
 loops' rows and schema; star CC with `nodes=` returns the join-back of
 its labels onto the node rows on all three routes; the star form
-converges in few rounds on long chains; and the curation and linkage
-entries keep their job budgets."""
+converges in few rounds on long chains and sees a converged input
+without a round; the curation and linkage entries keep their job
+budgets; and the integer PageRank in the same module (`pagerank_int`)
+equals a pure-Python replay, plain and mass-conserving, with no
+driver collect at plan build."""
 
 from __future__ import annotations
 
@@ -18,6 +21,7 @@ from metrics_service_spark.operators import closure
 from metrics_service_spark.operators.closure import (
     connected_components,
     connected_components_star,
+    pagerank_int,
 )
 
 #: the two ways each kernel can run: the driver finish under the
@@ -441,8 +445,6 @@ def test_pagerank_int_hand_checked(spark):
     values replayed in exact floor-div arithmetic (same numbers the
     DuckDB unrolled oracle produces); dangling node 4 leaks mass and
     holds the base term only."""
-    from metrics_service_spark.operators.closure import pagerank_int
-
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1)], "src_id long, dst_id long"
     )
@@ -455,3 +457,141 @@ def test_pagerank_int_hand_checked(spark):
     }
     # mass never exceeds scale, every node scored
     assert sum(out.values()) <= 10**12
+
+
+def test_star_cc_detects_converged_input_without_a_round(spark, monkeypatch):
+    # a min-centered star forest is the star operators' fixpoint: the
+    # star-forest check must recognize it at round 0, so even
+    # max_iters=0 yields the labeling instead of raising (without the
+    # check one full confirming round is needed to see the fixpoint).
+    # The check runs only in the distributed loop: bound 0.
+    monkeypatch.setattr(closure, "LOCAL_FINISH_EDGES", 0)
+    edges = [(0, 5), (0, 7), (0, 9), (20, 21), (20, 23)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {
+        r.node: r.component
+        for r in connected_components_star(df, max_iters=0).collect()
+    }
+    assert got == {0: 0, 5: 0, 7: 0, 9: 0, 20: 20, 21: 20, 23: 20}
+
+
+def test_star_cc_detection_is_not_premature_on_paths(spark, monkeypatch):
+    # a path is NOT a star forest mid-contraction: the detection must
+    # not fire early, so an exhausted round budget still raises.  The
+    # detection runs only in the distributed loop: a 64-edge path
+    # finishes on the driver under the default bound, so it is 0 here.
+    monkeypatch.setattr(closure, "LOCAL_FINISH_EDGES", 0)
+    edges = [(i, i + 1) for i in range(64)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    with pytest.raises(RuntimeError, match="still\\s+moving"):
+        connected_components_star(df, max_iters=1).collect()
+
+
+# --- integer PageRank -------------------------------------------------------
+def _py_pagerank(edges, iters=3, scale=10**12, conserve_mass=False):
+    """Pure-Python `pagerank_int`: floor-div rounds; with
+    `conserve_mass` the dangling nodes' mass is shared out D div N."""
+    nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
+    deg: dict[int, int] = {}
+    for s, _ in edges:
+        deg[s] = deg.get(s, 0) + 1
+    n = len(nodes)
+    p = {v: scale // n for v in nodes}
+    for _ in range(iters):
+        dang = sum(p[v] for v in nodes if v not in deg) if conserve_mass else 0
+        contrib: dict[int, int] = {v: 0 for v in nodes}
+        for s, d in edges:
+            contrib[d] += p[s] // deg[s]
+        p = {
+            v: (3 * scale) // (20 * n) + (17 * (contrib[v] + dang // n)) // 20
+            for v in nodes
+        }
+    return p
+
+
+def _pagerank_edges(seed: int, n: int = 30) -> list[tuple[int, int]]:
+    rng = random.Random(seed)
+    edges = sorted({(rng.randrange(n), rng.randrange(n)) for _ in range(70)})
+    return [(s, d) for s, d in edges if s != d]
+
+
+def _ranks(df, **kw) -> dict[int, int]:
+    return {r["node"]: r["pr_q"] for r in pagerank_int(df, **kw).collect()}
+
+
+@pytest.mark.parametrize("seed", [4, 23])
+def test_pagerank_matches_python_reference(spark, seed):
+    edges = _pagerank_edges(seed)
+    df = spark.createDataFrame(edges, "src_id long, dst_id long")
+    got = _ranks(df, iters=3)
+    want = _py_pagerank(edges)
+    assert got == want
+    # conservation bound: dangling leak + floors only ever lose mass
+    assert sum(got.values()) <= 10**12
+
+
+@pytest.mark.parametrize("seed", [4, 23, 41])
+def test_pagerank_conserving_matches_python_reference(spark, seed):
+    edges = _pagerank_edges(seed)
+    df = spark.createDataFrame(edges, "src_id long, dst_id long")
+    got = _ranks(df, iters=3, conserve_mass=True)
+    want = _py_pagerank(edges, conserve_mass=True)
+    assert got == want
+    # the flag's whole point: with dangling nodes present, the
+    # conserving form retains at least as much mass as the leaking
+    # form, and never exceeds the exact budget
+    plain = _ranks(df, iters=3)
+    assert sum(got.values()) >= sum(plain.values())
+    assert sum(got.values()) <= 10**12
+
+
+def test_pagerank_true_dangling_node_conserving_vs_plain(spark):
+    # node 9 has NO out-edges (true dangling): the plain form leaks
+    # its mass, the conserving form redistributes D div N each round —
+    # the degree-carried round shape must preserve both contracts
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (1, 9), (2, 9)], "src_id long, dst_id long"
+    )
+    plain = _ranks(edges, iters=3)
+    cons = _ranks(edges, iters=3, conserve_mass=True)
+    assert set(plain) == set(cons) == {1, 2, 9}
+    # conserving mass total stays closer to scale than the leaking form
+    assert sum(cons.values()) > sum(plain.values())
+    # replay round 1 by hand for the conserving form:
+    # p0 = scale div 3; D = p0(9); contribs: 1 gets p0(2) div 2 + D-share,
+    # base = 3*scale div (20*3)
+    scale = 10**12
+    p0 = scale // 3
+    base = (3 * scale) // (20 * 3)
+    d_share = p0 // 3
+    p1_node9 = base + (17 * (p0 // 2 + p0 // 2 + d_share)) // 20
+    one = _ranks(edges, iters=1, conserve_mass=True)
+    assert one[9] == p1_node9
+    assert one[1] == base + (17 * (p0 // 2 + d_share)) // 20
+    assert one[2] == base + (17 * (p0 // 2 + d_share)) // 20
+
+
+@pytest.mark.parametrize("conserve_mass", [False, True])
+def test_pagerank_no_driver_collect_in_plan_build(
+    spark, count_jobs, executed_plan, conserve_mass
+):
+    """pagerank_int holds no driver-side state: the only build-time
+    jobs are the lazy-checkpoint materializations (edges, node set and
+    the degree/N re-attach frame: the under-AQE toRdd jobs), NEVER a
+    data-sized collect.  Pinned as ROUND-INDEPENDENCE: the checkpoints
+    are built once, so tripling `iters` must add ZERO build-time jobs
+    (a per-round collect/probe would scale with iters); N — and with
+    conserve_mass the dangling mass — enters as a broadcast one-row
+    aggregate, unlike the Lloyd-loop's driver-held centroids.  Node 3
+    has no out-edges, so the dangling term is live."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, 3)], "src_id long, dst_id long"
+    )
+
+    def build(iters):  # build only, no action
+        return pagerank_int(edges, iters=iters, conserve_mass=conserve_mass)
+
+    n1 = count_jobs(lambda: build(1))
+    assert count_jobs(lambda: build(3)) == n1
+    # and the built plan never collects: no CollectLimit/toLocal nodes
+    assert "CollectLimit" not in executed_plan(build(3))

@@ -225,8 +225,7 @@ def test_merge_matches_boolean_partitions(spark, tmp_path, from_key, key_type):
     the manifest records it ('true', the path Spark wrote), not as
     Python prints it ('True'), whether MERGE reads its keys from the
     files it wrote (long) or collects them from the batch (string).
-    The table reads the partition back as a string: Spark infers no
-    boolean partition type."""
+    The table reads the partition back as the boolean it was written."""
     schema = f"k {key_type}, flag boolean, v string"
     tdir = str(tmp_path / "t")
     overwrite_table(spark.createDataFrame([(1, True, "a"), (2, False, "b")], schema), tdir,
@@ -236,4 +235,4 @@ def test_merge_matches_boolean_partitions(spark, tmp_path, from_key, key_type):
     got = sorted(
         (int(r.k), r.flag, r.v) for r in read_table(spark, tdir).select("k", "flag", "v").collect()
     )
-    assert got == [(1, "true", "a2"), (2, "false", "b")]
+    assert got == [(1, True, "a2"), (2, False, "b")]

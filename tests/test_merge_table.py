@@ -12,6 +12,7 @@ import os
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField
 
 from metrics_service_spark.plans.gold import metrics_star
 from metrics_service_spark.sources.eventlog import eventlog_view
@@ -847,8 +848,10 @@ def test_read_without_recorded_schema_falls_back_to_inference(
 ):
     """A manifest written before schemas were recorded still reads: its
     stages infer their schema (a Spark job), and the result has the same
-    schema and rows as a read of the recorded schema — partition types
-    are inferred from the paths either way ("01" reads back as int)."""
+    data schema and rows as a read of the recorded schema.  Its
+    partition types are inferred from the paths ("01" reads back as
+    int), where the recorded read keeps the string as written; the
+    table still infers them after a commit on top."""
     tdir = str(tmp_path / "t")
     df = spark.createDataFrame(
         [(1, "01", 1.5, ["a"]), (2, "02", None, [])],
@@ -864,9 +867,12 @@ def test_read_without_recorded_schema_falls_back_to_inference(
         json.dump(legacy, fh)
     assert count_jobs(lambda: read_table(spark, tdir)) > 0
     inferred = read_table(spark, tdir)
-    assert inferred.schema == recorded.schema
+    assert inferred.drop("grp").schema == recorded.drop("grp").schema
     assert dict(inferred.dtypes)["grp"] == "int"
-    assert sorted(inferred.collect()) == sorted(recorded.collect())
+    assert dict(recorded.dtypes)["grp"] == "string"
+    assert sorted(inferred.withColumn("grp", F.format_string("%02d", "grp")).collect()) == sorted(
+        recorded.collect()
+    )
 
     # a commit on top records the stages it wrote only (the update's
     # and the Spark rewrite's: the legacy stage records no schema to
@@ -882,8 +888,25 @@ def test_read_without_recorded_schema_falls_back_to_inference(
     assert set(m["schemas"]) == {e["path"].split(os.sep, 1)[0] for e in m["files"]} - {
         legacy_stage
     }
-    assert sorted(r["k"] for r in read_table(spark, tdir).collect()) == [1, 2, 3]
+    mixed = read_table(spark, tdir)
+    assert dict(mixed.dtypes)["grp"] == "int"
+    assert sorted((r["k"], r["grp"]) for r in mixed.collect()) == [(1, 1), (2, 2), (3, 1)]
 
+
+
+def test_partition_types_need_every_stage_to_agree():
+    """Recorded partition types serve a read only when every stage it
+    reads recorded the same ones; a stage without a record, or two
+    stages that disagree, leave the types to path inference."""
+    def stage(t):
+        part = {"name": "p", "type": t, "nullable": False, "metadata": {}}
+        return {"type": "struct", "fields": [], "partitions": [part]}
+
+    schemas = {"a": stage("string"), "b": stage("string"), "c": stage("integer"),
+               "d": {"type": "struct", "fields": []}}
+    assert mt._partition_fields(schemas, ["a", "b"]) == [StructField("p", StringType())]
+    for stages in (["a", "c"], ["a", "d"], ["a", "legacy"]):
+        assert mt._partition_fields(schemas, stages) == [], stages
 
 def _commits(spark, tdir, n):
     """A table of `n` live commits, each inserting keys of its own

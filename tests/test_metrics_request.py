@@ -594,3 +594,19 @@ def test_null_country_is_one_row(spark, sf_dir, tmp_path, monkeypatch):
         for r in run_metrics_request(spark, per_day, tables).collect():
             day = [x for x in rows if x["bucket"] == r["bucket"]]
             assert [sum(x[c] for x in day) for c in counts] == [r[c] for c in counts]
+
+
+def test_dispatcher_pushes_scope_filters_to_scan(spark, sf_dir, formatted_plan):
+    """The end-to-end MetricsRequest plan must push the date-range and
+    session predicates THROUGH the eventlog adapter aliases down to
+    the parquet scan (P-class pushdown on the public API path)."""
+    from metrics_service_spark.catalog.request import (
+        q_metrics_request_daily_country,
+    )
+
+    # an events frame another test cached would stand in for the scan
+    spark.catalog.clearCache()
+    plan = formatted_plan(q_metrics_request_daily_country(spark, sf_dir))
+    assert "GreaterThan(ts,2024-01-01" in plan  # strict-gt range start
+    assert "LessThanOrEqual(ts,2024-02-01" in plan  # lte range end
+    assert "Not(EqualTo(user_id,-1))" in plan  # sessionId != -1

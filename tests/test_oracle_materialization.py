@@ -16,7 +16,9 @@ in ``CAST(... AS BIGINT)``.  Nullable integer columns are exempt
 conversion, so they canonicalize symmetrically — four rounds of green
 driver rows across the matview/orders_rollup class), as are genuine
 DOUBLE columns.  ``doc_dup_spans`` is the deliberate red control for
-the r11 bisect and is excluded by name.
+the r11 bisect and is excluded by name.  The sweep is slow; the
+pin of the two bisect oracles (both materializations at sf0.01) runs
+in the default set.
 """
 
 from __future__ import annotations
@@ -27,11 +29,9 @@ import os
 import duckdb
 import pytest
 
-from metrics_service_spark.catalog import all_queries
+from metrics_service_spark.catalog import ALIASES, all_queries
 from metrics_service_spark.sources.tables import TABLES
-
-# multi-minute suite: excluded from the fast default run (pytest.ini)
-pytestmark = pytest.mark.slow
+from metrics_service_spark.testing.oracle import _canon_rows
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -40,20 +40,17 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 KNOWN_ASYMMETRIC = {"doc_dup_spans"}
 
 
+# multi-minute sweep: excluded from the fast default run (pytest.ini)
+@pytest.mark.slow
 def test_no_asymmetric_integer_columns_in_oracle_projections():
     catalog = all_queries()
     offenders: list[str] = []
     for name, spec in catalog.items():
-        if spec.oracle is None or name in KNOWN_ASYMMETRIC:
+        if spec.oracle is None or name in KNOWN_ASYMMETRIC | ALIASES.keys():
             continue
         con = duckdb.connect()
         try:
-            for t in TABLES:
-                p = os.path.join(SF_DIR, f"{t}.parquet")
-                if os.path.exists(p):
-                    con.execute(
-                        f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-                    )
+            _views(con, SF_DIR)
             cur = con.execute(spec.oracle)
             cols = [d[0] for d in cur.description]
             rows = cur.fetchall()
@@ -81,3 +78,37 @@ def test_no_asymmetric_integer_columns_in_oracle_projections():
         f"Spark's int64): {offenders}; wrap in CAST(... AS BIGINT) "
         "(see ORACLE_COMPAT.md)"
     )
+
+
+def _views(con, sf_dir: str) -> None:
+    for t in TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+
+
+def test_dup_span_bisect_oracles_are_materialization_invariant():
+    """The bisect arms exist because DuckDB HUGEINT (sum of integers)
+    materializes as float64 under pandas but int under fetchall —
+    tools/pandas_parity.py.  Pin that both oracles canonicalize
+    identically under BOTH materializations, so they stay safe under
+    any driver comparator."""
+    cat = all_queries()
+    for name in ("doc_dup_spans_counts", "doc_dup_spans_frac"):
+        con = duckdb.connect()
+        try:
+            _views(con, "/root/testdata/sf0.01")
+            cur = con.execute(cat[name].oracle)
+            cols = [d[0] for d in cur.description]
+            exact = cur.fetchall()
+            pdf = con.execute(cat[name].oracle).df()
+            assert all(str(t) == "int64" for t in pdf.dtypes), (
+                name,
+                dict(pdf.dtypes.astype(str)),
+            )
+            via_pandas = [
+                tuple(r) for r in pdf.itertuples(index=False, name=None)
+            ]
+            assert _canon_rows(cols, exact) == _canon_rows(cols, via_pandas)
+        finally:
+            con.close()

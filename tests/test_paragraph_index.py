@@ -126,3 +126,24 @@ def test_streaming_refresh_folds_batches_exactly_once(spark, tmp_path):
     assert current_version(tdir) == v
     got = {r["ph"]: r["n"] for r in read_table(spark, tdir).collect()}
     assert got[h("a b")] == 2
+
+
+def test_fold_unit_has_one_exchange(spark, executed_plan):
+    """The streaming paragraph-index fold unit must be chunk explode +
+    md5 + ONE map-side-combined groupBy — exactly one hash exchange,
+    so per-micro-batch cost is batch-linear with no second shuffle."""
+    from metrics_service_spark.streaming.paragraph_index import (
+        batch_paragraph_counts,
+    )
+
+    docs = _docs(
+        spark,
+        [
+            (1, "ab ab ab abc banana"),
+            (2, "ab bandana ba abab"),
+            (3, "cd cd cdcd dq"),
+            (4, "cddq cd qq"),
+        ],
+    )
+    plan = executed_plan(batch_paragraph_counts(docs, "doc_id", "text"))
+    assert plan.count("Exchange hashpartitioning") == 1

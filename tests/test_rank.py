@@ -1,5 +1,6 @@
 """global_row_number / global_cumsum must equal the single-partition
-window definitions on shuffled input."""
+window definitions on shuffled input, and the catalog's cumulative
+window plans per bucket."""
 
 from __future__ import annotations
 
@@ -215,3 +216,15 @@ def test_exact_group_quantiles_matches_bruteforce(spark):
         vs.sort()
         want = [vs[math.ceil(len(vs) * p / 100) - 1] for p in percents]
         assert got[g] == want, (g, got[g], want)
+
+
+def test_auc_cumulative_window_is_bucket_partitioned(spark, sf_dir, executed_plan):
+    """global_cumsum's in-bucket window must be PARTITIONED (by the
+    coarse score bucket) — the only single-partition exchanges allowed
+    in the AUC plan are the tiny per-bucket offset frame and the final
+    one-row aggregate."""
+    from metrics_service_spark.catalog.llm import q_doc_classifier_auc
+
+    plan = executed_plan(q_doc_classifier_auc(spark, sf_dir))
+    assert "__bkt" in plan  # the bucketed window/join survived
+    assert plan.count("Exchange SinglePartition") <= 2

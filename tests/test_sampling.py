@@ -2,10 +2,21 @@
 
 from __future__ import annotations
 
+import hashlib
+import math
+import random
+
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from metrics_service_spark.operators.sampling import hash_split, stratified_sample
+from metrics_service_spark.operators.sampling import (
+    hash_split,
+    isqrt_long,
+    priority_sample,
+    stratified_sample,
+    temperature_source_sample,
+)
 
 
 def test_split_is_stable_and_partitioning_invariant(spark):
@@ -200,3 +211,77 @@ def test_priority_sample_weight_dominance_and_k(spark):
     # the 10^9-weight doc takes rank 1 on them
     top = [r for r in out if r["doc_id"] == 99]
     assert top and top[0]["rank"] == 1
+
+
+def test_isqrt_long_exact_at_knife_edges(spark):
+    """The one-step-corrected isqrt must be exact wherever double sqrt
+    can wobble: perfect squares, squares +-1, and large values near
+    the 2^52 contract bound — on BOTH engines, against math.isqrt."""
+    cases = []
+    for b in [0, 1, 2, 3, 10, 99, 10**6, 2**26 - 1, 2**26]:
+        for sq in (b * b, b * b + 1, max(b * b - 1, 0)):
+            cases.append(sq)
+    cases += [2**52 - 1, 4503599627370241]  # (2^26)^2 + 1 territory
+    cases = sorted(set(cases))
+
+    df = spark.createDataFrame([(x,) for x in cases], "x long").select(
+        "x", isqrt_long(F.col("x")).alias("y")
+    )
+    got = {r.x: r.y for r in df.collect()}
+    con = duckdb.connect()
+    for x in cases:
+        expect = math.isqrt(x)
+        assert got[x] == expect, (x, got[x], expect)
+        sql = (
+            f"SELECT y0 + (CASE WHEN (y0+1)*(y0+1) <= {x} THEN 1 ELSE 0 END)"
+            f" - (CASE WHEN y0*y0 > {x} THEN 1 ELSE 0 END) FROM "
+            f"(SELECT CAST(floor(sqrt(CAST({x} AS DOUBLE))) AS BIGINT) AS y0)"
+        )
+        assert con.execute(sql).fetchone()[0] == expect, x
+    con.close()
+
+
+def test_temperature_mix_flattens_head_domains(spark):
+    """Property: with alpha=0.5 quotas, a source 100x another's size
+    gets ~10x (sqrt-proportional) the quota, not 100x — and no quota
+    exceeds what rounding of the sqrt weights allows."""
+    rows = [(i, "head") for i in range(400)] + [
+        (1000 + i, "tail") for i in range(4)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, source string")
+    out = temperature_source_sample(
+        df, "source", "doc_id", keep_total=22
+    ).collect()
+    by = {}
+    for r in out:
+        by.setdefault(r.source, 0)
+        by[r.source] += 1
+    # weights isqrt: head 20, tail 2 -> quotas 20, 2 of 22
+    assert by == {"head": 20, "tail": 2}, by
+    assert math.isqrt(400) == 20  # the flattening: 100x mass -> 10x quota
+
+
+def _py_priority(ids_weights, k):
+    """Pure-Python `priority_sample`: the top k by the integer priority
+    (w << 32) div u, u from md5('ps:' || id)."""
+    scored = []
+    for i, w in ids_weights:
+        h = hashlib.md5(f"ps:{i}".encode()).hexdigest()
+        u = int(h[:8], 16) + 1
+        scored.append(((w * 4294967296) // u, i, w))
+    scored.sort(key=lambda t: (-t[0], t[1]))
+    return [(i, w, p) for p, i, w in scored[:k]]
+
+
+@pytest.mark.parametrize("seed", [2, 13])
+def test_priority_sample_matches_python_reference(spark, seed):
+    rng = random.Random(seed)
+    rows = [(i, rng.randint(1, 5000)) for i in range(80)]
+    df = spark.createDataFrame(rows, "doc_id long, n_chars long")
+    got = [
+        (r["doc_id"], r["weight"], r["priority_q"])
+        for r in priority_sample(df, "doc_id", "n_chars", k=10)
+        .orderBy("rank")
+        .collect()
+    ]
+    assert got == _py_priority(rows, 10)

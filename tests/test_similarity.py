@@ -1,8 +1,10 @@
 """Property tests for the approximate similarity/dedup operators, on
 top of the catalog's bitwise DuckDB checks: ANN (LSH + IVF) recall vs
 exact brute force, near-dup prefilter soundness, MinHash and SimHash
-candidate quality (their xxhash64 heads have no DuckDB oracle), and
-the exact-dim guard of the LSH signatures."""
+candidate quality (their xxhash64 heads have no DuckDB oracle), the
+exact-dim guard of the LSH signatures, the hierarchical cell
+assignment of a corpus smaller than its cell count, and the PQ
+rerank's empty query set and shortlist bound."""
 
 from __future__ import annotations
 
@@ -23,6 +25,7 @@ from metrics_service_spark.operators.similarity import (
     cosine_near_duplicates,
     ivf_topk_int,
 )
+from metrics_service_spark.sources.tables import load_table
 
 DIM = 64
 N_CLUSTERS = 10
@@ -816,3 +819,85 @@ def test_sorted_neighborhood_complements_strict_blocking(spark):
         max_dist=100, block_cols=["grp"],
     ).collect()
     assert len(allp) == 3
+
+
+def test_hier_assign_tiny_corpus_matches_formula_g(spark):
+    """A corpus with FEWER rows than n_cells collects fewer seeds;
+    the coarse group count must still derive from the REQUESTED
+    n_cells (the _derived_cells formula the SQL oracle replays), not
+    from the collected-seed count.  Differential check against a
+    pure-Python replay using the formula g."""
+    from metrics_service_spark.operators.similarity import hier_assign_int
+
+    n, dim, n_cells = 9, 8, 16  # rows < n_cells = seeds run short
+    vecs = {
+        i: [((i * 5 + d * 3) % 7 - 3) / 1000.0 for d in range(dim)]
+        for i in range(n)
+    }
+    df = spark.createDataFrame(
+        [(i, vecs[i]) for i in range(n)], "vec_id long, embedding array<float>"
+    )
+    out = {
+        r["__vid"]: r["cell"]
+        for r in hier_assign_int(df, n_cells=n_cells)
+        .select("__vid", "cell")
+        .collect()
+    }
+
+    q = {i: [round(x * 1000) for x in vecs[i]] for i in range(n)}
+    order = sorted(
+        range(n), key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i)
+    )
+    cvecs = [q[i] for i in order]  # all 9 rows become seeds
+    g = math.ceil(math.sqrt(n_cells))  # 4 — NOT ceil(sqrt(9)) = 3
+    coarse = cvecs[:g]
+
+    def dot(a, b):
+        return sum(x * y for x, y in zip(a, b))
+
+    def argmax_first(dots):
+        return dots.index(max(dots))
+
+    cell_grp = [argmax_first([dot(cv, gv) for gv in coarse]) for cv in cvecs]
+    active = sorted(set(cell_grp))
+    expect = {}
+    for i in range(n):
+        gp = active[argmax_first([dot(q[i], coarse[a]) for a in active])]
+        members = [j for j in range(len(cvecs)) if cell_grp[j] == gp]
+        expect[i] = members[argmax_first([dot(q[i], cvecs[j]) for j in members])]
+    assert out == expect
+
+
+def test_pq_rerank_empty_query_set(spark, sf_dir):
+    """An empty query frame short-circuits before the zero-argument
+    isin()/empty-broadcast corner and returns the exact output schema
+    with zero rows."""
+    from metrics_service_spark.operators.similarity import pq_rerank_topk_int
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 0)  # empty
+    out = pq_rerank_topk_int(
+        emb, queries, m=8, k_codes=16, iters=2, k_short=25, k=5
+    )
+    assert out.count() == 0
+    assert [f.name for f in out.schema.fields] == [
+        "query_id",
+        "neighbor_id",
+        "rank",
+        "score_x",
+    ]
+    assert dict(out.dtypes)["score_x"] == "bigint"
+
+
+def test_pq_rerank_shortlist_cap(spark, sf_dir, monkeypatch):
+    """The |Q| x k_short driver collect fails loudly past the bound
+    instead of building an unbounded IN literal."""
+    from metrics_service_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "_RERANK_MAX_SHORTLIST", 10)
+    emb = load_table(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 8)  # 8 x k_short=25 > 10
+    with pytest.raises(ValueError, match="shortlist"):
+        similarity.pq_rerank_topk_int(
+            emb, queries, m=8, k_codes=16, iters=2, k_short=25, k=5
+        )

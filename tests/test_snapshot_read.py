@@ -95,14 +95,10 @@ def test_driver_read_equals_spark_read(spark, tmp_path, monkeypatch, encoding):
     assert all(r["s"] != "new" for r in old)
 
 
-def test_partition_types_read_as_spark_infers(spark, tmp_path, monkeypatch):
-    """Integer, date-looking, zero-padded string and boolean partition
-    values read as Spark infers them from the paths, on both paths: an
-    int, a date, the string kept as written where another value is not
-    a number, and a boolean as the strings 'true'/'false' (Spark's
-    partition inference has no boolean type)."""
-    tdir = str(tmp_path / "t")
-    df = spark.range(12).select(
+def _partition_frame(spark):
+    """An integer, a date-looking string, a zero-padded string and a
+    boolean partition column over 12 rows."""
+    return spark.range(12).select(
         F.col("id").alias("k"),
         (F.col("id") % 3 - 1).alias("i"),
         F.date_format(F.date_add(F.lit("2024-01-30").cast("date"), (F.col("id") % 4).cast("int")),
@@ -110,7 +106,42 @@ def test_partition_types_read_as_spark_infers(spark, tmp_path, monkeypatch):
         F.when(F.col("id") % 2 == 0, "01").otherwise("x/y z").alias("z"),
         (F.col("id") % 2 == 0).alias("flag"),
     )
-    overwrite_table(df, tdir, partition_cols=["i", "d", "z", "flag"])
+
+
+def test_partition_types_read_as_written(spark, tmp_path, monkeypatch):
+    """Partition columns read back in the types they were written, on
+    both paths, after a MERGE as after the first write: the long as a
+    long, the date-looking string as a string (not a date) and the
+    boolean as a boolean (not the strings 'true'/'false')."""
+    tdir = str(tmp_path / "t")
+    df = _partition_frame(spark)
+    merge_table(spark, tdir, df, key_cols=["k"], partition_cols=["i", "d", "z", "flag"])
+    merge_table(spark, tdir, df.filter("k < 5"), key_cols=["k"],
+                partition_cols=["i", "d", "z", "flag"])
+    rows = _same(spark, monkeypatch, tdir)
+    types = dict(read_table(spark, tdir).dtypes)
+    assert (types["i"], types["d"], types["z"], types["flag"]) == (
+        "bigint", "string", "string", "boolean",
+    )
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, df.collect()))
+    assert {r["d"] for r in rows} == {"2024-01-30", "2024-01-31", "2024-02-01", "2024-02-02"}
+    _same(spark, monkeypatch, tdir, partitions={"flag": "true", "d": ["2024-01-31", "2024-02-01"]})
+
+
+def test_partition_types_read_as_spark_infers(spark, tmp_path, monkeypatch):
+    """A manifest written before partition types were recorded reads
+    integer, date-looking, zero-padded string and boolean partition
+    values as Spark infers them from the paths, on both paths: an int,
+    a date, the string kept as written where another value is not a
+    number, and a boolean as the strings 'true'/'false' (Spark's
+    partition inference has no boolean type)."""
+    tdir = str(tmp_path / "t")
+    overwrite_table(_partition_frame(spark), tdir, partition_cols=["i", "d", "z", "flag"])
+    m = _manifest(tdir)
+    for schema in m["schemas"].values():
+        del schema["partitions"]
+    with open(os.path.join(tdir, "_manifests", "v0.json"), "w") as fh:
+        json.dump(m, fh)
     rows = _same(spark, monkeypatch, tdir)
     types = dict(read_table(spark, tdir).dtypes)
     assert (types["i"], types["d"], types["z"], types["flag"]) == (

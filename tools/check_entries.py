@@ -10,7 +10,9 @@ Runs each entry's Spark query and DuckDB oracle at sf_dir (default
 suite uses, printing per-entry PASS/FAIL and the Spark jobs the entry
 launched (query build, execution and the comparator's collect),
 counted under a job group of its own as the tests' `count_jobs` does.
-``--all`` sweeps the whole catalog; ``--json`` additionally writes a
+``--all`` sweeps the whole catalog, running each computation once: an
+alias (`catalog.ALIASES`) takes its entry's verdict, rows and jobs
+under its own name.  ``--json`` additionally writes a
 machine-readable artifact (name -> {status, rows, seconds, jobs}) that
 makes "stale entries are locally bitwise-green" auditable without
 re-running the 10-minute sweep.  Each entry's record also holds
@@ -137,8 +139,18 @@ def main() -> None:
         args = list(catalog)
     failed = []
     results: dict[str, dict] = {}
+    # an alias shares its entry's QuerySpec: each spec runs once, and
+    # its record and line stand under every name it serves
+    ran: dict[int, tuple[str, str]] = {}
     for name in args:
         spec = catalog[name]
+        if id(spec) in ran:
+            first, line = ran[id(spec)]
+            results[name] = results[first]
+            if first in failed:
+                failed.append(name)
+            print(f"{name}: {line} (the run of {first})")
+            continue
         group = f"check-entries-{name}-{uuid.uuid4().hex}"
         sc.setJobGroup(group, group)
         t0 = time.perf_counter()
@@ -162,10 +174,9 @@ def main() -> None:
         stage_jobs = sum(
             AQE_STAGE_JOB in store.job(j).name() for j in job_ids
         )
-        print(
-            f"{name}: {line} {seconds:.1f}s {len(job_ids)} jobs"
-            f" ({stage_jobs} AQE stage)"
-        )
+        line = f"{line} {seconds:.1f}s {len(job_ids)} jobs ({stage_jobs} AQE stage)"
+        ran[id(spec)] = name, line
+        print(f"{name}: {line}")
         results[name] = {
             "status": status,
             "rows": n,

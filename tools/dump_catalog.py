@@ -12,7 +12,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    from metrics_service_spark.catalog import all_queries
+    from metrics_service_spark.catalog import ALIASES, all_queries
 
     cat = all_queries()
     n_oracle = sum(1 for s in cat.values() if s.oracle)
@@ -38,7 +38,8 @@ def main() -> None:
         else:
             check = "rows-only"
         mod = spec.fn.__module__.rsplit(".", 1)[-1]
-        out.append(f"| `{name}` | {check} | {mod} | {spec.doc} |")
+        doc = f"second name of `{ALIASES[name]}`" if name in ALIASES else spec.doc
+        out.append(f"| `{name}` | {check} | {mod} | {doc} |")
     out.append("")
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "CATALOG.md"

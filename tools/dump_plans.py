@@ -108,7 +108,7 @@ COMMENTARY = {
     "metrics_request_daily_country": "adds the date-range scope (strict-gt/lte pushed through the adapter aliases to PushedFilters — plan-gated), day x country agg, bucket-only citations join; the end-exclusive spine is one bucket array exploded per country group of the merged rows (no cross join, no broadcast, no second read of the aggregate), so the events' SinglePartition exchange is the only one",
     "metrics_request_user": "the user dispatch path: family from userID membership AND isPublic (one driver collect of the matched identifier rows), then the landing shape — the scope that must EXCLUDE private datasets",
     "metrics_request_repository": "repository scope is a pure scan predicate on the adapter's nodeId (no identifier family — the citations side is the UNSCOPED relation, mirroring gatherCitations without a target set); YEAR buckets with the 4-char citation key; the spine join stays in the one partition (Coalesce 1 above the first full-outer merge), so no exchange besides the events' SinglePartition one",
-    "doc_bpe_train": "the returned frame is the k-row merge table (local scan BY DESIGN); the training work is ONE corpus-sized word-frequency shuffle + a bounded vocab collect — the merge loop runs driver-local (incremental pair counts + lazy heap), so total Spark jobs are O(1) regardless of n_merges (job-count-gated in tests/test_r15_guards.py)",
+    "doc_bpe_train": "the returned frame is the k-row merge table (local scan BY DESIGN); the training work is ONE corpus-sized word-frequency shuffle + a bounded vocab collect — the merge loop runs driver-local (incremental pair counts + lazy heap), so total Spark jobs are O(1) regardless of n_merges (job-count-gated in tests/test_bpe.py)",
     "doc_bpe_apply": "train via the driver-local finish, then apply the STORED table: one shared (checkpointed) word-frequency pass feeds the train collect and the replay vocab; the merges replay as chained codegen flat-string projections (no exchange per merge), then one vocab-sized unit join + one per-doc agg — out-of-vocab tokens take the coalesce fallback",
     "doc_lm_fclass": "TWO occurrence-mass shuffles by design (bigram count build + train/probe join, the doc_bigram_coherence class twice); _spread above the explode; frequency class is integer binary-length, computed after the join on count rows",
     "emb_knn_pagerank": "the audited knn-graph plan feeds 3 FIXED integer power rounds: per round one src-keyed join + one dst-keyed map-side-combined agg; N enters as a broadcast one-row aggregate; no collect, no convergence tail",
